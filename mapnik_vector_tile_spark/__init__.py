@@ -13,4 +13,10 @@ Arrow batch. See SURVEY.md for the full operator mapping.
 
 __version__ = "0.1.0"
 
-from mapnik_vector_tile_spark.session import get_spark  # noqa: F401
+# Here, not in a submodule: unpickling any of the package's UDFs in a
+# Spark Python worker imports this file, so every reused worker gets it.
+from mapnik_vector_tile_spark import _zipimport
+
+_zipimport.install()
+
+from mapnik_vector_tile_spark.session import get_spark  # noqa: E402,F401

@@ -1100,6 +1100,36 @@ def scan_singles_tile(buf: bytes):
     return out if out else None
 
 
+def _invalid_utf8(u8: np.ndarray, start: np.ndarray, length: np.ndarray):
+    """Mask of the byte ranges ``u8[start:start + length]`` that are not
+    UTF-8: one Arrow validation of all of them, then range by range
+    only when that fails (a corrupt tile in the batch)."""
+    import pyarrow as pa
+
+    off = np.zeros(len(start) + 1, dtype=np.int64)
+    np.cumsum(length, out=off[1:])
+    gather = (
+        np.arange(int(off[-1]), dtype=np.int64)
+        - np.repeat(off[:-1], length)
+        + np.repeat(start, length)
+    )
+    try:
+        pa.LargeStringArray.from_buffers(
+            len(start), pa.py_buffer(off.tobytes()),
+            pa.py_buffer(u8[gather].tobytes()),
+        ).validate(full=True)
+        return np.zeros(len(start), dtype=bool)
+    except pa.ArrowInvalid:
+        pass
+    bad = np.zeros(len(start), dtype=bool)
+    for j, (s, n) in enumerate(zip(start.tolist(), length.tolist())):
+        try:
+            u8[s:s + n].tobytes().decode("utf-8")
+        except UnicodeDecodeError:
+            bad[j] = True
+    return bad
+
+
 def decode_singles_batch(descs, blobs, tile_idx, n_tiles=None):
     """Whole-BATCH decode of canonical single-point one-prop layers —
     the inverse of ``build_singles_layers_batch``: the feature sections
@@ -1118,8 +1148,9 @@ def decode_singles_batch(descs, blobs, tile_idx, n_tiles=None):
     Fallback is TILE-granular, not batch-granular: a mixed corpus
     (point features sharing batches — or layers — with polygons, v1
     content, multi-prop features) only demotes the offending TILES to
-    the caller's general decoder; every pure-singles tile in the batch
-    keeps the vectorized path.  Returns ``(res, bad)`` where ``bad``
+    the caller's general decoder, and so does a layer name, key or
+    string value that is not UTF-8; every pure-singles tile in the
+    batch keeps the vectorized path.  Returns ``(res, bad)`` where ``bad``
     is a sorted int list of tile indices to decode the slow way and
     ``res`` covers all remaining layers (None when nothing survives).
 
@@ -1139,6 +1170,16 @@ def decode_singles_batch(descs, blobs, tile_idx, n_tiles=None):
         n_tiles = int(tile_idx.max()) + 1 if nL else 0
     bad_tile = np.zeros(n_tiles, dtype=bool)
     nfeat0 = np.array([d[4] for d in descs], dtype=np.int64)
+    # a layer name or key that is not UTF-8 demotes its tile: the
+    # general decoder is the one to reject it
+    names = []
+    for i, d in enumerate(descs):
+        try:
+            d[1].decode("utf-8")
+            names.append(d[0].decode("utf-8"))
+        except UnicodeDecodeError:
+            names.append(None)
+            bad_tile[tile_idx[i]] = True
 
     # ---- stage A: per-layer varint count + boundary alignment ----
     feat_buf = b"".join(
@@ -1292,6 +1333,8 @@ def decode_singles_batch(descs, blobs, tile_idx, n_tiles=None):
             | (varr[np.minimum(v_ps, nb - 1)] != 0x0A)
             | (shdr + slen != v_L)
         )
+        ok = np.flatnonzero(~vdie)
+        vdie[ok] = _invalid_utf8(varr, (v_ps + shdr)[ok], slen[ok])
         if np.any(vdie):
             bad_tile[tile_idx[keep_c[v_lay[vdie]]]] = True
     else:
@@ -1377,9 +1420,7 @@ def decode_singles_batch(descs, blobs, tile_idx, n_tiles=None):
         np.where(is_cap, cap_gid, -1), type=pa.int64(), mask=~is_cap
     )
     captions = str_arr.take(cap_idx)
-    lay_names = np.array(
-        [descs[i][0].decode("utf-8") for i in surv], dtype=object
-    )
+    lay_names = np.array([names[i] for i in surv], dtype=object)
     res = {
         "lay_idx": surv,
         "lay_of_feat": lay_of_feat,

@@ -1,6 +1,6 @@
 """SparkSession factory tuned for this engine.
 
-Local-mode defaults match the sandbox (32 cores, single JVM); on a real
+Local-mode defaults size themselves to the host (cores, RAM); on a real
 cluster the same builder runs under spark-submit --py-files with
 executor-level parallelism — nothing here is local-only except the
 master default, which spark-submit overrides.
@@ -11,6 +11,13 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def driver_memory(total_bytes: int | None = None) -> str:
+    """A driver heap that fits the host: a fifth of RAM, 1-4 GiB."""
+    if total_bytes is None:
+        total_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(4, total_bytes // (5 * 2**30)))}g"
 
 
 def get_spark(
@@ -52,7 +59,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # one tile-group's features should fit one Arrow batch
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM", driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

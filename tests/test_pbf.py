@@ -230,3 +230,99 @@ def test_splice_merge_fast_rejects_overlong_varints():
     # and the scalar path preserves the overlong geometry bytes
     merged = pbf.splice_merge_layers([blob], "l")
     assert bad_geom in merged
+
+
+def _singles_tile(key, captions):
+    """A Tile in the batched decoder's canonical shape: one layer of
+    single-point features with one string prop each."""
+    lb = pbf.LayerBuilder("pts-ř", extent=4096)
+    for fid, cap in enumerate(captions, start=1):
+        stream = gc.encode_geometry(
+            gc.GEOM_POINT,
+            np.array([fid * 5], dtype=np.int64),
+            np.array([4096 - fid], dtype=np.int64),
+            np.array([0, 1], dtype=np.int64),
+        )
+        lb.add_feature(fid, gc.GEOM_POINT, stream, {key: cap})
+    return pbf.layer_to_tile(lb.build())
+
+
+def _general_rows(blob):
+    """(layer, id, type, px, py, caption) per feature from the general
+    decoder, or None where it rejects the tile."""
+    try:
+        rows = []
+        for lmsg in pbf.decode_tile(blob):
+            layer = pbf.decode_layer(lmsg)
+            for f in layer["features"]:
+                xs, ys, _ = gc.decode_geometry(
+                    int(f["type"]),
+                    f["geometry"].astype(np.int64),
+                    version=int(layer["version"]),
+                )
+                if len(xs):
+                    rows.append((
+                        layer["name"], int(f["id"]), int(f["type"]),
+                        int(xs[0]), int(ys[0]),
+                        pbf.feature_props(layer, f).get("caption"),
+                    ))
+        return rows
+    except Exception:
+        return None
+
+
+_SINGLES_TILES = [
+    _singles_tile("caption", ["a", "bb", "a", "Plzeň", "ccc"]),
+    _singles_tile("caption", ["x" * 130, "Brno", "žluť"]),
+    _singles_tile("name", ["p", "q"]),
+]
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.data())
+def test_decode_singles_batch_single_byte_corruption(data):
+    """A tile with one corrupted byte beside a clean one: the batch
+    never raises, the clean tile stays on the batched path, and a
+    corrupt tile the batch keeps decodes as the general decoder
+    decodes it (otherwise it is demoted, and the general decoder
+    decides). Non-UTF-8 layer names and captions used to raise or
+    yield invalid Arrow strings here."""
+    clean = data.draw(st.sampled_from(_SINGLES_TILES))
+    base = data.draw(st.sampled_from(_SINGLES_TILES))
+    pos = data.draw(st.integers(0, len(base) - 1))
+    byte = data.draw(st.integers(0, 255).filter(lambda b: b != base[pos]))
+    corrupt = base[:pos] + bytes([byte]) + base[pos + 1:]
+
+    blobs = [clean, corrupt]
+    descs, tix = [], []
+    for i, b in enumerate(blobs):
+        for lay in pbf.scan_singles_tile(b) or []:
+            descs.append(lay)
+            tix.append(i)
+    assert tix[0] == 0
+    res, bad = pbf.decode_singles_batch(descs, blobs, tix, n_tiles=2)
+    assert res is not None and 0 not in bad
+    res["caption"].validate(full=True)
+
+    fast = {0: [], 1: []}
+    first = 0
+    for li, lay in enumerate(res["lay_idx"].tolist()):
+        for r in range(first, first + int(res["nfeat"][li])):
+            fast[tix[lay]].append((
+                res["layer_name"][li], int(res["fid"][r]),
+                int(res["gt"][r]), int(res["px"][r]), int(res["py"][r]),
+                res["caption"][r].as_py(),
+            ))
+        first += int(res["nfeat"][li])
+    assert fast[0] == _general_rows(clean)
+    if 1 in tix and 1 not in bad:
+        assert fast[1] == _general_rows(corrupt)
+
+
+def test_decode_singles_batch_demotes_non_utf8_layer_name():
+    clean = _SINGLES_TILES[0]
+    corrupt = clean.replace(b"pts-\xc5\x99", b"pts-\xff\x99")
+    descs = pbf.scan_singles_tile(clean) + pbf.scan_singles_tile(corrupt)
+    res, bad = pbf.decode_singles_batch(descs, [clean, corrupt], [0, 1])
+    assert bad == [1] and res["layer_name"].tolist() == ["pts-ř"]
+    assert _general_rows(corrupt) is None
