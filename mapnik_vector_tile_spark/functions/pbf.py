@@ -643,242 +643,6 @@ def _varint_len_np(v: np.ndarray) -> np.ndarray:
     return out
 
 
-def _splice_merge_fast(blobs, name: str) -> bytes | None:
-    """Vectorized splice merge for the CANONICAL hot-tile shape —
-    every feature a single-prop single-point record (fid, one
-    (key,value) tag pair, MoveTo geometry = exactly 3 varints, no
-    raster), which makes each feature record a FIXED 15-varint
-    stride: [0x12 L 0x08 fid 0x12 2 k v 0x18 g 0x22 3 g0 g1 g2].
-    The whole features section is then a pure varint stream: one
-    boundary scan + strided pattern verification parses 150k
-    features in a few numpy passes, and the rebuilt section is
-    emitted as ONE varint array — ~10x over the scalar path on the
-    z0 salted-merge straggler, byte-identical by construction
-    (pinned against the scalar path by tests + the kernel-bench
-    out_bytes pin).  Returns None for ANY deviation (multi-vertex,
-    0/2+ props, raster, duplicate/None fids, version/extent
-    disagreement, pattern break) — the scalar path is the always-
-    sound fallback."""
-    metas = []  # (version, extent, keys, raw_values)
-    fid_parts = []
-    key_parts = []  # key STRINGS per feature
-    val_parts = []  # raw value BYTES per feature
-    gt_parts = []
-    geom_parts = []  # (n, 3) uint64 geometry varint values
-    for b in blobs:
-        # layer-level skim up to the first feature record
-        pos = 0
-        n = len(b)
-        version = 1
-        extent = 4096
-        lname = None
-        feat_start = None
-        while pos < n:
-            tag, pos2 = _read_varint(b, pos)
-            field, wire = tag >> 3, tag & 7
-            if wire == 0:
-                v, pos2 = _read_varint(b, pos2)
-                if field == 15:
-                    version = v
-                elif field == 5:
-                    extent = v
-            elif wire == 2:
-                ln, pos2 = _read_varint(b, pos2)
-                if field == 2:
-                    feat_start = pos
-                    break
-                if field == 1:
-                    lname = b[pos2 : pos2 + ln].decode("utf-8")
-                elif field in (3, 4):
-                    return None  # keys/values before features: odd
-                pos2 += ln
-            else:
-                return None
-            pos = pos2
-        if feat_start is None or lname is None:
-            return None
-        vals, consumed = varint_decode_np(b[feat_start:])
-        n_rec_max = len(vals) // 15
-        if n_rec_max == 0:
-            return None
-        v15 = vals[: n_rec_max * 15].reshape(n_rec_max, 15)
-        okm = (
-            (v15[:, 0] == 0x12)
-            & (v15[:, 2] == 0x08)
-            & (v15[:, 4] == 0x12)
-            & (v15[:, 8] == 0x18)
-            & (v15[:, 10] == 0x22)
-        )
-        bad = np.flatnonzero(~okm)
-        n_rec = int(bad[0]) if len(bad) else n_rec_max
-        if n_rec == 0:
-            return None
-        v15 = v15[:n_rec]
-        # byte-level consistency: L / TL / GL must equal the byte
-        # spans the 15-varint-stride hypothesis implies — any record
-        # with a different shape (multi-vertex geometry, 0/2+ props,
-        # raster) breaks one of these and we fall back
-        arr = np.frombuffer(b, dtype=np.uint8, count=min(
-            n, feat_start + consumed
-        ))[feat_start:]
-        ends = np.nonzero((arr & 0x80) == 0)[0]
-        if len(ends) < n_rec * 15:
-            return None
-        ends = ends[: n_rec * 15]
-        starts = np.empty(n_rec * 15, dtype=np.int64)
-        starts[0] = 0
-        starts[1:] = ends[:-1] + 1
-        rec_start = starts[::15]
-        pay_start = starts[2::15]
-        tag_start = starts[6::15]
-        tag_end = starts[8::15]
-        g_start = starts[12::15]
-        rec_end = np.empty(n_rec, dtype=np.int64)
-        rec_end[:-1] = rec_start[1:]
-        rec_end[-1] = ends[-1] + 1
-        if not (
-            np.array_equal(
-                v15[:, 1], (rec_end - pay_start).astype(np.uint64)
-            )
-            and np.array_equal(
-                v15[:, 5], (tag_end - tag_start).astype(np.uint64)
-            )
-            and np.array_equal(
-                v15[:, 11], (rec_end - g_start).astype(np.uint64)
-            )
-        ):
-            return None
-        # minimality check: the fast path RE-ENCODES every varint
-        # minimally, while the scalar path splices raw byte spans —
-        # an overlong varint in a foreign/rescaled blob would pass
-        # the span checks above yet merge to different bytes.  Every
-        # varint's actual byte span must equal its minimal length,
-        # else fall back to the scalar path (which preserves the
-        # source bytes verbatim).
-        if not np.array_equal(
-            ends - starts + 1, _varint_len_np(v15.ravel())
-        ):
-            return None
-        # after the last record: keys/values/extent section or EOF
-        sec_end = feat_start + int(rec_end[-1])
-        if sec_end < n and b[sec_end] not in (0x1A, 0x22, 0x28, 0x78):
-            return None
-        # parse the trailing keys/values/extent sections — inlined
-        # tight loop (one dict record per feature makes this section
-        # feature-proportional, so _read_varint call overhead counts)
-        keys: list[str] = []
-        raw_values: list[bytes] = []
-        pos = sec_end
-        while pos < n:
-            t = b[pos]
-            if t == 0x1A or t == 0x22:  # key / value record
-                ln = b[pos + 1]
-                pos2 = pos + 2
-                if ln >= 0x80:
-                    ln, pos2 = _read_varint(b, pos + 1)
-                payload = b[pos2 : pos2 + ln]
-                pos = pos2 + ln
-                if t == 0x1A:
-                    keys.append(payload.decode("utf-8"))
-                else:
-                    raw_values.append(payload)
-                continue
-            tag, pos = _read_varint(b, pos)
-            field, wire = tag >> 3, tag & 7
-            if wire == 0:
-                v, pos = _read_varint(b, pos)
-                if field == 15:
-                    version = v
-                elif field == 5:
-                    extent = v
-            elif wire == 2:
-                return None  # features after dicts: non-canonical
-            else:
-                return None
-        ki = v15[:, 6].astype(np.int64)
-        vi = v15[:, 7].astype(np.int64)
-        if (
-            (len(keys) and int(ki.max()) >= len(keys))
-            or (len(raw_values) and int(vi.max()) >= len(raw_values))
-            or (not len(keys))
-            or (not len(raw_values))
-        ):
-            return None
-        metas.append((version, extent))
-        fid_parts.append(v15[:, 3])
-        karr = np.array(keys, dtype=object)
-        varr = np.array(raw_values, dtype=object)
-        key_parts.append(karr[ki])
-        val_parts.append(varr[vi])
-        gt_parts.append(v15[:, 9])
-        geom_parts.append(v15[:, 12:15])
-    if len({m for m in metas}) > 1:
-        raise ValueError(
-            f"splice_merge_layers({name!r}): partial blobs disagree "
-            f"on (version, extent): {sorted(set(metas))} — rescale "
-            "mismatched blobs before merging"
-        )
-    version, extent = metas[0]
-    import pandas as pd
-
-    fids = np.concatenate(fid_parts)
-    if len(np.unique(fids)) != len(fids):
-        return None  # duplicate fids need the full tuple comparator
-    order = np.argsort(fids, kind="stable")
-    fids = fids[order]
-    keystrs = np.concatenate(key_parts)[order]
-    valbytes = np.concatenate(val_parts)[order]
-    gts = np.concatenate(gt_parts)[order]
-    geoms = np.concatenate(geom_parts)[order]
-    # first-appearance dictionaries (pd.factorize preserves order)
-    knew, kuniq = pd.factorize(keystrs)
-    vnew, vuniq = pd.factorize(valbytes)
-    knew = knew.astype(np.uint64)
-    vnew = vnew.astype(np.uint64)
-    # emit the whole features section as one varint stream
-    m = len(fids)
-    tl = _varint_len_np(knew) + _varint_len_np(vnew)
-    gl = _varint_len_np(geoms[:, 0]) + _varint_len_np(
-        geoms[:, 1]
-    ) + _varint_len_np(geoms[:, 2])
-    big_l = (
-        1 + _varint_len_np(fids)            # 0x08 fid
-        + 1 + _varint_len_np(tl.astype(np.uint64)) + tl   # 0x12 TL tags
-        + 1 + _varint_len_np(gts)           # 0x18 gtype
-        + 1 + _varint_len_np(gl.astype(np.uint64)) + gl   # 0x22 GL geom
-    )
-    stream = np.empty((m, 15), dtype=np.uint64)
-    stream[:, 0] = 0x12
-    stream[:, 1] = big_l.astype(np.uint64)
-    stream[:, 2] = 0x08
-    stream[:, 3] = fids
-    stream[:, 4] = 0x12
-    stream[:, 5] = tl.astype(np.uint64)
-    stream[:, 6] = knew
-    stream[:, 7] = vnew
-    stream[:, 8] = 0x18
-    stream[:, 9] = gts
-    stream[:, 10] = 0x22
-    stream[:, 11] = gl.astype(np.uint64)
-    stream[:, 12:15] = geoms
-    feat_bytes = varint_bytes_np(stream.ravel())
-    nm = name.encode("utf-8")
-    parts = [
-        _tag(15, 0), varint_of(version),
-        _tag(1, 2), varint_of(len(nm)), nm,
-        feat_bytes,
-    ]
-    t3 = _tag(3, 2)
-    for k in kuniq:
-        kb = str(k).encode("utf-8")
-        parts += (t3, varint_of(len(kb)), kb)
-    t4 = _tag(4, 2)
-    for v in vuniq:
-        parts += (t4, varint_of(len(v)), v)
-    parts += (_tag(5, 0), varint_of(extent))
-    return b"".join(parts)
-
-
 def build_singles_layers_batch(
     name: str,
     version: int,
@@ -893,11 +657,11 @@ def build_singles_layers_batch(
     n_groups: int,
     emit_tiles: bool = False,
 ) -> list[bytes | None]:
-    """Whole-BATCH assembly of canonical single-point one-prop layers —
-    the emit side of _splice_merge_fast applied to the ENCODE hot path:
-    every feature of every group in the batch is a fixed 15-varint
-    record [0x12 L 0x08 fid 0x12 TL 0 vidx 0x18 gt 0x22 3 9 zzx zzy],
-    so the feature sections of ALL groups are ONE varint array
+    """Whole-BATCH assembly of canonical single-point one-prop layers
+    for the ENCODE hot path: every feature of every group in the batch
+    is a fixed 15-varint record
+    [0x12 L 0x08 fid 0x12 TL 0 vidx 0x18 gt 0x22 3 9 zzx zzy], so the
+    feature sections of ALL groups are ONE varint array
     (varint_bytes_np) sliced per group by byte offsets — no per-feature
     Python, no per-feature dict lookups (callers guarantee one shared
     key, so the key dictionary is the constant [key_name] and only the
@@ -1019,8 +783,9 @@ def scan_singles_tile(buf: bytes):
     Returns a list of per-layer descriptors
     ``(name_bytes, key_bytes, feat_start, feat_end, n_features,
     val_start, val_end)`` with byte offsets into ``buf`` when EVERY
-    layer matches the canonical singles layout the batch encoder (and
-    the splice merger) emit: head ``[0x78 v>=2][0x0A name]``,
+    layer matches the canonical singles layout that the batch encoder,
+    LayerBuilder and ``splice_merge_layers`` all emit for one-key
+    single-point layers: head ``[0x78 v>=2][0x0A name]``,
     contiguous ``0x12``-framed feature records, exactly ONE key, a
     value section, tail ``[0x28 4096]``. Returns None on ANY deviation
     — the caller must fall back to the general ``decode_layer`` path
@@ -1441,17 +1206,9 @@ def splice_merge_layers(blobs, name: str) -> bytes:
     bytes: re-build the key/value dictionaries first-appearance in
     global feature_id order (bit-identical to a single-pass encode —
     the salted/unsalted byte-equality invariant), remap tag indices,
-    splice raw feature payloads back together.
-
-    Tiles above ~64 KiB of partials take the vectorized
-    _splice_merge_fast path when every record is canonical (the
-    salted low-zoom hot-tile straggler this merge used to serialize
-    on); anything non-canonical falls back to the scalar path below,
-    which is the semantics of record."""
-    if sum(len(b) for b in blobs) >= 65536:
-        fast = _splice_merge_fast(blobs, name)
-        if fast is not None:
-            return fast
+    splice raw feature payloads back together (split_layer -> sort ->
+    build_layer_merged). Raw geometry bytes are copied verbatim, so a
+    foreign blob's overlong varints survive the merge unchanged."""
     version = 2
     extent = 4096
     seen_ve: set[tuple[int, int]] = set()
@@ -1504,57 +1261,24 @@ def build_layer_merged(
     FIRST-APPEARANCE order over ``feats`` = (fid, gtype,
     [(key_str, raw_value_bytes)], raw_geom, raw_raster). Raw Value
     bytes are copied verbatim (no oneof normalization); tag indices
-    are re-derived against the merged dictionaries. The builder for
+    are re-derived against the merged dictionaries, and the bytes are
+    assembled by rebuild_layer_raw. The builder for
     every path that merges features from MULTIPLE source layers
     (splice_merge_layers, downzoom rollup) — callers fix the feature
     order first, because dictionary order (hence layer bytes) follows
     it."""
     key_map: dict[str, int] = {}
     val_map: dict[bytes, int] = {}
-    t2 = _tag(2, 2)
-    fparts = []
+    tagged = []
     for fid, gtype, props, raw_geom, raw_raster in feats:
         tags = []
         for k, v in props:
-            ki = key_map.get(k)
-            if ki is None:
-                ki = len(key_map)
-                key_map[k] = ki
-            vi = val_map.get(v)
-            if vi is None:
-                vi = len(val_map)
-                val_map[v] = vi
-            tags.append(ki)
-            tags.append(vi)
-        fp = []
-        if fid is not None:
-            fp += (_tag(1, 0), varint_of(int(fid)))
-        if tags:
-            tp = varints_py(tags)
-            fp += (t2, varint_of(len(tp)), tp)
-        fp += (
-            _tag(3, 0),
-            varint_of(int(gtype)),
-            _tag(4, 2),
-            varint_of(len(raw_geom)),
-            raw_geom,
-        )
-        if raw_raster is not None:
-            fp += (_tag(5, 2), varint_of(len(raw_raster)), raw_raster)
-        fb = b"".join(fp)
-        fparts += (t2, varint_of(len(fb)), fb)
-    nm = name.encode("utf-8")
-    parts = [_tag(15, 0), varint_of(version), _tag(1, 2), varint_of(len(nm)), nm]
-    parts += fparts
-    t3 = _tag(3, 2)
-    for k in key_map:
-        kb = k.encode("utf-8")
-        parts += (t3, varint_of(len(kb)), kb)
-    t4 = _tag(4, 2)
-    for v in val_map:
-        parts += (t4, varint_of(len(v)), v)
-    parts += (_tag(5, 0), varint_of(extent))
-    return b"".join(parts)
+            tags.append(key_map.setdefault(k, len(key_map)))
+            tags.append(val_map.setdefault(v, len(val_map)))
+        tagged.append((fid, gtype, tags, raw_geom, raw_raster))
+    return rebuild_layer_raw(
+        name, version, extent, list(key_map), list(val_map), tagged
+    )
 
 
 def rebuild_layer_raw(

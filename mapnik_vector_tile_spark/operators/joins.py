@@ -171,18 +171,59 @@ def _refine(cands: DataFrame, regions: DataFrame, broadcast_geo: bool) -> DataFr
     return joined.mapInPandas(refine_batches, schema=REFINE_SCHEMA)
 
 
+def _pip_candidates(
+    points: DataFrame, cells: DataFrame, z: int, broadcast: bool
+) -> DataFrame:
+    """Candidate (point, region) pairs of every PIP join: each point's
+    z-cell equi-joined to the regions' covering ``cells`` (region_id,
+    ctx, cty). ``broadcast`` ships the cells to the point side (which
+    then never shuffles); otherwise both sides shuffle on the cell key
+    (PBSM), where AQE skew-join splits hot cells."""
+    pts = with_point_cell(points, z).select(
+        F.col("id").alias("point_id"), "mx", "my", "ctx", "cty"
+    )
+    if broadcast:
+        cands = pts.join(F.broadcast(cells), ["ctx", "cty"])
+    else:
+        n = int(
+            points.sparkSession.conf.get("spark.sql.shuffle.partitions", "64")
+        )
+        cands = pts.repartition(n, "ctx", "cty").join(
+            cells.repartition(n, "ctx", "cty"), ["ctx", "cty"]
+        )
+    return cands.select("point_id", "region_id", "mx", "my")
+
+
+def _exact_cover_cells(regions: DataFrame, z: int) -> DataFrame:
+    """(region_id, ctx, cty) for every cell the region's polygon
+    touches (operators/cellcover.py), not its envelope's range."""
+    from mapnik_vector_tile_spark.operators.cellcover import (
+        cover_polygon_cells,
+    )
+
+    feats = regions.select(
+        F.col("region_id").alias("feature_id"),
+        F.lit(3).alias("geom_type"),
+        "xs",
+        "ys",
+        F.col("ring_offsets").alias("part_offsets"),
+        F.lit("").alias("caption"),
+    )
+    return cover_polygon_cells(feats, z).select(
+        F.col("feature_id").alias("region_id"),
+        F.col("cx").alias("ctx"),
+        F.col("cy").alias("cty"),
+    )
+
+
 def pip_join_broadcast(
     points: DataFrame, regions: DataFrame, z: int = 7
 ) -> DataFrame:
     """J3: points(id,mx,my) ⋈ regions(region_id,xs,ys,ring_offsets) ON
     ST_Contains — broadcast cell prefilter + exact refine. Point side
     never shuffles; output (point_id, region_id)."""
-    pts = with_point_cell(points, z).select(
-        F.col("id").alias("point_id"), "mx", "my", "ctx", "cty"
-    )
-    cells = F.broadcast(cover_region_cells(regions, z))
-    cands = pts.join(cells, ["ctx", "cty"]).select(
-        "point_id", "region_id", "mx", "my"
+    cands = _pip_candidates(
+        points, cover_region_cells(regions, z), z, broadcast=True
     )
     return _refine(cands, regions, broadcast_geo=True)
 
@@ -193,17 +234,8 @@ def pip_join_partitioned(
     """J4: same algebra, both sides shuffled on the cell key (PBSM) —
     for region tables too large to broadcast. AQE skew-join splits hot
     cells; candidates stay an equi-join Catalyst understands."""
-    pts = with_point_cell(points, z).select(
-        F.col("id").alias("point_id"), "mx", "my", "ctx", "cty"
-    )
-    cells = cover_region_cells(regions, z)
-    n = int(
-        points.sparkSession.conf.get("spark.sql.shuffle.partitions", "64")
-    )
-    cands = (
-        pts.repartition(n, "ctx", "cty")
-        .join(cells.repartition(n, "ctx", "cty"), ["ctx", "cty"])
-        .select("point_id", "region_id", "mx", "my")
+    cands = _pip_candidates(
+        points, cover_region_cells(regions, z), z, broadcast=False
     )
     return _refine(cands, regions, broadcast_geo=False)
 
@@ -221,33 +253,8 @@ def pip_join_cover(
     geometry refine. Closed-boundary covering guarantees no false
     negatives: a point's floor-cell always intersects any region
     containing the point, so the covered-cell equi-join can't miss."""
-    from mapnik_vector_tile_spark.operators.cellcover import (
-        cover_polygon_cells,
-    )
-
-    pts = with_point_cell(points, z).select(
-        F.col("id").alias("point_id"), "mx", "my", "ctx", "cty"
-    )
-    feats = regions.select(
-        F.col("region_id").alias("feature_id"),
-        F.lit(3).alias("geom_type"),
-        "xs",
-        "ys",
-        F.col("ring_offsets").alias("part_offsets"),
-        F.lit("").alias("caption"),
-    )
-    cells = cover_polygon_cells(feats, z).select(
-        F.col("feature_id").alias("region_id"),
-        F.col("cx").alias("ctx"),
-        F.col("cy").alias("cty"),
-    )
-    n = int(
-        points.sparkSession.conf.get("spark.sql.shuffle.partitions", "64")
-    )
-    cands = (
-        pts.repartition(n, "ctx", "cty")
-        .join(cells.repartition(n, "ctx", "cty"), ["ctx", "cty"])
-        .select("point_id", "region_id", "mx", "my")
+    cands = _pip_candidates(
+        points, _exact_cover_cells(regions, z), z, broadcast=False
     )
     return _refine(cands, regions, broadcast_geo=False)
 
@@ -424,8 +431,6 @@ def knn_auto_z(n_targets: int, k: int, r0: int = 2) -> int:
     candidates/query through the first window) measured 5-8x slower
     than z at this density rule; z too fine pays extra rounds. Clamped
     to [3, 14]."""
-    import math
-
     cells = max(1.0, n_targets * (2 * r0 + 1) ** 2 / (8.0 * k))
     return max(3, min(14, round(math.log(cells, 4))))
 
@@ -1073,37 +1078,13 @@ def pip_join_sampled(
     10^12 candidate pairs and refining the 1% you keep.
 
     rate_bp is per-10000 (the sampling-module bucket convention)."""
-    from mapnik_vector_tile_spark.operators.cellcover import (
-        cover_polygon_cells,
-    )
     from mapnik_vector_tile_spark.operators.sampling import (
         BUCKETS,
         sample_hash,
     )
 
-    pts = with_point_cell(points, z).select(
-        F.col("id").alias("point_id"), "mx", "my", "ctx", "cty"
-    )
-    feats = regions.select(
-        F.col("region_id").alias("feature_id"),
-        F.lit(3).alias("geom_type"),
-        "xs",
-        "ys",
-        F.col("ring_offsets").alias("part_offsets"),
-        F.lit("").alias("caption"),
-    )
-    cells = cover_polygon_cells(feats, z).select(
-        F.col("feature_id").alias("region_id"),
-        F.col("cx").alias("ctx"),
-        F.col("cy").alias("cty"),
-    )
-    n = int(
-        points.sparkSession.conf.get("spark.sql.shuffle.partitions", "64")
-    )
-    cands = (
-        pts.repartition(n, "ctx", "cty")
-        .join(cells.repartition(n, "ctx", "cty"), ["ctx", "cty"])
-        .select("point_id", "region_id", "mx", "my")
+    cands = _pip_candidates(
+        points, _exact_cover_cells(regions, z), z, broadcast=False
     )
     coin = sample_hash(
         F.col("point_id") * F.lit(1000003) + F.col("region_id")

@@ -13,14 +13,17 @@ vector_tile_processor.ipp create_geom_layer's visitor order.
 Scale notes (the 100TB story):
 * assign_tiles is a narrow 1->N flatmap in Arrow batches — no shuffle;
 * the groupBy is THE shuffle; low-z tiles are planet-sized hot keys, so
-  z <= SALT_MAX_Z groups are salted into 4^(SALT_MAX_Z-z) sub-groups
-  encoded as partial layers and merged in a second, much smaller
-  groupBy (two-phase aggregation — SURVEY.md §4.3);
+  their groups are salted into sub-groups encoded as partial layers and
+  merged in a second, much smaller groupBy (two-phase aggregation —
+  SURVEY.md §4.3); _encode_salt_split decides which zooms take it;
 * all geometry kernels run vectorized numpy inside the Arrow batch;
   per-feature Python is bounded by features-per-tile, not table size.
 """
 
 from __future__ import annotations
+
+import functools
+import struct
 
 import numpy as np
 import pandas as pd
@@ -609,8 +612,7 @@ def make_encode_kernel(
         single-point feature with a non-null caption (the dominant
         shape of an image-footprint table at serving zooms): the
         feature sections of ALL such groups are emitted as ONE numpy
-        varint stream (pbf.build_singles_layers_batch, the
-        _splice_merge_fast emit machinery), eliminating the
+        varint stream (pbf.build_singles_layers_batch), eliminating the
         per-feature add_feature/dict work AND most of the per-group
         Python.  Byte-identical to encode_group by construction
         (pinned by tests + the kernel-bench out_bytes pin + every
@@ -708,7 +710,7 @@ def encode_layer_partials(
     shuffle).
 
     ``emit_tiles=True`` (callers guarantee every group is a WHOLE
-    unsalted single-layer tile — encode_tiles' z>SALT_MAX_Z branch):
+    unsalted single-layer tile — _encode_salt_split's high-zoom band):
     each group folds to its final Tile buffer inline, so the finished
     output corpus is never shuffled a second time.
 
@@ -794,6 +796,52 @@ def encode_layers(
     )
 
 
+def _encode_salt_split(
+    band, z_min: int, z_max: int, as_layers: bool = False, **encode_kwargs
+) -> DataFrame:
+    """The low-zoom salt split, shared by every encode entry point.
+    ``band(lo, hi)`` returns the assigned rows of zooms [lo, hi]; only
+    the bands that [z_min, z_max] reaches are fetched, so an empty band
+    costs nothing.
+
+    * z > SALT_MAX_Z: fixed salting never splits these groups, so each
+      is a whole tile and the encode stage finishes it inline (a Tile
+      via ``emit_tiles``, or the layer itself when ``as_layers``) — the
+      finished output, most of the corpus, never shuffles a second time.
+    * z <= SALT_MAX_Z: salted partials, then one merge pass
+      (fold_tiles_from_partials, or merge_salted_layers when
+      ``as_layers``).
+    * Adaptive salting (``adaptive_salt_target``) can split a hot group
+      at ANY zoom — the inline finish would emit each salted partial as
+      a duplicate tile — so the whole range takes the merge pass.
+
+    Every branch is byte-identical to a single-pass encode of the whole
+    range (the salted/unsalted byte-equality invariant)."""
+    finish = merge_salted_layers if as_layers else fold_tiles_from_partials
+    if encode_kwargs.get("adaptive_salt_target") is not None:
+        return finish(
+            encode_layer_partials(band(z_min, z_max), **encode_kwargs)
+        )
+    parts = []
+    if z_max > SALT_MAX_Z:
+        parts.append(
+            encode_layer_partials(
+                band(max(z_min, SALT_MAX_Z + 1), z_max),
+                emit_tiles=not as_layers,
+                **encode_kwargs,
+            )
+        )
+    if z_min <= SALT_MAX_Z:
+        parts.append(
+            finish(
+                encode_layer_partials(
+                    band(z_min, min(z_max, SALT_MAX_Z)), **encode_kwargs
+                )
+            )
+        )
+    return functools.reduce(DataFrame.unionByName, parts)
+
+
 def encode_tiles(
     assigned: DataFrame,
     layer_name: str = "features",
@@ -810,18 +858,16 @@ def encode_tiles(
 ) -> DataFrame:
     """EP1 fused finish, byte-identical to fold_tiles(encode_layers(...)).
 
-    Fixed-salt mode splits on SALT_MAX_Z: z > SALT_MAX_Z groups are
-    whole unsalted tiles, so the encode stage folds them to final Tile
-    buffers INLINE (`emit_tiles`) — the finished output corpus (the
-    overwhelming majority of tiles, and ALL of it at high z where the
-    data lives) is never shuffled a second time. Only the z<=SALT_MAX_Z
-    salted partials take the merge+fold pass. The narrow assign stage
-    is recomputed once per branch — at 100 TB a narrow recompute is
-    strictly cheaper than re-shuffling the entire output.
-
-    Adaptive mode can salt ANY hot tile (a megacity z14), so it keeps
-    the single merge+fold path for every row."""
-    common = dict(
+    The zoom bands follow _encode_salt_split: high-zoom tiles are
+    finished inside the encode stage, only the salted low-zoom partials
+    take the merge+fold pass. Each band filters ``assigned``, so the
+    narrow assign stage is recomputed once per band — at 100 TB a
+    narrow recompute is strictly cheaper than re-shuffling the entire
+    output."""
+    return _encode_salt_split(
+        lambda lo, hi: assigned.filter(F.col("z").between(lo, hi)),
+        0,
+        2**31 - 1,  # z is an int column: every zoom `assigned` can hold
         layer_name=layer_name,
         extent=extent,
         buffer_units=buffer_units,
@@ -829,27 +875,11 @@ def encode_tiles(
         area_threshold=area_threshold,
         n_salts=n_salts,
         num_partitions=num_partitions,
+        adaptive_salt_target=adaptive_salt_target,
         repair=repair,
         fill_rule=fill_rule,
         simplify_strategy=simplify_strategy,
     )
-    if adaptive_salt_target is not None:
-        return fold_tiles_from_partials(
-            encode_layer_partials(
-                assigned,
-                adaptive_salt_target=adaptive_salt_target,
-                **common,
-            )
-        )
-    hi = encode_layer_partials(
-        assigned.filter(F.col("z") > SALT_MAX_Z), emit_tiles=True, **common
-    )
-    lo = fold_tiles_from_partials(
-        encode_layer_partials(
-            assigned.filter(F.col("z") <= SALT_MAX_Z), **common
-        )
-    )
-    return hi.unionByName(lo)
 
 
 def encode_tiles_from_features(
@@ -864,71 +894,32 @@ def encode_tiles_from_features(
     """encode_tiles starting from the FEATURE table — byte-identical
     output to encode_tiles(assign_tiles(features, z_min, z_max)), but
     the narrow fan-out enumerates each (feature, tile) row exactly
-    ONCE: encode_tiles' hi/lo branches each re-run the full-z-range
-    assign and then z-filter half the enumerated rows away (its
-    documented recompute-over-reshuffle tradeoff — sound when handed
-    an opaque `assigned`, but wasteful when the caller still holds
-    the features).  Splitting the zoom RANGE at SALT_MAX_Z instead
-    gives each branch its own assign over only the zooms it keeps —
-    at the bench scale this removes ~half of the encode query's
-    wall-clock, and a branch whose range is empty (e.g. z_min >
-    SALT_MAX_Z, the common high-zoom serving case) costs nothing at
-    all.  buffer_units/thin_* feed the assigns; everything else
-    passes through to the encode stage.
+    ONCE: encode_tiles' bands each re-run the full-z-range assign and
+    then z-filter part of the enumerated rows away (its documented
+    recompute-over-reshuffle tradeoff — sound when handed an opaque
+    `assigned`, but wasteful when the caller still holds the
+    features).  Here each band of _encode_salt_split runs its own
+    assign over only the zooms it keeps — at the bench scale this
+    removes ~half of the encode query's wall-clock, and a band the
+    range does not reach (the common high-zoom serving case) costs
+    nothing at all.  buffer_units/thin_* feed the assigns; everything
+    else passes through to the encode stage."""
+    extent = encode_kwargs.get("extent", tm.DEFAULT_EXTENT)
 
-    Adaptive salting (`adaptive_salt_target`) can split a hot group at
-    ANY zoom, so the hi branch's `emit_tiles=True` inline fold would
-    emit each salted partial as a finished tile — duplicate (z,x,y)
-    rows.  Like encode_tiles, adaptive mode therefore routes the whole
-    z range through the single merge+fold path (one assign, no range
-    split); byte-identity with encode_tiles holds in both modes."""
-    common = dict(buffer_units=buffer_units, **encode_kwargs)
-    if encode_kwargs.get("adaptive_salt_target") is not None:
-        assigned = assign_tiles(
+    def band(lo: int, hi: int) -> DataFrame:
+        return assign_tiles(
             features,
-            z_min,
-            z_max,
+            lo,
+            hi,
             buffer_units=buffer_units,
-            extent=encode_kwargs.get("extent", tm.DEFAULT_EXTENT),
+            extent=extent,
             thin_base_z=thin_base_z,
             thin_rate=thin_rate,
         )
-        return fold_tiles_from_partials(
-            encode_layer_partials(assigned, **common)
-        )
-    parts = []
-    if z_max > SALT_MAX_Z:
-        hi_assigned = assign_tiles(
-            features,
-            max(z_min, SALT_MAX_Z + 1),
-            z_max,
-            buffer_units=buffer_units,
-            extent=encode_kwargs.get("extent", tm.DEFAULT_EXTENT),
-            thin_base_z=thin_base_z,
-            thin_rate=thin_rate,
-        )
-        parts.append(
-            encode_layer_partials(hi_assigned, emit_tiles=True, **common)
-        )
-    if z_min <= SALT_MAX_Z:
-        lo_assigned = assign_tiles(
-            features,
-            z_min,
-            min(z_max, SALT_MAX_Z),
-            buffer_units=buffer_units,
-            extent=encode_kwargs.get("extent", tm.DEFAULT_EXTENT),
-            thin_base_z=thin_base_z,
-            thin_rate=thin_rate,
-        )
-        parts.append(
-            fold_tiles_from_partials(
-                encode_layer_partials(lo_assigned, **common)
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+
+    return _encode_salt_split(
+        band, z_min, z_max, buffer_units=buffer_units, **encode_kwargs
+    )
 
 
 def encode_wafer_tiles(
@@ -1000,14 +991,10 @@ def encode_wafer_tiles(
         n_salts=n_salts,
         repair=repair,
     )
-    if zw > SALT_MAX_Z:
-        # fixed-salt mode never salts above SALT_MAX_Z: every partial
-        # IS the whole (z,x,y) layer, so the salted-merge shuffle is
-        # pure overhead — same reasoning as encode_tiles' emit_tiles
-        # branch, kept as layer rows because the split consumes layers
-        wafers = encode_layer_partials(assigned, **common)
-    else:
-        wafers = encode_layers(assigned, **common)
+    # layer rows, because the split into children consumes layers
+    wafers = _encode_salt_split(
+        lambda lo, hi: assigned, zw, zw, as_layers=True, **common
+    )
     children = comp.overzoom_layers(
         wafers,
         dz=k,
@@ -1209,38 +1196,45 @@ def decode_tiles_to_features(
         "pxs array<long>, pys array<long>, part_offsets array<long>, caption string"
     )
 
-    def _slow_rows(zs, xs_t, ys_t, blobs, which):
+    def _tile_rows(z, x, y, blob) -> list[tuple]:
+        rows = []
+        for lmsg in pbf.decode_tile(blob):
+            layer = pbf.decode_layer(lmsg)
+            for f in layer["features"]:
+                gxs, gys, offs = gc.decode_geometry(
+                    int(f["type"]),
+                    f["geometry"].astype(np.int64),
+                    version=int(layer["version"]),
+                )
+                if not len(gxs):
+                    continue  # v1 feature degenerated entirely
+                props = pbf.feature_props(layer, f)
+                rows.append((
+                    z, x, y, layer["name"], int(f["id"]), int(f["type"]),
+                    gxs.tolist(), gys.tolist(), offs.tolist(),
+                    props.get("caption"),
+                ))
+        return rows
+
+    def _slow_rows(zs, xs_t, ys_t, blobs, which) -> pd.DataFrame:
         """General per-feature decode (v1 tolerance, multi-key props,
         arbitrary geometry) for tiles the canonical-singles scan
-        rejected — the original decode path, bit-for-bit."""
-        rows = {k: [] for k in (
+        rejected — the original decode path, bit-for-bit. A tile this
+        decoder rejects too (malformed wire data, a non-UTF-8 layer
+        name, key or string) yields no rows, so one bad tile never
+        aborts the rest of the batch."""
+        rows = []
+        for i in which:
+            try:
+                rows += _tile_rows(
+                    int(zs[i]), int(xs_t[i]), int(ys_t[i]), blobs[i]
+                )
+            except (ValueError, IndexError, struct.error):
+                continue
+        return pd.DataFrame.from_records(rows, columns=[
             "z", "x", "y", "layer", "feature_id", "geom_type",
             "pxs", "pys", "part_offsets", "caption",
-        )}
-        for i in which:
-            z, x, y = int(zs[i]), int(xs_t[i]), int(ys_t[i])
-            for lmsg in pbf.decode_tile(blobs[i]):
-                layer = pbf.decode_layer(lmsg)
-                for f in layer["features"]:
-                    gxs, gys, offs = gc.decode_geometry(
-                        int(f["type"]),
-                        f["geometry"].astype(np.int64),
-                        version=int(layer["version"]),
-                    )
-                    if not len(gxs):
-                        continue  # v1 feature degenerated entirely
-                    props = pbf.feature_props(layer, f)
-                    rows["z"].append(z)
-                    rows["x"].append(x)
-                    rows["y"].append(y)
-                    rows["layer"].append(layer["name"])
-                    rows["feature_id"].append(int(f["id"]))
-                    rows["geom_type"].append(int(f["type"]))
-                    rows["pxs"].append(gxs.tolist())
-                    rows["pys"].append(gys.tolist())
-                    rows["part_offsets"].append(offs.tolist())
-                    rows["caption"].append(props.get("caption"))
-        return rows
+        ])
 
     def gen(it):
         import pyarrow as pa
@@ -1320,9 +1314,9 @@ def decode_tiles_to_features(
                     schema=pa_schema,
                 )
             if fallback:
-                rows = _slow_rows(zs, xs_t, ys_t, blobs, fallback)
                 yield pa.RecordBatch.from_pandas(
-                    pd.DataFrame(rows), schema=pa_schema,
+                    _slow_rows(zs, xs_t, ys_t, blobs, fallback),
+                    schema=pa_schema,
                     preserve_index=False,
                 )
 

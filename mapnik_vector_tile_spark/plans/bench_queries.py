@@ -83,8 +83,8 @@ def q_decode_rt(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapnik_vector_tile_spark.operators import tiling as T
 
     feats = _order_features(spark, sf_dir)
-    # z range is entirely above SALT_MAX_Z: the from-features path
-    # skips the (empty) salted low-z branch altogether
+    # z range is entirely above the salted low-zoom band: the
+    # from-features path skips that (empty) band altogether
     tiles = T.encode_tiles_from_features(
         feats, 6, 10, buffer_units=0, n_salts=16
     )

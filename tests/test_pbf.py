@@ -171,7 +171,7 @@ def test_splice_merge_rejects_mixed_version_extent():
 
 
 def _canonical_point_blob(fids, key="k"):
-    """Layer blob in the fast-path canonical shape: every feature a
+    """Layer blob in the canonical-singles shape: every feature a
     single-prop single-point record."""
     lb = pbf.LayerBuilder("l", extent=4096)
     for fid in fids:
@@ -185,25 +185,22 @@ def _canonical_point_blob(fids, key="k"):
     return lb.build()
 
 
-def test_splice_merge_fast_matches_scalar():
-    """The vectorized fast path must be byte-identical to the scalar
-    splice path on canonical single-point blobs."""
-    a = _canonical_point_blob(range(1, 60, 2))
-    b = _canonical_point_blob(range(2, 60, 2))
-    fast = pbf._splice_merge_fast([a, b], "l")
-    assert fast is not None
-    assert fast == pbf.splice_merge_layers([a, b], "l")
+def test_splice_merge_large_equals_single_pass_encode():
+    """Two interleaved canonical-singles partials of >= 64 KiB merge to
+    exactly the bytes of one LayerBuilder encode of all their features
+    in fid order (the salted/unsalted byte-equality invariant at the
+    size of a hot low-zoom tile)."""
+    fids = range(1, 6001)
+    a = _canonical_point_blob(fids[0::2])
+    b = _canonical_point_blob(fids[1::2])
+    assert len(a) + len(b) >= 65536
+    assert pbf.splice_merge_layers([a, b], "l") == _canonical_point_blob(fids)
 
 
-def test_splice_merge_fast_rejects_overlong_varints():
-    """The fast path RE-ENCODES varints minimally while the scalar
-    path splices raw geometry bytes — an overlong varint in a
-    foreign blob passes all span checks but would merge to different
-    bytes, so the minimality gate must route it to the scalar path."""
+def test_splice_merge_keeps_overlong_varints():
+    """The merge splices raw geometry bytes: an overlong varint in a
+    foreign blob survives verbatim."""
     a = _canonical_point_blob(range(1, 40))
-    fast = pbf._splice_merge_fast([a], "l")
-    assert fast is not None  # minimal blob: fast path accepts
-
     # overlong-encode one geometry varint: rebuild the layer with the
     # first feature's final geometry byte (a 1-byte varint < 0x80)
     # padded to the two-byte form [v|0x80, 0x00] — same decoded value,
@@ -226,8 +223,6 @@ def test_splice_merge_fast_rejects_overlong_varints():
     # sanity: still parses to the same decoded features
     d2 = pbf.split_layer(blob)
     assert len(d2["features"]) == len(d["features"])
-    assert pbf._splice_merge_fast([blob], "l") is None  # falls back
-    # and the scalar path preserves the overlong geometry bytes
     merged = pbf.splice_merge_layers([blob], "l")
     assert bad_geom in merged
 

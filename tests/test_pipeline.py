@@ -203,6 +203,31 @@ def test_decode_bbox_prefilter(spark):
     )
 
 
+def test_decode_drops_tile_the_general_decoder_rejects(spark):
+    """A tile the general decoder rejects (a non-UTF-8 layer name, which
+    the batched path demotes to it) yields no rows, and the clean tile
+    in the same Arrow batch still decodes."""
+    from mapnik_vector_tile_spark.functions import pbf
+
+    lb = pbf.LayerBuilder("pts-ř")
+    for fid in (1, 2, 3):
+        stream = gc.encode_geometry(
+            gc.GEOM_POINT, np.array([fid * 5]), np.array([7]),
+            np.array([0, 1]),
+        )
+        lb.add_feature(fid, gc.GEOM_POINT, stream, {"caption": f"c{fid}"})
+    clean = pbf.layer_to_tile(lb.build())
+    corrupt = clean.replace(b"pts-\xc5\x99", b"pts-\xff\x99")
+    tiles = spark.createDataFrame(
+        [(3, 1, 2, clean), (3, 1, 3, corrupt)],
+        "z int, x long, y long, tile binary",
+    ).coalesce(1)
+    got = T.decode_tiles_to_features(tiles).toPandas()
+    assert got["y"].tolist() == [2, 2, 2]
+    assert sorted(got["feature_id"]) == [1, 2, 3]
+    assert set(got["layer"]) == {"pts-ř"}
+
+
 def test_adaptive_salt_equals_unsalted(spark):
     """Adaptive cell splitting (density-driven salt counts) must also
     reproduce byte-identical tiles — same splice-merge invariant as the
