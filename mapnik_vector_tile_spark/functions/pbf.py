@@ -30,10 +30,21 @@ import numpy as np
 # --- varint ------------------------------------------------------------------
 
 
+_VARINT_CHUNK = 1 << 16
+
+
 def varint_bytes_np(values: np.ndarray) -> bytes:
     """Vectorized packed-varint encode of a non-negative int64/uint64
     array (the geometry hot path — no Python loop over vertices)."""
     v = np.asarray(values, dtype=np.uint64)
+    if len(v) > _VARINT_CHUNK:
+        # the passes below hold ~60 bytes of temporaries per value:
+        # encode a whole-batch stream chunk by chunk (varints are
+        # per value, so the bytes are the same)
+        return b"".join(
+            varint_bytes_np(v[i: i + _VARINT_CHUNK])
+            for i in range(0, len(v), _VARINT_CHUNK)
+        )
     if len(v) == 0:
         return b""
     # byte length per value: ceil(bitlen/7), min 1 (values < 2^35 here,
@@ -643,36 +654,37 @@ def _varint_len_np(v: np.ndarray) -> np.ndarray:
     return out
 
 
-def build_singles_layers_batch(
+def build_layers_batch(
     name: str,
     version: int,
     extent: int,
     key_name: str,
     fids: np.ndarray,
     gts: np.ndarray,
-    zzx: np.ndarray,
-    zzy: np.ndarray,
-    val_encs: np.ndarray,
+    geom: np.ndarray,
+    geom_offs: np.ndarray,
+    values: np.ndarray,
     gidx: np.ndarray,
     n_groups: int,
     emit_tiles: bool = False,
 ) -> list[bytes | None]:
-    """Whole-BATCH assembly of canonical single-point one-prop layers
-    for the ENCODE hot path: every feature of every group in the batch
-    is a fixed 15-varint record
-    [0x12 L 0x08 fid 0x12 TL 0 vidx 0x18 gt 0x22 3 9 zzx zzy], so the
+    """Whole-BATCH assembly of one-prop layers for the ENCODE hot path.
+    Each feature is the varint record
+    [0x12 L 0x08 fid 0x12 TL 0 vidx 0x18 gt 0x22 GL *geometry], so the
     feature sections of ALL groups are ONE varint array
     (varint_bytes_np) sliced per group by byte offsets — no per-feature
     Python, no per-feature dict lookups (callers guarantee one shared
     key, so the key dictionary is the constant [key_name] and only the
     VALUE dictionary needs first-appearance order, computed batch-wide
-    with pandas factorize).  Byte-identical to LayerBuilder by
+    on factorized values).  Byte-identical to LayerBuilder by
     construction (pinned by tests + the kernel-bench out_bytes pin +
     every engine oracle).
 
-    Inputs are OK-row arrays, group-sorted: ``gidx`` maps each row to
-    its group ordinal in 0..n_groups-1; ``val_encs`` holds each row's
-    encoded Value message bytes.  Returns one layer (or Tile when
+    Inputs are emitted-row arrays, group-sorted: ``gidx`` maps each row
+    to its group ordinal in 0..n_groups-1; row ``i``'s geometry command
+    stream is ``geom[geom_offs[i]:geom_offs[i + 1]]`` (non-empty; a
+    single point is ``[9, zzx, zzy]``); ``values`` holds each row's
+    non-null property value.  Returns one layer (or Tile when
     ``emit_tiles``) blob per group; a group with no rows yields None."""
     import pandas as pd
 
@@ -680,59 +692,70 @@ def build_singles_layers_batch(
     out: list[bytes | None] = [None] * n_groups
     if m == 0:
         return out
-    # per-row VALUE dictionary index (first-appearance within group):
-    # factorize (gid, enc) pairs batch-wide, take each pair's first
-    # occurrence, number first occurrences within their group, scatter
-    pc, _ = pd.factorize(
-        pd.MultiIndex.from_arrays([gidx, val_encs]), sort=False
-    )
-    first = np.zeros(m, dtype=bool)
-    first[np.unique(pc, return_index=True)[1]] = True
-    grp_first_rank = np.cumsum(first) - 1  # global rank of first occs
-    # within-group rank: subtract the count of firsts before the group
-    firsts_per_group = np.zeros(n_groups + 1, dtype=np.int64)
-    np.add.at(firsts_per_group, gidx[first] + 1, 1)
-    grp_base = np.cumsum(firsts_per_group)[:-1]
-    vpos = np.empty(pc.max() + 1, dtype=np.int64)
-    vpos[pc[first]] = grp_first_rank[first] - grp_base[gidx[first]]
-    vidx = vpos[pc]
-    # the 15-varint record matrix
-    fids = fids.astype(np.uint64)
-    gts = gts.astype(np.uint64)
-    zzx = zzx.astype(np.uint64)
-    zzy = zzy.astype(np.uint64)
+    # encode each DISTINCT value once: for str values string equality
+    # is encoded-value equality; any other type (1 == 1.0 == True
+    # encode differently) is factorized on its encoding
+    codes, uniq = pd.factorize(values, sort=False)
+    if all(isinstance(u, str) for u in uniq):
+        encs = [encode_value(u) for u in uniq]
+    else:
+        codes, encs = pd.factorize(
+            np.array([encode_value(v) for v in values], dtype=object),
+            sort=False,
+        )
+    codes = codes.astype(np.int64)
+    # per-row VALUE dictionary index (first appearance within group):
+    # pairs (group, value) are numbered in first-appearance order, so a
+    # group's pairs are a contiguous id range starting at the id of its
+    # first row
+    gidx = np.asarray(gidx, dtype=np.int64)
+    pc, _ = pd.factorize(gidx * len(encs) + codes, sort=False)
+    grp_counts = np.bincount(gidx, minlength=n_groups)
+    grp_row_end = np.cumsum(grp_counts)
+    grp_row_start = grp_row_end - grp_counts
+    vidx = pc - pc[grp_row_start[gidx]]
+    first = np.empty(m, dtype=bool)
+    first[0] = True
+    first[1:] = pc[1:] > np.maximum.accumulate(pc)[:-1]
+    # the ragged record array: 12 header varints, then the geometry
+    geom = np.asarray(geom).astype(np.uint64)
+    geom_offs = np.asarray(geom_offs, dtype=np.int64)
+    glen = np.diff(geom_offs)
+    fids = np.asarray(fids).astype(np.uint64)
+    gts = np.asarray(gts).astype(np.uint64)
     vidx_u = vidx.astype(np.uint64)
     tl = 1 + _varint_len_np(vidx_u)
-    gl = 1 + _varint_len_np(zzx) + _varint_len_np(zzy)
+    gl = np.add.reduceat(_varint_len_np(geom), geom_offs[:-1])
     big_l = (
         1 + _varint_len_np(fids)
         + 1 + _varint_len_np(tl.astype(np.uint64)) + tl
         + 1 + _varint_len_np(gts)
         + 1 + _varint_len_np(gl.astype(np.uint64)) + gl
     )
-    stream = np.empty((m, 15), dtype=np.uint64)
-    stream[:, 0] = 0x12
-    stream[:, 1] = big_l.astype(np.uint64)
-    stream[:, 2] = 0x08
-    stream[:, 3] = fids
-    stream[:, 4] = 0x12
-    stream[:, 5] = tl.astype(np.uint64)
-    stream[:, 6] = 0
-    stream[:, 7] = vidx_u
-    stream[:, 8] = 0x18
-    stream[:, 9] = gts
-    stream[:, 10] = 0x22
-    stream[:, 11] = gl.astype(np.uint64)
-    stream[:, 12] = 9
-    stream[:, 13] = zzx
-    stream[:, 14] = zzy
-    feat_bytes = varint_bytes_np(stream.ravel())
+    hdr = np.empty((m, 12), dtype=np.uint64)
+    hdr[:, 0] = 0x12
+    hdr[:, 1] = big_l.astype(np.uint64)
+    hdr[:, 2] = 0x08
+    hdr[:, 3] = fids
+    hdr[:, 4] = 0x12
+    hdr[:, 5] = tl.astype(np.uint64)
+    hdr[:, 6] = 0
+    hdr[:, 7] = vidx_u
+    hdr[:, 8] = 0x18
+    hdr[:, 9] = gts
+    hdr[:, 10] = 0x22
+    hdr[:, 11] = gl.astype(np.uint64)
+    width = 12 + glen
+    is_hdr = np.zeros(int(width.sum()), dtype=bool)
+    is_hdr[
+        (np.cumsum(width) - width)[:, None] + np.arange(12, dtype=np.int64)
+    ] = True
+    stream = np.empty(len(is_hdr), dtype=np.uint64)
+    stream[is_hdr] = hdr.ravel()
+    stream[~is_hdr] = geom
+    feat_bytes = varint_bytes_np(stream)
     # record bytes = tag 0x12 (1) + varint(L) + L-byte payload
-    row_len = 1 + _varint_len_np(big_l.astype(np.uint64)) + big_l
-    row_end = np.cumsum(row_len)
-    grp_counts = np.zeros(n_groups, dtype=np.int64)
-    np.add.at(grp_counts, gidx, 1)
-    grp_row_end = np.cumsum(grp_counts)
+    row_end = np.cumsum(1 + _varint_len_np(big_l.astype(np.uint64)) + big_l)
     grp_byte_end = np.where(
         grp_counts > 0, row_end[np.maximum(grp_row_end - 1, 0)], 0
     )
@@ -742,6 +765,7 @@ def build_singles_layers_batch(
     # per-group value sections (first-appearance order = row order of
     # first occurrences); per-group Python is one slice + one join
     vo = varint_of
+    framed = [b"\x22" + vo(len(e)) + e for e in encs]
     nm = name.encode("utf-8")
     head = bytes([0x78]) + vo(version) + bytes([0x0A]) + vo(len(nm)) + nm
     kb = key_name.encode("utf-8")
@@ -749,21 +773,15 @@ def build_singles_layers_batch(
     tail = bytes([0x28]) + vo(extent)
     mv = memoryview(feat_bytes)
     f_rows = np.flatnonzero(first)
-    f_group = gidx[f_rows]
-    f_bounds = np.searchsorted(f_group, np.arange(n_groups + 1))
-    for g in range(n_groups):
-        if grp_counts[g] == 0:
-            continue
-        vparts = []
-        for r in f_rows[f_bounds[g]: f_bounds[g + 1]]:
-            enc = val_encs[r]
-            vparts.append(bytes([0x22]) + vo(len(enc)) + enc)
+    f_codes = codes[f_rows].tolist()
+    f_bounds = np.searchsorted(gidx[f_rows], np.arange(n_groups + 1))
+    for g in np.flatnonzero(grp_counts).tolist():
         layer = b"".join(
             (
                 head,
                 mv[int(grp_byte_start[g]): int(grp_byte_end[g])],
                 keysec,
-                *vparts,
+                *(framed[c] for c in f_codes[f_bounds[g]: f_bounds[g + 1]]),
                 tail,
             )
         )
@@ -778,7 +796,9 @@ _TAIL_4096 = bytes([0x28, 0x80, 0x20])  # extent field 5 = 4096
 
 def scan_singles_tile(buf: bytes):
     """Lean O(layers + features) scan of a decompressed Tile blob —
-    the DECODE twin of ``build_singles_layers_batch``'s emit layout.
+    the DECODE twin of ``build_layers_batch``'s emit layout for layers
+    whose every feature is a single point (geometry ``[9, zzx, zzy]``);
+    a layer holding any other geometry is rejected here.
 
     Returns a list of per-layer descriptors
     ``(name_bytes, key_bytes, feat_start, feat_end, n_features,
@@ -897,7 +917,7 @@ def _invalid_utf8(u8: np.ndarray, start: np.ndarray, length: np.ndarray):
 
 def decode_singles_batch(descs, blobs, tile_idx, n_tiles=None):
     """Whole-BATCH decode of canonical single-point one-prop layers —
-    the inverse of ``build_singles_layers_batch``: the feature sections
+    the inverse of ``build_layers_batch`` on single points: the feature sections
     of ALL scanned layers are ONE concatenated buffer whose varints
     decode in one vectorized pass (15 varints per record), and the
     value sections decode by a vectorized frontier scan (one numpy step

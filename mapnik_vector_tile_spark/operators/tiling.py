@@ -451,6 +451,145 @@ LAYER_SCHEMA = (
 LAYER_COLS = ["z", "x", "y", "layer", "blob", "n_features", "n_points"]
 
 
+# int64 shoelace sums of <= _SMALL_N terms are exact while every tile
+# coordinate stays within ±2^29 (and so within geomcodec's ±2^31 small
+# path); rings quantized beyond it take the per-row path
+_RING_COORD_LIM = 1 << 29
+
+
+def _ring_dedup(xs: np.ndarray, ys: np.ndarray):
+    """Row-wise twin of the ring dedupe shared by clip._finish_ring and
+    geomcodec._encode_small_single_part over a (rows, n) vertex matrix:
+    drop consecutive duplicates, then a last vertex equal to the first.
+    Returns the keep mask and the kept count per row."""
+    keep = np.ones(xs.shape, dtype=bool)
+    keep[:, 1:] = (xs[:, 1:] != xs[:, :-1]) | (ys[:, 1:] != ys[:, :-1])
+    cnt = keep.sum(axis=1)
+    # the last kept vertex has the last vertex's value (same run)
+    close = (cnt > 1) & (xs[:, 0] == xs[:, -1]) & (ys[:, 0] == ys[:, -1])
+    last = xs.shape[1] - 1 - np.argmax(keep[:, ::-1], axis=1)
+    keep[close, last[close]] = False
+    return keep, cnt - close
+
+
+def _by_count(rows, keep, cnt, xs, ys):
+    """Split rows by kept-vertex count and compact each set to a
+    (rows, count) matrix pair."""
+    for c in np.unique(cnt).tolist():
+        sel = cnt == c
+        k = keep[sel]
+        yield c, rows[sel], xs[sel][k].reshape(-1, c), ys[sel][k].reshape(-1, c)
+
+
+def _small_ring_streams(blobs, frame):
+    """Batch twin of the per-row polygon path (``feature_stream``) for
+    the dominant footprint shape: a one-ring polygon of 3.._SMALL_N
+    packed vertices. Each scalar step runs column-wise in the scalar
+    float operation order, so the streams are bit-identical:
+
+    clip_ring's bbox fast path (a ring missing the buffered box paints
+    nothing; one inside it is _finish_ring'd) -> the sequential world
+    area ``<= 0`` drop -> quantize -> int signed-area winding reversal
+    -> the small single-part encode (dedupe, zero-area drop, zigzag
+    MoveTo/LineTo/ClosePath).
+
+    ``frame`` is per-row (minx, maxy, scale, bx0, by0, bx1, by1).
+    Returns (done, nverts, pieces): ``done[i]`` when row i is settled
+    here (painted via ``pieces`` or not painted at all); ``nverts`` its
+    raw packed vertex count; ``pieces`` a list of (row indices, stream
+    matrix), one matrix per stream length. Rows not done (clipped,
+    multi-ring, other sizes, extreme coordinates) need the per-row
+    path."""
+    minx, maxy, scale, bx0, by0, bx1, by1 = frame
+    k = len(blobs)
+    done = np.zeros(k, dtype=bool)
+    nverts = np.zeros(k, dtype=np.int64)
+    pieces = []
+    # _pack_coords of one ring: [n, 2] header, xs, ys, offsets [0, n]
+    lens = np.fromiter(map(len, blobs), np.int64, count=k)
+    cand = np.flatnonzero(
+        (lens >= 32 + 16 * 3) & (lens <= 32 + 16 * gc._SMALL_N)
+        & (lens % 16 == 0)
+    )
+    if not len(cand):
+        return done, nverts, pieces
+    buf = b"".join(blobs[cand])
+    wi = np.frombuffer(buf, np.int64)
+    wf = np.frombuffer(buf, np.float64)
+    w0 = np.concatenate(([0], np.cumsum(lens[cand])[:-1])) // 8
+    n = wi[w0]
+    ok = (wi[w0 + 1] == 2) & (lens[cand] == 32 + 16 * n)
+    cand, w0, n = cand[ok], w0[ok], n[ok]
+    ok = (wi[w0 + 2 + 2 * n] == 0) & (wi[w0 + 3 + 2 * n] == n)
+    cand, w0, n = cand[ok], w0[ok], n[ok]
+    nverts[cand] = n
+    for nv in np.unique(n).tolist():
+        sel = n == nv
+        rows = cand[sel]
+        at = (w0[sel] + 2)[:, None] + np.arange(nv)
+        xs, ys = wf[at], wf[at + nv]
+        rx0, rx1 = xs.min(axis=1), xs.max(axis=1)
+        ry0, ry1 = ys.min(axis=1), ys.max(axis=1)
+        miss = (
+            (rx1 < bx0[rows]) | (rx0 > bx1[rows])
+            | (ry1 < by0[rows]) | (ry0 > by1[rows])
+        )
+        inside = (
+            (rx0 >= bx0[rows]) & (rx1 <= bx1[rows])
+            & (ry0 >= by0[rows]) & (ry1 <= by1[rows])
+        )
+        done[rows[miss]] = True
+        rows, xs, ys = rows[inside], xs[inside], ys[inside]
+        keep, cnt = _ring_dedup(xs, ys)
+        done[rows[cnt < 3]] = True
+        live = cnt >= 3
+        for f, frows, fx, fy in _by_count(
+            rows[live], keep[live], cnt[live], xs[live], ys[live]
+        ):
+            area = 0.0
+            for i in range(f):
+                j = (i + 1) % f
+                area = area + (fx[:, i] * fy[:, j] - fx[:, j] * fy[:, i])
+            flat = area == 0.0
+            done[frows[flat]] = True
+            frows, fx, fy = frows[~flat], fx[~flat], fy[~flat]
+            px = tm.round_half_away_np(
+                (fx - minx[frows, None]) * scale[frows, None]
+            )
+            py = tm.round_half_away_np(
+                (maxy[frows, None] - fy) * scale[frows, None]
+            )
+            lim = _RING_COORD_LIM
+            fits = (
+                (px >= -lim) & (px <= lim) & (py >= -lim) & (py <= lim)
+            ).all(axis=1)
+            frows, px, py = frows[fits], px[fits], py[fits]
+            a2 = np.zeros(len(frows), dtype=np.int64)
+            for i in range(f):
+                j = (i + 1) % f
+                a2 += px[:, i] * py[:, j] - px[:, j] * py[:, i]
+            flip = a2 < 0
+            px[flip] = px[flip, ::-1]
+            py[flip] = py[flip, ::-1]
+            done[frows] = True
+            keep2, cnt2 = _ring_dedup(px, py)
+            paint = (a2 != 0) & (cnt2 >= 3)
+            for m, mrows, qx, qy in _by_count(
+                frows[paint], keep2[paint], cnt2[paint], px[paint],
+                py[paint],
+            ):
+                st = np.empty((len(mrows), 2 * m + 3), dtype=np.int64)
+                st[:, 0] = tm.command_integer_np(tm.MOVE_TO, 1)
+                st[:, 1] = tm.zigzag_encode_np(qx[:, 0])
+                st[:, 2] = tm.zigzag_encode_np(qy[:, 0])
+                st[:, 3] = tm.command_integer_np(tm.LINE_TO, m - 1)
+                st[:, 4:-1:2] = tm.zigzag_encode_np(np.diff(qx, axis=1))
+                st[:, 5:-1:2] = tm.zigzag_encode_np(np.diff(qy, axis=1))
+                st[:, -1] = tm.command_integer_np(tm.CLOSE_PATH, 1)
+                pieces.append((mrows, st))
+    return done, nverts, pieces
+
+
 def make_encode_kernel(
     layer_name: str,
     extent: int,
@@ -462,10 +601,15 @@ def make_encode_kernel(
     fill_rule: str = "even_odd",
     simplify_strategy: str = "douglas-peucker",
 ):
-    """The per-group encode kernel (prepare, encode_group) used by
+    """The encode kernel (prepare, encode_group, encode_batch) used by
     encode_layer_partials — exposed at module level so
     jobs/kernel_bench.py can time it on a fixed in-process batch
     with no Spark/host-noise confound (BASELINE.md §4.4)."""
+    # the batch ring path reproduces the plain clip -> quantize ->
+    # winding -> encode chain only; repair/simplify/area options keep
+    # every multi-vertex row on the per-row path
+    ring_batch = not (repair or simplify_distance > 0 or area_threshold > 0)
+
     def prepare(cols: dict, n: int) -> dict:
         # singles arrive pre-quantized from assign_tiles (px/py tile
         # ints, arrays nulled) — the buffered-bounds check is pure int
@@ -485,16 +629,115 @@ def make_encode_kernel(
             "_zzy": zzy,
         }
 
-    def encode_group(key, cols: dict, sl: slice) -> list[tuple] | None:
-        z, x, y = int(key[0]), int(key[1]), int(key[2])
+    def tile_frame(z, x, y):
+        """(minx, maxy, scale, bx0, by0, bx1, by1) of tile z/x/y and its
+        buffered box, for scalars or elementwise over int64 arrays (the
+        same float operations either way)."""
         span = tm.tile_span(z)
         minx = -tm.W + x * span
         maxy = tm.W - y * span
         buf_m = span * buffer_units / extent
-        bx0, by0 = minx - buf_m, (maxy - span) - buf_m
-        bx1, by1 = minx + span + buf_m, maxy + buf_m
-        scale = extent / span
+        return (
+            minx,
+            maxy,
+            extent / span,
+            minx - buf_m,
+            (maxy - span) - buf_m,
+            minx + span + buf_m,
+            maxy + buf_m,
+        )
 
+    def feature_stream(gtype, blob, frame) -> tuple[np.ndarray, int]:
+        """One packed multi-vertex row: clip (world coords) -> quantize
+        -> winding/simplify (tile units) -> command stream. Returns the
+        stream (empty when nothing is painted) and the raw vertex
+        count."""
+        minx, maxy, scale, bx0, by0, bx1, by1 = frame
+        xs, ys, offs = _unpack_coords(blob)
+        n_xs = len(xs)
+        unpainted = np.empty(0, dtype=np.int64), n_xs
+        if gtype == gc.GEOM_POINT:
+            cx, cy = clipmod.clip_points(xs, ys, bx0, by0, bx1, by1)
+            if len(cx) == 0:
+                return unpainted
+            px = tm.round_half_away_np((cx - minx) * scale)
+            py = tm.round_half_away_np((maxy - cy) * scale)
+            px, py = _dedup_pairs(px, py)
+            stream = gc.encode_geometry(
+                gc.GEOM_POINT, px, py, np.array([0, len(px)])
+            )
+        elif gtype == gc.GEOM_LINESTRING:
+            parts = []
+            for p in range(len(offs) - 1):
+                parts.extend(
+                    clipmod.clip_line(
+                        xs[offs[p] : offs[p + 1]],
+                        ys[offs[p] : offs[p + 1]],
+                        bx0,
+                        by0,
+                        bx1,
+                        by1,
+                    )
+                )
+            if not parts:
+                return unpainted
+            fx = np.concatenate([p[0] for p in parts])
+            fy = np.concatenate([p[1] for p in parts])
+            poffs = np.cumsum([0] + [len(p[0]) for p in parts])
+            px = tm.round_half_away_np((fx - minx) * scale)
+            py = tm.round_half_away_np((maxy - fy) * scale)
+            if simplify_distance > 0:
+                px, py, poffs = simp.simplify_rings(
+                    px, py, poffs, simplify_distance, closed=False,
+                    strategy=simplify_strategy,
+                )
+            stream = gc.encode_geometry(gc.GEOM_LINESTRING, px, py, poffs)
+        elif gtype == gc.GEOM_POLYGON:
+            if repair:
+                # F12 wagyu-parity repair: decompose invalid
+                # (self-crossing / self-touching) rings into
+                # simple lobes BEFORE box clipping — S-H clip
+                # is only sound on simple rings
+                xs, ys, offs = repairmod.repair_rings(
+                    xs, ys, offs, fill_rule=fill_rule
+                )
+            fx, fy, roffs = clipmod.clip_polygon(
+                xs, ys, offs, bx0, by0, bx1, by1
+            )
+            if len(fx) == 0:
+                return unpainted
+            px = tm.round_half_away_np((fx - minx) * scale)
+            py = tm.round_half_away_np((maxy - fy) * scale)
+            # wagyu-parity winding repair in tile coords (even-odd
+            # containment depth -> exterior positive, hole negative)
+            px, py = pipmod.normalize_ring_winding(
+                px, py, roffs, gc.signed_area2
+            )
+            if simplify_distance > 0:
+                px, py, roffs = simp.simplify_rings(
+                    px, py, roffs, simplify_distance, closed=True,
+                    strategy=simplify_strategy,
+                )
+            if area_threshold > 0:
+                # reference processor option: drop tiny rings in
+                # tile units (clipper.hpp area_threshold). AFTER
+                # simplify, matching the reference chain
+                # (geometry_simplifier feeds the clipper that
+                # applies area_threshold) — simplification-created
+                # slivers must not survive.
+                px, py, roffs = clipmod.drop_small_rings(
+                    px, py, roffs, area_threshold, gc.signed_area2
+                )
+                if len(px) == 0:
+                    return unpainted
+            stream = gc.encode_geometry(gc.GEOM_POLYGON, px, py, roffs)
+        else:
+            return unpainted
+        return stream, n_xs
+
+    def encode_group(key, cols: dict, sl: slice) -> list[tuple] | None:
+        z, x, y = int(key[0]), int(key[1]), int(key[2])
+        frame = tile_frame(z, x, y)
         lb = pbf.LayerBuilder(layer_name, extent=extent)
         n_pts = 0
         fids = cols["feature_id"]
@@ -514,87 +757,7 @@ def make_encode_kernel(
                 stream = (9, int(zzxs[i]), int(zzys[i]))
                 n_xs = 1
             else:
-                xs, ys, offs = _unpack_coords(coords[i])
-                n_xs = len(xs)
-                if gtype == gc.GEOM_POINT:
-                    cx, cy = clipmod.clip_points(xs, ys, bx0, by0, bx1, by1)
-                    if len(cx) == 0:
-                        continue
-                    px = tm.round_half_away_np((cx - minx) * scale)
-                    py = tm.round_half_away_np((maxy - cy) * scale)
-                    px, py = _dedup_pairs(px, py)
-                    stream = gc.encode_geometry(
-                        gc.GEOM_POINT, px, py, np.array([0, len(px)])
-                    )
-                elif gtype == gc.GEOM_LINESTRING:
-                    parts = []
-                    for p in range(len(offs) - 1):
-                        parts.extend(
-                            clipmod.clip_line(
-                                xs[offs[p] : offs[p + 1]],
-                                ys[offs[p] : offs[p + 1]],
-                                bx0,
-                                by0,
-                                bx1,
-                                by1,
-                            )
-                        )
-                    if not parts:
-                        continue
-                    fx = np.concatenate([p[0] for p in parts])
-                    fy = np.concatenate([p[1] for p in parts])
-                    poffs = np.cumsum([0] + [len(p[0]) for p in parts])
-                    px = tm.round_half_away_np((fx - minx) * scale)
-                    py = tm.round_half_away_np((maxy - fy) * scale)
-                    if simplify_distance > 0:
-                        px, py, poffs = simp.simplify_rings(
-                            px, py, poffs, simplify_distance, closed=False,
-                            strategy=simplify_strategy,
-                        )
-                    stream = gc.encode_geometry(
-                        gc.GEOM_LINESTRING, px, py, poffs
-                    )
-                elif gtype == gc.GEOM_POLYGON:
-                    if repair:
-                        # F12 wagyu-parity repair: decompose invalid
-                        # (self-crossing / self-touching) rings into
-                        # simple lobes BEFORE box clipping — S-H clip
-                        # is only sound on simple rings
-                        xs, ys, offs = repairmod.repair_rings(
-                            xs, ys, offs, fill_rule=fill_rule
-                        )
-                    fx, fy, roffs = clipmod.clip_polygon(
-                        xs, ys, offs, bx0, by0, bx1, by1
-                    )
-                    if len(fx) == 0:
-                        continue
-                    px = tm.round_half_away_np((fx - minx) * scale)
-                    py = tm.round_half_away_np((maxy - fy) * scale)
-                    # wagyu-parity winding repair in tile coords (even-odd
-                    # containment depth -> exterior positive, hole negative)
-                    px, py = pipmod.normalize_ring_winding(
-                        px, py, roffs, gc.signed_area2
-                    )
-                    if simplify_distance > 0:
-                        px, py, roffs = simp.simplify_rings(
-                            px, py, roffs, simplify_distance, closed=True,
-                            strategy=simplify_strategy,
-                        )
-                    if area_threshold > 0:
-                        # reference processor option: drop tiny rings in
-                        # tile units (clipper.hpp area_threshold). AFTER
-                        # simplify, matching the reference chain
-                        # (geometry_simplifier feeds the clipper that
-                        # applies area_threshold) — simplification-created
-                        # slivers must not survive.
-                        px, py, roffs = clipmod.drop_small_rings(
-                            px, py, roffs, area_threshold, gc.signed_area2
-                        )
-                        if len(px) == 0:
-                            continue
-                    stream = gc.encode_geometry(gc.GEOM_POLYGON, px, py, roffs)
-                else:
-                    continue
+                stream, n_xs = feature_stream(gtype, coords[i], frame)
                 if len(stream) == 0:
                     continue
             lb.add_feature(int(fids[i]), int(gtype), stream, {"caption": caps[i]})
@@ -608,81 +771,113 @@ def make_encode_kernel(
         return [(z, x, y, layer_name, lb.build(), len(lb._features), n_pts)]
 
     def encode_batch(keycols, cols: dict, starts: np.ndarray):
-        """Whole-batch fast path for CANONICAL groups — every row a
-        single-point feature with a non-null caption (the dominant
-        shape of an image-footprint table at serving zooms): the
-        feature sections of ALL such groups are emitted as ONE numpy
-        varint stream (pbf.build_singles_layers_batch), eliminating the
-        per-feature add_feature/dict work AND most of the per-group
-        Python.  Byte-identical to encode_group by construction
-        (pinned by tests + the kernel-bench out_bytes pin + every
-        engine oracle).  Returns (rows, handled_mask); non-canonical
-        groups fall through to encode_group."""
-        import pandas as pd
-
+        """Whole-batch path for every group whose captions are all
+        non-null: per-row geometry streams first — singles from
+        `prepare`, small unclipped rings from one vectorized pass
+        (_small_ring_streams), every other row through the same
+        `feature_stream` as encode_group — then ONE layer assembly for
+        all groups (pbf.build_layers_batch). Byte-identical to
+        encode_group (pinned by tests + the kernel-bench out_bytes pin +
+        every engine oracle). Returns (rows, handled_mask); groups with
+        a null caption fall through to encode_group."""
         n_g = len(starts) - 1
-        handled = np.zeros(n_g, dtype=bool)
-        singles = cols["_single"]
-        ok = cols["_ok"]
         caps = cols["caption"]
+        if n_g == 0:
+            return [], np.zeros(0, dtype=bool)
         s0 = starts[:-1]
         counts = np.diff(starts)
-        all_single = (
-            np.add.reduceat(singles.astype(np.int64), s0) == counts
+        handled = (
+            np.add.reduceat(pd.isna(caps).astype(np.int64), s0) == 0
         )
-        okc = np.add.reduceat(ok.astype(np.int64), s0)
-        has_na = (
-            np.add.reduceat(
-                pd.isna(caps).astype(np.int64), s0
-            ) > 0
-        )
-        cand = all_single & ~has_na
-        handled[:] = cand
-        live = cand & (okc > 0)
-        live_ids = np.flatnonzero(live)
-        if not len(live_ids):
+        grp = np.repeat(np.arange(n_g, dtype=np.int64), counts)
+        rows = np.flatnonzero(handled[grp])
+        if not len(rows):
             return [], handled
-        grp_of_row = np.repeat(np.arange(n_g, dtype=np.int64), counts)
-        rowmask = live[grp_of_row] & ok
-        remap = np.full(n_g, -1, dtype=np.int64)
-        remap[live_ids] = np.arange(len(live_ids))
-        gidx = remap[grp_of_row[rowmask]]
-        ev = pbf.encode_value
-        val_encs = np.array(
-            [ev(c) for c in caps[rowmask]], dtype=object
-        )
-        blobs = pbf.build_singles_layers_batch(
+        # per handled row: geometry stream length (0 = not painted),
+        # raw vertex count, and the streams as (positions, matrix)
+        single = cols["_single"][rows]
+        pts = np.flatnonzero(single & cols["_ok"][rows])
+        glen = np.zeros(len(rows), dtype=np.int64)
+        glen[pts] = 3
+        nverts = np.ones(len(rows), dtype=np.int64)
+        pieces = [(pts, np.stack([
+            np.full(len(pts), 9, dtype=np.int64),
+            cols["_zzx"][rows[pts]],
+            cols["_zzy"][rows[pts]],
+        ], axis=1))]
+        fallback = []
+        multi = np.flatnonzero(~single)
+        if len(multi):
+            mrows = rows[multi]
+            frame = tile_frame(
+                *(c[mrows].astype(np.int64) for c in keycols[:3])
+            )
+            gts = cols["geom_type"][mrows]
+            blobs = cols["coords"][mrows]
+            todo = np.ones(len(multi), dtype=bool)
+            if ring_batch:
+                poly = np.flatnonzero(gts == gc.GEOM_POLYGON)
+                done, nv, rpieces = _small_ring_streams(
+                    blobs[poly], tuple(a[poly] for a in frame)
+                )
+                todo[poly[done]] = False
+                nverts[multi[poly]] = nv
+                for prow, st in rpieces:
+                    at = multi[poly[prow]]
+                    glen[at] = st.shape[1]
+                    pieces.append((at, st))
+            for j in np.flatnonzero(todo).tolist():
+                stream, nv = feature_stream(
+                    gts[j], blobs[j], tuple(float(a[j]) for a in frame)
+                )
+                nverts[multi[j]] = nv
+                if len(stream):
+                    glen[multi[j]] = len(stream)
+                    fallback.append((multi[j], stream))
+        emit = glen > 0
+        if not emit.any():
+            return [], handled
+        geom_offs = np.zeros(int(emit.sum()) + 1, dtype=np.int64)
+        np.cumsum(glen[emit], out=geom_offs[1:])
+        at0 = np.zeros(len(rows), dtype=np.int64)
+        at0[emit] = geom_offs[:-1]
+        geom = np.empty(int(geom_offs[-1]), dtype=np.int64)
+        for at, st in pieces:
+            geom[at0[at][:, None] + np.arange(st.shape[1])] = st
+        for p, stream in fallback:
+            geom[at0[p]: at0[p] + len(stream)] = stream
+        erows = rows[emit]
+        live_ids, gidx = np.unique(grp[erows], return_inverse=True)
+        layers = pbf.build_layers_batch(
             layer_name,
             2,
             extent,
             "caption",
-            cols["feature_id"][rowmask],
-            cols["geom_type"][rowmask],
-            cols["_zzx"][rowmask],
-            cols["_zzy"][rowmask],
-            val_encs,
+            cols["feature_id"][erows],
+            cols["geom_type"][erows],
+            geom,
+            geom_offs,
+            caps[erows],
             gidx,
             len(live_ids),
             emit_tiles=emit_tiles,
         )
+        nf = np.bincount(gidx, minlength=len(live_ids))
+        npts = np.bincount(
+            gidx, weights=nverts[emit], minlength=len(live_ids)
+        ).astype(np.int64)
         zs, xs_, ys_ = keycols[0], keycols[1], keycols[2]
-        rows = []
-        for j, g in enumerate(live_ids):
-            b = blobs[j]
-            if b is None:
-                continue
+        out = []
+        for j, g in enumerate(live_ids.tolist()):
             s = int(s0[g])
-            nf = int(okc[g])
+            key = (int(zs[s]), int(xs_[s]), int(ys_[s]))
             if emit_tiles:
-                rows.append(
-                    (int(zs[s]), int(xs_[s]), int(ys_[s]), b, 1, nf)
-                )
+                out.append((*key, layers[j], 1, int(nf[j])))
             else:
-                rows.append(
-                    (int(zs[s]), int(xs_[s]), int(ys_[s]), layer_name,
-                     b, nf, nf)
+                out.append(
+                    (*key, layer_name, layers[j], int(nf[j]), int(npts[j]))
                 )
-        return rows, handled
+        return out, handled
 
     return prepare, encode_group, encode_batch
 
@@ -716,10 +911,12 @@ def encode_layer_partials(
 
     Executed via grouped.apply_grouped (repartition + in-batch group
     iteration) because tile workloads have ~1 group per tile — per-group
-    applyInPandas overhead would dominate by ~100x. Single-point
-    features (the bulk of an image-footprint table) are quantized for
-    the WHOLE Arrow batch in one numpy pass (`prepare`), so the group
-    loop only assembles bytes.
+    applyInPandas overhead would dominate by ~100x. Single points and
+    unclipped small rings (the bulk of an image-footprint table) are
+    encoded for the WHOLE Arrow batch in numpy (`prepare`,
+    `encode_batch`), and one batch assembly writes every layer whose
+    captions are all non-null; only the remaining rows run per-row
+    Python.
     """
     prepare, encode_group, encode_batch = make_encode_kernel(
         layer_name,
@@ -1209,8 +1406,10 @@ def decode_tiles_to_features(
                 if not len(gxs):
                     continue  # v1 feature degenerated entirely
                 props = pbf.feature_props(layer, f)
+                # MVT 2.1 makes the id optional: no id, null feature_id
+                fid = None if f["id"] is None else int(f["id"])
                 rows.append((
-                    z, x, y, layer["name"], int(f["id"]), int(f["type"]),
+                    z, x, y, layer["name"], fid, int(f["type"]),
                     gxs.tolist(), gys.tolist(), offs.tolist(),
                     props.get("caption"),
                 ))
@@ -1231,10 +1430,15 @@ def decode_tiles_to_features(
                 )
             except (ValueError, IndexError, struct.error):
                 continue
-        return pd.DataFrame.from_records(rows, columns=[
+        out = pd.DataFrame.from_records(rows, columns=[
             "z", "x", "y", "layer", "feature_id", "geom_type",
             "pxs", "pys", "part_offsets", "caption",
         ])
+        if out["feature_id"].dtype != np.int64:
+            # a null id made the column float64, which rounds ids
+            # beyond 2^53: rebuild it as nullable ints
+            out["feature_id"] = pd.array([r[4] for r in rows], dtype="Int64")
+        return out
 
     def gen(it):
         import pyarrow as pa

@@ -24,6 +24,9 @@ def test_varint_known_bytes():
     assert pbf.varint_bytes_np(np.array([127])) == b"\x7f"
     assert pbf.varint_bytes_np(np.array([128])) == b"\x80\x01"
     assert pbf.varint_bytes_np(np.array([300])) == b"\xac\x02"  # protobuf doc example
+    # longer than one encode chunk: the same bytes as value by value
+    vals = np.arange(3 * 2**16 + 5, dtype=np.uint64) * np.uint64(2**20 + 7)
+    assert pbf.varint_bytes_np(vals) == pbf.varints_py(vals.tolist())
 
 
 def test_value_variants_roundtrip():

@@ -5,6 +5,8 @@ quantized coords within the buffered extent (north_star contract)."""
 
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from mapnik_vector_tile_spark.functions import geomcodec as gc
 from mapnik_vector_tile_spark.functions import tilemath as tm
@@ -226,6 +228,35 @@ def test_decode_drops_tile_the_general_decoder_rejects(spark):
     assert got["y"].tolist() == [2, 2, 2]
     assert sorted(got["feature_id"]) == [1, 2, 3]
     assert set(got["layer"]) == {"pts-ř"}
+
+
+def test_decode_feature_without_id(spark):
+    """MVT 2.1 makes Feature.id optional: a tile with an id-less feature
+    decodes it with a null feature_id, beside a clean tile of the same
+    Arrow batch, and the other ids stay exact beyond 2^53."""
+    from mapnik_vector_tile_spark.functions import pbf
+
+    def tile(fids):
+        lb = pbf.LayerBuilder("pts")
+        for i, fid in enumerate(fids):
+            stream = gc.encode_geometry(
+                gc.GEOM_POINT, np.array([5 + i]), np.array([7]),
+                np.array([0, 1]),
+            )
+            lb.add_feature(fid, gc.GEOM_POINT, stream, {"caption": f"c{i}"})
+        return pbf.layer_to_tile(lb.build())
+
+    tiles = spark.createDataFrame(
+        [(3, 1, 2, tile([1, 2])), (3, 1, 3, tile([None, 2**60 + 1]))],
+        "z int, x long, y long, tile binary",
+    ).coalesce(1)
+    got = sorted(
+        (r["y"], r["caption"], r["feature_id"])
+        for r in T.decode_tiles_to_features(tiles).collect()
+    )
+    assert got == [
+        (2, "c0", 1), (2, "c1", 2), (3, "c0", None), (3, "c1", 2**60 + 1),
+    ]
 
 
 def test_adaptive_salt_equals_unsalted(spark):
@@ -540,3 +571,106 @@ def _poly_coords():
     ys = np.array([0.0, 0.0, 30000.0])
     offs = np.array([0, 3], dtype=np.int64)
     return _pack_coords(xs, ys, offs)
+
+
+_CAPTIONS = ["a", "b", "ü", "c" * 140, None]  # 140 B: 2-byte length varint
+_ROW = st.tuples(
+    st.sampled_from(["single", "quad", "ring", "holed", "line"]),
+    st.floats(-300, 4400),  # centre, tile units: inside / straddling /
+    st.floats(-300, 4400),  # beyond the 64-unit buffered edge
+    st.floats(-3, 2.8),  # log10 half-size in tile units: < 0.5 collapses
+    st.integers(0, 2**32 - 1),  # vertex details
+    st.sampled_from(_CAPTIONS),
+)
+_GROUP = st.tuples(
+    st.integers(0, 12), st.integers(0, 2**32 - 1),
+    st.lists(_ROW, min_size=1, max_size=6),
+)
+
+
+def _kernel_batch(groups):
+    """A group-sorted assigned batch (the encode stage's input shape):
+    one (z, x, y, salt=ordinal) group per entry, geometry given in
+    tile units and placed in world coords through the tile's frame."""
+    import pandas as pd
+
+    rows = []
+    for g, (z, tile_seed, feats) in enumerate(groups):
+        x = tile_seed % (1 << z)
+        y = (tile_seed >> 12) % (1 << z)
+        span = tm.tile_span(z)
+        minx, maxy = -tm.W + x * span, tm.W - y * span
+        scale = 4096 / span
+        for i, (kind, cx, cy, lsize, seed, cap) in enumerate(feats):
+            rng = np.random.default_rng(seed)
+            fid = g * 100 + i
+            size = 10.0 ** lsize
+            if kind == "single":
+                rows.append((z, x, y, g, fid, gc.GEOM_POINT, None, cap,
+                             True, int(round(cx)), int(round(cy))))
+                continue
+            if kind == "quad":
+                tx = cx + np.array([-1, -1, 1, 1]) * size
+                ty = cy + np.array([1, -1, -1, 1]) * size
+                offs = [0, 4]
+            elif kind == "holed":
+                tx = cx + np.array([-1, -1, 1, 1, -.5, .5, .5, -.5]) * size
+                ty = cy + np.array([1, -1, -1, 1, .5, .5, -.5, -.5]) * size
+                offs = [0, 4, 8]
+            elif kind == "ring":
+                n = int(rng.integers(3, 21))
+                ang = np.sort(rng.uniform(0, 2 * np.pi, n))
+                r = size * rng.uniform(0.2, 1.0, n)
+                tx, ty = cx + r * np.cos(ang), cy + r * np.sin(ang)
+                if rng.random() < 0.3:  # repeated vertex
+                    k = int(rng.integers(0, n))
+                    tx, ty = np.insert(tx, k, tx[k]), np.insert(ty, k, ty[k])
+                if rng.random() < 0.3:  # explicit closing vertex
+                    tx, ty = np.append(tx, tx[0]), np.append(ty, ty[0])
+                offs = [0, len(tx)]
+            else:  # line
+                n = int(rng.integers(2, 6))
+                tx = cx + rng.uniform(-size, size, n)
+                ty = cy + rng.uniform(-size, size, n)
+                offs = [0, n]
+            if kind != "line" and rng.random() < 0.5:  # CW <-> CCW
+                tx, ty = tx[::-1], ty[::-1]
+            gt = gc.GEOM_LINESTRING if kind == "line" else gc.GEOM_POLYGON
+            blob = T._pack_coords(minx + tx / scale, maxy - ty / scale, offs)
+            rows.append((z, x, y, g, fid, gt, blob, cap, False, 0, 0))
+    return pd.DataFrame(rows, columns=[
+        "z", "x", "y", "salt", "feature_id", "geom_type", "coords",
+        "caption", "is_single", "px", "py",
+    ])
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.lists(_GROUP, min_size=1, max_size=8))
+def test_encode_batch_composition_matches_encode_group(groups):
+    """encode_batch plus encode_group on the groups it leaves (the
+    apply_grouped composition) equals encode_group on every group, byte
+    for byte with equal n_features / n_points, for both output forms."""
+    from mapnik_vector_tile_spark.operators.grouped import group_starts
+
+    pdf = _kernel_batch(groups)
+    n = len(pdf)
+    for emit_tiles in (False, True):
+        prepare, encode_group, encode_batch = T.make_encode_kernel(
+            "features", 4096, 64, emit_tiles=emit_tiles
+        )
+        cols = {c: pdf[c].to_numpy() for c in pdf.columns}
+        cols.update(prepare(cols, n))
+        keycols = [cols[k] for k in ("z", "x", "y", "salt")]
+        starts = group_starts(keycols, n)
+
+        def scalar(i):
+            s = int(starts[i])
+            sl = slice(s, int(starts[i + 1]))
+            return encode_group(tuple(c[s] for c in keycols), cols, sl) or []
+
+        ref = [r for i in range(len(starts) - 1) for r in scalar(i)]
+        got, handled = encode_batch(keycols, cols, starts)
+        got = list(got)
+        for i in np.flatnonzero(~handled):
+            got += scalar(i)
+        assert sorted(got) == sorted(ref)

@@ -94,3 +94,44 @@ def test_viewshed_reference_bound_enforced(spark):
     df = spark.createDataFrame([], "z long, x long, y long, raster binary")
     with pytest.raises(ValueError, match="brute-force bound"):
         viewshed_tiles(df, 128)
+
+
+def test_encode_batch_handles_footprint_quads(spark, monkeypatch):
+    """encode_batch must handle every group of a point + footprint-quad
+    corpus (the image-footprint table at serving zooms), and only the
+    quads the buffered tile edge clips may take the per-row fallback —
+    pinned by running the kernel stages on an assign_tiles batch and
+    counting the rows the vectorized ring pass settles."""
+    from mapnik_vector_tile_spark.operators import tiling as T
+    from mapnik_vector_tile_spark.operators.grouped import group_starts
+    from mapnik_vector_tile_spark.sources import synth
+
+    images = synth.images_df(spark, 200, with_bytes=False, slices=2)
+    assigned = T.with_salt(
+        T.assign_tiles(T.images_to_features(images), 6, 9, buffer_units=64)
+    )
+    pdf = assigned.orderBy("z", "x", "y", "salt", "feature_id").toPandas()
+    settled = []
+    ring_streams = T._small_ring_streams
+
+    def counting(blobs, frame):
+        done, nverts, pieces = ring_streams(blobs, frame)
+        settled.append((len(blobs), int(done.sum())))
+        return done, nverts, pieces
+
+    monkeypatch.setattr(T, "_small_ring_streams", counting)
+    prepare, encode_group, encode_batch = T.make_encode_kernel(
+        "features", 4096, 64, emit_tiles=True
+    )
+    cols = {c: pdf[c].to_numpy() for c in pdf.columns}
+    n = len(pdf)
+    cols.update(prepare(cols, n))
+    keycols = [cols[k] for k in ("z", "x", "y", "salt")]
+    starts = group_starts(keycols, n)
+    rows, handled = encode_batch(keycols, cols, starts)
+    assert handled.all() and len(rows) > 0
+    quads = int((pdf["geom_type"] == 3).sum())
+    fallback = quads - sum(d for _, d in settled)
+    assert sum(q for q, _ in settled) == quads
+    share = fallback / n  # 1.5% here: 25 of 1724 rows
+    assert share < 0.05, f"per-row fallback: {fallback} of {n} rows"
