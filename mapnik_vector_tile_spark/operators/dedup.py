@@ -1001,9 +1001,13 @@ def substring_dup_spans(
     """T45: exact VARIABLE-LENGTH substring dedup — the ExactSubstr
     operator of Lee et al. 2022 (arXiv:2107.06499, "Deduplicating
     Training Data Makes Language Models Better"), re-expressed
-    Spark-first instead of via a monolithic suffix array: every MAXIMAL
-    token run of length >= min_len whose text appears (as a contiguous
-    token sequence) at least min_occ times across the corpus.
+    Spark-first instead of via a monolithic suffix array: every
+    maximal contiguous token region covered by duplicated runs — runs
+    of length >= min_len whose text appears (as a contiguous token
+    sequence) at least min_occ times across the corpus.  Adjacent or
+    overlapping duplicated runs merge into one region, so a region's
+    full text may itself occur only once; what is exact is the set of
+    covered token positions, which strip_dup_spans consumes.
 
     Equivalence to the suffix-array formulation: a duplicated run of
     length M >= L contains exactly M-L+1 duplicated L-grams at
@@ -1028,8 +1032,8 @@ def substring_dup_spans(
     here because the oracle gates exactness).
 
     Output: (doc_id, span_start, span_end, span_len) per maximal
-    duplicated span, token-indexed [start, end), span_len >= min_len
-    by construction."""
+    contiguous region covered by duplicated runs >= min_len,
+    token-indexed [start, end), span_len >= min_len by construction."""
     L = int(min_len)
     grams = docs.select(
         "doc_id",

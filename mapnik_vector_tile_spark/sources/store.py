@@ -18,7 +18,18 @@ contract (directory per z, sorted files) is unchanged.
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+from urllib.parse import unquote, urlparse
+
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import IntegerType, StructType
+
+# Spark writes its row schema into every parquet footer under this key,
+# and its own schema inference reads it back from there.
+_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def write_tile_store(tiles: DataFrame, path: str) -> None:
@@ -33,8 +44,34 @@ def write_tile_store(tiles: DataFrame, path: str) -> None:
     )
 
 
+def _store_schema(path: str) -> StructType | None:
+    """The store's schema, read from the footer of one local data file,
+    with the z partition column appended; None when there is no local
+    data file (a missing path, or a non-file filesystem)."""
+    url = urlparse(path)
+    if url.scheme not in ("", "file"):
+        return None
+    files = glob.glob(
+        os.path.join(glob.escape(unquote(url.path)), "z=*", "*.parquet")
+    )
+    meta = pq.read_schema(min(files)).metadata if files else None
+    if not meta or _ROW_METADATA not in meta:
+        return None
+    row = StructType.fromJson(json.loads(meta[_ROW_METADATA]))
+    return row.add("z", IntegerType())
+
+
 def read_tile_store(spark: SparkSession, path: str) -> DataFrame:
     """Read the store back; z returns as a partition column. Filters
     on z become PartitionFilters (directory pruning), filters on x/y
-    prune row groups via the sorted min/max stats."""
-    return spark.read.parquet(path)
+    prune row groups via the sorted min/max stats.
+
+    The schema is Spark's own row schema from one data file's parquet
+    footer plus ``z int``, passed in with ``spark.read.schema``: creating
+    the DataFrame starts no Spark job. Without a schema, Spark infers one
+    in a job of its own on every call. A path with no local data file
+    (missing, or on another filesystem) falls back to that inference,
+    which raises Spark's own error for a missing path."""
+    schema = _store_schema(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)

@@ -199,7 +199,7 @@ def run_stateful_stream_to_memory(
         writer = writer.option("checkpointLocation", checkpoint_dir)
     with shuffle_partitions(spark, state_partitions):
         q = writer.start()
-        q.awaitTermination()
+    q.awaitTermination()
 
 
 def run_stream_to_memory(
@@ -234,7 +234,7 @@ def run_stream_to_memory(
         writer = writer.option("checkpointLocation", checkpoint_dir)
     with shuffle_partitions(spark, state_partitions):
         q = writer.start()
-        q.awaitTermination()
+    q.awaitTermination()
 
 
 def run_incremental_retile(

@@ -95,8 +95,8 @@ def run_attribution_stream(
     completeness for bounded state.
 
     ``state_partitions`` pins spark.sql.shuffle.partitions for this
-    query's lifetime (state-store count per micro-batch — see
-    streaming/util.py); None inherits the session setting."""
+    query's start, which fixes its state-store count per micro-batch
+    (streaming/util.py); None inherits the session setting."""
     from mapnik_vector_tile_spark.streaming.util import shuffle_partitions
 
     src = (
@@ -121,4 +121,4 @@ def run_attribution_stream(
         writer = writer.option("checkpointLocation", checkpoint_dir)
     with shuffle_partitions(spark, state_partitions):
         q = writer.start()
-        q.awaitTermination()
+    q.awaitTermination()

@@ -72,5 +72,5 @@ def run_scd2_stream(
         writer = writer.option("checkpointLocation", checkpoint_dir)
     with shuffle_partitions(spark, state_partitions):
         q = writer.start()
-        q.awaitTermination()
+    q.awaitTermination()
     return q

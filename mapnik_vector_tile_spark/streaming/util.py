@@ -21,10 +21,11 @@ _KEY = "spark.sql.shuffle.partitions"
 @contextmanager
 def shuffle_partitions(spark: SparkSession, n: int | None):
     """Temporarily pin spark.sql.shuffle.partitions around a streaming
-    query start/awaitTermination; always restores the previous value
-    (the session-global knob must not leak past the query — the state
-    partitioning is captured at query START, so the scope only needs
-    to cover start())."""
+    query's ``writer.start()``; always restores the previous value.
+    The query clones the session and fixes its state partitioning at
+    start, so it keeps n for its whole run, while the session-global
+    knob is back at its own value for anything else (scope only the
+    start, never ``awaitTermination``)."""
     if n is None:
         yield
         return

@@ -484,6 +484,82 @@ def test_tile_store_partition_and_rowgroup_pruning(spark, tmp_path):
     assert got == {3: 8, 4: 16, 5: 32}
 
 
+def _jobs_run(spark, fn):
+    """(fn(), number of Spark jobs fn started), counted in a job group
+    of its own once the listener bus has caught up."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_tile_store_read_starts_no_job(spark, tmp_path):
+    """read_tile_store takes its schema from a parquet footer instead of
+    a schema-inference job: creating the DataFrame runs no Spark job,
+    the schema equals Spark's inferred one, and a stored-tile request
+    (pruned scan + decode) is one job."""
+    import pandas as pd
+
+    from pyspark.errors import AnalysisException
+    from pyspark.sql import functions as F
+
+    from mapnik_vector_tile_spark.sources import synth
+    from mapnik_vector_tile_spark.sources.store import (
+        read_tile_store,
+        write_tile_store,
+    )
+
+    plain = spark.createDataFrame(
+        pd.DataFrame(
+            [(z, x, x, b"\x1a\x00") for z in (2, 3) for x in range(1 << z)],
+            columns=["z", "x", "y", "tile"],
+        ),
+        "z int, x long, y long, tile binary",
+    )
+    feats = T.images_to_features(
+        synth.images_df(spark, 40, with_bytes=False, slices=2)
+    )
+    encoded = T.encode_tiles_from_features(feats, 0, 4)
+    for name, tiles, cols in (
+        ("plain", plain, {"tile"}),
+        ("encoded", encoded, {"tile", "n_layers", "n_features"}),
+    ):
+        path = str(tmp_path / name)
+        write_tile_store(tiles, path)
+        back, jobs = _jobs_run(spark, lambda: read_tile_store(spark, path))
+        assert jobs == 0, name
+        assert back.schema == spark.read.parquet(path).schema, name
+        assert cols <= set(back.columns), name
+        uri, jobs = _jobs_run(
+            spark, lambda: read_tile_store(spark, "file://" + path)
+        )
+        assert jobs == 0 and uri.schema == back.schema, name
+
+    key = encoded.select("z", "x", "y").orderBy("z", "x", "y").first()
+    rows, jobs = _jobs_run(
+        spark,
+        lambda: T.decode_tiles_to_features(
+            read_tile_store(spark, path).filter(
+                (F.col("z") == key.z) & (F.col("x") == key.x)
+                & (F.col("y") == key.y)
+            )
+        ).collect(),
+    )
+    assert rows and jobs == 1
+
+    with pytest.raises(AnalysisException):
+        read_tile_store(spark, str(tmp_path / "missing"))
+
+
 def test_alignment_filter_single_projection_no_shuffle(spark):
     """T36: the cross-modal gate on same-row tower columns must be ONE
     projection — zero Exchange, zero Python — so it stays a codegen

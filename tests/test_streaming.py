@@ -713,3 +713,42 @@ def test_scd2_stream_equals_batch_merge(spark, tmp_path):
     )
     want = sorted(map(tuple, scd2_apply(current, changes).collect()))
     assert got == want and len(got) > n_keys
+
+
+def test_shuffle_partitions_pins_only_the_query_start(spark, tmp_path):
+    """The pinned spark.sql.shuffle.partitions is captured when the
+    query starts: scoping the pin to writer.start() hands the stateful
+    operator (and the batch session foreachBatch receives) n partitions,
+    while the user's session is back at its own value during the
+    batches."""
+    import threading
+
+    from mapnik_vector_tile_spark.streaming.util import shuffle_partitions
+
+    key = "spark.sql.shuffle.partitions"
+    src = str(tmp_path / "src")
+    spark.range(40).selectExpr("id % 5 AS k").write.parquet(src)
+    prev = spark.conf.get(key)
+    n = int(prev) + 3
+    started, seen = threading.Event(), []
+
+    def batch(df, batch_id):
+        started.wait(60)  # run the batch only after start() returned
+        seen.append((spark.conf.get(key), df.sparkSession.conf.get(key)))
+        df.collect()  # a stateful query's batch must be consumed whole
+
+    writer = (
+        spark.readStream.schema("k long").parquet(src)
+        .groupBy("k").count()
+        .writeStream.foreachBatch(batch)
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+    )
+    with shuffle_partitions(spark, n):
+        q = writer.start()
+    started.set()
+    q.awaitTermination()
+    assert seen == [(prev, str(n))]
+    ops = q.lastProgress["stateOperators"]
+    assert ops and all(op["numShufflePartitions"] == n for op in ops)

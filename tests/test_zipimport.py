@@ -10,7 +10,7 @@ import zipimport
 import pandas as pd
 import pytest
 
-from mapnik_vector_tile_spark import _zipimport
+from mapnik_vector_tile_spark import _worker
 
 pytestmark = pytest.mark.skipif(
     sys.version_info >= (3, 13), reason="Python 3.13 re-reads zips lazily"
@@ -18,7 +18,7 @@ pytestmark = pytest.mark.skipif(
 
 
 def _is_guard(fn) -> bool:
-    return fn.__module__ == _zipimport.__name__
+    return fn.__module__ == _worker.__name__
 
 
 def _write_zip(path, modules):
@@ -29,7 +29,7 @@ def _write_zip(path, modules):
 
 def test_guard_rereads_only_a_changed_archive(tmp_path, monkeypatch):
     assert _is_guard(zipimport.zipimporter.invalidate_caches)
-    _zipimport.install()  # a second import of the package changes nothing
+    _worker.install()  # a second import of the package changes nothing
     assert _is_guard(zipimport.zipimporter.invalidate_caches)
 
     archive = str(tmp_path / "mods.zip")
@@ -75,4 +75,4 @@ def test_workers_get_the_guard(spark):
         .mapInPandas(probe, "module string")
         .collect()
     )
-    assert [r.module for r in rows] == [_zipimport.__name__]
+    assert [r.module for r in rows] == [_worker.__name__]
