@@ -58,17 +58,11 @@ def main() -> None:
     ap.add_argument("--refresh", action="store_true",
                     help="force re-materialization of the cached batch")
     ap.add_argument("--mode",
-                    choices=("encode", "decode", "multimodal", "downzoom"),
+                    choices=("encode", "decode", "downzoom"),
                     default="encode",
                     help="decode: time the tile->features kernel on the "
-                         "tiles produced (in-process) from the same batch; "
-                         "multimodal: time the batch pcm16/rawvid8 kernels "
-                         "on fixed synthetic corpora")
+                         "tiles produced (in-process) from the same batch")
     args = ap.parse_args()
-
-    if args.mode == "multimodal":
-        _multimodal_bench(args)
-        return
 
     from mapnik_vector_tile_spark.operators import tiling as T
     from mapnik_vector_tile_spark.operators.grouped import group_starts
@@ -215,57 +209,6 @@ def _downzoom_bench(pdf, keys, prepare, encode_group, args) -> None:
                 "out_bytes": out_bytes,
                 "z": args.z,
                 "n_images": args.n_images,
-            }
-        )
-    )
-
-
-def _multimodal_bench(args) -> None:
-    """Time the BATCH multimodal kernels (round 2's vectorized
-    offsets+frombuffer decode — no per-row Python, replacing the
-    round-1 itertuples loops) on fixed in-process corpora: 4000 audio
-    clips + 1500 videos from the committed synth recipe, no Spark in
-    the timed region. Determinism pins: audio_pin = Σ sum_sq + Σ n_zc
-    over all full windows, video_pin = Σ integer per-frame luma sums —
-    both must be identical across runs and across value-neutral kernel
-    changes."""
-    from mapnik_vector_tile_spark.operators import multimodal as mm
-    from mapnik_vector_tile_spark.sources.multimodal import (
-        gen_audio_pdf,
-        gen_video_pdf,
-    )
-
-    apdf = gen_audio_pdf(4000)
-    vpdf = gen_video_pdf(1500)
-    best = float("inf")
-    pins: dict[str, int] = {}
-    for _ in range(max(1, args.repeat)):
-        t0 = time.monotonic()
-        _, samples, offs, nsv = mm._batch_decode_audio(apdf, True)
-        _, _, _, sum_sq, n_zc = mm._window_stats(samples, offs, nsv, 1024)
-        frames = mm.frame_sample_batch(vpdf, 4, True)
-        wall = time.monotonic() - t0
-        best = min(best, wall)
-        fsize = (
-            frames["w"].to_numpy().astype(np.int64)
-            * frames["h"].to_numpy().astype(np.int64)
-        )
-        video_pin = int(
-            np.rint(frames["mean_luma"].to_numpy() * fsize).sum()
-        )
-        pins = {
-            "audio_windows": int(len(sum_sq)),
-            "audio_pin": int(sum_sq.sum()) + int(n_zc.sum()),
-            "video_frames": int(len(frames)),
-            "video_pin": video_pin,
-        }
-    print(
-        json.dumps(
-            {
-                "metric": "multimodal_kernel_fixed_batch_seconds",
-                "value": round(best, 3),
-                "unit": "sec",
-                **pins,
             }
         )
     )

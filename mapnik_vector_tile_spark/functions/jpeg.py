@@ -5,8 +5,7 @@ SURVEY §2.8 R2) without any imaging library, which this sandbox lacks.
 Scope: baseline sequential DCT, 8-bit, YCbCr 4:4:4 (no chroma
 subsampling — simplest layout that keeps PSNR comfortably ≥ 40 dB at
 q=90 for the engine's raster tiles) plus 1-component grayscale
-streams (the mode functions.mjpeg encodes video luma planes with —
-1/3 the block work, no color transform), standard Annex K
+streams (1/3 the block work, no color transform), standard Annex K
 quantization and Huffman tables. Encoder emits a JFIF stream any
 standard decoder reads; decoder handles the streams this encoder
 emits plus any baseline 4:4:4 or grayscale stream with one Huffman
@@ -273,9 +272,8 @@ def _seg(marker: int, payload: bytes) -> bytes:
 
 def encode_jpeg(rgb: np.ndarray, quality: int = 90) -> bytes:
     """uint8[h, w, 3|4] -> color baseline JFIF bytes (alpha dropped);
-    uint8[h, w] -> single-component (grayscale) baseline JFIF — the
-    shape video luma planes arrive in (functions.mjpeg), 1/3 the block
-    work and no color transform."""
+    uint8[h, w] -> single-component (grayscale) baseline JFIF, 1/3 the
+    block work and no color transform."""
     gray = rgb.ndim == 2
     if not gray and (rgb.ndim != 3 or rgb.shape[2] not in (3, 4)):
         raise ValueError("encode_jpeg expects HxW, HxWx3 or HxWx4 uint8")

@@ -18,7 +18,7 @@ entropy loop.
 Lossless: round-trip is BIT-EXACT (gated by q_raster_png and tests),
 unlike the JPEG path's PSNR contract.
 
-Error contract (matches functions.jpeg/mjpeg/dvid8): every malformed
+Error contract (matches functions.jpeg): every malformed
 input raises ValueError — never a raw struct/zlib/Index error.
 """
 

@@ -19,7 +19,7 @@ silently misdecoding would be worse than refusing).
 
 Lossless: round-trip is BIT-EXACT (q_raster_webp contract oracle).
 
-Error contract (matches functions.{jpeg,png,mjpeg}): every malformed
+Error contract (matches functions.{jpeg,png}): every malformed
 input raises ValueError, never a raw Index/struct error.
 """
 

@@ -2719,381 +2719,6 @@ WHERE lx IS NULL OR px <> lx OR py <> ly
 QUALIFY COUNT(*) OVER (PARTITION BY fid) >= 2
 """
 
-def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal audio: clip-level windowed RMS/ZCR summary over the
-    deterministic pcm16 table — FULL oracle since round 2. The clip
-    aggregates are order-free by construction (multimodal.RMS_GRID):
-    zcr_mean is an exact integer ratio, rms_max a max over
-    deterministic doubles, and rms_mean averages 1e-12-quantized
-    per-window rms values, so the DuckDB twin (built on the
-    q_audio_windows closed-form sample CTE) value-hashes bit-exactly.
-    mp1 rows (idx % 21 == 0) decode for real since r3 but are LOSSY,
-    so they are excluded from this exact twin by codec filter (the
-    twin's WHERE idx % 21 <> 0); their decode contract is gated by
-    q_audio_mp1.  Clip-level kernel correctness is additionally
-    pinned by tests/test_multimodal.py."""
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.operators import multimodal as mm
-    from mapnik_vector_tile_spark.sources.multimodal import audio_df
-
-    return mm.audio_features(
-        audio_df(spark, 500).filter(F.col("codec") != "mp1")
-    )
-
-def q_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal audio, FULL oracle: per-window integer features
-    (energy Σs², zero-crossing count) over the sawtooth pcm16 corpus.
-    Every on-wire int16 is pure integer arithmetic from
-    splitmix64(clip idx), so the DuckDB twin regenerates the samples
-    closed-form (no LAG even — the predecessor sample is the same
-    formula at k−1) and the value-hash is bit-exact.  Lossy mp1 rows
-    are codec-filtered out (mirroring the twin's idx % 21 <> 0); see
-    q_audio_mp1 for their gate."""
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.operators import multimodal as mm
-    from mapnik_vector_tile_spark.sources.multimodal import audio_df
-
-    return mm.audio_window_features(
-        audio_df(spark, 500).filter(F.col("codec") != "mp1")
-    )
-
-def q_audio_mp1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T13 MPEG-1 Layer I lossy-codec gate (functions/mpeg1.py — the
-    former mp3 stub row, now a real codec) with a FULL contract
-    oracle in the q_raster_jpeg shape: every mp1 clip of the
-    committed corpus is decoded from its on-wire frames and must
-    satisfy (1) PSNR ≥ 40 dB against the closed-form sawtooth
-    original (full-scale int16 reference — measured worst case
-    ~63 dB), (2) spec-exact 672-byte 448kbps/32kHz-mono Layer I
-    framing (sync/header match, stream length = n_frames·672), with
-    n_frames replayed closed-form by the twin from the granule
-    arithmetic.  DuckDB regenerates (audio_id, n_samples, n_frames)
-    and asserts the booleans TRUE."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.functions import mpeg1 as mp
-    from mapnik_vector_tile_spark.sources.multimodal import audio_df
-    from mapnik_vector_tile_spark.sources.synth import splitmix64
-
-    clips = audio_df(spark, 500).filter(F.col("codec") == "mp1")
-
-    def gen(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            out = {"audio_id": [], "n_samples": [], "n_frames": [],
-                   "psnr_ok": [], "framing_ok": []}
-            for row in pdf.itertuples(index=False):
-                idx = int(row.audio_id.split("_")[1])
-                h = int(splitmix64(np.array([idx], dtype=np.uint64))[0])
-                ns = int(row.n_samples)
-                amp = 6000 + ((h >> 16) % 26000)
-                p = 16 + ((h >> 40) % 480)
-                a = 1 + 2 * ((h >> 8) % 128)
-                k = np.arange(ns, dtype=np.int64)
-                ref = ((k % p) * a) % (2 * amp) - amp
-                buf = bytes(row.bytes)
-                framing = (
-                    len(buf) % mp.FRAME_BYTES == 0
-                    and all(
-                        buf[f : f + 4] == mp.HEADER
-                        for f in range(0, len(buf), mp.FRAME_BYTES)
-                    )
-                )
-                dec = mp.mpeg1_l1_decode(buf, ns).astype(np.float64)
-                mse = float(np.mean((dec - ref) ** 2))
-                psnr = 10.0 * np.log10(32768.0**2 / max(mse, 1e-12))
-                out["audio_id"].append(row.audio_id)
-                out["n_samples"].append(ns)
-                out["n_frames"].append(len(buf) // mp.FRAME_BYTES)
-                out["psnr_ok"].append(bool(psnr >= 40.0))
-                out["framing_ok"].append(bool(framing))
-            yield pd.DataFrame(out)
-
-    return clips.select("audio_id", "n_samples", "bytes").mapInPandas(
-        gen,
-        "audio_id string, n_samples long, n_frames long,"
-        " psnr_ok boolean, framing_ok boolean",
-    )
-
-def _sql_audio_mp1(n_clips: int = 500) -> str:
-    sm = splitmix64_sql("idx")
-    return f"""
-WITH ids AS (SELECT unnest(generate_series(0, {n_clips - 1})) AS idx
-             ) , mp AS (
-  SELECT idx, {sm} AS h FROM ids WHERE idx % 21 = 0)
-SELECT 'aud_' || CAST(idx AS VARCHAR) AS audio_id,
-       CAST(2000 + h % 6001 AS BIGINT) AS n_samples,
-       CAST(((((2000 + h % 6001) + 1056 + 31) // 32) + 11) // 12
-            AS BIGINT) AS n_frames,
-       TRUE AS psnr_ok, TRUE AS framing_ok
-FROM mp
-"""
-
-def q_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal video: 1→N frame sampling + mean-luma features —
-    FULL oracle: the synthetic corpus derives every pixel from one
-    splitmix64 of the video index via pure integer arithmetic, and
-    splitmix64 is expressible bit-exactly in DuckDB with HUGEINT
-    32-bit-limb multiplies + BIGINT-half xors (_sql_video_frames), so
-    the decode → frame-sample → mean-luma chain is value-hash-gated
-    end-to-end (means of integers are exact in float64 both sides).
-    The 1-in-27 mpeg1v rows are LOSSY (real MPEG-1 I-frame decode,
-    formerly the h264 stub) — their pixels aren't the closed form, so
-    this exact-pixel key excludes them the way the mjpeg corpus is
-    excluded; their decode contract is PSNR-gated by q_video_mpeg1."""
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.operators import multimodal as mm
-    from mapnik_vector_tile_spark.sources.multimodal import video_df
-
-    frames = mm.sample_frames(
-        video_df(spark, 300).filter(F.col("codec") != "mpeg1v"), every=4
-    )
-    return frames.select(
-        "video_id",
-        F.col("frame_idx").cast("bigint").alias("frame_idx"),
-        "mean_luma",
-        F.length("frame").cast("bigint").alias("frame_bytes"),
-    )
-
-SIL_N = 150  # q_silence_trim corpus size
-
-SIL_W = 256  # frame size (samples)
-
-SIL_THR = 10_000  # per-sample energy threshold
-
-def q_silence_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T13c silence-trim gate (multimodal.silence_trim): pcm16 rows of
-    the synthetic audio table with SILENCE PLANTED in every third clip
-    (first and last n_samples//5 samples zeroed — re-encoded through
-    the real int16 wire path). The sawtooth corpus's frame energy is
-    ~amp²/3 >= 1.2e7 per sample-window while the threshold is 1e4, so
-    exactly the planted zero spans read silent; the twin regenerates
-    every sample closed-form (splitmix64 params, the %-sawtooth, the
-    conditional zeroing), replays the full-frame partition, the BIGINT
-    energy compare, and the leading/trailing run arithmetic."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.operators.multimodal import silence_trim
-    from mapnik_vector_tile_spark.sources.multimodal import audio_df
-
-    clips = audio_df(spark, SIL_N).filter(F.col("codec") == "pcm16le")
-
-    def plant(batches):
-        for pdf in batches:
-            bufs = []
-            for r in pdf.itertuples():
-                i = int(r.audio_id[4:])
-                buf = bytes(r.bytes)
-                if i % 3 == 0:
-                    s = np.frombuffer(buf, dtype="<i2").copy()
-                    L = int(r.n_samples) // 5
-                    s[:L] = 0
-                    s[len(s) - L :] = 0
-                    buf = s.astype("<i2").tobytes()
-                bufs.append(buf)
-            out = pdf.copy()
-            out["bytes"] = bufs
-            yield out
-
-    planted = clips.mapInPandas(plant, schema=clips.schema)
-    return silence_trim(planted, window=SIL_W, thr_per_sample=SIL_THR)
-
-DEC_N = 200  # q_audio_decimate corpus size
-
-DEC_M = 6  # decimation factor (non-divisor of most clip lengths)
-
-def q_audio_decimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T13d integer decimation (multimodal.resample_decimate — box
-    anti-alias downsample, floor-divided block means) over the pcm16
-    rows of the synthetic audio table with a FULL oracle: the DuckDB
-    twin regenerates every sample closed-form (splitmix64 params, the
-    %-sawtooth), folds ``factor``-sample blocks, reproduces numpy's
-    FLOOR division on signed sums via (sum − pmod(sum, M))/M, and
-    replays the per-clip decimated count/sum/extremes bit-for-bit."""
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.operators.multimodal import (
-        resample_decimate,
-    )
-    from mapnik_vector_tile_spark.sources.multimodal import audio_df
-
-    clips = audio_df(spark, DEC_N).filter(F.col("codec") == "pcm16le")
-    return resample_decimate(clips, factor=DEC_M)
-
-def _sql_audio_decimate(n: int = DEC_N, m: int = DEC_M) -> str:
-    pmod = f"((bs % {m}) + {m}) % {m}"
-    return f"""
-WITH ids AS (SELECT unnest(generate_series(0, {n - 1})) AS i),
-raw AS (SELECT i, {splitmix64_sql('i')} AS h FROM ids
-        WHERE i % 7 <> 0 AND i % 21 <> 0),
-dims AS (
-  SELECT i,
-         CAST(2000 + h % 6001 AS BIGINT) AS ns,
-         CAST(6000 + ((h // 65536) % 26000) AS BIGINT) AS amp,
-         CAST(16 + ((h // 1099511627776) % 480) AS BIGINT) AS p,
-         CAST(1 + 2 * ((h // 256) % 128) AS BIGINT) AS a
-  FROM raw
-),
-samp AS (
-  SELECT d.i, amp, p, a,
-         unnest(generate_series(0, (ns // {m}) * {m} - 1)) AS k
-  FROM dims d
-),
-blocks AS (
-  SELECT i, k // {m} AS b,
-         SUM(((k % p) * a) % (2 * amp) - amp) AS bs
-  FROM samp GROUP BY 1, 2
-),
-dec AS (
-  SELECT i, b, (bs - ({pmod})) // {m} AS v
-  FROM blocks
-)
-SELECT 'aud_' || CAST(i AS VARCHAR) AS audio_id,
-       CAST(COUNT(*) AS BIGINT) AS n_out,
-       CAST(SUM(v) AS BIGINT) AS dec_sum,
-       CAST(MIN(v) AS BIGINT) AS dec_min,
-       CAST(MAX(v) AS BIGINT) AS dec_max
-FROM dec GROUP BY 1
-"""
-
-def _sql_silence_trim(n: int = SIL_N, w: int = SIL_W,
-                      thr: int = SIL_THR) -> str:
-    return f"""
-WITH ids AS (SELECT unnest(generate_series(0, {n - 1})) AS i),
-raw AS (SELECT i, {splitmix64_sql('i')} AS h FROM ids WHERE i % 7 <> 0),
-dims AS (
-  SELECT i,
-         CAST(2000 + h % 6001 AS BIGINT) AS ns,
-         CAST(6000 + ((h // 65536) % 26000) AS BIGINT) AS amp,
-         CAST(16 + ((h // 1099511627776) % 480) AS BIGINT) AS p,
-         CAST(1 + 2 * ((h // 256) % 128) AS BIGINT) AS a
-  FROM raw
-),
-ks AS (
-  SELECT d.*, ns // {w} AS n_win,
-         unnest(generate_series(0, (ns // {w}) * {w} - 1)) AS k
-  FROM dims d
-),
-vals AS (
-  SELECT i, n_win, k // {w} AS win,
-         CASE WHEN i % 3 = 0 AND (k < ns // 5 OR k >= ns - ns // 5)
-              THEN 0
-              ELSE ((k % p) * a) % (2 * amp) - amp END AS s
-  FROM ks
-),
-wins AS (
-  SELECT i, n_win, win,
-         (SUM(s * s) <= {thr} * {w}) AS silent
-  FROM vals GROUP BY 1, 2, 3
-)
-SELECT 'aud_' || CAST(i AS VARCHAR) AS audio_id,
-       CAST(n_win AS BIGINT) AS n_win,
-       CAST(SUM(CASE WHEN silent THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_silent,
-       CAST(COALESCE(MIN(CASE WHEN NOT silent THEN win END), n_win)
-            AS BIGINT) AS lead,
-       CAST(n_win - 1 - COALESCE(MAX(CASE WHEN NOT silent THEN win END),
-                                 -1) AS BIGINT) AS trail
-FROM wins
-GROUP BY i, n_win
-"""
-
-CUT_N = 150  # q_scene_cuts corpus size
-
-CUT_THR = 40  # per-pixel SAD threshold
-
-def q_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T14b shot-boundary detection gate (multimodal.scene_cuts): the
-    rawvid8 rows of the synthetic video table, with a HARD CUT planted
-    in every third video (luma inverted from frame n_frames//2 on —
-    re-encoded through the real codec path). The base corpus's
-    moving-gradient diffs sit at ~13.6 SAD/pixel, the planted
-    inversion at ~150: threshold 40 must flag EXACTLY the planted
-    boundaries with their exact integer SAD values. The twin
-    regenerates every pixel of every consecutive frame pair
-    closed-form (splitmix64 dims/phase, the %256 gradient, the
-    conditional inversion) and replays the integer threshold."""
-    import numpy as np
-    import pandas as pd
-
-    from mapnik_vector_tile_spark.operators.multimodal import scene_cuts
-    from mapnik_vector_tile_spark.sources.multimodal import video_df
-
-    vids = video_df(spark, CUT_N).filter(F_col_codec_rawvid())
-
-    def plant(batches):
-        for pdf in batches:
-            bufs = []
-            for r in pdf.itertuples():
-                i = int(r.video_id[4:])
-                buf = bytes(r.bytes)
-                if i % 3 == 0:
-                    fr = (
-                        np.frombuffer(buf, np.uint8)
-                        .reshape(int(r.n_frames), int(r.h), int(r.w))
-                        .copy()
-                    )
-                    half = int(r.n_frames) // 2
-                    fr[half:] = 255 - fr[half:]
-                    buf = fr.tobytes()
-                bufs.append(buf)
-            out = pdf.copy()
-            out["bytes"] = bufs
-            yield out
-
-    planted = vids.mapInPandas(plant, schema=vids.schema)
-    return scene_cuts(planted, thr_per_px=CUT_THR)
-
-def F_col_codec_rawvid():
-    from pyspark.sql import functions as F
-
-    return F.col("codec") == "rawvid8"
-
-def _sql_scene_cuts(n: int = CUT_N, thr: int = CUT_THR) -> str:
-    return f"""
-WITH ids AS (SELECT unnest(generate_series(0, {n - 1})) AS i),
-raw AS (SELECT i, {splitmix64_sql('i')} AS h FROM ids
-        WHERE i % 9 <> 0),
-dims AS (
-  SELECT i,
-         CAST(16 + (h % 4) * 8 AS BIGINT) AS w,
-         CAST(16 + ((h // 16) % 4) * 8 AS BIGINT) AS ht,
-         CAST(8 + (h // 4096) % 25 AS BIGINT) AS nf,
-         CAST(h % 251 AS BIGINT) AS phase
-  FROM raw
-),
-fs AS (SELECT d.*, unnest(generate_series(1, nf - 1)) AS f FROM dims d),
-ys AS (SELECT fs.*, unnest(generate_series(0, ht - 1)) AS y FROM fs),
-px AS (SELECT ys.*, unnest(generate_series(0, w - 1)) AS x FROM ys),
-v AS (
-  SELECT i, w, ht, nf, f, x, y,
-         CASE WHEN i % 3 = 0 AND f >= nf // 2
-              THEN 255 - (x * 3 + y * 5 + f * 7 + phase) % 256
-              ELSE (x * 3 + y * 5 + f * 7 + phase) % 256 END AS cur,
-         CASE WHEN i % 3 = 0 AND f - 1 >= nf // 2
-              THEN 255 - (x * 3 + y * 5 + (f - 1) * 7 + phase) % 256
-              ELSE (x * 3 + y * 5 + (f - 1) * 7 + phase) % 256 END
-           AS prev
-  FROM px
-),
-sad AS (
-  SELECT i, w, ht, f, CAST(SUM(ABS(cur - prev)) AS BIGINT) AS sad
-  FROM v GROUP BY 1, 2, 3, 4
-)
-SELECT 'vid_' || CAST(i AS VARCHAR) AS video_id,
-       CAST(f AS BIGINT) AS frame_idx, sad
-FROM sad WHERE sad > {thr} * w * ht
-"""
-
 DIFF_Z = 6
 
 def q_tile_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3605,178 +3230,6 @@ def splitmix64_sql(x: str) -> str:
         + f" AS z1 FROM (SELECT {z0} AS z0))))))"
     )
 
-def _sql_video_frames(n_videos: int = 300, every: int = 4) -> str:
-    """DuckDB twin of q_video_frames: regenerate per-video params from
-    splitmix64(idx), enumerate sampled frames and the pixel grid, and
-    average the moving-gradient pixel formula
-    ((x*3 + y*5) + (frame*7 + phase)) % 256 — all integer arithmetic,
-    means exact in float64. dvid8-rle rows decode losslessly to the
-    same planes, so one pixel formula covers both lossless codecs;
-    idx % 27 == 0 mpeg1v videos are excluded (lossy — PSNR-gated by
-    q_video_mpeg1 instead)."""
-    return f"""
-WITH ids AS (SELECT unnest(generate_series(0, {n_videos - 1})) AS idx),
-hh AS (SELECT idx, {splitmix64_sql('idx')} AS h FROM ids
-       WHERE idx % 27 <> 0),
-params AS (
-  SELECT idx,
-         16 + (h % 4) * 8 AS w,
-         16 + ((h // 16) % 4) * 8 AS ht,
-         8 + ((h // 4096) % 25) AS nf,
-         h % 251 AS phase
-  FROM hh),
-fr AS (
-  SELECT idx, w, ht, phase,
-         unnest(generate_series(0, CAST(nf AS BIGINT) - 1, {every})) AS fi
-  FROM params),
-fx AS (
-  SELECT idx, fi, w, ht, phase,
-         unnest(generate_series(0, CAST(w AS BIGINT) - 1)) AS x
-  FROM fr),
-fxy AS (
-  SELECT idx, fi, w, ht, phase, x,
-         unnest(generate_series(0, CAST(ht AS BIGINT) - 1)) AS y
-  FROM fx)
-SELECT 'vid_' || CAST(idx AS VARCHAR) AS video_id,
-       CAST(fi AS BIGINT) AS frame_idx,
-       AVG(CAST((x * 3 + y * 5 + fi * 7 + phase) % 256 AS DOUBLE)) AS mean_luma,
-       CAST(w * ht AS BIGINT) AS frame_bytes
-FROM fxy
-GROUP BY 1, 2, 4
-"""
-
-def _mulaw_seg_sql(v: str) -> str:
-    """G.711 segment index (0-7) of a biased magnitude column — the
-    vectorized comparison-sum twin of functions.g711.mulaw_encode."""
-    return (
-        f"(CAST({v} > 63 AS INT) + CAST({v} > 127 AS INT) + "
-        f"CAST({v} > 255 AS INT) + CAST({v} > 511 AS INT) + "
-        f"CAST({v} > 1023 AS INT) + CAST({v} > 2047 AS INT) + "
-        f"CAST({v} > 4095 AS INT))"
-    )
-
-def _pow2_case_sql(g: str, plus: int) -> str:
-    """CASE mapping segment g to 2**(g+plus) — branch-free shifts are
-    numpy-only, so the SQL twin spells the 8 segment scales out."""
-    arms = " ".join(
-        f"WHEN {k} THEN {2 ** (k + plus)}" for k in range(8)
-    )
-    return f"(CASE {g} {arms} END)"
-
-def _alaw_seg_sql(v: str) -> str:
-    """G.711 A-law segment index (0-7) of a 13-bit magnitude column —
-    the vectorized comparison-sum twin of functions.g711.alaw_encode
-    (thresholds 0x1F..0x7FF; no bias, unlike mu-law)."""
-    return (
-        f"(CAST({v} > 31 AS INT) + CAST({v} > 63 AS INT) + "
-        f"CAST({v} > 127 AS INT) + CAST({v} > 255 AS INT) + "
-        f"CAST({v} > 511 AS INT) + CAST({v} > 1023 AS INT) + "
-        f"CAST({v} > 2047 AS INT))"
-    )
-
-def _alaw_mant_div_sql(g: str) -> str:
-    """A-law mantissa shift divisor 2^max(g, 1) as a CASE (segments
-    0 and 1 both shift by 1 in the reference encoder)."""
-    arms = " ".join(
-        f"WHEN {k} THEN {2 ** max(k, 1)}" for k in range(8)
-    )
-    return f"(CASE {g} {arms} END)"
-
-def _alaw_rt_sql(x: str) -> str:
-    """A-law encode∘decode of a 13-bit column {x} = floor(s/8), as one
-    closed-form SQL expression (functions.g711 alaw_encode then
-    alaw_decode, magnitude part — caller applies the sign)."""
-    v = f"(CASE WHEN {x} < 0 THEN -({x}) - 1 ELSE {x} END)"
-    g = _alaw_seg_sql(v)
-    mant = f"(({v} // {_alaw_mant_div_sql(g)}) % 16)"
-    return (
-        f"(CASE WHEN {g} = 0 THEN {mant} * 16 + 8 "
-        f"ELSE ({mant} * 16 + 264) * {_pow2_case_sql(f'({g} - 1)', 0)} END)"
-    )
-
-def _audio_vals_cte(n_clips: int, window: int) -> str:
-    """Shared CTE prefix for the audio twins: regenerate the sawtooth
-    samples closed-form, then replay functions.g711 encode-then-decode
-    IN SQL for mulaw rows (idx % 7 == 0, % 14 != 0, % 21 != 0) and
-    alaw rows (idx % 14 == 0, % 21 != 0) — exact integer arithmetic
-    end-to-end. DuckDB's // and % truncate toward zero while numpy
-    floors, so the bit shifts are floor(s/4.0) / floor(s/8.0) and
-    every other % operand is kept non-negative by construction.
-    idx % 21 == 0 clips are lossy mp1 rows the feature queries
-    codec-filter out (their gate is q_audio_mp1)."""
-    ats = _alaw_rt_sql("axs")
-    atp = _alaw_rt_sql("axp")
-    return f"""
-WITH ids AS (SELECT unnest(generate_series(0, {n_clips - 1})) AS idx),
-hh AS (SELECT idx, {splitmix64_sql('idx')} AS h FROM ids
-       WHERE idx % 21 <> 0),
-params AS (
-  SELECT idx, h, (idx % 7 = 0 AND idx % 14 <> 0) AS is_mu,
-         (idx % 14 = 0) AS is_al,
-         CAST(2000 + (h % 6001) AS BIGINT) AS ns,
-         CAST(6000 + ((h // 65536) % 26000) AS BIGINT) AS amp,
-         CAST(16 + ((h // 1099511627776) % 480) AS BIGINT) AS p,
-         CAST(1 + 2 * ((h // 256) % 128) AS BIGINT) AS a
-  FROM hh),
-samp AS (
-  SELECT idx, amp, p, a, is_mu, is_al,
-         unnest(generate_series(0, (ns // {window}) * {window} - 1)) AS k
-  FROM params),
-vals0 AS (
-  SELECT idx, k // {window} AS win, k % {window} AS kin, is_mu, is_al,
-         ((k % p) * a) % (2 * amp) - amp AS s0,
-         (((k - 1) % p) * a) % (2 * amp) - amp AS sp0
-  FROM samp),
-mux AS (
-  SELECT *, CAST(floor(s0 / 4.0) AS BIGINT) AS xs,
-            CAST(floor(sp0 / 4.0) AS BIGINT) AS xp,
-            CAST(floor(s0 / 8.0) AS BIGINT) AS axs,
-            CAST(floor(sp0 / 8.0) AS BIGINT) AS axp
-  FROM vals0),
-muv AS (
-  SELECT *, LEAST(CASE WHEN xs < 0 THEN -xs ELSE xs END + 33, 8191) AS vs,
-            LEAST(CASE WHEN xp < 0 THEN -xp ELSE xp END + 33, 8191) AS vp
-  FROM mux),
-mug AS (
-  SELECT *, {_mulaw_seg_sql('vs')} AS gs, {_mulaw_seg_sql('vp')} AS gp
-  FROM muv),
-mut AS (
-  SELECT *,
-    ((vs // {_pow2_case_sql('gs', 1)}) % 16 * 8 + 132)
-      * {_pow2_case_sql('gs', 0)} AS ts,
-    ((vp // {_pow2_case_sql('gp', 1)}) % 16 * 8 + 132)
-      * {_pow2_case_sql('gp', 0)} AS tp,
-    {ats} AS ats,
-    {atp} AS atp
-  FROM mug),
-vals AS (
-  SELECT idx, win, kin,
-    CASE WHEN is_mu THEN (CASE WHEN xs < 0 THEN 132 - ts ELSE ts - 132 END)
-         WHEN is_al THEN (CASE WHEN axs < 0 THEN -ats ELSE ats END)
-         ELSE s0 END AS s,
-    CASE WHEN is_mu THEN (CASE WHEN xp < 0 THEN 132 - tp ELSE tp - 132 END)
-         WHEN is_al THEN (CASE WHEN axp < 0 THEN -atp ELSE atp END)
-         ELSE sp0 END AS sp
-  FROM mut)"""
-
-def _sql_audio_windows(n_clips: int = 500, window: int = 1024) -> str:
-    """DuckDB twin of q_audio_windows: regenerate per-clip samples
-    closed-form (s(k) = ((k mod p)·a) mod 2·amp − amp, predecessor by
-    the same formula at k−1 — no window function), replay the G.711
-    mulaw encode∘decode in exact integer SQL for mulaw rows
-    (_audio_vals_cte), and aggregate Σs² and the (s<0) sign-transition
-    count; kin=0 rows are excluded from the transition count exactly
-    like the numpy kernel's within-window diff."""
-    return f"""{_audio_vals_cte(n_clips, window)}
-SELECT 'aud_' || CAST(idx AS VARCHAR) AS audio_id,
-       CAST(win AS BIGINT) AS win,
-       CAST(SUM(s * s) AS BIGINT) AS sum_sq,
-       CAST(SUM(CASE WHEN kin > 0 AND ((s < 0) <> (sp < 0))
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_zc
-FROM vals
-GROUP BY 1, 2
-"""
-
 def q_distinct_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T-class cardinality sketch with a FULL oracle: KMV (bottom-k)
     distinct estimate of events.event_id (operators.sketch). The
@@ -4070,87 +3523,3 @@ SELECT CAST({z} AS INT) AS z,
        COUNT(*) AS n_features
 FROM cxy GROUP BY 1, 2, 3
 """
-
-MJPEG_N = 120  # q_video_mjpeg corpus size
-
-def q_video_mjpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T14 LOSSY video codec gate with a FULL contract oracle: the
-    MJPEG corpus (sources.multimodal.gen_mjpeg_video_pdf — the same
-    mod-256 moving-gradient luma recipe as the lossless corpus, the
-    hardest content for a DCT codec) flows through the REAL engine
-    path ``sample_frames`` (operators.multimodal's mjpeg branch:
-    container walk + per-sampled-frame grayscale JPEG decode), and
-    each clip must satisfy the input_hint lossy invariant PSNR ≥ 40 dB
-    plus actual compression (bytes < raw planes). The PSNR gate is a
-    PURE-INTEGER comparison — PSNR ≥ 40 ⇔ sse·10⁴ ≤ 255²·n_pix with
-    sse an exact int64 sum of squared pixel deltas vs the closed-form
-    reference — so the booleans are deterministic, not float-fragile.
-    The DuckDB twin regenerates (w, h, n_sampled) from the committed
-    splitmix64 recipe and asserts the contract booleans TRUE.
-    sf_dir is unused: the corpus is the committed synth recipe.
-    Ref parity: per-frame intraframe coding is the random-access
-    property RFC 2435-style MJPEG exists for; SURVEY §2.11 T14."""
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.operators import multimodal as mm
-    from mapnik_vector_tile_spark.sources.multimodal import mjpeg_video_df
-
-    vids = mjpeg_video_df(spark, MJPEG_N)
-    smaller = vids.select(
-        "video_id",
-        (
-            F.length("bytes")
-            < F.col("w").cast("long") * F.col("h") * F.col("n_frames")
-        ).alias("smaller"),
-    )
-    sampled = mm.sample_frames(vids, every=2)
-
-    def check(it):
-        import numpy as np
-        import pandas as pd
-
-        from mapnik_vector_tile_spark.sources.synth import splitmix64
-
-        for pdf in it:
-            if not len(pdf):
-                continue
-            idx = pdf["video_id"].str.slice(4).astype(np.int64).to_numpy()
-            hh = splitmix64(idx.astype(np.uint64))
-            phase = (hh % np.uint64(251)).astype(np.int64)
-            sse = np.empty(len(pdf), np.int64)
-            for j, r in enumerate(pdf.itertuples(index=False)):
-                fy, fx = np.mgrid[0 : int(r.h), 0 : int(r.w)]
-                ref = (
-                    fx * 3 + fy * 5 + int(r.frame_idx) * 7 + int(phase[j])
-                ) % 256
-                got = (
-                    np.frombuffer(r.frame, dtype=np.uint8)
-                    .reshape(int(r.h), int(r.w))
-                    .astype(np.int64)
-                )
-                d = got - ref
-                sse[j] = int((d * d).sum())
-            yield pd.DataFrame(
-                {
-                    "video_id": pdf["video_id"],
-                    "w": pdf["w"].astype("int32"),
-                    "h": pdf["h"].astype("int32"),
-                    "sse": sse,
-                    "n_pix": (
-                        pdf["w"].astype("int64") * pdf["h"].astype("int64")
-                    ),
-                }
-            )
-
-    per_frame = sampled.mapInPandas(
-        check, schema="video_id string, w int, h int, sse bigint, n_pix bigint"
-    )
-    agg = per_frame.groupBy("video_id", "w", "h").agg(
-        F.count("*").cast("int").alias("n_sampled"),
-        (
-            F.sum("sse") * F.lit(10000) <= F.sum("n_pix") * F.lit(255 * 255)
-        ).alias("psnr_ok"),
-    )
-    return agg.join(smaller, "video_id").select(
-        "video_id", "w", "h", "n_sampled", "psnr_ok", "smaller"
-    )

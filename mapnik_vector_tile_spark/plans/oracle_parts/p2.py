@@ -21,113 +21,8 @@ from mapnik_vector_tile_spark.functions.tilemath import W, cell_id_sql_expr
 from mapnik_vector_tile_spark.plans import shared_sql as S
 
 from mapnik_vector_tile_spark.plans.oracle_parts.p1 import (  # noqa: F401
-    MJPEG_N, _engine_point_features, _typed_layers, splitmix64_sql,
+    _engine_point_features, _typed_layers, splitmix64_sql,
 )
-
-def _sql_video_mjpeg(n: int = MJPEG_N) -> str:
-    return f"""
-WITH ids AS (SELECT unnest(generate_series(0, {n - 1})) AS idx),
-hh AS (SELECT idx, {splitmix64_sql('idx')} AS hv FROM ids)
-SELECT 'mjv_' || CAST(idx AS VARCHAR) AS video_id,
-       CAST(40 + (hv % 3) * 24 AS INT) AS w,
-       CAST(40 + ((hv // 16) % 3) * 16 AS INT) AS h,
-       CAST((4 + (hv // 4096) % 5 + 1) // 2 AS INT) AS n_sampled,
-       TRUE AS psnr_ok, TRUE AS smaller
-FROM hh
-"""
-
-MPEG1V_N = 120  # q_video_mpeg1 corpus size
-
-def q_video_mpeg1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T14 MPEG-1 VIDEO I-frame codec gate (functions.mpeg1video —
-    the real-syntax replacement for the former h264 stub, the video
-    analogue of q_audio_mp1): the corpus
-    (sources.multimodal.gen_mpeg1_video_pdf — the gen_mjpeg recipe,
-    mpeg1v-encoded) flows through the REAL engine path
-    ``sample_frames`` (operators.multimodal's mpeg1v branch: sequence
-    header parse + picture start-code scan + per-sampled-picture
-    entropy decode), and each clip must satisfy the input_hint lossy
-    invariant PSNR ≥ 40 dB plus actual compression.  The PSNR gate is
-    the same PURE-INTEGER comparison as q_video_mjpeg (sse·10⁴ ≤
-    255²·n_pix, exact int64), and the DuckDB twin regenerates
-    (w, h, n_sampled) from the committed splitmix64 recipe.
-    sf_dir unused (committed synth recipe).  SURVEY §2.11 T14."""
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.operators import multimodal as mm
-    from mapnik_vector_tile_spark.sources.multimodal import mpeg1_video_df
-
-    vids = mpeg1_video_df(spark, MPEG1V_N)
-    smaller = vids.select(
-        "video_id",
-        (
-            F.length("bytes")
-            < F.col("w").cast("long") * F.col("h") * F.col("n_frames")
-        ).alias("smaller"),
-    )
-    sampled = mm.sample_frames(vids, every=2)
-
-    def check(it):
-        import numpy as np
-        import pandas as pd
-
-        from mapnik_vector_tile_spark.sources.synth import splitmix64
-
-        for pdf in it:
-            if not len(pdf):
-                continue
-            idx = pdf["video_id"].str.slice(4).astype(np.int64).to_numpy()
-            hh = splitmix64(idx.astype(np.uint64))
-            phase = (hh % np.uint64(251)).astype(np.int64)
-            sse = np.empty(len(pdf), np.int64)
-            for j, r in enumerate(pdf.itertuples(index=False)):
-                fy, fx = np.mgrid[0 : int(r.h), 0 : int(r.w)]
-                ref = (
-                    fx * 3 + fy * 5 + int(r.frame_idx) * 7 + int(phase[j])
-                ) % 256
-                got = (
-                    np.frombuffer(r.frame, dtype=np.uint8)
-                    .reshape(int(r.h), int(r.w))
-                    .astype(np.int64)
-                )
-                d = got - ref
-                sse[j] = int((d * d).sum())
-            yield pd.DataFrame(
-                {
-                    "video_id": pdf["video_id"],
-                    "w": pdf["w"].astype("int32"),
-                    "h": pdf["h"].astype("int32"),
-                    "sse": sse,
-                    "n_pix": (
-                        pdf["w"].astype("int64") * pdf["h"].astype("int64")
-                    ),
-                }
-            )
-
-    per_frame = sampled.mapInPandas(
-        check, schema="video_id string, w int, h int, sse bigint, n_pix bigint"
-    )
-    agg = per_frame.groupBy("video_id", "w", "h").agg(
-        F.count("*").cast("int").alias("n_sampled"),
-        (
-            F.sum("sse") * F.lit(10000) <= F.sum("n_pix") * F.lit(255 * 255)
-        ).alias("psnr_ok"),
-    )
-    return agg.join(smaller, "video_id").select(
-        "video_id", "w", "h", "n_sampled", "psnr_ok", "smaller"
-    )
-
-def _sql_video_mpeg1(n: int = MPEG1V_N) -> str:
-    return f"""
-WITH ids AS (SELECT unnest(generate_series(0, {n - 1})) AS idx),
-hh AS (SELECT idx, {splitmix64_sql('idx')} AS hv FROM ids)
-SELECT 'm1v_' || CAST(idx AS VARCHAR) AS video_id,
-       CAST(40 + (hv % 3) * 24 AS INT) AS w,
-       CAST(40 + ((hv // 16) % 3) * 16 AS INT) AS h,
-       CAST((4 + (hv // 4096) % 5 + 1) // 2 AS INT) AS n_sampled,
-       TRUE AS psnr_ok, TRUE AS smaller
-FROM hh
-"""
 
 PNG_N = 300  # q_raster_png corpus size
 

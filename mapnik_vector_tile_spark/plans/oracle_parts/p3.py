@@ -22,10 +22,10 @@ from mapnik_vector_tile_spark.plans import shared_sql as S
 
 from mapnik_vector_tile_spark.plans.oracle_parts.p1 import (  # noqa: F401
     _PAIRS,
-    _SQL_ASOF, _SQL_ATTRIBUTION, _SQL_INTERVAL_OVERLAP, _SQL_SESSIONIZE, _SQL_SESSION_WINDOW, _audio_vals_cte, _sql_attr_join, _sql_audio_decimate, _sql_audio_windows, _sql_bbox_rect_join, _sql_composite_n_layers, _sql_distinct_hll, _sql_distinct_kmv, _sql_downzoom, _sql_downzoom_band, _sql_events_tile_window, _sql_geohash, _sql_geojson_tiles, _sql_global_quantiles, _sql_knn, _sql_label_grid, _sql_layer_filter, _sql_load_compressed, _sql_overzoom, _sql_phash_neardup, _sql_pip_membership, _sql_pip_polygon, _sql_pyramid_counts_band, _sql_pyramid_counts_z, _sql_raster_jpeg, _sql_raster_overzoom, _sql_raster_tiles, _sql_rasterize_coverage, _sql_rescale, _sql_s2_cells, _sql_scene_cuts, _sql_silence_trim, _sql_simplify_exact, _sql_simplify_radial, _sql_simplify_vw, _sql_solid, _sql_solid_prune, _sql_spatial_block_split, _sql_tile_diff, _sql_typed_values, _sql_v1_decode, _sql_validity, _sql_video_frames, _sql_vtquery, _sql_wafer, _sql_zoom_thin, load_views, q_asof_clicks_views, q_audio_decimate, q_audio_features, q_audio_windows, q_click_attribution, q_distinct_hll, q_distinct_kmv, q_engine_attr_join, q_engine_attr_join_shuffle, q_engine_composite, q_engine_decode_roundtrip, q_engine_downzoom, q_engine_downzoom_band, q_engine_knn, q_engine_layer_filter, q_engine_load_compressed, q_engine_overzoom, q_engine_overzoom_redistribute, q_engine_pip_anti, q_engine_pip_broadcast, q_engine_pip_partitioned, q_engine_pip_semi, q_engine_rescale, q_engine_simplify_exact, q_engine_simplify_radial, q_engine_simplify_vw, q_engine_solid, q_engine_tile_counts, q_engine_typed_values, q_engine_v1_decode, q_engine_validity, q_engine_wafer, q_events_tile_window, q_geohash, q_geojson_tiles, q_geotiff_tiles, q_global_quantiles, q_interval_overlap, q_label_grid, q_phash_mi, q_phash_neardup, q_pip_polygon_regions, q_raster_jpeg, q_raster_overzoom, q_raster_tiles, q_rasterize_coverage, q_s2_cells, q_scene_cuts, q_session_window, q_sessionize, q_silence_trim, q_solid_prune, q_spatial_block_split, q_tile_diff, q_video_frames, q_video_mjpeg, q_vtquery, q_zoom_thin, splitmix64_sql,
+    _SQL_ASOF, _SQL_ATTRIBUTION, _SQL_INTERVAL_OVERLAP, _SQL_SESSIONIZE, _SQL_SESSION_WINDOW, _sql_attr_join, _sql_bbox_rect_join, _sql_composite_n_layers, _sql_distinct_hll, _sql_distinct_kmv, _sql_downzoom, _sql_downzoom_band, _sql_events_tile_window, _sql_geohash, _sql_geojson_tiles, _sql_global_quantiles, _sql_knn, _sql_label_grid, _sql_layer_filter, _sql_load_compressed, _sql_overzoom, _sql_phash_neardup, _sql_pip_membership, _sql_pip_polygon, _sql_pyramid_counts_band, _sql_pyramid_counts_z, _sql_raster_jpeg, _sql_raster_overzoom, _sql_raster_tiles, _sql_rasterize_coverage, _sql_rescale, _sql_s2_cells, _sql_simplify_exact, _sql_simplify_radial, _sql_simplify_vw, _sql_solid, _sql_solid_prune, _sql_spatial_block_split, _sql_tile_diff, _sql_typed_values, _sql_v1_decode, _sql_validity, _sql_vtquery, _sql_wafer, _sql_zoom_thin, load_views, q_asof_clicks_views, q_click_attribution, q_distinct_hll, q_distinct_kmv, q_engine_attr_join, q_engine_attr_join_shuffle, q_engine_composite, q_engine_decode_roundtrip, q_engine_downzoom, q_engine_downzoom_band, q_engine_knn, q_engine_layer_filter, q_engine_load_compressed, q_engine_overzoom, q_engine_overzoom_redistribute, q_engine_pip_anti, q_engine_pip_broadcast, q_engine_pip_partitioned, q_engine_pip_semi, q_engine_rescale, q_engine_simplify_exact, q_engine_simplify_radial, q_engine_simplify_vw, q_engine_solid, q_engine_tile_counts, q_engine_typed_values, q_engine_v1_decode, q_engine_validity, q_engine_wafer, q_events_tile_window, q_geohash, q_geojson_tiles, q_geotiff_tiles, q_global_quantiles, q_interval_overlap, q_label_grid, q_phash_mi, q_phash_neardup, q_pip_polygon_regions, q_raster_jpeg, q_raster_overzoom, q_raster_tiles, q_rasterize_coverage, q_s2_cells, q_session_window, q_sessionize, q_solid_prune, q_spatial_block_split, q_tile_diff, q_vtquery, q_zoom_thin, splitmix64_sql,
 )
 from mapnik_vector_tile_spark.plans.oracle_parts.p2 import (  # noqa: F401
-    COVER_Z, IMG_TH_N, MEASURES_N, _img_pixel_ctes, _sql_ar_bucket_batches, _sql_area_centroid, _sql_augment, _sql_cell_cover, _sql_csv_ingest, _sql_dissolve, _sql_ewma, _sql_heatmap_tiles, _sql_idw, _sql_image_blur, _sql_image_curation, _sql_image_dhash, _sql_image_equalize, _sql_image_otsu, _sql_image_phash, _sql_image_thumbs, _sql_letterbox, _sql_line_interpolate, _sql_marching_squares, _sql_mbtiles, _sql_polygon_polygon_join, _sql_polygon_rect_join, _sql_pyramid_audit, _sql_quadkey, _sql_raster_png, _sql_raster_png8, _sql_raster_tiff, _sql_raster_webp, _sql_scale_gate, _sql_tilejson, _sql_tilestats, _sql_video_mjpeg, _sql_video_mpeg1, _sql_wds_roundtrip, _sql_wkt_ingest, q_ar_bucket_batches, q_area_centroid, q_augment, q_cell_cover, q_cell_cover_hier, q_csv_ingest, q_dissolve, q_ewma, q_geom_measures, q_heatmap_tiles, q_idw, q_image_blur, q_image_curation, q_image_dhash, q_image_equalize, q_image_otsu, q_image_phash, q_image_thumbs, q_letterbox, q_line_interpolate, q_marching_squares, q_mbtiles_roundtrip, q_pmtiles_roundtrip, q_polygon_polygon_join, q_polygon_polygon_ri, q_polygon_rect_join, q_pyramid_audit, q_quadkey, q_raster_png, q_raster_png8, q_raster_tiff, q_raster_webp, q_scale_gate, q_shp_ingest, q_store_partitioned, q_tilejson, q_tilestats, q_video_mpeg1, q_wds_roundtrip, q_wkb_ingest, q_wkt_ingest,
+    COVER_Z, IMG_TH_N, MEASURES_N, _img_pixel_ctes, _sql_ar_bucket_batches, _sql_area_centroid, _sql_augment, _sql_cell_cover, _sql_csv_ingest, _sql_dissolve, _sql_ewma, _sql_heatmap_tiles, _sql_idw, _sql_image_blur, _sql_image_curation, _sql_image_dhash, _sql_image_equalize, _sql_image_otsu, _sql_image_phash, _sql_image_thumbs, _sql_letterbox, _sql_line_interpolate, _sql_marching_squares, _sql_mbtiles, _sql_polygon_polygon_join, _sql_polygon_rect_join, _sql_pyramid_audit, _sql_quadkey, _sql_raster_png, _sql_raster_png8, _sql_raster_tiff, _sql_raster_webp, _sql_scale_gate, _sql_tilejson, _sql_tilestats, _sql_wds_roundtrip, _sql_wkt_ingest, q_ar_bucket_batches, q_area_centroid, q_augment, q_cell_cover, q_cell_cover_hier, q_csv_ingest, q_dissolve, q_ewma, q_geom_measures, q_heatmap_tiles, q_idw, q_image_blur, q_image_curation, q_image_dhash, q_image_equalize, q_image_otsu, q_image_phash, q_image_thumbs, q_letterbox, q_line_interpolate, q_marching_squares, q_mbtiles_roundtrip, q_pmtiles_roundtrip, q_polygon_polygon_join, q_polygon_polygon_ri, q_polygon_rect_join, q_pyramid_audit, q_quadkey, q_raster_png, q_raster_png8, q_raster_tiff, q_raster_webp, q_scale_gate, q_shp_ingest, q_store_partitioned, q_tilejson, q_tilestats, q_wds_roundtrip, q_wkb_ingest, q_wkt_ingest,
 )
 
 def _sql_geom_measures(n: int = MEASURES_N) -> str:
@@ -1007,45 +1007,6 @@ SELECT CAST(idx AS BIGINT) AS feature_id,
        CAST(SUM(spy) AS BIGINT) AS sum_py,
        CAST(SUM(a2) AS BIGINT) AS sum_abs_area2
 FROM ra GROUP BY 1
-"""
-
-def _sql_audio_features(n_clips: int = 500, window: int = 1024) -> str:
-    """DuckDB twin of q_audio_features (clip-level). Regenerates the
-    per-window integer aggregates exactly like _sql_audio_windows,
-    then applies the engine's order-free clip aggregation: per-window
-    rms = sqrt(sum_sq / (window·2^30)) is bit-exact (exact int64
-    numerator, power-of-two divisor, IEEE sqrt), rms_mean sums the
-    1e-12-grid quantized rms (multimodal.RMS_GRID) so summation order
-    cannot flip a ulp, and zcr_mean / caption are exact integer /
-    string derivations from splitmix64(idx)."""
-    from mapnik_vector_tile_spark.sources.synth import _WORDS
-
-    words = "[" + ", ".join(f"'{w}'" for w in _WORDS) + "]"
-    nw = len(_WORDS)
-    denom = float(window) * 32768.0 * 32768.0
-    return f"""{_audio_vals_cte(n_clips, window)},
-wins AS (
-  SELECT idx, win,
-         sqrt(CAST(SUM(s * s) AS DOUBLE) / {denom!r}) AS rms,
-         SUM(CASE WHEN kin > 0 AND ((s < 0) <> (sp < 0))
-                  THEN 1 ELSE 0 END) AS n_zc
-  FROM vals GROUP BY 1, 2),
-feat AS (
-  SELECT idx,
-         COUNT(*) AS n_w,
-         SUM(CAST(floor(rms * 1e12 + 0.5) AS BIGINT)) AS rms_q,
-         MAX(rms) AS rms_max,
-         SUM(n_zc) AS zc
-  FROM wins GROUP BY 1)
-SELECT 'aud_' || CAST(f.idx AS VARCHAR) AS audio_id,
-       CAST(f.n_w AS INT) AS n_windows,
-       CAST(f.rms_q AS DOUBLE) / (f.n_w * 1e12) AS rms_mean,
-       f.rms_max AS rms_max,
-       CAST(f.zc AS DOUBLE) / (f.n_w * {float(window - 1)!r}) AS zcr_mean,
-       'audio ' || ({words})[CAST(h.h % {nw} AS BIGINT) + 1]
-         || ' ' || ({words})[CAST((h.h // 65536) % {nw} AS BIGINT) + 1]
-         AS caption
-FROM feat f JOIN hh h USING (idx)
 """
 
 MVT_EXPRS = {
@@ -2801,9 +2762,6 @@ _ENGINE_PAIRS: dict[str, tuple[Callable, str | None]] = {
     "q_pip_join_sampled": (q_pip_join_sampled, _sql_pip_join_sampled()),
     "q_tile_budget": (q_tile_budget, _sql_tile_budget()),
     "q_haversine_join": (q_haversine_join, _sql_haversine_join()),
-    "q_scene_cuts": (q_scene_cuts, _sql_scene_cuts()),
-    "q_silence_trim": (q_silence_trim, _sql_silence_trim()),
-    "q_audio_decimate": (q_audio_decimate, _sql_audio_decimate()),
     "q_line_cover": (q_line_cover, _sql_line_cover()),
     "q_zonal_stats": (q_zonal_stats, _sql_zonal_stats()),
     "q_cell_compact": (q_cell_compact, _sql_cell_compact()),
@@ -2834,11 +2792,6 @@ _ENGINE_PAIRS: dict[str, tuple[Callable, str | None]] = {
     "q_distinct_kmv": (q_distinct_kmv, _sql_distinct_kmv()),
     "q_distinct_hll": (q_distinct_hll, _sql_distinct_hll()),
     "q_spatial_block_split": (q_spatial_block_split, _sql_spatial_block_split()),
-    "q_audio_features": (q_audio_features, _sql_audio_features(500, 1024)),
-    "q_audio_windows": (q_audio_windows, _sql_audio_windows(500, 1024)),
-    "q_video_frames": (q_video_frames, _sql_video_frames(300, 4)),
-    "q_video_mjpeg": (q_video_mjpeg, _sql_video_mjpeg()),
-    "q_video_mpeg1": (q_video_mpeg1, _sql_video_mpeg1()),
     "q_engine_wafer": (q_engine_wafer, _sql_wafer()),
     "q_global_quantiles": (q_global_quantiles, _sql_global_quantiles()),
 }
@@ -2897,7 +2850,6 @@ _RECORD_FIRST = (
     "q_geom_measures",
     "q_cluster_canonical",
     "q_mbtiles_roundtrip",
-    "q_video_mjpeg",
     "q_engine_wafer",
     "q_global_quantiles",
     "q_corpus_filter_rep",

@@ -2235,114 +2235,6 @@ FROM jn GROUP BY way_id
 
 _ENGINE_PAIRS["q_way_assembly"] = (q_way_assembly, _sql_way_assembly())
 
-AD_N = 256
-
-AD_CLIPS = 100
-
-def q_audio_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IMA-ADPCM encode∘decode (functions/adpcm.py via
-    multimodal.audio_adpcm_stats) with a FULL oracle: 100 sawtooth
-    clips (period 8192, step 97 — trackable slope with occasional
-    wrap jumps, the shape ADPCM was built for); DuckDB replays the
-    quantizer recursion — step table, bit-test quantizer, >>3
-    reconstruction, both clamps — so reconstructed sums, integer SSE
-    and max errors match bit-exactly."""
-    import numpy as np
-    import pandas as pd
-
-    from mapnik_vector_tile_spark.operators.multimodal import (
-        audio_adpcm_stats,
-    )
-    from mapnik_vector_tile_spark.sources.synth import splitmix64
-
-    def gen(it):
-        for pdf in it:
-            rows = {"clip_id": [], "pcm": [], "n_samples": []}
-            for i in pdf["id"]:
-                i = int(i)
-                # int() BEFORE the modulo: np.uint64 % python-int
-                # silently promotes to float64 and loses low bits
-                phase = int(
-                    splitmix64(np.array([i], dtype=np.uint64))[0]
-                ) % 50021
-                t = np.arange(AD_N, dtype=np.int64)
-                s = ((t * 97 + phase) % 8192) - 4096
-                rows["clip_id"].append(i)
-                rows["pcm"].append(s.astype("<i2").tobytes())
-                rows["n_samples"].append(AD_N)
-            yield pd.DataFrame(rows)
-
-    clips = spark.range(AD_CLIPS).mapInPandas(
-        gen, "clip_id long, pcm binary, n_samples long"
-    )
-    return audio_adpcm_stats(clips)
-
-def _sql_audio_adpcm() -> str:
-    from mapnik_vector_tile_spark.functions.adpcm import STEP_TABLE
-
-    sm = splitmix64_sql("clip")
-    steps = "[" + ",".join(str(v) for v in STEP_TABLE) + "]"
-    samp = "((((tt - 1) * 97 + phase) % 8192) - 4096)"
-    return f"""
-WITH RECURSIVE clips AS (
-  SELECT CAST(i AS BIGINT) AS clip,
-         CAST(({sm.replace('clip', 'i')}) % 50021 AS BIGINT) AS phase
-  FROM (SELECT unnest(generate_series(0, {AD_CLIPS - 1})) AS i)),
-st(clip, phase, tt, pred, idx) AS (
-  SELECT clip, phase, CAST(0 AS BIGINT), CAST(0 AS BIGINT),
-         CAST(0 AS BIGINT)
-  FROM clips
-  UNION ALL
-  SELECT clip, phase, tt,
-         GREATEST(-32768, LEAST(32767,
-           pred + CASE WHEN sign = 1 THEN -diffq ELSE diffq END)),
-         GREATEST(0, LEAST(88,
-           idx + CASE WHEN c7 >= 4 THEN 2 * (c7 - 3) ELSE -1 END))
-  FROM (
-    SELECT clip, phase, tt, pred, idx, sign,
-           stp // 8 + b4 * stp + b2 * (stp // 2) + b1 * (stp // 4)
-             AS diffq,
-           b4 * 4 + b2 * 2 + b1 AS c7
-    FROM (
-      SELECT *,
-             CASE WHEN ad - b4 * stp - b2 * (stp // 2) >= stp // 4
-                  THEN 1 ELSE 0 END AS b1
-      FROM (
-        SELECT *,
-               CASE WHEN ad - b4 * stp >= stp // 2 THEN 1 ELSE 0 END
-                 AS b2
-        FROM (
-          SELECT *, CASE WHEN ad >= stp THEN 1 ELSE 0 END AS b4
-          FROM (
-            SELECT clip, phase, tt, pred, idx, stp,
-                   CASE WHEN df < 0 THEN 1 ELSE 0 END AS sign,
-                   abs(df) AS ad
-            FROM (
-              SELECT clip, phase, t + 1 AS tt, pred, idx,
-                     CAST({steps}[idx + 1] AS BIGINT) AS stp,
-                     CAST((((t) * 97 + phase) % 8192) - 4096 AS BIGINT)
-                       - pred AS df
-              FROM (SELECT clip, phase, tt AS t, pred, idx FROM st
-                    WHERE tt < {AD_N}) s0
-            ) s1
-          ) s2
-        ) s3
-      ) s4
-    ) s5
-  ) s6
-)
-SELECT clip AS clip_id,
-       CAST({AD_N} AS BIGINT) AS n_samples,
-       CAST({AD_N // 2} AS BIGINT) AS n_bytes,
-       CAST(SUM(pred) AS BIGINT) AS sum_dec,
-       CAST(SUM(({samp} - pred) * ({samp} - pred)) AS BIGINT) AS sse,
-       CAST(MAX(ABS({samp} - pred)) AS BIGINT) AS max_err
-FROM st WHERE tt >= 1
-GROUP BY clip
-"""
-
-_ENGINE_PAIRS["q_audio_adpcm"] = (q_audio_adpcm, _sql_audio_adpcm())
-
 def q_od_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OD flow matrix (geostats.od_flows) over the events table with a
     FULL oracle: pings locate on the same splitmix 4-grid as

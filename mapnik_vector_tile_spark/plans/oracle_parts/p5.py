@@ -25,7 +25,7 @@ from mapnik_vector_tile_spark.functions.tilemath import W, cell_id_sql_expr
 from mapnik_vector_tile_spark.plans import shared_sql as S
 
 from mapnik_vector_tile_spark.plans.oracle_parts.p1 import (  # noqa: F401
-    _sql_audio_mp1, _sql_events_tile_window, load_views, q_audio_mp1, splitmix64_sql,
+    _sql_events_tile_window, load_views, splitmix64_sql,
 )
 from mapnik_vector_tile_spark.plans.oracle_parts.p2 import (  # noqa: F401
     _img_pixel_ctes,
@@ -1898,8 +1898,6 @@ FROM j GROUP BY status
 """
 
 _ENGINE_PAIRS["q_tile_churn"] = (q_tile_churn, _sql_tile_churn())
-
-_ENGINE_PAIRS["q_audio_mp1"] = (q_audio_mp1, _sql_audio_mp1())
 
 FR_MAXPTS = 12  # per-trajectory cap (keeps the twin's recursion ~144 deep)
 

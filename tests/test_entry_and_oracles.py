@@ -53,9 +53,8 @@ def test_rows_only_set_is_pinned():
     """Every queries() key carries a full DuckDB oracle — a new query
     landing without its oracle fails here instead of silently
     weakening the correctness gate. (Round 1 had three documented
-    rows-only keys; round 2 gave q_raster_tiles and q_audio_features
-    full oracles and deleted q_simplify_lines, superseded by
-    q_engine_simplify_exact.)"""
+    rows-only keys; round 2 gave q_raster_tiles a full oracle and
+    deleted q_simplify_lines, superseded by q_engine_simplify_exact.)"""
     q = set(entrymod.queries())
     o = set(entrymod.oracle_sql())
     assert o <= q

@@ -34,7 +34,7 @@ def test_every_oracle_sql_binds(con):
     from mapnik_vector_tile_spark.plans.oracle_pairs import sql_pairs
 
     _, oracles = sql_pairs()
-    assert len(oracles) >= 267
+    assert len(oracles) >= 263
     bad = []
     for k, sql in oracles.items():
         try:

@@ -8,6 +8,7 @@ import numpy as np
 import pytest
 
 from mapnik_vector_tile_spark.functions import tilemath as tm
+from mapnik_vector_tile_spark.functions.jpeg import decode_jpeg, encode_jpeg
 from mapnik_vector_tile_spark.operators import raster as R
 from mapnik_vector_tile_spark.sources import synth
 
@@ -57,6 +58,27 @@ def test_jpeg_codec_psnr_gate():
     flat = np.full((33, 41, 4), 201, dtype=np.uint8)
     rt = R.decode_image(R.encode_image(flat, "jpeg"), "jpeg", 41, 33)
     assert (rt[..., :3] == 201).all()
+
+
+def test_gray_jpeg_roundtrip_psnr_and_compression():
+    fy, fx = np.mgrid[0:48, 0:64]
+    g = ((fx * 3 + fy * 5) % 256).astype(np.uint8)
+    buf = encode_jpeg(g, quality=98)
+    back = decode_jpeg(buf)
+    assert back.shape == (48, 64, 4)
+    # grayscale stream decodes with R == G == B == Y, opaque alpha
+    assert (back[..., 0] == back[..., 1]).all()
+    assert (back[..., 0] == back[..., 2]).all()
+    assert (back[..., 3] == 255).all()
+    assert psnr(back[..., 0], g) >= 40.0
+    assert len(buf) < g.size  # headers amortized: actually compresses
+
+
+def test_gray_jpeg_odd_dims_and_flat():
+    g = np.full((17, 23), 200, dtype=np.uint8)
+    back = decode_jpeg(encode_jpeg(g, 90))
+    assert back.shape == (17, 23, 4)
+    assert psnr(back[..., 0], g) >= 40.0
 
 
 def test_jpeg_stream_is_standard_jfif():
@@ -378,25 +400,26 @@ def test_jpeg_decoder_rejects_malformed_streams():
 
 
 def test_jpeg_decoder_fuzz_error_contract():
-    """Seeded fuzz: every truncation and byte-flip of a valid stream
-    must raise ValueError (the skip-undecodable contract) — never an
-    IndexError/KeyError/StopIteration escaping segment parsing."""
+    """Seeded fuzz: every truncation and byte-flip of a valid stream,
+    color or grayscale, must raise ValueError (the skip-undecodable
+    contract) — never an IndexError/KeyError/StopIteration escaping
+    segment parsing."""
     rgba = synth.make_pixels(11, 24, 16)
-    buf = R.encode_image(rgba, "jpeg")
-    rng = np.random.default_rng(3)
-    for cut in range(2, len(buf), max(1, len(buf) // 80)):
-        try:
-            R.decode_image(buf[:cut], "jpeg", 24, 16)
-        except ValueError:
-            pass
-    for _ in range(120):
-        b = bytearray(buf)
-        i = int(rng.integers(2, len(buf)))
-        b[i] ^= int(rng.integers(1, 255))
-        try:
-            R.decode_image(bytes(b), "jpeg", 24, 16)
-        except ValueError:
-            pass
+    for buf in (R.encode_image(rgba, "jpeg"), encode_jpeg(rgba[..., 0])):
+        rng = np.random.default_rng(3)
+        for cut in range(2, len(buf), max(1, len(buf) // 80)):
+            try:
+                R.decode_image(buf[:cut], "jpeg", 24, 16)
+            except ValueError:
+                pass
+        for _ in range(120):
+            b = bytearray(buf)
+            i = int(rng.integers(2, len(buf)))
+            b[i] ^= int(rng.integers(1, 255))
+            try:
+                R.decode_image(bytes(b), "jpeg", 24, 16)
+            except ValueError:
+                pass
 
 
 def test_box_thumbnail_exact_and_guards():

@@ -419,71 +419,6 @@ def test_incremental_retile_overzoom_children(spark, chunked_events, tmp_path):
         assert latest[k] == cold[k], f"child {k} differs from cold overzoom"
 
 
-def test_streaming_media_equals_batch_kernels(spark, tmp_path):
-    """Stateless media extraction lifted onto readStream: replaying
-    chunked video/audio tables one file per micro-batch produces
-    EXACTLY the batch operators' rows (row-set equality — no
-    watermark subtleties for stateless stages)."""
-    import pandas as pd
-
-    from mapnik_vector_tile_spark.operators import multimodal as mm
-    from mapnik_vector_tile_spark.sources.multimodal import (
-        gen_audio_pdf,
-        gen_mjpeg_video_pdf,
-        gen_video_pdf,
-    )
-    from mapnik_vector_tile_spark.streaming import media as SM
-
-    vdir = str(tmp_path / "vid_src")
-    adir = str(tmp_path / "aud_src")
-    vids = pd.concat(
-        [gen_video_pdf(20), gen_mjpeg_video_pdf(6)], ignore_index=True
-    )
-    auds = gen_audio_pdf(30)
-    for i in range(3):
-        spark.createDataFrame(vids.iloc[i::3]).write.mode(
-            "overwrite" if i == 0 else "append"
-        ).parquet(vdir)
-        spark.createDataFrame(auds.iloc[i::3]).write.mode(
-            "overwrite" if i == 0 else "append"
-        ).parquet(adir)
-
-    SM.run_stream_to_memory(
-        SM.frame_sample_stream(spark, vdir, every=4),
-        "media_frames",
-        checkpoint_dir=str(tmp_path / "ckpt_v"),
-    )
-    SM.run_stream_to_memory(
-        SM.audio_windows_stream(spark, adir, window=1024),
-        "media_audio",
-        checkpoint_dir=str(tmp_path / "ckpt_a"),
-    )
-
-    got_v = {
-        (r.video_id, r.frame_idx, r.w, r.h, round(r.mean_luma, 9))
-        for r in spark.table("media_frames").collect()
-    }
-    want_v = {
-        (r.video_id, r.frame_idx, r.w, r.h, round(r.mean_luma, 9))
-        for r in mm.sample_frames(
-            spark.read.parquet(vdir), every=4
-        ).collect()
-    }
-    assert got_v == want_v and got_v
-
-    got_a = {
-        (r.audio_id, r.win, r.sum_sq, r.n_zc)
-        for r in spark.table("media_audio").collect()
-    }
-    want_a = {
-        (r.audio_id, r.win, r.sum_sq, r.n_zc)
-        for r in mm.audio_window_features(
-            spark.read.parquet(adir), window=1024
-        ).collect()
-    }
-    assert got_a == want_a and got_a
-
-
 def test_streaming_dedup_matches_batch_first_occurrence(
     spark, chunked_events, tmp_path
 ):
