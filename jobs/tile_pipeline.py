@@ -59,11 +59,10 @@ def main() -> None:
     ap.add_argument("--z-min", type=int, default=0)
     ap.add_argument("--z-max", type=int, default=14)
     ap.add_argument("--buffer", type=int, default=128)
-    ap.add_argument("--n-salts", type=int, default=16)
     ap.add_argument("--adaptive-target", type=int, default=None,
                     help="rows per encode group for adaptive cell "
-                         "splitting (density-driven salts); overrides "
-                         "--n-salts when set")
+                         "splitting (density-driven salts): a tile "
+                         "with more rows is salted and merged")
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--overzoom-dz", type=int, default=0,
                     help="after the base pyramid commits, serve "
@@ -161,7 +160,6 @@ def main() -> None:
     tiles = T.encode_tiles(
         assigned,
         buffer_units=args.buffer,
-        n_salts=args.n_salts,
         adaptive_salt_target=args.adaptive_target,
         repair=args.repair,
     ).withColumn("cell", cell_col())

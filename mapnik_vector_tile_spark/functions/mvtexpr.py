@@ -255,8 +255,6 @@ def parse(src: str):
 
 # ------------------------------------------------------------- renderer
 
-_BOOL_NODES = ("bin_logic", "not", "match", "cmp")
-
 
 def _sql_str(s: str) -> str:
     return "'" + s.replace("'", "''") + "'"
@@ -266,18 +264,6 @@ def _ident(name: str, engine: str) -> str:
     if engine == "spark":
         return "`" + name.replace("`", "``") + "`"
     return '"' + name.replace('"', '""') + '"'
-
-
-def _is_bool(ast) -> bool:
-    if ast[0] in ("not", "match"):
-        return True
-    if ast[0] == "bool":
-        return True
-    if ast[0] == "bin" and ast[1] in (
-        "and", "or", "=", "!=", ">", ">=", "<", "<=",
-    ):
-        return True
-    return False
 
 
 def _boolize(sql: str, ast, engine: str) -> str:

@@ -345,12 +345,6 @@ def _round_half_away_col(v: Column) -> Column:
     return (t + bump).cast("bigint")
 
 
-def zigzag_col(n: Column) -> Column:
-    """Arithmetic zigzag (no shifts → identical in DuckDB SQL):
-    n>=0 → 2n, n<0 → -2n-1."""
-    return F.when(n >= 0, n * 2).otherwise(-(n * 2) - 1).cast("bigint")
-
-
 def cell_id_sql_expr(xcol: str, ycol: str, z: int) -> str:
     """ANSI-SQL Morton interleave for a FIXED zoom z — runs bit-exact in
     BOTH Spark SQL and DuckDB (no dialect-specific `//`/`div`): bit i of

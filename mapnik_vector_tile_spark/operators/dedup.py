@@ -39,7 +39,6 @@ from pyspark.sql import functions as F
 H_PRIME = 2147483647  # 2^31 - 1 — (a*h+b) % P stays < 2^59, no overflow
 N_HASHES = 16
 N_BANDS = 4
-ROWS_PER_BAND = N_HASHES // N_BANDS
 SIM_BITS = 56  # H14 yields 56 bits
 
 

@@ -556,7 +556,6 @@ WP_VOCAB: tuple[str, ...] = tuple(
         "hash", "join", "scan", "slow", "fast", "line", "data",
     ]
 )
-WP_MAX_PIECE = 4
 WP_MAX_WORD = 8  # committed corpus bound; longer words raise (guarded)
 
 

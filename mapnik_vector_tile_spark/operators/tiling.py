@@ -1,8 +1,7 @@
 """EP1 — the flagship encode pipeline (SURVEY.md §3):
 
-features --assign_tiles--> explode --[salt]--> groupBy(z,x,y[,salt])
-  --applyInPandas(quantize -> clip -> simplify -> encode)--> layer blobs
-  --groupBy(z,x,y)--> tile blobs
+features --assign_tiles--> explode --> groupBy(z,x,y)
+  --applyInPandas(quantize -> clip -> simplify -> encode)--> tile blobs
 
 This inverts the reference's per-tile datasource probe
 (processor::update_tile looping ds->features(query)) into ONE shuffle
@@ -12,17 +11,19 @@ vector_tile_processor.ipp create_geom_layer's visitor order.
 
 Scale notes (the 100TB story):
 * assign_tiles is a narrow 1->N flatmap in Arrow batches — no shuffle;
-* the groupBy is THE shuffle; low-z tiles are planet-sized hot keys, so
-  their groups are salted into sub-groups encoded as partial layers and
+* the groupBy is THE shuffle, one for every zoom; each group is a
+  whole tile, finished inside the encode stage;
+* a tile is a hot key only when it holds many rows, at any zoom: with
+  ``adaptive_salt_target`` the tiles whose counted rows exceed the
+  target are salted into sub-groups, encoded as partial layers and
   merged in a second, much smaller groupBy (two-phase aggregation —
-  SURVEY.md §4.3); _encode_salt_split decides which zooms take it;
+  SURVEY.md §4.3);
 * all geometry kernels run vectorized numpy inside the Arrow batch;
   per-feature Python is bounded by features-per-tile, not table size.
 """
 
 from __future__ import annotations
 
-import functools
 import struct
 
 import numpy as np
@@ -382,7 +383,7 @@ def assign_tiles(
     return features.mapInPandas(gen, schema=schema)
 
 
-SALT_MAX_Z = 5  # tiles at z <= this get salted two-phase encoding
+SALT_MAX_Z = 5  # with_salt splits the tiles at z <= this (encode_layers)
 
 
 def with_salt(assigned: DataFrame, n_salts: int = 16) -> DataFrame:
@@ -905,7 +906,7 @@ def encode_layer_partials(
     shuffle).
 
     ``emit_tiles=True`` (callers guarantee every group is a WHOLE
-    unsalted single-layer tile — _encode_salt_split's high-zoom band):
+    unsalted single-layer tile — _encode_whole_tiles passes n_salts=1):
     each group folds to its final Tile buffer inline, so the finished
     output corpus is never shuffled a second time.
 
@@ -993,50 +994,30 @@ def encode_layers(
     )
 
 
-def _encode_salt_split(
-    band, z_min: int, z_max: int, as_layers: bool = False, **encode_kwargs
+def _encode_whole_tiles(
+    assigned: DataFrame, as_layers: bool = False, **encode_kwargs
 ) -> DataFrame:
-    """The low-zoom salt split, shared by every encode entry point.
-    ``band(lo, hi)`` returns the assigned rows of zooms [lo, hi]; only
-    the bands that [z_min, z_max] reaches are fetched, so an empty band
-    costs nothing.
+    """The one encode exchange of every whole-tile entry point, for the
+    whole zoom range of ``assigned``.
 
-    * z > SALT_MAX_Z: fixed salting never splits these groups, so each
-      is a whole tile and the encode stage finishes it inline (a Tile
-      via ``emit_tiles``, or the layer itself when ``as_layers``) — the
-      finished output, most of the corpus, never shuffles a second time.
-    * z <= SALT_MAX_Z: salted partials, then one merge pass
-      (fold_tiles_from_partials, or merge_salted_layers when
-      ``as_layers``).
-    * Adaptive salting (``adaptive_salt_target``) can split a hot group
-      at ANY zoom — the inline finish would emit each salted partial as
-      a duplicate tile — so the whole range takes the merge pass.
+    * Unsalted, each (z,x,y) group is a whole tile, so the encode stage
+      finishes it inline (a Tile via ``emit_tiles``, or the layer itself
+      when ``as_layers``): the finished output never shuffles a second
+      time and nothing is merged.
+    * Adaptive salting (``adaptive_salt_target``) splits any tile whose
+      counted rows exceed the target, at any zoom. The inline finish
+      would emit each salted partial as a duplicate tile, so the range
+      then takes the merge pass (fold_tiles_from_partials, or
+      merge_salted_layers when ``as_layers``).
 
-    Every branch is byte-identical to a single-pass encode of the whole
-    range (the salted/unsalted byte-equality invariant)."""
-    finish = merge_salted_layers if as_layers else fold_tiles_from_partials
+    Both are byte-identical to fold_tiles(encode_layers(...)) (the
+    salted/unsalted byte-equality invariant)."""
     if encode_kwargs.get("adaptive_salt_target") is not None:
-        return finish(
-            encode_layer_partials(band(z_min, z_max), **encode_kwargs)
-        )
-    parts = []
-    if z_max > SALT_MAX_Z:
-        parts.append(
-            encode_layer_partials(
-                band(max(z_min, SALT_MAX_Z + 1), z_max),
-                emit_tiles=not as_layers,
-                **encode_kwargs,
-            )
-        )
-    if z_min <= SALT_MAX_Z:
-        parts.append(
-            finish(
-                encode_layer_partials(
-                    band(z_min, min(z_max, SALT_MAX_Z)), **encode_kwargs
-                )
-            )
-        )
-    return functools.reduce(DataFrame.unionByName, parts)
+        finish = merge_salted_layers if as_layers else fold_tiles_from_partials
+        return finish(encode_layer_partials(assigned, **encode_kwargs))
+    return encode_layer_partials(
+        assigned, n_salts=1, emit_tiles=not as_layers, **encode_kwargs
+    )
 
 
 def encode_tiles(
@@ -1046,31 +1027,22 @@ def encode_tiles(
     buffer_units: int = tm.DEFAULT_BUFFER,
     simplify_distance: float = 0.0,
     area_threshold: float = 0.0,
-    n_salts: int = 16,
     num_partitions: int | None = None,
     adaptive_salt_target: int | None = None,
     repair: bool = False,
     fill_rule: str = "even_odd",
     simplify_strategy: str = "douglas-peucker",
 ) -> DataFrame:
-    """EP1 fused finish, byte-identical to fold_tiles(encode_layers(...)).
-
-    The zoom bands follow _encode_salt_split: high-zoom tiles are
-    finished inside the encode stage, only the salted low-zoom partials
-    take the merge+fold pass. Each band filters ``assigned``, so the
-    narrow assign stage is recomputed once per band — at 100 TB a
-    narrow recompute is strictly cheaper than re-shuffling the entire
-    output."""
-    return _encode_salt_split(
-        lambda lo, hi: assigned.filter(F.col("z").between(lo, hi)),
-        0,
-        2**31 - 1,  # z is an int column: every zoom `assigned` can hold
+    """EP1 fused finish, byte-identical to fold_tiles(encode_layers(...)):
+    every zoom of ``assigned`` goes through one encode exchange that
+    finishes each tile inline (_encode_whole_tiles)."""
+    return _encode_whole_tiles(
+        assigned,
         layer_name=layer_name,
         extent=extent,
         buffer_units=buffer_units,
         simplify_distance=simplify_distance,
         area_threshold=area_threshold,
-        n_salts=n_salts,
         num_partitions=num_partitions,
         adaptive_salt_target=adaptive_salt_target,
         repair=repair,
@@ -1088,35 +1060,21 @@ def encode_tiles_from_features(
     thin_rate: tuple[int, int] = (5, 2),
     **encode_kwargs,
 ) -> DataFrame:
-    """encode_tiles starting from the FEATURE table — byte-identical
-    output to encode_tiles(assign_tiles(features, z_min, z_max)), but
-    the narrow fan-out enumerates each (feature, tile) row exactly
-    ONCE: encode_tiles' bands each re-run the full-z-range assign and
-    then z-filter part of the enumerated rows away (its documented
-    recompute-over-reshuffle tradeoff — sound when handed an opaque
-    `assigned`, but wasteful when the caller still holds the
-    features).  Here each band of _encode_salt_split runs its own
-    assign over only the zooms it keeps — at the bench scale this
-    removes ~half of the encode query's wall-clock, and a band the
-    range does not reach (the common high-zoom serving case) costs
-    nothing at all.  buffer_units/thin_* feed the assigns; everything
-    else passes through to the encode stage."""
-    extent = encode_kwargs.get("extent", tm.DEFAULT_EXTENT)
-
-    def band(lo: int, hi: int) -> DataFrame:
-        return assign_tiles(
-            features,
-            lo,
-            hi,
-            buffer_units=buffer_units,
-            extent=extent,
-            thin_base_z=thin_base_z,
-            thin_rate=thin_rate,
-        )
-
-    return _encode_salt_split(
-        band, z_min, z_max, buffer_units=buffer_units, **encode_kwargs
+    """encode_tiles(assign_tiles(features, z_min, z_max, ...)) in one
+    call: the features are evaluated and assigned once for the whole
+    zoom range, then go through one encode exchange.  buffer_units,
+    the extent and thin_* feed the assign; everything else passes
+    through to the encode stage."""
+    assigned = assign_tiles(
+        features,
+        z_min,
+        z_max,
+        buffer_units=buffer_units,
+        extent=encode_kwargs.get("extent", tm.DEFAULT_EXTENT),
+        thin_base_z=thin_base_z,
+        thin_rate=thin_rate,
     )
+    return encode_tiles(assigned, buffer_units=buffer_units, **encode_kwargs)
 
 
 def encode_wafer_tiles(
@@ -1127,7 +1085,6 @@ def encode_wafer_tiles(
     buffer_units: int = tm.DEFAULT_BUFFER,
     simplify_distance: float = 0.0,
     area_threshold: float = 0.0,
-    n_salts: int = 16,
     repair: bool = False,
 ) -> DataFrame:
     """Wafer rendering — the mapycz fork's multi-tile strategy
@@ -1173,7 +1130,6 @@ def encode_wafer_tiles(
             buffer_units=buffer_units,
             simplify_distance=simplify_distance,
             area_threshold=area_threshold,
-            n_salts=n_salts,
             repair=repair,
         )
     zw = z - k
@@ -1181,16 +1137,14 @@ def encode_wafer_tiles(
     assigned = assign_tiles(
         features, zw, zw, buffer_units=buffer_units, extent=wext
     )
-    common = dict(
+    # layer rows, because the split into children consumes layers
+    wafers = _encode_whole_tiles(
+        assigned,
+        as_layers=True,
         layer_name=layer_name,
         extent=wext,
         buffer_units=buffer_units,
-        n_salts=n_salts,
         repair=repair,
-    )
-    # layer rows, because the split into children consumes layers
-    wafers = _encode_salt_split(
-        lambda lo, hi: assigned, zw, zw, as_layers=True, **common
     )
     children = comp.overzoom_layers(
         wafers,

@@ -71,23 +71,14 @@ def q_encode_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapnik_vector_tile_spark.operators import tiling as T
 
     feats = _order_features(spark, sf_dir)
-    # split-z-range single-enumeration path: byte-identical to
-    # encode_tiles(assign_tiles(feats, 0, 10)) but the narrow fan-out
-    # runs once per zoom instead of once per branch
-    return T.encode_tiles_from_features(
-        feats, 0, 10, buffer_units=0, n_salts=16
-    )
+    return T.encode_tiles_from_features(feats, 0, 10, buffer_units=0)
 
 
 def q_decode_rt(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapnik_vector_tile_spark.operators import tiling as T
 
     feats = _order_features(spark, sf_dir)
-    # z range is entirely above the salted low-zoom band: the
-    # from-features path skips that (empty) band altogether
-    tiles = T.encode_tiles_from_features(
-        feats, 6, 10, buffer_units=0, n_salts=16
-    )
+    tiles = T.encode_tiles_from_features(feats, 6, 10, buffer_units=0)
     return T.decode_tiles_to_features(tiles)
 
 
@@ -115,7 +106,7 @@ def q_wafer(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapnik_vector_tile_spark.operators import tiling as T
 
     feats = _order_features(spark, sf_dir)
-    return T.encode_wafer_tiles(feats, z=10, k=3, buffer_units=0, n_salts=16)
+    return T.encode_wafer_tiles(feats, z=10, k=3, buffer_units=0)
 
 
 def q_encode_z10_direct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -124,9 +115,7 @@ def q_encode_z10_direct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapnik_vector_tile_spark.operators import tiling as T
 
     feats = _order_features(spark, sf_dir)
-    return T.encode_tiles_from_features(
-        feats, 10, 10, buffer_units=0, n_salts=16
-    )
+    return T.encode_tiles_from_features(feats, 10, 10, buffer_units=0)
 
 
 def q_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -968,7 +968,7 @@ def q_engine_load_compressed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     feats = _engine_point_features(spark, sf_dir)
     assigned = T.assign_tiles(feats, 4, 6, buffer_units=0)
-    tiles = T.encode_tiles(assigned, n_salts=8)
+    tiles = T.encode_tiles(assigned)
 
     def gen(batches):
         for pdf in batches:
@@ -1032,7 +1032,7 @@ def q_engine_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     feats = _engine_point_features(spark, sf_dir)
     assigned = T.assign_tiles(feats, VALIDITY_Z, VALIDITY_Z, buffer_units=0)
-    tiles = T.encode_tiles(assigned, n_salts=8)
+    tiles = T.encode_tiles(assigned)
 
     bad_version = pbf.layer_to_tile(pbf.LayerBuilder("v3", version=3).build())
     bad_both = pbf.layer_to_tile(pbf.LayerBuilder("", version=3).build())
@@ -1826,7 +1826,7 @@ def q_geojson_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs_df = orders.mapInPandas(gen, schema="json string")
     feats = geojson_to_features(docs_df)
     assigned = T.assign_tiles(feats, 7, 7, buffer_units=0)
-    tiles = T.encode_tiles(assigned, n_salts=1)
+    tiles = T.encode_tiles(assigned)
     return tiles.select(
         "z", "x", "y", F.col("n_features").cast("bigint").alias("n_features")
     )
@@ -2744,7 +2744,6 @@ def q_tile_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         return T.encode_tiles(
             T.assign_tiles(sub, DIFF_Z, DIFF_Z, buffer_units=0),
             buffer_units=0,
-            n_salts=4,
         )
 
     return comp.diff_tiles(store(5), store(7))
@@ -3481,9 +3480,7 @@ def q_engine_wafer(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapnik_vector_tile_spark.operators import tiling as T
 
     feats = _engine_point_features(spark, sf_dir)
-    tiles = T.encode_wafer_tiles(
-        feats, z=WAFER_Z, k=WAFER_K, buffer_units=0, n_salts=8
-    )
+    tiles = T.encode_wafer_tiles(feats, z=WAFER_Z, k=WAFER_K, buffer_units=0)
     return tiles.select(
         "z", "x", "y", F.col("n_features").cast("bigint").alias("n_features")
     )

@@ -2695,7 +2695,6 @@ def q_tile_patch(spark: SparkSession, sf_dir: str) -> DataFrame:
         return T.encode_tiles(
             T.assign_tiles(sub, DIFF_Z, DIFF_Z, buffer_units=0),
             buffer_units=0,
-            n_salts=4,
         )
 
     a, b = store(5), store(7)

@@ -263,15 +263,6 @@ def regions_merc_df(spark, n_regions: int = 200):
     return spark.createDataFrame(pdf, schema=schema)
 
 
-def regions_df(spark, n_regions: int = 200):
-    pdf = gen_regions_pdf(n_regions)
-    schema = (
-        "region_id long, name string, kind string, xs array<double>, "
-        "ys array<double>, ring_offsets array<int>"
-    )
-    return spark.createDataFrame(pdf, schema=schema)
-
-
 def gen_raster_polys(n_polys: int = 120) -> list[dict]:
     """Deterministic concave 'staircase' polygons in tile-local INTEGER
     coords (extent 4096) for the R4 rasterize oracle — every 3rd poly

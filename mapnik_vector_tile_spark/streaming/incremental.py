@@ -320,7 +320,7 @@ def run_incremental_retile(
         )
         assigned = T.assign_tiles(feats, z, z, buffer_units=0)
         todo = assigned.join(SF.broadcast(keys.select("x", "y")), ["x", "y"])
-        tiles = T.encode_tiles(todo, n_salts=4)
+        tiles = T.encode_tiles(todo)
         stamped = tiles.join(SF.broadcast(keys), ["x", "y"]).withColumn(
             "batch_id", SF.lit(batch_id)
         )

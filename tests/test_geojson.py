@@ -135,7 +135,7 @@ def test_geojson_feeds_ep1(spark):
         [(json.dumps(d),) for d in DOCS], schema="json string"
     )
     feats = geojson_to_features(docs_df)  # -> merc
-    tiles = T.encode_tiles(T.assign_tiles(feats, 2, 4), n_salts=2)
+    tiles = T.encode_tiles(T.assign_tiles(feats, 2, 4))
     dec = T.decode_tiles_to_features(tiles).toPandas()
     assert len(dec) > 0
     caps = dict(zip(dec.feature_id, dec.caption))

@@ -108,58 +108,62 @@ def test_salted_low_z_equals_unsalted(spark):
         assert bytes(a.tile) == bytes(b.tile), f"tile {a.z}/{a.x}/{a.y} differs"
 
 
+SALTED_REF_RANGES = ((0, 3), (0, 7), (6, 8))
+
+
+def _salted_reference(feats, z0, z1):
+    """The two-phase reference: 8-way salted partials at z <= SALT_MAX_Z,
+    splice-merged, then folded."""
+    return T.fold_tiles(
+        T.encode_layers(T.assign_tiles(feats, z0, z1), n_salts=8)
+    )
+
+
+def _assert_same_tiles(got, ref, label):
+    got = got.toPandas().sort_values(["z", "x", "y"]).reset_index(drop=True)
+    ref = ref.toPandas().sort_values(["z", "x", "y"]).reset_index(drop=True)
+    assert len(got) == len(ref) > 0, label
+    for a, b in zip(got.itertuples(), ref.itertuples()):
+        assert (a.z, a.x, a.y) == (b.z, b.x, b.y), label
+        assert (a.n_layers, a.n_features) == (b.n_layers, b.n_features)
+        assert bytes(a.tile) == bytes(b.tile), (label, a.z, a.x, a.y)
+
+
 def test_fused_encode_tiles_byte_identical(spark):
-    """encode_tiles (salted low-z merge+fold, inline-folded unsalted
-    high-z) must be byte-identical to the two-stage
-    fold_tiles(encode_layers(...)) path; z range spans BOTH branches
-    of the split."""
+    """encode_tiles (one unsalted encode exchange that finishes every
+    tile inline) must be byte-identical to the salted two-stage
+    fold_tiles(encode_layers(..., n_salts=8)) path, over ranges inside,
+    across and above the salted zooms."""
     images = synth.images_df(spark, 50, with_bytes=False, slices=2)
     feats = T.images_to_features(images)
-    assigned = T.assign_tiles(feats, 0, 7)
-    fused = (
-        T.encode_tiles(assigned, n_salts=8).toPandas()
-        .sort_values(["z", "x", "y"]).reset_index(drop=True)
-    )
-    staged = (
-        T.fold_tiles(T.encode_layers(assigned, n_salts=8)).toPandas()
-        .sort_values(["z", "x", "y"]).reset_index(drop=True)
-    )
-    assert len(fused) == len(staged) > 0
-    for a, b in zip(fused.itertuples(), staged.itertuples()):
-        assert (a.z, a.x, a.y) == (b.z, b.x, b.y)
-        assert (a.n_layers, a.n_features) == (b.n_layers, b.n_features)
-        assert bytes(a.tile) == bytes(b.tile), f"tile {a.z}/{a.x}/{a.y} differs"
+    for z0, z1 in SALTED_REF_RANGES:
+        _assert_same_tiles(
+            T.encode_tiles(T.assign_tiles(feats, z0, z1)),
+            _salted_reference(feats, z0, z1),
+            (z0, z1),
+        )
 
 
 def test_encode_tiles_from_features_byte_identical(spark):
-    """The split-z-range single-enumeration path must be
-    byte-identical to encode_tiles(assign_tiles(...)) across a z
-    range spanning both branches, and for a purely-high-z range
-    (where the lo branch is skipped entirely)."""
+    """encode_tiles_from_features (features assigned once, one encode
+    exchange) must be byte-identical to the salted two-stage reference
+    over the same ranges."""
     images = synth.images_df(spark, 50, with_bytes=False, slices=2)
     feats = T.images_to_features(images)
-    for z0, z1 in ((0, 7), (6, 8)):
-        ref = (
-            T.encode_tiles(T.assign_tiles(feats, z0, z1), n_salts=8)
-            .toPandas().sort_values(["z", "x", "y"]).reset_index(drop=True)
+    for z0, z1 in SALTED_REF_RANGES:
+        _assert_same_tiles(
+            T.encode_tiles_from_features(feats, z0, z1),
+            _salted_reference(feats, z0, z1),
+            (z0, z1),
         )
-        new = (
-            T.encode_tiles_from_features(feats, z0, z1, n_salts=8)
-            .toPandas().sort_values(["z", "x", "y"]).reset_index(drop=True)
-        )
-        assert len(ref) == len(new) > 0
-        for a, b in zip(ref.itertuples(), new.itertuples()):
-            assert (a.z, a.x, a.y) == (b.z, b.x, b.y)
-            assert bytes(a.tile) == bytes(b.tile), (z0, z1, a.z, a.x, a.y)
 
 
 def test_encode_tiles_from_features_adaptive_salt(spark):
     """Adaptive salting can split hot groups at ANY zoom, so the
-    split-z-range fast path (whose hi branch inline-folds with
-    emit_tiles=True) must NOT be taken: each salted partial would be
-    emitted as a finished tile — duplicate (z,x,y) rows.  Adaptive
-    mode must route the whole range through merge+fold and stay
-    byte-identical to encode_tiles."""
+    inline finish (emit_tiles=True) must NOT be taken: each salted
+    partial would be emitted as a finished tile — duplicate (z,x,y)
+    rows.  Adaptive mode must route the whole range through
+    merge+fold and stay byte-identical to encode_tiles."""
     images = synth.images_df(spark, 120, with_bytes=False, slices=2)
     feats = T.images_to_features(images)
     new = (
@@ -338,7 +342,7 @@ def test_area_threshold_drops_small_rings(spark):
     rings = {}
     for thr in (0.0, 25.0):
         dec = T.decode_tiles_to_features(
-            T.encode_tiles(assigned, n_salts=2, area_threshold=thr)
+            T.encode_tiles(assigned, area_threshold=thr)
         ).toPandas()
         assert len(dec) == 1
         rings[thr] = len(dec.part_offsets.iloc[0]) - 1

@@ -560,6 +560,36 @@ def test_tile_store_read_starts_no_job(spark, tmp_path):
         read_tile_store(spark, str(tmp_path / "missing"))
 
 
+def test_pyramid_build_is_one_encode_exchange(spark, tmp_path):
+    """A whole pyramid (z0-11) from features to the store: the features
+    are evaluated once, every zoom goes through ONE encode exchange
+    that finishes each tile inline (no partial encode, no fold), and
+    the build runs 3 Spark jobs: the encode exchange, the store's
+    repartition on z and the write.  The input has a partition per core,
+    as the pyramid_build workload's does, so assign_tiles adds no
+    exchange of its own."""
+    from mapnik_vector_tile_spark.sources import synth
+    from mapnik_vector_tile_spark.sources.store import write_tile_store
+
+    slices = spark.sparkContext.defaultParallelism
+    feats = T.images_to_features(
+        synth.images_df(spark, 40, with_bytes=False, slices=slices)
+    )
+    tiles = T.encode_tiles_from_features(feats, 0, 11)
+
+    def physical(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    plan = physical(tiles)
+    # the features' own MapInPandas nodes, then the assign and the encode
+    assert plan.count("MapInPandas") == physical(feats).count("MapInPandas") + 2
+    assert plan.count("Exchange") == 1
+    _, jobs = _jobs_run(
+        spark, lambda: write_tile_store(tiles, str(tmp_path / "store"))
+    )
+    assert jobs == 3
+
+
 def test_alignment_filter_single_projection_no_shuffle(spark):
     """T36: the cross-modal gate on same-row tower columns must be ONE
     projection — zero Exchange, zero Python — so it stays a codegen

@@ -115,7 +115,7 @@ def test_decode_singles_batch_path_is_exercised(spark):
     from mapnik_vector_tile_spark.operators import tiling as T
 
     tiles = T.encode_tiles_from_features(
-        _point_feats(spark), 3, 5, buffer_units=0, n_salts=4
+        _point_feats(spark), 3, 5, buffer_units=0
     ).collect()
     assert tiles
     blobs = [pbf.maybe_decompress(bytes(r["tile"])) for r in tiles]

@@ -258,7 +258,7 @@ def test_incremental_retile_matches_batch_encode(spark, chunked_events, tmp_path
     assigned = T.assign_tiles(feats, Z, Z, buffer_units=0)
     batch = {
         (r.x, r.y): bytes(r.tile)
-        for r in T.encode_tiles(assigned, n_salts=4).collect()
+        for r in T.encode_tiles(assigned).collect()
         if (r.x, r.y) in rows
     }
     assert set(rows) == set(batch)
