@@ -33,6 +33,7 @@ from collections.abc import Callable, Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 # handler: (key_tuple, {col: np.ndarray}, slice) -> list[tuple] | None
 GroupFn = Callable[[tuple, dict[str, np.ndarray], slice], list[tuple] | None]
@@ -54,7 +55,7 @@ def apply_grouped(
     keys: list[str],
     order_by: list[str],
     fn: GroupFn,
-    schema: str,
+    schema: str | StructType,
     out_columns: list[str],
     num_partitions: int | None = None,
     prepare: Callable[[dict[str, np.ndarray], int], dict[str, np.ndarray]]

@@ -30,6 +30,16 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    DataType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from mapnik_vector_tile_spark.functions import clip as clipmod
 from mapnik_vector_tile_spark.functions import repair as repairmod
@@ -445,11 +455,39 @@ def with_adaptive_salt(
     )
 
 
-LAYER_SCHEMA = (
-    "z int, x long, y long, layer string, blob binary, "
-    "n_features long, n_points long"
+def _schema(*fields: tuple[str, DataType]) -> StructType:
+    """A UDF output schema built once, without the JVM: a DDL string
+    passed to mapInPandas / mapInArrow is parsed by the JVM again on
+    every call, which a serving request pays for (~5 ms each)."""
+    return StructType([StructField(name, t) for name, t in fields])
+
+
+_ZXY = (("z", IntegerType()), ("x", LongType()), ("y", LongType()))
+LAYER_SCHEMA = _schema(
+    *_ZXY,
+    ("layer", StringType()),
+    ("blob", BinaryType()),
+    ("n_features", LongType()),
+    ("n_points", LongType()),
 )
-LAYER_COLS = ["z", "x", "y", "layer", "blob", "n_features", "n_points"]
+LAYER_COLS = LAYER_SCHEMA.fieldNames()
+TILE_ROW_SCHEMA = _schema(
+    *_ZXY,
+    ("tile", BinaryType()),
+    ("n_layers", LongType()),
+    ("n_features", LongType()),
+)
+TILE_ROW_COLS = TILE_ROW_SCHEMA.fieldNames()
+DECODED_SCHEMA = _schema(
+    *_ZXY,
+    ("layer", StringType()),
+    ("feature_id", LongType()),
+    ("geom_type", IntegerType()),
+    ("pxs", ArrayType(LongType())),
+    ("pys", ArrayType(LongType())),
+    ("part_offsets", ArrayType(LongType())),
+    ("caption", StringType()),
+)
 
 
 # int64 shoelace sums of <= _SMALL_N terms are exact while every tile
@@ -906,7 +944,7 @@ def encode_layer_partials(
     shuffle).
 
     ``emit_tiles=True`` (callers guarantee every group is a WHOLE
-    unsalted single-layer tile — _encode_whole_tiles passes n_salts=1):
+    unsalted single-layer tile — encode_tiles passes n_salts=1):
     each group folds to its final Tile buffer inline, so the finished
     output corpus is never shuffled a second time.
 
@@ -937,22 +975,13 @@ def encode_layer_partials(
         )
     else:
         salted = with_salt(assigned, n_salts=n_salts)
-    if emit_tiles:
-        schema = (
-            "z int, x long, y long, tile binary, n_layers long, "
-            "n_features long"
-        )
-        out_columns = ["z", "x", "y", "tile", "n_layers", "n_features"]
-    else:
-        schema = LAYER_SCHEMA
-        out_columns = LAYER_COLS
     return apply_grouped(
         salted,
         keys=["z", "x", "y", "salt"],
         order_by=["z", "x", "y", "salt", "feature_id"],
         fn=encode_group,
-        schema=schema,
-        out_columns=out_columns,
+        schema=TILE_ROW_SCHEMA if emit_tiles else LAYER_SCHEMA,
+        out_columns=TILE_ROW_COLS if emit_tiles else LAYER_COLS,
         num_partitions=num_partitions,
         prepare=prepare,
         batch_fn=encode_batch,
@@ -994,32 +1023,6 @@ def encode_layers(
     )
 
 
-def _encode_whole_tiles(
-    assigned: DataFrame, as_layers: bool = False, **encode_kwargs
-) -> DataFrame:
-    """The one encode exchange of every whole-tile entry point, for the
-    whole zoom range of ``assigned``.
-
-    * Unsalted, each (z,x,y) group is a whole tile, so the encode stage
-      finishes it inline (a Tile via ``emit_tiles``, or the layer itself
-      when ``as_layers``): the finished output never shuffles a second
-      time and nothing is merged.
-    * Adaptive salting (``adaptive_salt_target``) splits any tile whose
-      counted rows exceed the target, at any zoom. The inline finish
-      would emit each salted partial as a duplicate tile, so the range
-      then takes the merge pass (fold_tiles_from_partials, or
-      merge_salted_layers when ``as_layers``).
-
-    Both are byte-identical to fold_tiles(encode_layers(...)) (the
-    salted/unsalted byte-equality invariant)."""
-    if encode_kwargs.get("adaptive_salt_target") is not None:
-        finish = merge_salted_layers if as_layers else fold_tiles_from_partials
-        return finish(encode_layer_partials(assigned, **encode_kwargs))
-    return encode_layer_partials(
-        assigned, n_salts=1, emit_tiles=not as_layers, **encode_kwargs
-    )
-
-
 def encode_tiles(
     assigned: DataFrame,
     layer_name: str = "features",
@@ -1033,22 +1036,34 @@ def encode_tiles(
     fill_rule: str = "even_odd",
     simplify_strategy: str = "douglas-peucker",
 ) -> DataFrame:
-    """EP1 fused finish, byte-identical to fold_tiles(encode_layers(...)):
-    every zoom of ``assigned`` goes through one encode exchange that
-    finishes each tile inline (_encode_whole_tiles)."""
-    return _encode_whole_tiles(
+    """EP1 fused finish, byte-identical to fold_tiles(encode_layers(...))
+    (the salted/unsalted byte-equality invariant): every zoom of
+    ``assigned`` goes through one encode exchange.
+
+    * Unsalted, each (z,x,y) group is a whole tile, so the encode stage
+      finishes it inline (``emit_tiles``): the finished output never
+      shuffles a second time and nothing is merged.
+    * Adaptive salting (``adaptive_salt_target``) splits any tile whose
+      counted rows exceed the target, at any zoom. The inline finish
+      would emit each salted partial as a duplicate tile, so the tiles
+      then take the merge pass (fold_tiles_from_partials)."""
+    salted = adaptive_salt_target is not None
+    out = encode_layer_partials(
         assigned,
         layer_name=layer_name,
         extent=extent,
         buffer_units=buffer_units,
         simplify_distance=simplify_distance,
         area_threshold=area_threshold,
+        n_salts=1,
         num_partitions=num_partitions,
         adaptive_salt_target=adaptive_salt_target,
+        emit_tiles=not salted,
         repair=repair,
         fill_rule=fill_rule,
         simplify_strategy=simplify_strategy,
     )
+    return fold_tiles_from_partials(out) if salted else out
 
 
 def encode_tiles_from_features(
@@ -1137,10 +1152,11 @@ def encode_wafer_tiles(
     assigned = assign_tiles(
         features, zw, zw, buffer_units=buffer_units, extent=wext
     )
-    # layer rows, because the split into children consumes layers
-    wafers = _encode_whole_tiles(
+    # unsalted layer rows: each wafer is one whole group, and the split
+    # into children consumes layers
+    wafers = encode_layer_partials(
         assigned,
-        as_layers=True,
+        n_salts=1,
         layer_name=layer_name,
         extent=wext,
         buffer_units=buffer_units,
@@ -1178,13 +1194,7 @@ def encode_wafer_tiles(
                 }
             )
 
-    return children.mapInPandas(
-        wrap,
-        schema=(
-            "z int, x long, y long, tile binary, n_layers long, "
-            "n_features long"
-        ),
-    )
+    return children.mapInPandas(wrap, schema=TILE_ROW_SCHEMA)
 
 
 def _dedup_pairs(px: np.ndarray, py: np.ndarray):
@@ -1257,8 +1267,8 @@ def fold_tiles(layers: DataFrame) -> DataFrame:
         keys=["z", "x", "y"],
         order_by=["z", "x", "y", "layer"],
         fn=concat_group,
-        schema="z int, x long, y long, tile binary, n_layers long, n_features long",
-        out_columns=["z", "x", "y", "tile", "n_layers", "n_features"],
+        schema=TILE_ROW_SCHEMA,
+        out_columns=TILE_ROW_COLS,
     )
 
 
@@ -1297,8 +1307,8 @@ def fold_tiles_from_partials(partials: DataFrame) -> DataFrame:
         keys=["z", "x", "y"],
         order_by=["z", "x", "y", "layer"],
         fn=tile_group,
-        schema="z int, x long, y long, tile binary, n_layers long, n_features long",
-        out_columns=["z", "x", "y", "tile", "n_layers", "n_features"],
+        schema=TILE_ROW_SCHEMA,
+        out_columns=TILE_ROW_COLS,
     )
 
 
@@ -1341,11 +1351,6 @@ def decode_tiles_to_features(
         tiles = tiles.filter(
             disjuncts if disjuncts is not None else F.lit(False)
         )
-
-    schema = (
-        "z int, x long, y long, layer string, feature_id long, geom_type int, "
-        "pxs array<long>, pys array<long>, part_offsets array<long>, caption string"
-    )
 
     def _tile_rows(z, x, y, blob) -> list[tuple]:
         rows = []
@@ -1478,7 +1483,7 @@ def decode_tiles_to_features(
                     preserve_index=False,
                 )
 
-    return tiles.mapInArrow(gen, schema=schema)
+    return tiles.mapInArrow(gen, schema=DECODED_SCHEMA)
 
 
 def vtquery(

@@ -9,8 +9,12 @@ master default, which spark-submit overrides.
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
+
+# AF_UNIX's sun_path: 108 bytes, the last one the terminating NUL
+_UNIX_PATH_MAX = 107
 
 
 def driver_memory(total_bytes: int | None = None) -> str:
@@ -18,6 +22,24 @@ def driver_memory(total_bytes: int | None = None) -> str:
     if total_bytes is None:
         total_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     return f"{max(1, min(4, total_bytes // (5 * 2**30)))}g"
+
+
+def unix_socket_conf(sock_dir: str) -> dict[str, str]:
+    """Conf that moves the JVM <-> Python traffic (UDF workers,
+    ``collect``, accumulators) from loopback TCP onto Unix domain
+    sockets in ``sock_dir``. Over TCP every Python task idles ~40 ms on
+    the socket (a 1-row ``mapInArrow`` task runs ~50 ms, ~10 ms here).
+
+    Spark names each socket ``<sock_dir>/.<uuid4>.sock``; where that
+    path would not fit AF_UNIX's limit, this returns {} and Spark keeps
+    its TCP default."""
+    sock = os.path.join(sock_dir, f".{'0' * 36}.sock")
+    if len(os.fsencode(sock)) > _UNIX_PATH_MAX:
+        return {}
+    return {
+        "spark.python.unix.domain.socket.enabled": "true",
+        "spark.python.unix.domain.socket.dir": sock_dir,
+    }
 
 
 def get_spark(
@@ -66,7 +88,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    for k, v in (extra_conf or {}).items():
+    conf = unix_socket_conf(tempfile.gettempdir()) | (extra_conf or {})
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

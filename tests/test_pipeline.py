@@ -678,3 +678,21 @@ def test_encode_batch_composition_matches_encode_group(groups):
         for i in np.flatnonzero(~handled):
             got += scalar(i)
         assert sorted(got) == sorted(ref)
+
+
+def test_udf_schemas_equal_their_ddl(spark):
+    """The StructTypes the UDFs return are the schemas their DDL strings
+    parse to."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    for struct, ddl in (
+        (T.LAYER_SCHEMA, "z int, x long, y long, layer string, blob binary, "
+                         "n_features long, n_points long"),
+        (T.TILE_ROW_SCHEMA, "z int, x long, y long, tile binary, "
+                            "n_layers long, n_features long"),
+        (T.DECODED_SCHEMA, "z int, x long, y long, layer string, "
+                           "feature_id long, geom_type int, pxs array<long>, "
+                           "pys array<long>, part_offsets array<long>, "
+                           "caption string"),
+    ):
+        assert struct == _parse_datatype_string(ddl)
