@@ -11,7 +11,8 @@ the committed, reproducible form of the measurement that drove the
 Protocol:
   1. (untimed, cached) materialize the assigned-features batch with
      Spark once: synth images → features → assign_tiles(z,z) →
-     with_salt — byte-for-byte what the real encode stage shuffles.
+     with_salt(n_salts=1) — byte-for-byte what the build's one
+     unsalted encode exchange shuffles (every tile one group, salt 0).
   2. (timed) sort by the group keys and run prepare + the group loop
      exactly as operators.grouped.apply_grouped does, using the REAL
      kernel from tiling.make_encode_kernel.
@@ -44,7 +45,7 @@ def materialize(path: str, n_images: int, z: int) -> None:
     spark = get_spark("kernel-bench-prep", cores=4, shuffle_partitions=8)
     images = synth.images_df(spark, n_images, with_bytes=False, slices=4)
     feats = T.images_to_features(images)
-    assigned = T.with_salt(T.assign_tiles(feats, z, z), n_salts=16)
+    assigned = T.with_salt(T.assign_tiles(feats, z, z), n_salts=1)
     assigned.coalesce(1).write.mode("overwrite").parquet(path)
     spark.stop()
 
@@ -67,16 +68,17 @@ def main() -> None:
     from mapnik_vector_tile_spark.operators import tiling as T
     from mapnik_vector_tile_spark.operators.grouped import group_starts
 
-    # cache key includes a fingerprint of the batch-producing sources, so
-    # upstream changes to synth/assign_tiles can never be timed (or
-    # byte-compared) against a stale materialization
+    # cache key includes a fingerprint of the batch-producing sources
+    # (this file's materialize too), so upstream changes to
+    # synth/assign_tiles can never be timed (or byte-compared) against a
+    # stale materialization
     import hashlib
 
     import mapnik_vector_tile_spark.sources.synth as _synth
 
     fp = hashlib.md5()
-    for mod in (T, _synth):
-        with open(mod.__file__, "rb") as f:
+    for path in (T.__file__, _synth.__file__, __file__):
+        with open(path, "rb") as f:
             fp.update(f.read())
     tag = fp.hexdigest()[:10]
     cache = f"{args.cache}_n{args.n_images}_z{args.z}_{tag}.parquet"

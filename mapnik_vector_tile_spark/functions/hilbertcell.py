@@ -8,7 +8,7 @@ spatially contiguous cells with no diagonal jumps.
 
 The per-level rotate/flip recurrence (the classic Wikipedia xy2d,
 identical to sources/pmtiles.zxy_to_tileid) is generated from ONE
-spec into BOTH engines' SQL (the wordpiece precedent): z chained
+spec into BOTH engines' SQL: z chained
 subselects, each a pure-integer CASE layer — no UDF, no shuffle, one
 codegen projection on the Spark side.  Only integer-division syntax
 differs (`DIV` vs `//`), parameterized per engine.

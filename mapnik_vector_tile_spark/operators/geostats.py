@@ -343,7 +343,7 @@ def cotravel_pairs(
     if hot_bucket_limit is not None:
         # v feeds three consumers (hot-stats + both self-join sides);
         # checkpoint so the distinct shuffle runs once, the same
-        # pattern as dedup._banded_pairs.
+        # pattern as dedup.phash_neardup_pairs.
         v = v.localCheckpoint(eager=True)
         hot = _hot_buckets(v, keys, [], hot_bucket_limit)
         v = v.join(F.broadcast(hot), keys, "left_anti")

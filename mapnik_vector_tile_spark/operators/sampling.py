@@ -1,7 +1,7 @@
 """Deterministic corpus sampling / split assignment (T17 family).
 
-Training-data curation operators over the ``documents`` table — the
-missing third leg next to dedup (T1-T5) and quality gating (T9):
+Hash-keyed sampling and split operators over the ``documents`` table
+(and, keyed by cell or image, over spatial rows and images):
 
 * ``with_sample_hash`` — a stable per-row coin: ``splitmix64(doc_id)``
   truncated to its top 53 bits, so the SAME value is representable
@@ -301,105 +301,6 @@ def ar_bucket_batches(
         "shard",
         batch.alias("batch_id"),
         (batch < n_full).alias("is_full"),
-    )
-
-
-# --- DSIR importance resampling (T46) ---------------------------------------
-
-
-def dsir_topk(
-    docs: DataFrame,
-    target_sources: tuple[str, ...] = ("src0", "src1"),
-    k: int = 120,
-    n_buckets: int = 4096,
-) -> DataFrame:
-    """T46: DSIR — Data Selection via Importance Resampling (Xie et
-    al. 2023, arXiv:2302.03169) in its deterministic top-k form:
-    score each RAW document by the hashed-n-gram log-likelihood ratio
-    of a TARGET corpus vs the raw corpus, keep the top-k.
-
-    Faithful shape: features are hashed unigram+bigram counts (the
-    paper's hashed n-gram bag, here h7(gram) % n_buckets — md5-based,
-    bit-identical in Spark and DuckDB); bucket models are +1-smoothed
-    counts; a document's importance is Σ log p_target(b)/p_raw(b)
-    over its gram occurrences.  The log-ratio is computed in PURE
-    INTEGER fixed point so the oracle replays it exactly: per bucket
-      s_b = floor(log2( (cp_b + 1) · 2^20  //  (cq_b + 1) ))
-    via length(bin(x)) - 1 (both engines' bin() of a BIGINT), i.e.
-    the LLR quantized to whole bits at 2^-20 resolution (ratios below
-    2^-20 clamp to the smoothing floor); doc score =
-    Σ s_b − 20·n_grams.  Noise-free top-k (score, then doc_id) is the
-    paper's no-Gumbel ablation and the only replayable variant — a
-    seeded-Gumbel selection would pin FP transcendentals across
-    engines.  The normalizing constants log Z drop out of a top-k on
-    a fixed corpus, as in the paper.
-
-    Arithmetic bound: the fixed-point numerator (cp_b + 1)·2^20 stays
-    inside int64 while every TARGET bucket count cp_b < 2^42 (~4·10^12
-    occurrences in one of 4096 buckets) — the target corpus is the
-    small curated side of DSIR by construction, so the bound holds
-    with orders of magnitude to spare; raise n_buckets if a target
-    ever approaches it.
-
-    Scale shape (100 TB raw corpus): the gram fan-out is narrow; the
-    bucket-count aggregates partial-combine map-side down to
-    ≤ n_buckets rows each; the score table (≤ n_buckets rows) re-enters
-    as a BROADCAST join — the raw corpus is never shuffled except the
-    per-doc partial-agg'd sum; selection is TakeOrderedAndProject,
-    never a full sort.  Two passes over the raw grams (counts, then
-    scoring) — recompute beats materializing a 100 TB intermediate."""
-    from pyspark.sql.functions import broadcast
-
-    from mapnik_vector_tile_spark.operators.dedup import (
-        h7,
-        shingle_array_col,
-        words_col,
-    )
-
-    def grams_of(df: DataFrame) -> DataFrame:
-        g = F.concat(words_col(), shingle_array_col(2))
-        return df.select(
-            "doc_id",
-            F.explode(g).alias("gram"),
-        ).withColumn("bucket", h7(F.col("gram")) % n_buckets)
-
-    is_tgt = F.col("source").isin(*target_sources)
-    tgt_grams = grams_of(docs.filter(is_tgt))
-    raw = docs.filter(~is_tgt)
-    raw_grams = grams_of(raw)
-    cp = tgt_grams.groupBy("bucket").agg(F.count("*").alias("cp"))
-    cq = raw_grams.groupBy("bucket").agg(F.count("*").alias("cq"))
-    ratio = F.expr(
-        "(coalesce(cp, 0) + 1) * 1048576 div (cq + 1)"
-    )
-    score_tbl = (
-        cq.join(cp, "bucket", "left")
-        .select(
-            "bucket",
-            (F.length(F.bin(ratio)) - 1).cast("bigint").alias("s"),
-        )
-    )
-    scored = (
-        raw_grams.join(broadcast(score_tbl), "bucket")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("s").alias("sum_s"),
-            F.count("*").alias("n_grams"),
-        )
-        .select(
-            "doc_id",
-            (F.col("sum_s") - 20 * F.col("n_grams")).alias("score"),
-            "n_grams",
-        )
-    )
-    topk = scored.orderBy(F.col("score").desc(), "doc_id").limit(k)
-    # k rows broadcast back against the raw corpus for the metadata
-    # columns — the corpus-sized scored/metadata join never happens
-    return (
-        raw.select("doc_id", "lang", "source")
-        .join(broadcast(topk), "doc_id")
-        .select("doc_id", "lang", "source", "score", "n_grams")
-        .orderBy(F.col("score").desc(), "doc_id")
     )
 
 

@@ -14,7 +14,6 @@ the engine's hot paths at sf0.1 scale:
                      into z10 children (candidate-range kernel)
   q_pip_join       — J3 broadcast point-in-polygon join w/ cell prefilter
   q_knn            — J5 kNN via cell-ring expansion
-  q_minhash_dedup  — MinHash-LSH near-dup candidate pairs on documents
   q_phash_dedup    — T21 Hamming-band LSH image near-dup (pure JVM join)
   q_ann_topk       — LSH-bucketed cosine top-k over embeddings (the
                      scale path; brute force is oracle-only)
@@ -26,7 +25,6 @@ the engine's hot paths at sf0.1 scale:
   q_hex_density    — T18 hex binning + ring-1 disk smoothing (Catalyst)
   q_balanced_sample— T17 exact-k/stratum sample (WindowGroupLimit)
   q_scd2           — W18 SCD2 CDC merge (r3 family, one-window fold)
-  q_incr_dedup     — incremental MinHash dedup (batch × broadcast index)
   q_delta_sssp     — G1b delta-stepping SSSP (driver-loop-bounded)
 
 Scale notes: every query here is shuffle-bounded, not driver-bounded;
@@ -142,13 +140,6 @@ def q_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return q_phash_mi(spark, sf_dir)
 
 
-def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mapnik_vector_tile_spark.operators import dedup as D
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return D.minhash_candidate_pairs(docs)
-
-
 def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN bench headline = the SCALE path (LSH-bucketed per-bucket
     top-k: one shuffle on bucket id, per-bucket numpy matmul, no
@@ -244,17 +235,6 @@ def q_scd2_b(spark: SparkSession, sf_dir: str) -> DataFrame:
     return q_scd2(spark, sf_dir)
 
 
-def q_incr_dedup_b(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental MinHash dedup (r3 family): batch-vs-index join that
-    must never self-join the index side — the scale-shape plan test
-    pins the plan, this pins the wall-clock round over round."""
-    from mapnik_vector_tile_spark.plans.text_oracles import (
-        q_incremental_dedup,
-    )
-
-    return q_incremental_dedup(spark, sf_dir)
-
-
 def q_delta_sssp_b(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G1b delta-stepping SSSP (r3 family): the driver-loop-bounded
     iterative operator — its cost is synchronization rounds, not rows,
@@ -266,7 +246,7 @@ def q_delta_sssp_b(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out = {
+    return {
         "q_pyramid": q_pyramid,
         "q_encode_tiles": q_encode_tiles,
         "q_decode_rt": q_decode_rt,
@@ -274,61 +254,17 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_wafer": q_wafer,
         "q_encode_z10_direct": q_encode_z10_direct,
         "q_downzoom": q_downzoom,
+        "q_pip_join": q_pip_join,
+        "q_knn": q_knn,
+        "q_phash_dedup": q_phash_dedup,
+        "q_ann_topk": q_ann_topk,
+        "q_kmeans": q_kmeans_b,
+        "q_raster": q_raster,
+        "q_asof": q_asof,
+        "q_sessionize": q_sessionize_b,
+        "q_interval": q_interval,
+        "q_scd2": q_scd2_b,
+        "q_delta_sssp": q_delta_sssp_b,
+        "q_hex_density": q_hex_density_b,
+        "q_balanced_sample": q_balanced_sample_b,
     }
-    # operators added over the build rounds — gate so bench never breaks
-    try:
-        from mapnik_vector_tile_spark.operators import joins  # noqa: F401
-
-        out["q_pip_join"] = q_pip_join
-        out["q_knn"] = q_knn
-    except ImportError:
-        pass
-    try:
-        from mapnik_vector_tile_spark.operators import dedup  # noqa: F401
-
-        out["q_minhash_dedup"] = q_minhash_dedup
-        out["q_phash_dedup"] = q_phash_dedup
-    except ImportError:
-        pass
-    try:
-        from mapnik_vector_tile_spark.operators import similarity  # noqa: F401
-
-        out["q_ann_topk"] = q_ann_topk
-        out["q_kmeans"] = q_kmeans_b
-    except ImportError:
-        pass
-    try:
-        from mapnik_vector_tile_spark.operators import raster  # noqa: F401
-
-        out["q_raster"] = q_raster
-    except ImportError:
-        pass
-    try:
-        from mapnik_vector_tile_spark.operators import temporal  # noqa: F401
-
-        out["q_asof"] = q_asof
-        out["q_sessionize"] = q_sessionize_b
-        out["q_interval"] = q_interval
-        out["q_scd2"] = q_scd2_b
-    except ImportError:
-        pass
-    try:
-        from mapnik_vector_tile_spark.operators import dedup  # noqa: F401
-
-        out["q_incr_dedup"] = q_incr_dedup_b
-    except ImportError:
-        pass
-    try:
-        from mapnik_vector_tile_spark.operators import graph  # noqa: F401
-
-        out["q_delta_sssp"] = q_delta_sssp_b
-    except ImportError:
-        pass
-    out["q_hex_density"] = q_hex_density_b  # pure Catalyst, no extra deps
-    try:
-        from mapnik_vector_tile_spark.operators import sampling  # noqa: F401
-
-        out["q_balanced_sample"] = q_balanced_sample_b
-    except ImportError:
-        pass
-    return out

@@ -2307,8 +2307,7 @@ FROM agg a JOIN caps ON a.i = caps.i
 """
 
 def q_image_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T12f the IMAGE-side curation pipeline COMPOSED end-to-end (the
-    visual twin of q_corpus_filter's text pipeline): blur gate
+    """T12f the IMAGE-side curation pipeline COMPOSED end-to-end: blur gate
     (laplacian_stats, thr=23000) → perceptual exact-dedup
     (image_dhash first-occurrence keep among the sharp survivors — the
     synthetic corpus has 7 colliding dhash values, so the dup branch

@@ -2805,11 +2805,7 @@ def _make_spark_fn(template: str) -> Callable[[SparkSession, str], DataFrame]:
 
 _RECORD_FIRST = (
     # new r5 keys: record first
-    "q_substring_dedup",
-    "q_strip_dup_spans",
-    "q_dsir_resample",
     "q_proto_prune",
-    "q_ccnet_buckets",
     # Round-5 rotation: the 69 keys never yet in a driver
     # CORRECTNESS_r0{1..4} file (all pass the local 268-key sweep).
     # The driver samples ~50 keys per round in dict order, so
@@ -2823,8 +2819,6 @@ _RECORD_FIRST = (
     "q_engine_downzoom",
     "q_engine_downzoom_band",
     "q_kmeans",
-    "q_pii_redact",
-    "q_chunk_dedup",
     "q_pmtiles_roundtrip",
     "q_tilejson",
     "q_line_interpolate",
@@ -2848,30 +2842,15 @@ _RECORD_FIRST = (
     "q_cell_compact",
     "q_radius_join",
     "q_geom_measures",
-    "q_cluster_canonical",
     "q_mbtiles_roundtrip",
     "q_engine_wafer",
     "q_global_quantiles",
-    "q_corpus_filter_rep",
     "q_raster_png",
     "q_raster_webp",
-    "q_bloom_decontaminate",
     "q_token_quantiles",
-    "q_repetition",
-    "q_dup_ngram_spans",
     "q_engine_clip_repair",
     "q_raster_jpeg",
     "q_distinct_kmv",
-    "q_topk_tokens",
-    "q_dedup_clusters",
-    "q_simhash",
-    "q_simhash_pairs",
-    "q_ngram_jaccard",
-    "q_quality_stats",
-    "q_corpus_filter",
-    "q_token_counts",
-    "q_langid",
-    "q_fingerprints",
     "q_ann_topk",
     "q_ann_lsh_bucketed",
     "q_ann_ivf",
@@ -2881,9 +2860,7 @@ _RECORD_FIRST = (
     "q_stratified_sample",
     "q_balanced_sample",
     "q_seq_packing",
-    "q_decontaminate",
     "q_geohash",
-    "q_bm25",
 )
 
 def sql_pairs() -> tuple[

@@ -1,12 +1,13 @@
-"""DuckDB oracle SQL for the training-data operators (dedup,
-similarity, text analysis) + the Spark query callables they gate.
+"""DuckDB oracle SQL for the embedding, corpus-sampling and sketch
+operators + the Spark query callables they gate.
 
-The Spark side is the DataFrame implementation in operators/{dedup,
-similarity,textstats}; the oracle is independent ANSI SQL over the
-same parquet views. Parity holds because both sides are built on the
-cross-engine-exact primitives pinned in operators.dedup:
-md5-prefix integer hashes, int/int -> double division, identical
-lambda semantics, and ROUND(…, 9) at every float comparison boundary.
+The Spark side is the DataFrame implementation in operators/{similarity,
+sampling,sketch} and the batch twin of streaming/dedup; the oracle is
+independent ANSI SQL over the same parquet views (`embeddings`,
+`documents`, `events`). Parity holds because both sides share exact
+primitives: splitmix64 row hashes (sampling), md5-prefix integer hashes
+(sketch), integer-grid quantization (k-means, PQ, SemDeDup), and
+ROUND(…, 9) at every float comparison boundary (cosine top-k).
 """
 
 from __future__ import annotations
@@ -15,393 +16,6 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from mapnik_vector_tile_spark.operators.dedup import (
-    H_PRIME,
-    N_BANDS,
-    N_HASHES,
-    SIM_BITS,
-)
-from mapnik_vector_tile_spark.operators.textstats import LANG_PROFILES
-
-H7_D = "CAST('0x' || substring(md5({x}), 1, 7) AS BIGINT)"
-H14_D = "CAST('0x' || substring(md5({x}), 1, 14) AS BIGINT)"
-
-SHINGLE_CTE = """
-sh AS (
-  SELECT doc_id,
-         unnest(list_transform(
-           generate_series(1, greatest(len(words) - {nm1}, 0)),
-           i -> array_to_string(words[i:i + {nm1}], ' '))) AS shingle
-  FROM (SELECT doc_id, string_split(text, ' ') AS words FROM {src})
-)"""
-
-
-def _shingle_cte(src: str = "documents", n: int = 3) -> str:
-    return SHINGLE_CTE.format(src=src, nm1=n - 1)
-
-
-SELF_UNION = """
-docs2 AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, text FROM documents
-)"""
-
-
-def sql_exact_dedup() -> str:
-    h = H7_D.format(x="text")
-    return f"""
-WITH {SELF_UNION}
-SELECT keeper, n_copies, {h} AS text_hash
-FROM (
-  SELECT text, MIN(doc_id) AS keeper, COUNT(*) AS n_copies
-  FROM docs2 GROUP BY text
-) g
-WHERE n_copies > 1
-"""
-
-
-def _minhash_aggs() -> str:
-    terms = []
-    for j in range(N_HASHES):
-        terms.append(
-            f"MIN((hv * {2 * j + 1} + {j * 7919 + 1}) % {H_PRIME}) AS mh{j}"
-        )
-    return ",\n       ".join(terms)
-
-
-def sql_minhash_signatures() -> str:
-    h = H7_D.format(x="shingle")
-    return f"""
-WITH {_shingle_cte('documents')},
-h AS (SELECT doc_id, {h} AS hv FROM sh)
-SELECT doc_id, {_minhash_aggs()}
-FROM h GROUP BY doc_id
-"""
-
-
-def _lsh_pair_ctes() -> str:
-    """CTE chain ending in `lsh_pairs` (the distinct doc_a<doc_b
-    candidate pairs over docs2) — shared by the pair query and the
-    clustering oracle."""
-    h = H7_D.format(x="shingle")
-    r = N_HASHES // N_BANDS
-    band_selects = []
-    for b in range(N_BANDS):
-        sig = " || '_' || ".join(
-            f"CAST(mh{b * r + i} AS VARCHAR)" for i in range(r)
-        )
-        band_selects.append(
-            f"SELECT doc_id, {b} AS band, {sig} AS sig FROM mh"
-        )
-    bands = "\nUNION ALL\n".join(band_selects)
-    return f"""{SELF_UNION},
-{_shingle_cte('docs2')},
-h AS (SELECT doc_id, {h} AS hv FROM sh),
-mh AS (SELECT doc_id, {_minhash_aggs()} FROM h GROUP BY doc_id),
-bands AS ({bands}),
-lsh_pairs AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-)"""
-
-
-def sql_minhash_lsh_pairs() -> str:
-    return f"""
-WITH {_lsh_pair_ctes()}
-SELECT doc_a, doc_b FROM lsh_pairs
-"""
-
-
-def q_edit_refine(spark, sf_dir):
-    """T4b exact Levenshtein verification of the LSH candidates
-    (dedup.edit_refine — the refine stage after banding) with a FULL
-    oracle: both engines compute the SAME built-in edit distance
-    (byte == char on the committed ASCII corpus — pinned by the
-    corpus check in tests) over the SAME candidate CTE chain, and the
-    keep gate is integer cross-multiplication, so every pair's
-    distance, max length, and verdict hash bit-exactly. Self-copies
-    make keep=TRUE rows load-bearing (d=0); random band collisions
-    carry the FALSE branch."""
-    from mapnik_vector_tile_spark.operators import dedup as D
-
-    return D.edit_refine(D.with_self_copies(_docs(spark, sf_dir)))
-
-
-def sql_edit_refine(max_num: int = 1, max_den: int = 5) -> str:
-    return f"""
-WITH {_lsh_pair_ctes()}
-SELECT p.doc_a, p.doc_b,
-       CAST(levenshtein(ta.text, tb.text) AS INT) AS edit_dist,
-       CAST(GREATEST(length(ta.text), length(tb.text)) AS INT) AS max_len,
-       (levenshtein(ta.text, tb.text) * {max_den}
-          <= {max_num} * GREATEST(length(ta.text), length(tb.text)))
-         AS keep
-FROM lsh_pairs p
-JOIN docs2 ta ON ta.doc_id = p.doc_a
-JOIN docs2 tb ON tb.doc_id = p.doc_b
-"""
-
-
-def q_wordpiece(spark, sf_dir):
-    """T10b WordPiece subword tokenization (textstats.wordpiece_tokens
-    — greedy longest-match-first against the committed WP_VOCAB,
-    unrolled as pure Catalyst expressions) with a FULL oracle: the
-    DuckDB twin renders the SAME per-step spec (wp_step_exprs, one
-    builder for both dialects — the geohash one-spec pattern) as a CTE
-    chain, so any drift in the match order, the remaining-chars gates,
-    the unk fallback, or the cursor arithmetic breaks the hash."""
-    from mapnik_vector_tile_spark.operators.textstats import (
-        wordpiece_tokens,
-    )
-
-    return wordpiece_tokens(_docs(spark, sf_dir))
-
-
-def sql_wordpiece() -> str:
-    from mapnik_vector_tile_spark.operators.textstats import (
-        WP_MAX_WORD,
-        _wp_vocab_literal,
-        wp_step_exprs,
-    )
-
-    ctes = [
-        "w0 AS (SELECT doc_id, w, "
-        f"{_wp_vocab_literal('duckdb')} AS voc "
-        "FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w "
-        "FROM documents) WHERE w != '')"
-    ]
-    cur = "1"
-    for s in range(WP_MAX_WORD):
-        e = wp_step_exprs("duckdb", "voc", "w", cur)
-        prev = "w0" if s == 0 else f"s{s - 1}"
-        ctes.append(
-            f"s{s} AS (SELECT *, {e['len']} AS l{s}, {e['tok']} AS t{s}, "
-            f"({cur}) + ({e['len']}) AS c{s} FROM {prev})"
-        )
-        cur = f"c{s}"
-    n_sub = " + ".join(
-        f"(CASE WHEN l{s} > 0 THEN 1 ELSE 0 END)" for s in range(WP_MAX_WORD)
-    )
-    tok_sum = " + ".join(f"t{s}" for s in range(WP_MAX_WORD))
-    return f"""
-WITH {", ".join(ctes)},
-per_word AS (
-  SELECT doc_id, {n_sub} AS n_sub, {tok_sum} AS tok_sum,
-         CASE WHEN length(w) > {WP_MAX_WORD} THEN 1 ELSE 0 END AS overlong
-  FROM s{WP_MAX_WORD - 1}
-)
-SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
-       CAST(SUM(n_sub) AS BIGINT) AS n_subwords,
-       CAST(SUM(tok_sum) AS BIGINT) AS tok_id_sum,
-       CAST(SUM(overlong) AS BIGINT) AS n_overlong
-FROM per_word GROUP BY doc_id
-"""
-
-
-def sql_dedup_clusters() -> str:
-    """Clustering oracle: transitive closure of the LSH pair graph via
-    a recursive CTE (node reaches r if a neighbor reaches r; UNION
-    dedup terminates the fixpoint), then min reachable id per node =
-    cluster_rep — the exact semantics of the engine's min-label
-    propagation, computed by a completely different algorithm."""
-    return f"""
-WITH RECURSIVE {_lsh_pair_ctes()},
-edges AS (
-  SELECT doc_a AS s, doc_b AS d FROM lsh_pairs
-  UNION ALL
-  SELECT doc_b AS s, doc_a AS d FROM lsh_pairs
-),
-reach(node, r) AS (
-  SELECT DISTINCT s AS node, s AS r FROM edges
-  UNION
-  SELECT e.s AS node, reach.r
-  FROM edges e JOIN reach ON reach.node = e.d
-),
-labels AS (
-  SELECT node AS doc_id, MIN(r) AS cluster_rep FROM reach GROUP BY node
-),
-sizes AS (
-  SELECT cluster_rep, COUNT(*) AS cluster_size FROM labels GROUP BY 1
-)
-SELECT l.doc_id, l.cluster_rep, s.cluster_size
-FROM labels l JOIN sizes s USING (cluster_rep)
-"""
-
-
-def q_cluster_canonical(spark, sf_dir):
-    from mapnik_vector_tile_spark.operators import dedup as D
-
-    return D.cluster_canonical(_docs(spark, sf_dir))
-
-
-def sql_cluster_canonical() -> str:
-    """Keep-one-per-cluster twin: the clustering CTE chain (transitive
-    closure, as sql_dedup_clusters) joined to the distinct-token
-    quality proxy over docs2, argmax by (nd DESC, doc_id ASC) via a
-    window — a deliberately DIFFERENT argmax mechanism than the
-    engine's struct-max aggregate."""
-    return f"""
-WITH RECURSIVE {_lsh_pair_ctes()},
-edges AS (
-  SELECT doc_a AS s, doc_b AS d FROM lsh_pairs
-  UNION ALL
-  SELECT doc_b AS s, doc_a AS d FROM lsh_pairs
-),
-reach(node, r) AS (
-  SELECT DISTINCT s AS node, s AS r FROM edges
-  UNION
-  SELECT e.s AS node, reach.r
-  FROM edges e JOIN reach ON reach.node = e.d
-),
-labels AS (
-  SELECT node AS doc_id, MIN(r) AS cluster_rep FROM reach GROUP BY node
-),
-sizes AS (
-  SELECT cluster_rep, COUNT(*) AS cluster_size FROM labels GROUP BY 1
-),
-q AS (
-  SELECT doc_id,
-         CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS nd
-  FROM docs2
-),
-ranked AS (
-  SELECT l.cluster_rep, s.cluster_size, l.doc_id, q.nd,
-         row_number() OVER (
-           PARTITION BY l.cluster_rep ORDER BY q.nd DESC, l.doc_id ASC
-         ) AS rn
-  FROM labels l JOIN sizes s USING (cluster_rep) JOIN q USING (doc_id)
-)
-SELECT cluster_rep, CAST(cluster_size AS BIGINT) AS cluster_size,
-       doc_id AS kept_doc_id, nd AS kept_n_distinct
-FROM ranked WHERE rn = 1
-"""
-
-
-def sql_simhash() -> str:
-    h = H14_D.format(x="word")
-    sums = ",\n       ".join(
-        f"SUM(((hv >> {b}) & 1) * 2 - 1) AS s{b}" for b in range(SIM_BITS)
-    )
-    sim = " + ".join(
-        f"CASE WHEN s{b} > 0 THEN CAST({1 << b} AS BIGINT) ELSE 0 END"
-        for b in range(SIM_BITS)
-    )
-    return f"""
-WITH w AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents
-),
-h AS (SELECT doc_id, {h} AS hv FROM w),
-s AS (SELECT doc_id, {sums} FROM h GROUP BY doc_id)
-SELECT doc_id, {sim} AS simhash FROM s
-"""
-
-
-def sql_simhash_pairs(max_hamming: int = 3) -> str:
-    cw = SIM_BITS // 4
-    chunk_selects = "\nUNION ALL\n".join(
-        f"SELECT doc_id, simhash, {c} AS chunk, "
-        f"(simhash >> {c * cw}) & {(1 << cw) - 1} AS cval FROM sims"
-        for c in range(4)
-    )
-    base = sql_simhash().replace("documents", "docs2")
-    return f"""
-WITH {SELF_UNION},
-sims AS ({base}),
-chunks AS ({chunk_selects})
-SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-FROM chunks a JOIN chunks b
-  ON a.chunk = b.chunk AND a.cval = b.cval AND a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
-"""
-
-
-def sql_ngram_jaccard_pairs(threshold: float = 0.15) -> str:
-    return f"""
-WITH {_shingle_cte('documents')},
-d AS (SELECT DISTINCT doc_id, shingle FROM sh),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM d GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-  FROM d a JOIN d b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b, n_inter
-FROM inter
-JOIN sizes sa ON sa.doc_id = doc_a
-JOIN sizes sb ON sb.doc_id = doc_b
-WHERE n_inter / (sa.n_sh + sb.n_sh - n_inter) >= {threshold}
-"""
-
-
-def _stop_count(vocab: tuple[str, ...], words: str = "words") -> str:
-    arr = "[" + ", ".join(f"'{v}'" for v in vocab) + "]"
-    return f"len(list_filter({words}, w -> list_contains({arr}, w)))"
-
-
-def sql_quality_stats() -> str:
-    stop = _stop_count(LANG_PROFILES["en"])
-    return f"""
-SELECT doc_id,
-       length(text) AS len_chars,
-       len(words) AS n_tokens,
-       len(list_distinct(words)) AS n_distinct,
-       length(regexp_replace(text, '[^a-z]', '', 'g')) / length(text)
-         AS alpha_ratio,
-       {stop} / len(words) AS stopword_ratio,
-       length(replace(text, ' ', '')) / len(words) AS avg_word_len
-FROM (SELECT doc_id, text, string_split(text, ' ') AS words FROM documents)
-"""
-
-
-def sql_token_counts() -> str:
-    return """
-SELECT doc_id,
-       CAST(len(words) AS BIGINT) AS n_tokens,
-       CAST(list_aggregate(
-         list_transform(words,
-           t -> CAST(floor((length(t) + 3) / 4) AS BIGINT)), 'sum')
-         AS BIGINT) AS n_subtokens
-FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)
-"""
-
-
-def sql_langid() -> str:
-    langs = list(LANG_PROFILES)
-    score_cols = ",\n       ".join(
-        f"{_stop_count(LANG_PROFILES[lang])} AS score_{lang}"
-        for lang in langs
-    )
-    # argmax with first-profile-wins tiebreak, exactly as textstats.langid
-    pred = f"'{langs[0]}'"
-    best = f"score_{langs[0]}"
-    for lang in langs[1:]:
-        pred = f"CASE WHEN score_{lang} > {best} THEN '{lang}' ELSE {pred} END"
-        best = (
-            f"CASE WHEN score_{lang} > {best} THEN score_{lang} ELSE {best} END"
-        )
-    sel = ", ".join(f"CAST(score_{lang} AS BIGINT) AS score_{lang}" for lang in langs)
-    return f"""
-WITH s AS (
-  SELECT doc_id,
-       {score_cols}
-  FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)
-)
-SELECT doc_id, {pred} AS pred_lang, {sel} FROM s
-"""
-
-
-def sql_fingerprints(n: int = 4) -> str:
-    h = H7_D.format(x="shingle")
-    return f"""
-WITH {_shingle_cte('documents', n)}
-SELECT doc_id, MIN({h}) AS fp_min,
-       COUNT(DISTINCT {h}) AS fp_card
-FROM sh GROUP BY doc_id
-"""
-
 
 _COS9_D = (
     "ROUND(list_dot_product(a.v, b.v) / "
@@ -654,87 +268,6 @@ SELECT vec_id, nbr, rnk FROM (
 """
 
 
-def sql_corpus_filter() -> str:
-    """Oracle for the composed corpus filter: keeper semi-join +
-    quality/langid subqueries + the same gate constants."""
-    from mapnik_vector_tile_spark.operators.corpus import (
-        MIN_ALPHA,
-        MIN_TOKENS,
-        TOKEN_BAND,
-    )
-    from mapnik_vector_tile_spark.plans.shared_sql import flit
-
-    return f"""
-WITH {SELF_UNION},
-keepers AS (SELECT MIN(doc_id) AS doc_id FROM docs2 GROUP BY text),
-q AS ({sql_quality_stats()}),
-l AS ({sql_langid()})
-SELECT l.pred_lang,
-       CAST(floor(q.n_tokens / {TOKEN_BAND}) AS BIGINT) AS tok_band,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(q.n_tokens) AS BIGINT) AS sum_tokens,
-       CAST(SUM(q.len_chars) AS BIGINT) AS sum_chars
-FROM q
-JOIN l USING (doc_id)
-JOIN keepers USING (doc_id)
-WHERE q.n_tokens >= {MIN_TOKENS} AND q.alpha_ratio >= {flit(MIN_ALPHA)}
-GROUP BY 1, 2
-"""
-
-
-def sql_corpus_filter_rep(max_dup2: float = 0.2) -> str:
-    """Oracle for the repetition-gated corpus filter over documents ∪
-    self-concatenated copies of every 4th doc ('text text' — dup2_frac
-    ≈ 0.5, so the gate actually cuts them while base docs survive)."""
-    from mapnik_vector_tile_spark.operators.corpus import (
-        MIN_ALPHA,
-        MIN_TOKENS,
-        TOKEN_BAND,
-    )
-    from mapnik_vector_tile_spark.plans.shared_sql import flit
-
-    q_sub = sql_quality_stats().replace("FROM documents", "FROM docs3")
-    l_sub = sql_langid().replace("FROM documents", "FROM docs3")
-    return f"""
-WITH docs3 AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 2000000 AS doc_id, text || ' ' || text AS text
-  FROM documents WHERE doc_id % 4 = 0
-),
-docs2 AS (
-  SELECT doc_id, text FROM docs3
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, text FROM docs3
-),
-keepers AS (SELECT MIN(doc_id) AS doc_id FROM docs2 GROUP BY text),
-q AS ({q_sub}),
-l AS ({l_sub}),
-w2 AS (SELECT doc_id, string_split(text, ' ') AS words FROM docs3),
-g2 AS (
-  SELECT doc_id,
-         unnest(list_transform(
-           generate_series(1, greatest(len(words) - 1, 0)),
-           i -> array_to_string(words[i:i + 1], ' '))) AS gram
-  FROM w2),
-d2 AS (SELECT doc_id, COUNT(*) AS total,
-              COUNT(DISTINCT gram) AS nd
-       FROM g2 GROUP BY 1)
-SELECT l.pred_lang,
-       CAST(floor(q.n_tokens / {TOKEN_BAND}) AS BIGINT) AS tok_band,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(q.n_tokens) AS BIGINT) AS sum_tokens,
-       CAST(SUM(q.len_chars) AS BIGINT) AS sum_chars
-FROM q
-JOIN l USING (doc_id)
-JOIN keepers USING (doc_id)
-JOIN d2 USING (doc_id)
-WHERE q.n_tokens >= {MIN_TOKENS} AND q.alpha_ratio >= {flit(MIN_ALPHA)}
-  AND 1.0 - d2.nd / d2.total <= {flit(max_dup2)}
-GROUP BY 1, 2
-"""
-
-
 def sql_embedding_neardup(threshold: float = 0.999) -> str:
     return f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
@@ -753,157 +286,6 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-
-
-def q_exact_dedup(spark, sf_dir):
-    from mapnik_vector_tile_spark.operators import dedup as D
-
-    return D.exact_dup_groups(D.with_self_copies(_docs(spark, sf_dir)))
-
-
-def q_minhash_signatures(spark, sf_dir):
-    from mapnik_vector_tile_spark.operators import dedup as D
-
-    return D.minhash_signatures(_docs(spark, sf_dir))
-
-
-def q_minhash_lsh_pairs(spark, sf_dir):
-    from mapnik_vector_tile_spark.operators import dedup as D
-
-    # hot_bucket_limit=None: the oracle's SQL twin replays the EXACT
-    # clique, so the gate must not couple to "no oracle-corpus bucket
-    # ever crosses the guard limit" at a bigger sf; the star-guard
-    # path has its own adversarial pytest gates (test_dedup_text.py)
-    return D.minhash_lsh_pairs(
-        D.with_self_copies(_docs(spark, sf_dir)), hot_bucket_limit=None
-    )
-
-
-def q_dedup_clusters(spark, sf_dir):
-    from mapnik_vector_tile_spark.operators import dedup as D
-
-    return D.dedup_clusters(_docs(spark, sf_dir))
-
-
-def q_simhash(spark, sf_dir):
-    from mapnik_vector_tile_spark.operators import dedup as D
-
-    return D.simhash(_docs(spark, sf_dir))
-
-
-def q_simhash_pairs(spark, sf_dir):
-    from mapnik_vector_tile_spark.operators import dedup as D
-
-    return D.simhash_pairs(D.with_self_copies(_docs(spark, sf_dir)))
-
-
-def q_ngram_jaccard(spark, sf_dir):
-    from mapnik_vector_tile_spark.operators import dedup as D
-
-    return D.ngram_jaccard_pairs(_docs(spark, sf_dir))
-
-
-def q_corpus_filter(spark, sf_dir):
-    from mapnik_vector_tile_spark.operators.corpus import corpus_filter_stats
-
-    return corpus_filter_stats(_docs(spark, sf_dir))
-
-
-def q_quality_stats(spark, sf_dir):
-    from mapnik_vector_tile_spark.operators import textstats as T
-
-    return T.quality_stats(_docs(spark, sf_dir))
-
-
-def q_token_counts(spark, sf_dir):
-    from mapnik_vector_tile_spark.operators import textstats as T
-
-    return T.token_counts(_docs(spark, sf_dir))
-
-
-def q_topk_tokens(spark, sf_dir):
-    from mapnik_vector_tile_spark.operators import textstats as T
-
-    return T.topk_tokens(_docs(spark, sf_dir), k=100)
-
-
-def sql_topk_tokens(k: int = 100) -> str:
-    return f"""
-WITH w AS (
-  SELECT unnest(string_split(text, ' ')) AS token FROM documents),
-c AS (SELECT token, COUNT(*) AS n FROM w GROUP BY 1)
-SELECT CAST(row_number() OVER (ORDER BY n DESC, token ASC) AS BIGINT) AS rnk,
-       token,
-       CAST(n AS BIGINT) AS n
-FROM c ORDER BY n DESC, token ASC LIMIT {k}
-"""
-
-
-BM25_TERMS = ("spark", "merge", "window")
-
-
-def q_bm25(spark, sf_dir):
-    from mapnik_vector_tile_spark.operators import textstats as T
-
-    return T.bm25_topk(_docs(spark, sf_dir), terms=BM25_TERMS, k=100)
-
-
-def sql_bm25(k: int = 100) -> str:
-    """DuckDB twin of textstats.bm25_topk — the SAME constants (via
-    flit so literals parse as DOUBLE in both engines), the SAME
-    operation order (score = 0.0 + c_t1 + c_t2 + ..., left-assoc), the
-    SAME ln(); see bm25_topk's docstring for why ln is bit-safe here."""
-    from mapnik_vector_tile_spark.operators.textstats import BM25_B, BM25_K1
-    from mapnik_vector_tile_spark.plans.shared_sql import flit
-
-    k1, b = BM25_K1, BM25_B
-    tf_sel = ",\n       ".join(
-        f"CAST(len(list_filter(words, w -> w = '{t}')) AS BIGINT) AS tf_{t}"
-        for t in BM25_TERMS
-    )
-    df_sel = ",\n       ".join(
-        f"CAST(SUM(CASE WHEN tf_{t} > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_{t}"
-        for t in BM25_TERMS
-    )
-    avgdl = "(CAST(sum_dl AS DOUBLE) / CAST(n_docs AS DOUBLE))"
-    norm = f"{flit(k1)} * ({flit(1.0 - b)} + {flit(b)} * (dl / {avgdl}))"
-    score = flit(0.0)
-    for t in BM25_TERMS:
-        idf = (
-            f"ln({flit(1.0)} + ((n_docs - df_{t}) + {flit(0.5)})"
-            f" / (df_{t} + {flit(0.5)}))"
-        )
-        score += (
-            f" + {idf} * (tf_{t} * {flit(k1 + 1.0)}) / (tf_{t} + {norm})"
-        )
-    tf_names = ", ".join(f"tf_{t}" for t in BM25_TERMS)
-    return f"""
-WITH d AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
-t AS (SELECT doc_id, CAST(len(words) AS BIGINT) AS dl,
-       {tf_sel}
-      FROM d),
-g AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(dl) AS BIGINT) AS sum_dl,
-       {df_sel}
-      FROM t),
-s AS (SELECT doc_id, dl, {tf_names}, {score} AS score FROM t, g)
-SELECT CAST(row_number() OVER (ORDER BY score DESC, doc_id ASC) AS BIGINT)
-         AS rnk,
-       doc_id, dl, {tf_names}, score
-FROM s ORDER BY score DESC, doc_id ASC LIMIT {k}
-"""
-
-
-def q_langid(spark, sf_dir):
-    from mapnik_vector_tile_spark.operators import textstats as T
-
-    return T.langid(_docs(spark, sf_dir))
-
-
-def q_fingerprints(spark, sf_dir):
-    from mapnik_vector_tile_spark.operators import textstats as T
-
-    return T.fingerprints(_docs(spark, sf_dir))
 
 
 def q_ann_topk(spark, sf_dir):
@@ -1052,31 +434,6 @@ WHERE rnk <= {k}
 """
 
 
-def sql_seq_packing() -> str:
-    from mapnik_vector_tile_spark.operators.sampling import (
-        N_PACK_SHARDS,
-        PACK_BUDGET,
-    )
-
-    return f"""
-WITH {_hord_cte()},
-sh AS (SELECT doc_id, lang, n_chars, hord % {N_PACK_SHARDS} AS shard FROM h),
-b AS (
-  SELECT lang, shard, doc_id, n_chars,
-         CAST(COALESCE(SUM(n_chars) OVER (
-             PARTITION BY lang, shard ORDER BY doc_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-           ), 0) // {int(PACK_BUDGET)} AS BIGINT) AS bin
-  FROM sh)
-SELECT lang, shard, bin,
-       COUNT(*) AS n_docs,
-       CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-       MIN(doc_id) AS min_id
-FROM b
-GROUP BY 1, 2, 3
-"""
-
-
 def q_train_split(spark, sf_dir):
     from mapnik_vector_tile_spark.operators import sampling as SMP
 
@@ -1110,6 +467,45 @@ def q_balanced_sample(spark, sf_dir):
 
     return SMP.balanced_topk(_docs(spark, sf_dir), k=20).select(
         "lang", F.col("rnk").cast("bigint").alias("rnk"), "doc_id"
+    )
+
+
+def sql_seq_packing() -> str:
+    from mapnik_vector_tile_spark.operators.sampling import (
+        N_PACK_SHARDS,
+        PACK_BUDGET,
+    )
+
+    return f"""
+WITH {_hord_cte()},
+sh AS (SELECT doc_id, lang, n_chars, hord % {N_PACK_SHARDS} AS shard FROM h),
+b AS (
+  SELECT lang, shard, doc_id, n_chars,
+         CAST(COALESCE(SUM(n_chars) OVER (
+             PARTITION BY lang, shard ORDER BY doc_id
+             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+           ), 0) // {int(PACK_BUDGET)} AS BIGINT) AS bin
+  FROM sh)
+SELECT lang, shard, bin,
+       COUNT(*) AS n_docs,
+       CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
+       MIN(doc_id) AS min_id
+FROM b
+GROUP BY 1, 2, 3
+"""
+
+
+def q_seq_packing(spark, sf_dir):
+    from mapnik_vector_tile_spark.operators import sampling as SMP
+
+    return (
+        SMP.pack_contiguous(_docs(spark, sf_dir))
+        .groupBy("lang", "shard", "bin")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.sum("n_chars").cast("bigint").alias("sum_chars"),
+            F.min("doc_id").alias("min_id"),
+        )
     )
 
 
@@ -1165,105 +561,6 @@ def q_temperature_resample(spark, sf_dir):
             F.sum("n_chars").cast("bigint").alias("sum_chars"),
         )
     )
-
-
-def sql_boilerplate(min_docs: int = 10) -> str:
-    """Twin of textstats.remove_boilerplate over the planted corpus
-    (see q_boilerplate): literal line split, distinct-doc frequency
-    gate, anti-join, order-preserving string_agg rebuild."""
-    return f"""
-WITH docs3 AS (
-  SELECT doc_id,
-         text || CASE CAST(doc_id % 4 AS INT)
-           WHEN 0 THEN chr(10) || 'SUBSCRIBE TO OUR NEWSLETTER'
-           WHEN 1 THEN chr(10) || 'COPYRIGHT 2026 EXAMPLE CORP'
-           WHEN 2 THEN chr(10) || 'UNIQUE-' || CAST(doc_id AS VARCHAR)
-           ELSE '' END AS text
-  FROM documents
-  UNION ALL
-  SELECT doc_id + 3000000 AS doc_id,
-         'SUBSCRIBE TO OUR NEWSLETTER' AS text
-  FROM documents WHERE doc_id % 10 = 0
-),
-l AS (
-  SELECT doc_id, u.i AS pos, ls[u.i] AS line
-  FROM (SELECT doc_id, string_split(text, chr(10)) AS ls FROM docs3),
-       LATERAL (SELECT unnest(generate_series(1, len(ls))) AS i) u
-),
-bp AS (SELECT line FROM l GROUP BY 1
-       HAVING COUNT(DISTINCT doc_id) >= {min_docs}),
-k AS (SELECT l.* FROM l ANTI JOIN bp USING (line)),
-tot AS (SELECT doc_id,
-               len(string_split(text, chr(10))) AS n_total
-        FROM docs3)
-SELECT k.doc_id AS doc_id,
-       string_agg(k.line, chr(10) ORDER BY k.pos) AS clean_text,
-       CAST(COUNT(*) AS BIGINT) AS n_kept,
-       CAST(ANY_VALUE(t.n_total) - COUNT(*) AS BIGINT) AS n_removed
-FROM k JOIN tot t ON k.doc_id = t.doc_id
-GROUP BY 1
-"""
-
-
-def q_boilerplate(spark, sf_dir):
-    """T32 CCNet-style boilerplate removal over a planted corpus:
-    two footer lines shared by ~125 docs each (removed everywhere), a
-    per-doc UNIQUE line (must survive), bare docs (untouched), and
-    pure-boilerplate docs (doc_id+3M copies of one footer — must
-    VANISH). The clean_text hash gates the order-preserving rebuild."""
-    from mapnik_vector_tile_spark.operators import textstats as T
-
-    docs = _docs(spark, sf_dir)
-    nl = "\n"
-    footer = (
-        F.when(F.col("doc_id") % 4 == 0,
-               F.lit(nl + "SUBSCRIBE TO OUR NEWSLETTER"))
-        .when(F.col("doc_id") % 4 == 1,
-              F.lit(nl + "COPYRIGHT 2026 EXAMPLE CORP"))
-        .when(F.col("doc_id") % 4 == 2,
-              F.concat(F.lit(nl + "UNIQUE-"),
-                       F.col("doc_id").cast("string")))
-        .otherwise(F.lit(""))
-    )
-    planted = docs.select(
-        "doc_id", F.concat(F.col("text"), footer).alias("text")
-    )
-    pure = docs.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 3_000_000).alias("doc_id"),
-        F.lit("SUBSCRIBE TO OUR NEWSLETTER").alias("text"),
-    )
-    return T.remove_boilerplate(
-        planted.unionByName(pure), min_docs=10, sep=nl
-    )
-
-
-def sql_chunk_sliding(chunk: int = 24, overlap: int = 8) -> str:
-    stride = chunk - overlap
-    return f"""
-WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-d AS (SELECT doc_id, ws, len(ws) AS n,
-             GREATEST(1, CAST(ceil((len(ws) - {overlap}) / {stride}.0)
-                              AS INT)) AS nc
-      FROM w),
-c AS (SELECT doc_id, ws, n, unnest(generate_series(0, nc - 1)) AS i
-      FROM d)
-SELECT doc_id,
-       CAST(i AS BIGINT) AS chunk_idx,
-       array_to_string(ws[i * {stride} + 1 : i * {stride} + {chunk}], ' ')
-         AS chunk_text,
-       CAST(LEAST({chunk}, n - i * {stride}) AS BIGINT) AS n_words
-FROM c
-"""
-
-
-def q_chunk_sliding(spark, sf_dir):
-    """T33 sliding-window RAG chunking (corpus.chunk_sliding — 24-word
-    windows, 8-word overlap; stride 16 is a power of two so the ceil
-    division is float-exact in both engines). Hashes every chunk's
-    exact text, index and word count."""
-    from mapnik_vector_tile_spark.operators import corpus as CO
-
-    return CO.chunk_sliding(_docs(spark, sf_dir), chunk_words=24, overlap=8)
 
 
 def sql_unimax() -> str:
@@ -1336,162 +633,6 @@ def q_unimax_resample(spark, sf_dir):
     )
 
 
-def sql_bigram_lm() -> str:
-    """Twin of textstats.bigram_lm_score. The fold replays Spark's
-    F.aggregate(init=0.0, +) exactly: list_prepend(0.0) then
-    list_reduce(+) over terms in ascending-c1f order — identical IEEE
-    association order, and every element is one correctly-rounded
-    division of exact integers, so the doubles hash bit-for-bit."""
-    return """
-WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents
-           WHERE len(string_split(text, ' ')) >= 2),
-bi0 AS (SELECT doc_id,
-               unnest(list_transform(generate_series(1, len(w) - 1),
-                                     i -> w[i] || ' ' || w[i + 1])) AS gram
-        FROM t),
-bi AS (SELECT doc_id, gram, string_split(gram, ' ')[1] AS prefix FROM bi0),
-c2 AS (SELECT gram, COUNT(*) AS c2 FROM bi GROUP BY 1),
-c1 AS (SELECT prefix, COUNT(*) AS c1f FROM bi GROUP BY 1),
-inst AS (SELECT bi.doc_id, c2.c2, c1.c1f
-         FROM bi JOIN c2 USING (gram) JOIN c1 USING (prefix)),
-grp AS (SELECT doc_id, c1f,
-               CAST(SUM(c2) AS BIGINT) AS sc2,
-               COUNT(*) AS n,
-               MIN(CAST(c2 AS DOUBLE) / c1f) AS minp,
-               SUM(CASE WHEN 8 * c2 < c1f THEN 1 ELSE 0 END) AS rare
-        FROM inst GROUP BY 1, 2),
-agg AS (SELECT doc_id,
-               CAST(SUM(n) AS BIGINT) AS n_bigrams,
-               list_reduce(
-                 list_prepend(CAST(0 AS DOUBLE),
-                              list(CAST(sc2 AS DOUBLE) / c1f ORDER BY c1f)),
-                 (a, b) -> a + b) AS sum_prob,
-               MIN(minp) AS min_prob,
-               CAST(SUM(rare) AS BIGINT) AS n_rare
-        FROM grp GROUP BY 1)
-SELECT doc_id, n_bigrams, sum_prob, min_prob, n_rare,
-       sum_prob / n_bigrams AS mean_prob
-FROM agg
-"""
-
-
-def q_bigram_lm(spark, sf_dir):
-    """T31 count-based bigram LM quality scoring (CCNet-shaped signal,
-    transcendental-free so it hash-gates; see operator doc)."""
-    from mapnik_vector_tile_spark.operators import textstats as T
-
-    return T.bigram_lm_score(_docs(spark, sf_dir))
-
-
-def q_ccnet_buckets(spark, sf_dir):
-    """T48 CCNet quality buckets (textstats.ccnet_buckets — per-lang
-    sampled terciles over the bigram-LM score, head/middle/tail).
-    Full oracle: the twin reuses sql_bigram_lm verbatim, replays the
-    splitmix hash sample, the order-statistic thresholds, and the
-    same double compares."""
-    from mapnik_vector_tile_spark.operators import textstats as T
-
-    return T.ccnet_buckets(_docs(spark, sf_dir))
-
-
-def sql_ccnet_buckets(k_sample: int = 60) -> str:
-    from mapnik_vector_tile_spark.plans.oracle_pairs import splitmix64_sql
-
-    return f"""
-WITH lm AS ({sql_bigram_lm()}),
-sc AS (
-  SELECT lm.*, d.lang FROM lm JOIN documents d USING (doc_id)),
-hh AS (
-  SELECT doc_id, lang, mean_prob,
-         CAST(({splitmix64_sql('doc_id')}) // 2048 AS BIGINT) AS hord
-  FROM sc),
-samp AS (
-  SELECT lang, mean_prob FROM (
-    SELECT lang, mean_prob,
-           row_number() OVER (
-             PARTITION BY lang ORDER BY hord, doc_id) AS rn
-    FROM hh) WHERE rn <= {k_sample}),
-thr AS (
-  SELECT lang,
-         arr[(len(arr) + 2) // 3] AS t_lo,
-         arr[(2 * len(arr) + 2) // 3] AS t_hi
-  FROM (SELECT lang, list(mean_prob ORDER BY mean_prob) AS arr
-        FROM samp GROUP BY 1))
-SELECT s.doc_id, s.lang,
-       CASE WHEN s.mean_prob <= t.t_lo THEN 'tail'
-            WHEN s.mean_prob > t.t_hi THEN 'head'
-            ELSE 'middle' END AS bucket,
-       s.n_bigrams, s.mean_prob
-FROM sc s JOIN thr t USING (lang)
-"""
-
-
-def sql_decontaminate(bench_mod: int = 50, n: int = 4) -> str:
-    return f"""
-WITH {_shingle_cte('documents', n)},
-b AS (SELECT shingle, MIN(doc_id) AS min_bench FROM sh
-      WHERE doc_id % {bench_mod} = 0 GROUP BY 1),
-t AS (SELECT DISTINCT doc_id, shingle FROM sh
-      WHERE doc_id % {bench_mod} <> 0)
-SELECT t.doc_id AS doc_id, COUNT(*) AS n_shared,
-       MIN(b.min_bench) AS min_bench
-FROM t JOIN b ON t.shingle = b.shingle
-GROUP BY 1
-"""
-
-
-def q_decontaminate(spark, sf_dir):
-    from mapnik_vector_tile_spark.operators import dedup as D
-
-    return D.decontaminate(_docs(spark, sf_dir))
-
-
-def q_repetition(spark, sf_dir):
-    """Gopher-style intra-doc repetition gate (textstats.repetition
-    _stats) over documents ∪ a self-concatenated copy of every 4th doc
-    (text || ' ' || text — guaranteed heavy repetition, so the dup/top
-    fractions are exercised away from zero)."""
-    from mapnik_vector_tile_spark.operators import textstats as T
-
-    docs = _docs(spark, sf_dir)
-    rep = docs.filter(F.col("doc_id") % 4 == 0).select(
-        (F.col("doc_id") + F.lit(2_000_000)).alias("doc_id"),
-        F.concat_ws(" ", "text", "text").alias("text"),
-    )
-    return T.repetition_stats(
-        docs.select("doc_id", "text").unionByName(rep)
-    )
-
-
-def sql_repetition() -> str:
-    return """
-WITH docs3 AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 2000000 AS doc_id, text || ' ' || text AS text
-  FROM documents WHERE doc_id % 4 = 0
-),
-w AS (SELECT doc_id, string_split(text, ' ') AS words FROM docs3),
-g AS (
-  SELECT doc_id, n,
-         unnest(list_transform(
-           generate_series(1, greatest(len(words) - n + 1, 0)),
-           i -> array_to_string(words[i:i + n - 1], ' '))) AS gram
-  FROM w, (SELECT unnest([1, 2, 3]) AS n)
-),
-c AS (SELECT doc_id, n, gram, COUNT(*) AS c FROM g GROUP BY 1, 2, 3),
-s AS (SELECT doc_id, n, SUM(c) AS total, COUNT(*) AS n_distinct,
-             MAX(c) AS top
-      FROM c GROUP BY 1, 2)
-SELECT doc_id, CAST(n AS INT) AS n,
-       CAST(total AS BIGINT) AS total,
-       CAST(n_distinct AS BIGINT) AS n_distinct,
-       1.0 - n_distinct / total AS dup_frac,
-       top / total AS top_frac
-FROM s
-"""
-
-
 def q_token_quantiles(spark, sf_dir):
     """EXACT per-lang token-count quantiles (p50/p90/p99) via rank
     selection (operators.sketch.group_quantiles) — the corpus-audit
@@ -1527,371 +668,11 @@ FROM r GROUP BY 1
 """
 
 
-def sql_bloom_decontaminate(
-    bench_mod: int = 50, n: int = 4, m_hex: int = 4, k: int = 4
-) -> str:
-    """Twin of dedup.bloom_decontaminate: the bloom's k bit positions
-    per shingle are disjoint md5 hex slices — identical hex in DuckDB,
-    so the twin replays may-contain membership INCLUDING deterministic
-    false positives."""
-    p = (
-        f"CAST('0x' || substring(md5(shingle), 1 + {m_hex} * i, {m_hex}) "
-        f"AS BIGINT)"
-    )
-    return f"""
-WITH {_shingle_cte('documents', n)},
-slots AS (SELECT unnest(generate_series(0, {k - 1})) AS i),
-b AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % {bench_mod} = 0),
-bp AS (SELECT DISTINCT {p} AS pos FROM b, slots),
-t AS (SELECT DISTINCT doc_id, shingle FROM sh
-      WHERE doc_id % {bench_mod} <> 0),
-tp AS (SELECT doc_id, shingle, i, {p} AS pos FROM t, slots),
-hit AS (
-  SELECT doc_id, shingle
-  FROM tp JOIN bp USING (pos)
-  GROUP BY 1, 2
-  HAVING COUNT(DISTINCT i) = {k})
-SELECT doc_id, COUNT(*) AS n_hits FROM hit GROUP BY 1
-"""
-
-
-def q_corpus_filter_rep(spark, sf_dir):
-    from mapnik_vector_tile_spark.operators.corpus import corpus_filter_stats
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    rep = docs.filter(F.col("doc_id") % 4 == 0).select(
-        (F.col("doc_id") + F.lit(2_000_000)).alias("doc_id"),
-        F.concat_ws(" ", "text", "text").alias("text"),
-    )
-    return corpus_filter_stats(
-        docs.unionByName(rep), max_dup2_frac=0.2
-    )
-
-
-def q_substring_dedup(spark, sf_dir):
-    """Exact variable-length substring dedup (Lee et al. 2022
-    ExactSubstr) over documents ∪ a full copy of every 5th doc ∪ a
-    60%-prefix copy of every 7th doc — the prefix copies make span
-    BOUNDARIES land mid-document, so the variable-length merge (not
-    just whole-doc duplication) is load-bearing.  Full oracle: the
-    DuckDB twin replays the positional 12-gram seed + corpus
-    frequency gate + per-doc gaps-and-islands merge."""
-    from mapnik_vector_tile_spark.operators import dedup as D
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    full = docs.filter(F.col("doc_id") % 5 == 0).withColumn(
-        "doc_id", F.col("doc_id") + F.lit(1_000_000)
-    )
-    w = F.split(F.col("text"), " ")
-    keep = F.floor(F.size(w) * 3 / 5).cast("int")
-    pref = docs.filter(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + F.lit(2_000_000)).alias("doc_id"),
-        F.array_join(F.slice(w, 1, keep), " ").alias("text"),
-    )
-    return D.substring_dup_spans(
-        docs.unionByName(full).unionByName(pref), min_len=12, min_occ=2
-    )
-
-
-def sql_substring_dedup(L: int = 12) -> str:
-    return f"""
-WITH docs2 AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, text FROM documents
-  WHERE doc_id % 5 = 0
-  UNION ALL
-  SELECT doc_id + 2000000 AS doc_id,
-         array_to_string(
-           words[1:CAST(floor(len(words) * 3 / 5) AS INT)], ' ') AS text
-  FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)
-  WHERE doc_id % 7 = 0
-),
-t AS (SELECT doc_id, string_split(text, ' ') AS words FROM docs2),
-ng AS (
-  SELECT doc_id,
-         unnest(list_transform(
-           generate_series(1, greatest(len(words) - {L - 1}, 0)),
-           i -> struct_pack(
-             pos := i - 1,
-             gram := array_to_string(words[i:i + {L - 1}], ' ')))) AS u
-  FROM t
-),
-pos_g AS (SELECT doc_id, u.pos AS pos, u.gram AS gram FROM ng),
-seeds AS (
-  SELECT doc_id, pos FROM (
-    SELECT doc_id, pos, COUNT(*) OVER (PARTITION BY gram) AS occ
-    FROM pos_g
-  ) WHERE occ >= 2
-),
-isl AS (
-  SELECT doc_id, pos,
-         SUM(CASE WHEN prev_max_end IS NULL OR pos > prev_max_end
-                  THEN 1 ELSE 0 END)
-           OVER (PARTITION BY doc_id ORDER BY pos) AS island
-  FROM (
-    SELECT doc_id, pos,
-           MAX(pos + {L}) OVER (
-             PARTITION BY doc_id ORDER BY pos
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-           ) AS prev_max_end
-    FROM seeds)
-)
-SELECT doc_id,
-       CAST(MIN(pos) AS BIGINT) AS span_start,
-       CAST(MAX(pos) + {L} AS BIGINT) AS span_end,
-       CAST(MAX(pos) + {L} - MIN(pos) AS BIGINT) AS span_len
-FROM isl
-GROUP BY doc_id, island
-"""
-
-
-def q_strip_dup_spans(spark, sf_dir):
-    """T45b ExactSubstr CUT step (dedup.strip_dup_spans) over the
-    SAME augmented corpus as q_substring_dedup (docs ∪ full copies ∪
-    60%-prefix copies) — the rebuilt clean_text of every document is
-    under the value hash, so one mis-covered token anywhere breaks
-    the gate."""
-    from mapnik_vector_tile_spark.operators import dedup as D
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    full = docs.filter(F.col("doc_id") % 5 == 0).withColumn(
-        "doc_id", F.col("doc_id") + F.lit(1_000_000)
-    )
-    w = F.split(F.col("text"), " ")
-    keep = F.floor(F.size(w) * 3 / 5).cast("int")
-    pref = docs.filter(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + F.lit(2_000_000)).alias("doc_id"),
-        F.array_join(F.slice(w, 1, keep), " ").alias("text"),
-    )
-    return D.strip_dup_spans(
-        docs.unionByName(full).unionByName(pref), min_len=12, min_occ=2
-    )
-
-
-def sql_strip_dup_spans(L: int = 12) -> str:
-    return f"""
-WITH docs2 AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, text FROM documents
-  WHERE doc_id % 5 = 0
-  UNION ALL
-  SELECT doc_id + 2000000 AS doc_id,
-         array_to_string(
-           words[1:CAST(floor(len(words) * 3 / 5) AS INT)], ' ') AS text
-  FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)
-  WHERE doc_id % 7 = 0
-),
-t AS (SELECT doc_id, string_split(text, ' ') AS words FROM docs2),
-toks AS (
-  SELECT doc_id,
-         unnest(list_transform(
-           generate_series(1, len(words)),
-           i -> struct_pack(pos := i - 1, tok := words[i]))) AS u
-  FROM t
-),
-tok2 AS (SELECT doc_id, u.pos AS pos, u.tok AS tok FROM toks),
-ng AS (
-  SELECT doc_id,
-         unnest(list_transform(
-           generate_series(1, greatest(len(words) - {L - 1}, 0)),
-           i -> struct_pack(
-             pos := i - 1,
-             gram := array_to_string(words[i:i + {L - 1}], ' ')))) AS u
-  FROM t
-),
-pos_g AS (SELECT doc_id, u.pos AS pos, u.gram AS gram FROM ng),
-seeds AS (
-  SELECT doc_id, pos, 1 AS seed FROM (
-    SELECT doc_id, pos, COUNT(*) OVER (PARTITION BY gram) AS occ
-    FROM pos_g
-  ) WHERE occ >= 2
-),
-marked AS (
-  SELECT k.doc_id, k.pos, k.tok,
-         MAX(COALESCE(s.seed, 0)) OVER (
-           PARTITION BY k.doc_id ORDER BY k.pos
-           ROWS BETWEEN {L - 1} PRECEDING AND CURRENT ROW
-         ) = 1 AS covered
-  FROM tok2 k LEFT JOIN seeds s
-    ON s.doc_id = k.doc_id AND s.pos = k.pos
-)
-SELECT doc_id,
-       CAST(COUNT(*) AS BIGINT) AS n_tokens,
-       CAST(SUM(CASE WHEN covered THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_removed,
-       COALESCE(string_agg(tok, ' ' ORDER BY pos)
-                  FILTER (WHERE NOT covered), '') AS clean_text
-FROM marked
-GROUP BY doc_id
-"""
-
-
-def q_dsir_resample(spark, sf_dir):
-    """DSIR importance resampling (Xie et al. 2023), deterministic
-    top-k form: target model from sources src0/src1, raw corpus =
-    the rest, hashed unigram+bigram buckets, integer fixed-point
-    log2 LLR (see operators.sampling.dsir_topk).  Full oracle."""
-    from mapnik_vector_tile_spark.operators import sampling as SMP
-
-    return SMP.dsir_topk(_docs(spark, sf_dir))
-
-
-def sql_dsir_resample(
-    k: int = 120, n_buckets: int = 4096
-) -> str:
-    h7g = H7_D.format(x="gram")
-    return f"""
-WITH tgt AS (
-  SELECT doc_id, text FROM documents WHERE source IN ('src0', 'src1')
-),
-raw AS (
-  SELECT doc_id, text, lang, source FROM documents
-  WHERE source NOT IN ('src0', 'src1')
-),
-tg AS (
-  SELECT doc_id,
-         unnest(list_concat(
-           words,
-           list_transform(
-             generate_series(1, greatest(len(words) - 1, 0)),
-             i -> array_to_string(words[i:i + 1], ' ')))) AS gram
-  FROM (SELECT doc_id, string_split(text, ' ') AS words FROM tgt)
-),
-rg AS (
-  SELECT doc_id,
-         unnest(list_concat(
-           words,
-           list_transform(
-             generate_series(1, greatest(len(words) - 1, 0)),
-             i -> array_to_string(words[i:i + 1], ' ')))) AS gram
-  FROM (SELECT doc_id, string_split(text, ' ') AS words FROM raw)
-),
-tb AS (SELECT doc_id, {h7g} % {n_buckets} AS bucket FROM tg),
-rb AS (SELECT doc_id, {h7g} % {n_buckets} AS bucket FROM rg),
-cp AS (SELECT bucket, COUNT(*) AS cp FROM tb GROUP BY 1),
-cq AS (SELECT bucket, COUNT(*) AS cq FROM rb GROUP BY 1),
-score_tbl AS (
-  SELECT cq.bucket,
-         CAST(length(bin(
-           (COALESCE(cp.cp, 0) + 1) * 1048576 // (cq.cq + 1)
-         )) - 1 AS BIGINT) AS s
-  FROM cq LEFT JOIN cp ON cq.bucket = cp.bucket
-),
-scored AS (
-  SELECT rb.doc_id,
-         SUM(st.s) - 20 * COUNT(*) AS score,
-         COUNT(*) AS n_grams
-  FROM rb JOIN score_tbl st ON rb.bucket = st.bucket
-  GROUP BY rb.doc_id
-),
-topk AS (
-  SELECT doc_id, score, n_grams FROM scored
-  ORDER BY score DESC, doc_id
-  LIMIT {k}
-)
-SELECT r.doc_id, r.lang, r.source,
-       CAST(t.score AS BIGINT) AS score,
-       CAST(t.n_grams AS BIGINT) AS n_grams
-FROM topk t JOIN raw r ON t.doc_id = r.doc_id
-ORDER BY score DESC, r.doc_id
-"""
-
-
-def q_bloom_decontaminate(spark, sf_dir):
-    from mapnik_vector_tile_spark.operators import dedup as D
-
-    return D.bloom_decontaminate(_docs(spark, sf_dir))
-
-
-def q_seq_packing(spark, sf_dir):
-    from mapnik_vector_tile_spark.operators import sampling as SMP
-
-    return (
-        SMP.pack_contiguous(_docs(spark, sf_dir))
-        .groupBy("lang", "shard", "bin")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_chars").cast("bigint").alias("sum_chars"),
-            F.min("doc_id").alias("min_id"),
-        )
-    )
-
-
-def q_dup_ngram_spans(spark, sf_dir):
-    """Exact duplicate n-gram spans over documents ∪ a shifted copy of
-    every 5th doc (partial duplication, so the min_docs filter is
-    load-bearing: spans of copied docs pass, spans unique to one doc
-    are dropped). Full oracle: the DuckDB twin regenerates the same
-    8-gram explode with list_transform + the same two-stage count."""
-    from mapnik_vector_tile_spark.operators import dedup as D
-
-    docs = _docs(spark, sf_dir)
-    part = docs.filter(F.col("doc_id") % 5 == 0).withColumn(
-        "doc_id", F.col("doc_id") + F.lit(1_000_000)
-    )
-    return D.dup_ngram_spans(docs.unionByName(part), n=8, min_docs=2)
-
-
-def sql_dup_ngram_spans(n: int = 8) -> str:
-    return f"""
-WITH docs2 AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, text FROM documents
-  WHERE doc_id % 5 = 0
-),
-ng AS (
-  SELECT doc_id,
-         unnest(list_transform(
-           generate_series(1, greatest(len(words) - {n - 1}, 0)),
-           i -> array_to_string(words[i:i + {n - 1}], ' '))) AS ngram
-  FROM (SELECT doc_id, string_split(text, ' ') AS words FROM docs2)
-),
-per_doc AS (
-  SELECT ngram, doc_id, COUNT(*) AS occ FROM ng GROUP BY 1, 2
-)
-SELECT ngram,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(occ) AS BIGINT) AS n_occ,
-       MIN(doc_id) AS first_doc
-FROM per_doc
-GROUP BY 1
-HAVING COUNT(*) >= 2
-"""
-
-
 def pairs() -> dict[str, tuple[Callable, str | None]]:
     """name -> (spark_fn, oracle_sql | None). None = rows-only check
     (approximate/recall-bounded ops, documented)."""
     return {
-        "q_exact_dedup": (q_exact_dedup, sql_exact_dedup()),
-        "q_incremental_dedup": (
-            q_incremental_dedup, sql_incremental_dedup()),
-        "q_dup_ngram_spans": (q_dup_ngram_spans, sql_dup_ngram_spans()),
-        "q_substring_dedup": (q_substring_dedup, sql_substring_dedup()),
-        "q_strip_dup_spans": (q_strip_dup_spans, sql_strip_dup_spans()),
-        "q_dsir_resample": (q_dsir_resample, sql_dsir_resample()),
         "q_proto_prune": (q_proto_prune, sql_proto_prune()),
-        "q_ccnet_buckets": (q_ccnet_buckets, sql_ccnet_buckets()),
-        "q_minhash_signatures": (q_minhash_signatures, sql_minhash_signatures()),
-        "q_minhash_lsh_pairs": (q_minhash_lsh_pairs, sql_minhash_lsh_pairs()),
-        "q_dedup_clusters": (q_dedup_clusters, sql_dedup_clusters()),
-        "q_modularity": (q_modularity, sql_modularity()),
-        "q_cluster_canonical": (q_cluster_canonical, sql_cluster_canonical()),
-        "q_simhash": (q_simhash, sql_simhash()),
-        "q_simhash_pairs": (q_simhash_pairs, sql_simhash_pairs()),
-        "q_ngram_jaccard": (q_ngram_jaccard, sql_ngram_jaccard_pairs()),
-        "q_edit_refine": (q_edit_refine, sql_edit_refine()),
-        "q_wordpiece": (q_wordpiece, sql_wordpiece()),
-        "q_quality_stats": (q_quality_stats, sql_quality_stats()),
-        "q_corpus_filter": (q_corpus_filter, sql_corpus_filter()),
-        "q_token_counts": (q_token_counts, sql_token_counts()),
-        "q_topk_tokens": (q_topk_tokens, sql_topk_tokens()),
-        "q_bm25": (q_bm25, sql_bm25()),
-        "q_langid": (q_langid, sql_langid()),
-        "q_fingerprints": (q_fingerprints, sql_fingerprints()),
         "q_ann_topk": (q_ann_topk, sql_ann_topk()),
         "q_ann_lsh_bucketed": (q_ann_lsh, sql_ann_lsh()),
         "q_ann_ivf": (q_ann_ivf, sql_ann_ivf()),
@@ -1902,42 +683,24 @@ def pairs() -> dict[str, tuple[Callable, str | None]]:
         "q_embedding_quantize": (q_embedding_quantize, sql_embedding_quantize()),
         "q_embedding_gram": (q_embedding_gram, sql_embedding_gram()),
         "q_pca_power": (q_pca_power, sql_pca_power()),
-        "q_collocations": (q_collocations, sql_collocations()),
         "q_ann_twostage": (q_ann_twostage, sql_ann_twostage()),
         "q_kmeans": (q_kmeans, sql_kmeans()),
         "q_pq": (q_pq, sql_pq()),
-        "q_pii_redact": (q_pii_redact, sql_pii_redact()),
-        "q_chunk_dedup": (q_chunk_dedup, sql_chunk_dedup()),
         "q_event_dedup": (q_event_dedup, sql_event_dedup()),
         "q_train_split": (q_train_split, sql_train_split()),
         "q_stratified_sample": (q_stratified_sample, sql_stratified_sample()),
         "q_balanced_sample": (q_balanced_sample, sql_balanced_sample(20)),
         "q_seq_packing": (q_seq_packing, sql_seq_packing()),
-        "q_bigram_lm": (q_bigram_lm, sql_bigram_lm()),
-        "q_unimax_resample": (q_unimax_resample, sql_unimax()),
-        "q_boilerplate": (q_boilerplate, sql_boilerplate()),
-        "q_chunk_sliding": (q_chunk_sliding, sql_chunk_sliding()),
-        "q_hard_negatives": (q_hard_negatives, sql_hard_negatives()),
-        "q_count_min": (q_count_min, sql_count_min()),
         "q_temperature_resample": (
             q_temperature_resample,
             sql_temperature_resample(),
         ),
-        "q_decontaminate": (q_decontaminate, sql_decontaminate()),
-        "q_bloom_decontaminate": (
-            q_bloom_decontaminate,
-            sql_bloom_decontaminate(),
-        ),
+        "q_unimax_resample": (q_unimax_resample, sql_unimax()),
+        "q_hard_negatives": (q_hard_negatives, sql_hard_negatives()),
+        "q_count_min": (q_count_min, sql_count_min()),
         "q_token_quantiles": (q_token_quantiles, sql_token_quantiles()),
-        "q_corpus_filter_rep": (
-            q_corpus_filter_rep,
-            sql_corpus_filter_rep(),
-        ),
-        "q_repetition": (q_repetition, sql_repetition()),
         "q_semdedup": (q_semdedup, sql_semdedup()),
         "q_alignment_filter": (q_alignment_filter, sql_alignment_filter()),
-        "q_bpe_train": (q_bpe_train, sql_bpe_train()),
-        "q_span_corrupt": (q_span_corrupt, sql_span_corrupt()),
     }
 
 
@@ -2125,124 +888,6 @@ FROM q v {joins}
 """
 
 
-# --- PII redaction (operators.textstats.pii_redact) -----------------------
-
-
-def q_pii_redact(spark, sf_dir):
-    """T23 PII scrub with a FULL oracle: deterministic synthetic PII
-    (emails / E.164-ish phones / IPv4, keyed on doc_id so both engines
-    synthesize identical text) is appended to the corpus, then the
-    real operator counts and redacts. The value hash covers the entire
-    redacted string of every document, so a single mis-ordered rule,
-    engine regex divergence, or partial-match difference breaks it."""
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.operators.textstats import pii_redact
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    email = F.concat(
-        F.lit("user"), did.cast("string"), F.lit("@example.com")
-    )
-    phone = F.concat(
-        F.lit("+1 555-"), F.lpad((did % 10000).cast("string"), 4, "0")
-    )
-    ip = F.concat(
-        F.lit("10."), (did % 256).cast("string"),
-        F.lit(".0."), ((did * 7) % 256).cast("string"),
-    )
-    aug = d.select(
-        "doc_id",
-        F.concat_ws(
-            " ",
-            F.col("text"),
-            F.when(did % 3 == 0, email),
-            F.when(did % 4 == 0, phone),
-            F.when(did % 5 == 0, ip),
-        ).alias("text"),
-    )
-    return pii_redact(aug).select(
-        "doc_id", "n_emails", "n_ipv4", "n_phones", "redacted"
-    )
-
-
-def sql_pii_redact() -> str:
-    from mapnik_vector_tile_spark.operators.textstats import PII_RULES
-
-    (_, em, emt), (_, ip, ipt), (_, ph, pht) = PII_RULES
-    red = (
-        f"regexp_replace(regexp_replace(regexp_replace(text, '{em}', "
-        f"'{emt}', 'g'), '{ip}', '{ipt}', 'g'), '{ph}', '{pht}', 'g')"
-    )
-    return f"""
-WITH aug AS (
-  SELECT doc_id,
-         concat_ws(' ', text,
-           CASE WHEN doc_id % 3 = 0 THEN 'user' || CAST(doc_id AS VARCHAR) || '@example.com' END,
-           CASE WHEN doc_id % 4 = 0 THEN '+1 555-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') END,
-           CASE WHEN doc_id % 5 = 0 THEN '10.' || CAST(doc_id % 256 AS VARCHAR) || '.0.' || CAST((doc_id * 7) % 256 AS VARCHAR) END
-         ) AS text
-  FROM documents
-)
-SELECT doc_id,
-       CAST(len(regexp_extract_all(text, '{em}')) AS INT) AS n_emails,
-       CAST(len(regexp_extract_all(text, '{ip}')) AS INT) AS n_ipv4,
-       CAST(len(regexp_extract_all(text, '{ph}')) AS INT) AS n_phones,
-       {red} AS redacted
-FROM aug
-"""
-
-
-# --- chunk-level dedup (operators.dedup.chunk_dedup) ----------------------
-
-
-def q_chunk_dedup(spark, sf_dir):
-    """T24 chunk dedup with a FULL oracle covering the rebuilt text of
-    every document: the synthetic corpus repeats words heavily, so
-    12-word chunks collide across documents and the first-occurrence
-    rule does real corpus-wide work (n_kept < n_chunks for many docs).
-    DuckDB replays chunking via generate_subscripts + ordered
-    string_agg, first-occurrence via a window, reassembly via ordered
-    string_agg — any divergence in chunk boundaries, tie order, or
-    reassembly order breaks the hash."""
-    from mapnik_vector_tile_spark.operators.dedup import chunk_dedup
-
-    return chunk_dedup(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), chunk_words=12
-    )
-
-
-def sql_chunk_dedup(wc: int = 12) -> str:
-    return f"""
-WITH w AS (
-  SELECT doc_id,
-         UNNEST(string_split(text, ' ')) AS w,
-         generate_subscripts(string_split(text, ' '), 1) AS i
-  FROM documents
-),
-ch AS (
-  SELECT doc_id, CAST((i - 1) // {wc} AS INT) AS cidx,
-         string_agg(w, ' ' ORDER BY i) AS chunk
-  FROM w GROUP BY 1, 2
-),
-firsts AS (
-  SELECT doc_id, cidx, chunk,
-         row_number() OVER (
-           PARTITION BY chunk ORDER BY doc_id, cidx
-         ) AS rn
-  FROM ch
-)
-SELECT doc_id,
-       CAST(COUNT(*) AS INT) AS n_chunks,
-       CAST(SUM(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS INT) AS n_kept,
-       COALESCE(
-         string_agg(CASE WHEN rn = 1 THEN chunk END, ' ' ORDER BY cidx),
-         ''
-       ) AS cleaned
-FROM firsts GROUP BY doc_id
-"""
-
-
 # --- event dedup (streaming/dedup.py batch twin) --------------------------
 
 
@@ -2375,106 +1020,6 @@ FROM t LEFT JOIN dup USING (vec_id)
 """
 
 
-# --- BPE merge learning (operators.textstats.bpe_train) -------------------
-
-BPE_ROUNDS = 8
-
-
-def q_bpe_train(spark, sf_dir):
-    """T31 distributed BPE tokenizer training with a FULL oracle: the
-    corpus is folded to a word-frequency table once, then every merge
-    round is a pair-count aggregate + global arg-max; merging is a
-    pure-Column delimiter-string replace whose leftmost
-    non-overlapping semantics are identical in Spark and DuckDB, so
-    the learned merge table matches row-for-row. One wrong merge in
-    round r changes every later round's pair statistics — the oracle
-    is sequence-sensitive by construction."""
-    from mapnik_vector_tile_spark.operators.textstats import bpe_train
-
-    return bpe_train(_docs(spark, sf_dir), rounds=BPE_ROUNDS)
-
-
-def sql_bpe_train(rounds: int = BPE_ROUNDS) -> str:
-    """Unrolled DuckDB twin: sR = merge-applied strings after round R,
-    bR = the round-R arg-max (count DESC, pair lexicographic ASC)."""
-    parts = [
-        """WITH s0 AS (
-  SELECT '|' || regexp_replace(word, '(.)', '\\1|', 'g') AS s,
-         CAST(cnt AS BIGINT) AS cnt
-  FROM (SELECT word, COUNT(*) AS cnt FROM
-          (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-        WHERE word <> '' GROUP BY 1))"""
-    ]
-    for r in range(1, rounds + 1):
-        prev = f"s{r - 1}"
-        parts.append(
-            f""",
-t{r} AS (SELECT list_filter(string_split(s, '|'), x -> x <> '') AS t,
-                cnt FROM {prev}),
-p{r} AS (SELECT t[i] AS a, t[i + 1] AS b, SUM(cnt) AS c
-         FROM (SELECT t, cnt,
-                      unnest(generate_series(1, len(t) - 1)) AS i
-               FROM t{r})
-         GROUP BY 1, 2),
-b{r} AS (SELECT a, b, c FROM p{r} ORDER BY c DESC, a, b LIMIT 1),
-s{r} AS (SELECT replace(s, '|' || a || '|' || b, '|' || a || b) AS s,
-                cnt
-         FROM {prev}, b{r})"""
-        )
-    sel = "\nUNION ALL\n".join(
-        f"SELECT CAST({r} AS BIGINT) AS round, a AS p1, b AS p2,"
-        f" CAST(c AS BIGINT) AS cnt FROM b{r}"
-        for r in range(1, rounds + 1)
-    )
-    parts.append("\n" + sel)
-    return "".join(parts)
-
-
-# --- T32 span corruption (operators.textstats.span_corruption_stats) ------
-
-
-def q_span_corrupt(spark, sf_dir):
-    """T32 span-corruption accounting with a FULL oracle: DuckDB
-    replays the positional coin (splitmix64(doc_id·1000003 + pos)),
-    the lag-based span starts, and the kept-position hash."""
-    from mapnik_vector_tile_spark.operators.textstats import (
-        span_corruption_stats,
-    )
-
-    return span_corruption_stats(_docs(spark, sf_dir), rate_pct=15)
-
-
-def sql_span_corrupt(rate_pct: int = 15) -> str:
-    from mapnik_vector_tile_spark.plans.oracle_pairs import splitmix64_sql
-
-    sm = splitmix64_sql("(doc_id * 1000003 + pos)")
-    return f"""
-WITH arr AS (
-  SELECT doc_id, string_split(text, ' ') AS a FROM documents),
-wds AS (
-  SELECT doc_id, a[i] AS w, CAST(i - 1 AS BIGINT) AS pos
-  FROM arr, LATERAL unnest(generate_series(1, len(a))) u(i)
-  WHERE a[i] <> ''),
-mk AS (
-  SELECT doc_id, w, pos,
-         CASE WHEN ({sm}) % 100 < {rate_pct} THEN 1 ELSE 0 END AS dropped
-  FROM wds),
-sp AS (
-  SELECT doc_id, w, pos, dropped,
-         CASE WHEN dropped = 1 AND COALESCE(
-                lag(dropped) OVER (PARTITION BY doc_id ORDER BY pos), 0) = 0
-              THEN 1 ELSE 0 END AS span_start
-  FROM mk)
-SELECT doc_id,
-       CAST(COUNT(*) AS BIGINT) AS n_words,
-       CAST(SUM(dropped) AS BIGINT) AS n_dropped,
-       CAST(SUM(span_start) AS BIGINT) AS n_spans,
-       CAST(SUM(CASE WHEN dropped = 0 THEN (pos + 1) * length(w)
-                     ELSE 0 END) % 2147483648 AS BIGINT) AS kh
-FROM sp GROUP BY doc_id
-"""
-
-
 def q_embedding_gram(spark, sf_dir):
     """T22 exact Gram matrix of the int8-quantized embeddings with a
     FULL oracle: one numpy Q^T Q per Arrow batch, d(d+1)/2 triangle
@@ -2514,46 +1059,6 @@ SELECT CAST(a.i - 1 AS INTEGER) AS i, CAST(b.i - 1 AS INTEGER) AS j,
        CAST(SUM(a.qv * b.qv) AS BIGINT) AS g
 FROM q a JOIN q b ON b.vec_id = a.vec_id AND b.i >= a.i
 GROUP BY 1, 2
-"""
-
-
-def q_collocations(spark, sf_dir):
-    """T39 PMI collocations with a FULL oracle: the int64-safe
-    two-quotient score ((c_ab·1000) div c_a)·((N·1000) div c_b)
-    (floor per factor, documented rounding), min_count 5,
-    deterministic top-50; DuckDB replays the bigram/unigram counting
-    and the identical two-quotient rank."""
-    from mapnik_vector_tile_spark.operators import textstats as T
-
-    return T.collocations(_docs(spark, sf_dir))
-
-
-def sql_collocations(k: int = 50, min_count: int = 5) -> str:
-    return f"""
-WITH toks AS (
-  SELECT unnest(string_split(text, ' ')) AS a FROM documents),
-uni AS (SELECT a, CAST(COUNT(*) AS BIGINT) AS c_a FROM toks GROUP BY a),
-nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM toks),
-pairs AS (
-  SELECT w[i] AS a, w[i + 1] AS b
-  FROM (SELECT string_split(text, ' ') AS w FROM documents),
-       LATERAL unnest(generate_series(1, len(w) - 1)) s(i)),
-big AS (
-  SELECT a, b, CAST(COUNT(*) AS BIGINT) AS c_ab
-  FROM pairs GROUP BY a, b HAVING COUNT(*) >= {min_count}),
-scored AS (
-  SELECT big.a, big.b, big.c_ab,
-         CAST(((big.c_ab * 1000) // ua.c_a) * ((nn.n * 1000) // ub.c_a)
-              AS BIGINT) AS score
-  FROM big
-  JOIN uni ua ON ua.a = big.a
-  JOIN uni ub ON ub.a = big.b
-  CROSS JOIN nn),
-rnk AS (
-  SELECT *, CAST(row_number() OVER (
-    ORDER BY score DESC, a, b) AS BIGINT) AS rnk
-  FROM scored)
-SELECT a, b, c_ab, score, rnk FROM rnk WHERE rnk <= {k}
 """
 
 
@@ -2619,80 +1124,6 @@ SELECT vec_id, nbr, c_pre, c_full, rnk FROM (
            AS rnk
   FROM s1 WHERE r1 <= {m}
 ) WHERE rnk <= {k}
-"""
-
-
-def q_incremental_dedup(spark, sf_dir):
-    """T42 incremental corpus dedup (dedup.incremental_minhash_pairs)
-    with a FULL oracle.  New batch = exact copies of every doc_id%7==0
-    document (id+10^6 — guaranteed index matches) plus salted
-    variants of doc_id%11==3 documents (id+2·10^6, text || per-doc
-    salt — band collisions only where the shingle overlap survives);
-    index = the whole documents table.  DuckDB replays the shingle →
-    minhash → band chain over the SAME combined corpus and emits the
-    identical (new×index ∪ new×new) pair set; index×index pairs must
-    NOT appear."""
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.operators import dedup as D
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    new = (
-        docs.filter(F.col("doc_id") % 7 == 0)
-        .select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
-        .unionByName(
-            docs.filter(F.col("doc_id") % 11 == 3).select(
-                (F.col("doc_id") + 2_000_000).alias("doc_id"),
-                F.concat(
-                    F.col("text"), F.lit(" zz"),
-                    F.col("doc_id").cast("string"),
-                ).alias("text"),
-            )
-        )
-    )
-    return D.incremental_minhash_pairs(new, docs)
-
-
-def sql_incremental_dedup() -> str:
-    h = H7_D.format(x="shingle")
-    r = N_HASHES // N_BANDS
-    band_selects = []
-    for b in range(N_BANDS):
-        sig = " || '_' || ".join(
-            f"CAST(mh{b * r + i} AS VARCHAR)" for i in range(r)
-        )
-        band_selects.append(
-            f"SELECT doc_id, is_new, {b} AS band, {sig} AS sig FROM mh"
-        )
-    bands = "\nUNION ALL\n".join(band_selects)
-    return f"""
-WITH alldocs AS (
-  SELECT doc_id, text, FALSE AS is_new FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000, text, TRUE FROM documents WHERE doc_id % 7 = 0
-  UNION ALL
-  SELECT doc_id + 2000000, text || ' zz' || CAST(doc_id AS VARCHAR), TRUE
-  FROM documents WHERE doc_id % 11 = 3),
-{_shingle_cte('alldocs')},
-h AS (SELECT doc_id, {h} AS hv FROM sh),
-mh AS (
-  SELECT s.doc_id, d.is_new, {_minhash_aggs()}
-  FROM (SELECT doc_id, hv FROM h) s
-  JOIN (SELECT DISTINCT doc_id, is_new FROM alldocs) d USING (doc_id)
-  GROUP BY s.doc_id, d.is_new),
-bands AS ({bands}),
-prs AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         TRUE AS from_index
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.sig = b.sig
-   AND a.is_new AND NOT b.is_new
-  UNION
-  SELECT DISTINCT a.doc_id, b.doc_id, FALSE
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.sig = b.sig
-   AND a.is_new AND b.is_new AND a.doc_id < b.doc_id)
-SELECT doc_a, doc_b, from_index FROM prs
 """
 
 
@@ -2782,62 +1213,3 @@ FROM wf
 """
 
 
-def q_modularity(spark, sf_dir):
-    """T44 modularity of the dedup clustering (dedup.cluster_modularity
-    over the exact LSH pair graph and its connected components) with
-    a FULL oracle: DuckDB rebuilds the same pairs and transitive-
-    closure labels, then folds the identical 4mI − Σd_c² numerator —
-    a wrong component or a missed pair shifts the exact Q fraction."""
-    from mapnik_vector_tile_spark.operators import dedup as D
-
-    docs = D.with_self_copies(_docs(spark, sf_dir))
-    pairs = D.minhash_lsh_pairs(docs, hot_bucket_limit=None)
-    pairs = pairs.localCheckpoint(eager=True)
-    labels = D.connected_components(pairs).select("doc_id", "cluster_rep")
-    return D.cluster_modularity(pairs, labels)
-
-
-def sql_modularity() -> str:
-    return f"""
-WITH RECURSIVE {_lsh_pair_ctes()},
-edges AS (
-  SELECT doc_a AS s, doc_b AS d FROM lsh_pairs
-  UNION ALL
-  SELECT doc_b AS s, doc_a AS d FROM lsh_pairs
-),
-reach(node, r) AS (
-  SELECT DISTINCT s AS node, s AS r FROM edges
-  UNION
-  SELECT e.s AS node, reach.r
-  FROM edges e JOIN reach ON reach.node = e.d
-),
-labels AS (
-  SELECT node AS doc_id, MIN(r) AS cluster_rep FROM reach GROUP BY node
-),
-lp AS (
-  SELECT p.doc_a, p.doc_b, la.cluster_rep AS ra, lb.cluster_rep AS rb
-  FROM lsh_pairs p
-  JOIN labels la ON la.doc_id = p.doc_a
-  JOIN labels lb ON lb.doc_id = p.doc_b),
-mi AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS m,
-         CAST(SUM(CASE WHEN ra = rb THEN 1 ELSE 0 END) AS BIGINT)
-           AS intra
-  FROM lp),
-deg AS (
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS d FROM (
-    SELECT doc_a AS doc_id FROM lsh_pairs
-    UNION ALL SELECT doc_b FROM lsh_pairs) u
-  GROUP BY doc_id),
-dc AS (
-  SELECT l.cluster_rep, CAST(SUM(deg.d) AS BIGINT) AS d_c
-  FROM deg JOIN labels l USING (doc_id) GROUP BY 1),
-fo AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_clusters,
-         CAST(SUM(d_c * d_c) AS BIGINT) AS sum_dc2
-  FROM dc)
-SELECT m, n_clusters, intra,
-       CAST(4 * m * intra - sum_dc2 AS BIGINT) AS q_num,
-       CAST(4 * m * m AS BIGINT) AS q_den
-FROM mi, fo
-"""

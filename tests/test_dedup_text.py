@@ -1,113 +1,17 @@
-"""Dedup / similarity / text-analysis operators — semantic unit tests
-(brute-force numpy/python oracles on tiny corpora). Cross-engine
-value-hash parity lives in plans.text_oracles via the driver gate."""
+"""Near-dup and similarity operators — semantic unit tests
+(brute-force numpy/python oracles on tiny corpora): embedding top-k,
+quantization and PCA, connected components, and the phash near-dup
+joins with their hot-bucket star guard. Cross-engine value-hash parity
+lives in the oracle registry via the driver gate."""
 
 from __future__ import annotations
-
-import hashlib
-import itertools
 
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from mapnik_vector_tile_spark.operators import dedup as D
 from mapnik_vector_tile_spark.operators import similarity as SIM
-from mapnik_vector_tile_spark.operators import textstats as TS
-
-TEXTS = [
-    "the quick brown fox jumps over the lazy dog",
-    "the quick brown fox jumps over the lazy cat",   # near-dup of 0
-    "completely different words entirely here now",
-    "the quick brown fox jumps over the lazy dog",   # exact dup of 0
-    "a b",                                            # shorter than shingle
-]
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    pdf = pd.DataFrame(
-        {"doc_id": range(len(TEXTS)), "text": TEXTS}
-    )
-    return spark.createDataFrame(pdf)
-
-
-def _h7(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:7], 16)
-
-
-def _shingles(text: str, n: int = 3) -> set[str]:
-    w = text.split(" ")
-    return {" ".join(w[i : i + n]) for i in range(len(w) - n + 1)}
-
-
-def test_shingles_match_python(docs):
-    rows = D.shingles(docs).collect()
-    got = {}
-    for r in rows:
-        got.setdefault(r.doc_id, []).append(r.shingle)
-    for i, t in enumerate(TEXTS):
-        w = t.split(" ")
-        want = [" ".join(w[j : j + 3]) for j in range(len(w) - 2)]
-        assert got.get(i, []) == want or sorted(got.get(i, [])) == sorted(want)
-    assert 4 not in got  # short doc yields no shingles
-
-
-def test_exact_dedup(docs):
-    out = D.exact_dup_groups(docs).collect()
-    assert len(out) == 1
-    assert out[0].keeper == 0 and out[0].n_copies == 2
-
-
-def test_minhash_exact_dups_collide(docs):
-    sig = {r.doc_id: tuple(r[f"mh{j}"] for j in range(16))
-           for r in D.minhash_signatures(docs).collect()}
-    assert sig[0] == sig[3]          # exact dup: identical signature
-    assert sig[0] != sig[2]          # unrelated: different
-    # minhash value definition check against python
-    hv = min((_h7(s) * 1 + 1) % D.H_PRIME for s in _shingles(TEXTS[0]))
-    assert sig[0][0] == hv
-
-
-def test_lsh_pairs_find_exact_dup(docs):
-    pairs = {(r.doc_a, r.doc_b) for r in D.minhash_lsh_pairs(docs).collect()}
-    assert (0, 3) in pairs
-    assert all(a < b for a, b in pairs)
-
-
-def test_simhash_near_dup_closer_than_random(docs):
-    sh = {r.doc_id: r.simhash for r in D.simhash(docs).collect()}
-    ham = lambda a, b: bin(a ^ b).count("1")
-    assert sh[0] == sh[3]
-    assert ham(sh[0], sh[1]) < ham(sh[0], sh[2])
-
-
-def test_ngram_jaccard_values(docs):
-    out = {
-        (r.doc_a, r.doc_b): r.n_inter
-        for r in D.ngram_jaccard_pairs(docs, threshold=0.1).collect()
-    }
-    s0, s1 = _shingles(TEXTS[0]), _shingles(TEXTS[1])
-    assert out[(0, 1)] == len(s0 & s1)
-    assert out[(0, 3)] == len(s0)
-
-
-def test_quality_and_tokens(docs):
-    q = {r.doc_id: r for r in TS.quality_stats(docs).collect()}
-    assert q[0].n_tokens == 9
-    assert q[0].len_chars == len(TEXTS[0])
-    assert q[0].stopword_ratio == pytest.approx(2 / 9)  # 'the' x2
-    t = {r.doc_id: r for r in TS.token_counts(docs).collect()}
-    assert t[0].n_tokens == 9
-    want_sub = sum((len(w) + 3) // 4 for w in TEXTS[0].split(" "))
-    assert t[0].n_subtokens == want_sub
-
-
-def test_fingerprint_dups_equal(docs):
-    fp = {r.doc_id: (r.fp_min, r.fp_card) for r in TS.fingerprints(docs).collect()}
-    assert fp[0] == fp[3]
-    assert fp[0] != fp[2]
 
 
 @pytest.fixture(scope="module")
@@ -194,19 +98,6 @@ def test_connected_components_chain_and_triangle(spark):
     assert all(out[k] == (10, 3) for k in (10, 11, 12))
     assert all(out[k] == (20, 2) for k in (20, 21))
     assert len(out) == 10
-
-
-def test_dedup_clusters_pair_every_doc_with_copy(docs):
-    # every doc's shifted copy shares all shingles -> same cluster;
-    # rep is always the original (min) id
-    out = D.dedup_clusters(docs).collect()
-    by_id = {r.doc_id: r for r in out}
-    for r in out:
-        assert r.cluster_rep <= r.doc_id
-        assert r.cluster_size >= 2
-    # each original doc and its +1M copy carry the same rep
-    for did in {r.doc_id for r in out if r.doc_id < 1_000_000}:
-        assert by_id[did].cluster_rep == by_id[did + 1_000_000].cluster_rep
 
 
 def test_connected_components_random_graphs(spark):
@@ -419,434 +310,22 @@ def test_hot_bucket_star_guard_phash(spark):
     assert {r.img_b for r in star} == set(range(1, n))
 
 
-def test_hot_bucket_guard_preserves_normal_output(spark, docs):
-    """On the normal corpus no bucket reaches the limit, so guarded and
-    unguarded minhash LSH output are identical (the oracle contract)."""
-    from mapnik_vector_tile_spark.operators import dedup as D
-
-    guarded = {(r.doc_a, r.doc_b)
-               for r in D.minhash_lsh_pairs(docs).collect()}
-    unguarded = {(r.doc_a, r.doc_b)
-                 for r in D.minhash_lsh_pairs(docs,
-                                              hot_bucket_limit=None).collect()}
-    assert guarded == unguarded
-
-
-def test_hot_bucket_star_guard_minhash(spark):
-    """Adversarial identical-text corpus under a tiny limit: star output
-    connects every doc to the min id with m-1 pairs."""
-    from mapnik_vector_tile_spark.operators import dedup as D
-
-    n = 40
-    docs = spark.createDataFrame(
-        [(i, "the same boilerplate text repeated everywhere") for i in range(n)],
-        schema="doc_id long, text string",
-    )
-    star = D.minhash_lsh_pairs(docs, hot_bucket_limit=8).collect()
-    assert len(star) == n - 1
-    assert all(r.doc_a == 0 for r in star)
-
-
-def test_dup_ngram_spans_values(spark):
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.operators.dedup import dup_ngram_spans
-
-    rows = [
-        (1, "a b c d e f"),      # shares 'a b c d' with doc 2
-        (2, "a b c d x y"),
-        (3, "a b c d x y"),      # exact dup of 2
-        (4, "q r s t"),          # unique + too short for repeats
-        (5, "p p p p p p p p"),  # self-repeats only — must NOT pass
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = (
-        dup_ngram_spans(docs, n=4, min_docs=2)
-        .orderBy("ngram")
-        .collect()
-    )
-    got = {(r.ngram): (r.n_docs, r.n_occ, r.first_doc) for r in out}
-    assert got == {
-        "a b c d": (3, 3, 1),
-        "b c d x": (2, 2, 2),
-        "c d x y": (2, 2, 2),
-    }
-    # doc 5's 5 within-doc occurrences of 'p p p p' stay out: one doc
-    single = dup_ngram_spans(docs, n=4, min_docs=1).filter(
-        F.col("ngram") == "p p p p"
-    ).collect()
-    assert single[0].n_docs == 1 and single[0].n_occ == 5
-
-
-def test_dup_ngram_spans_plan(spark):
-    from mapnik_vector_tile_spark.operators.dedup import dup_ngram_spans
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    plan = (
-        dup_ngram_spans(docs, n=8)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    # two shuffles, each fed by a map-side partial aggregate; no
-    # distinct-aggregate Expand; scan pruned to (doc_id, text)
-    assert plan.count("Exchange") == 2
-    assert plan.count("partial_") >= 2
-    assert "Expand" not in plan
-    assert "ReadSchema: struct<doc_id:bigint,text:string>" in plan
-
-
-def _bloom_docs(spark):
-    rng = np.random.RandomState(7)
-    words = [f"w{i}" for i in range(40)]
-    texts = [
-        " ".join(rng.choice(words, size=12)) for _ in range(120)
-    ]
-    pdf = pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
-    return spark.createDataFrame(pdf)
-
-
-def test_bloom_decontaminate_superset_of_exact(spark):
-    """Bloom may-contain is a SUPERSET of the exact shingle join:
-    every exactly-contaminated doc is flagged, and any extra flags are
-    bloom false positives (possible by design, deterministic)."""
-    docs = _bloom_docs(spark)
-    exact = {
-        r.doc_id for r in D.decontaminate(docs, bench_mod=10, n=4).collect()
-    }
-    bloom = {
-        r.doc_id
-        for r in D.bloom_decontaminate(docs, bench_mod=10, n=4).collect()
-    }
-    assert exact <= bloom
-
-
-def test_bloom_decontaminate_small_m_forces_false_positives(spark):
-    """With a deliberately tiny bitset (m_hex=1 → 16 slots) the filter
-    saturates: everything may-contain — the degenerate end of the
-    fill-ratio^k curve, proving the FP path is exercised and exact."""
-    docs = _bloom_docs(spark)
-    n_train = docs.filter(F.col("doc_id") % 10 != 0).count()
-    flagged = D.bloom_decontaminate(
-        docs, bench_mod=10, n=4, m_hex=1, k=2
-    ).count()
-    exact = D.decontaminate(docs, bench_mod=10, n=4).count()
-    assert flagged > exact  # false positives present
-    assert flagged <= n_train
-
-
-def test_bloom_decontaminate_deterministic_and_broadcast(spark):
-    docs = _bloom_docs(spark)
-    df = D.bloom_decontaminate(docs, bench_mod=10, n=4)
-    a = sorted((r.doc_id, r.n_hits) for r in df.collect())
-    b = sorted(
-        (r.doc_id, r.n_hits)
-        for r in D.bloom_decontaminate(docs, bench_mod=10, n=4).collect()
-    )
-    assert a == b
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan  # bitset side broadcast, not shuffled
-
-
-def test_repetition_stats_tiny_doc(spark):
-    """Hand-checked: 'a b a b c' → n=1: 5 grams 3 distinct, top 'a'/'b'
-    share 2/5; n=2: 4 grams 3 distinct ('a b' twice); n=3: 3 unique."""
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [0], "text": ["a b a b c"]})
-    )
-    out = {
-        r.n: r for r in TS.repetition_stats(df).collect()
-    }
-    assert (out[1].total, out[1].n_distinct) == (5, 3)
-    assert out[1].dup_frac == pytest.approx(1 - 3 / 5)
-    assert out[1].top_frac == pytest.approx(2 / 5)
-    assert (out[2].total, out[2].n_distinct) == (4, 3)
-    assert out[2].top_frac == pytest.approx(2 / 4)
-    assert (out[3].total, out[3].n_distinct) == (3, 3)
-    assert out[3].dup_frac == 0.0
-    # doc shorter than n emits no row for that n
-    short = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1], "text": ["xy"]})
-    )
-    got = {r.n for r in TS.repetition_stats(short).collect()}
-    assert got == {1}
-
-
-def test_cluster_canonical_keeps_original_over_copy(spark):
-    """with_self_copies gives every doc an exact duplicate at
-    id+1000000; equal quality ties break to the smaller id, so the
-    canonical keeper is always the ORIGINAL and the copy is the drop."""
-    import pandas as pd
-
-    from mapnik_vector_tile_spark.operators.dedup import cluster_canonical
-
-    docs = spark.createDataFrame(
-        pd.DataFrame({
-            "doc_id": [1, 2, 3],
-            "text": [
-                "the quick brown fox jumps over the lazy dog",
-                "pack my box with five dozen liquor jugs",
-                "sphinx of black quartz judge my vow now and then",
-            ],
-        })
-    )
-    rows = cluster_canonical(docs).collect()
-    n_distinct = {1: 8, 2: 8, 3: 10}  # distinct whitespace tokens per doc
-    for r in rows:
-        assert r.kept_doc_id < 1_000_000, r  # the original, never the copy
-        assert r.cluster_size >= 2  # original + copy at least
-        # exact-duplicate clusters: the keeper IS the representative
-        # (min id) and its quality equals the doc's true distinct count
-        assert r.kept_doc_id == r.cluster_rep, r
-        assert r.kept_n_distinct == n_distinct[r.kept_doc_id], r
-
-
-def test_pii_redact_counts_and_order(spark):
-    from mapnik_vector_tile_spark.operators.textstats import pii_redact
-
-    df = spark.createDataFrame(
-        [
-            (1, "mail a@b.io and c.d+x@e-f.org end"),
-            (2, "ip 10.1.2.3 phone +1 555-0042 done"),
-            (3, "plain words only"),
-            (4, "overlap 1.2.3.4 then 555-123-4567"),
-        ],
-        "doc_id long, text string",
-    )
-    out = {r["doc_id"]: r for r in pii_redact(df).collect()}
-    assert (out[1]["n_emails"], out[1]["n_ipv4"], out[1]["n_phones"]) == (2, 0, 0)
-    assert out[1]["redacted"] == "mail [EMAIL] and [EMAIL] end"
-    assert (out[2]["n_ipv4"], out[2]["n_phones"]) == (1, 1)
-    assert out[2]["redacted"] == "ip [IP] phone [PHONE] done"
-    assert out[3]["redacted"] == "plain words only"
-    # IP rule runs before phone, so dotted quads never half-match as
-    # phones; dashed numbers still do
-    assert out[4]["redacted"] == "overlap [IP] then [PHONE]"
-
-
-def test_chunk_dedup_first_occurrence_and_rebuild(spark):
-    from mapnik_vector_tile_spark.operators.dedup import chunk_dedup
-
-    df = spark.createDataFrame(
-        [
-            (1, "a b c d"),   # chunks: "a b", "c d"
-            (2, "c d a b"),   # both chunks already seen in doc 1
-            (3, "a b x y"),   # "a b" seen; "x y" fresh
-            (4, "a b"),       # whole doc duplicate chunk
-        ],
-        "doc_id long, text string",
-    )
-    out = {
-        r["doc_id"]: (r["n_chunks"], r["n_kept"], r["cleaned"])
-        for r in chunk_dedup(df, chunk_words=2).collect()
-    }
-    assert out[1] == (2, 2, "a b c d")
-    assert out[2] == (2, 0, "")
-    assert out[3] == (2, 1, "x y")
-    assert out[4] == (1, 0, "")
-
-
-def test_chunk_dedup_within_doc_duplicates(spark):
-    from mapnik_vector_tile_spark.operators.dedup import chunk_dedup
-
-    df = spark.createDataFrame(
-        [(1, "p q p q p")], "doc_id long, text string"
-    )
-    out = chunk_dedup(df, chunk_words=2).collect()[0]
-    # chunks "p q", "p q", "p" -> second drops, trailing short kept
-    assert (out["n_chunks"], out["n_kept"], out["cleaned"]) == (3, 2, "p q p")
-
-
-def test_bigram_lm_score_hand_computed(spark):
-    """T31 on a 3-doc corpus small enough to verify by hand.
-
-    Corpus bigrams (prefix -> c1f):
-      d1 'a b a b'  : (a b) x2, (b a) x1
-      d2 'a b c'    : (a b), (b c)
-      d3 'c'        : no bigram (absent from output)
-    c2: (a b)=3, (b a)=1, (b c)=1 ; c1f: a=3, b=2.
-    """
-    from mapnik_vector_tile_spark.operators.textstats import bigram_lm_score
-
-    docs = spark.createDataFrame(
-        [(1, "a b a b"), (2, "a b c"), (3, "c")], ["doc_id", "text"]
-    )
-    out = {r.doc_id: r for r in bigram_lm_score(docs).collect()}
-    assert set(out) == {1, 2}
-
-    # d1: instances (a b: c2=3, c1f=3) x2, (b a: c2=1, c1f=2)
-    #   grp c1f=3: sc2=6 -> 2.0 ; c1f=2: sc2=1 -> 0.5 ; fold 0.5 then 2.0
-    r = out[1]
-    assert r.n_bigrams == 3
-    assert r.sum_prob == (0.0 + 1 / 2) + 6 / 3
-    assert r.min_prob == 0.5
-    assert r.n_rare == 0  # 8*1 >= 2, 8*3 >= 3
-    assert r.mean_prob == r.sum_prob / 3
-
-    # d2: (a b: 3/3) + (b c: 1/2)
-    r = out[2]
-    assert r.n_bigrams == 2
-    assert r.sum_prob == (0.0 + 1 / 2) + 3 / 3
-    assert r.min_prob == 0.5
-    assert r.n_rare == 0
-
-
-def test_bigram_lm_rare_flag(spark):
-    """8*c2 < c1f integer rare-gate: a prefix with 9 distinct successors
-    makes each bigram rare (c2=1, c1f=9)."""
-    from mapnik_vector_tile_spark.operators.textstats import bigram_lm_score
-
-    docs = spark.createDataFrame(
-        [(i, f"x s{i}") for i in range(9)], ["doc_id", "text"]
-    )
-    rows = bigram_lm_score(docs).collect()
-    assert len(rows) == 9
-    for r in rows:
-        assert (r.n_bigrams, r.n_rare) == (1, 1)
-        assert r.sum_prob == 1 / 9
-
-
-def test_remove_boilerplate_contracts(spark):
-    """T32: threshold boundary (>= min_docs removes, below keeps),
-    original line order preserved, pure-boilerplate docs vanish,
-    regex-special separators are treated literally."""
-    from mapnik_vector_tile_spark.operators.textstats import (
-        remove_boilerplate,
-    )
-
-    rows = [(i, f"body {i}\nFOOT\ntail {i}") for i in range(3)]
-    rows.append((3, "solo\nRARE"))
-    rows.append((4, "RARE\nother"))
-    rows.append((5, "FOOT"))  # pure boilerplate -> vanishes
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-
-    # FOOT in 4 distinct docs, RARE in 2: threshold 3 removes only FOOT
-    out = {
-        r.doc_id: r
-        for r in remove_boilerplate(docs, min_docs=3, sep="\n").collect()
-    }
-    assert set(out) == {0, 1, 2, 3, 4}
-    assert out[1].clean_text == "body 1\ntail 1"  # order kept, FOOT gone
-    assert (out[1].n_kept, out[1].n_removed) == (2, 1)
-    assert out[3].clean_text == "solo\nRARE"  # below threshold: intact
-    assert out[4].clean_text == "RARE\nother"
-
-    # threshold exactly at the count removes
-    out4 = {
-        r.doc_id: r.clean_text
-        for r in remove_boilerplate(docs, min_docs=4, sep="\n").collect()
-    }
-    assert out4[1] == "body 1\ntail 1"
-
-    # regex-special separator used literally
-    docs2 = spark.createDataFrame(
-        [(1, "a|b|C"), (2, "x|C"), (3, "y|C")], ["doc_id", "text"]
-    )
-    out2 = {
-        r.doc_id: r.clean_text
-        for r in remove_boilerplate(docs2, min_docs=3, sep="|").collect()
-    }
-    assert out2 == {1: "a|b", 2: "x", 3: "y"}
-
-
-def test_chunk_sliding_windows(spark):
-    """T33: window coverage/overlap invariants on a doc where every
-    boundary case fires — plus the one-chunk short-doc rule."""
-    from mapnik_vector_tile_spark.operators.corpus import chunk_sliding
-
-    words = [f"w{i}" for i in range(23)]
-    docs = spark.createDataFrame(
-        [(1, " ".join(words)), (2, "a b"), (3, "solo")], ["doc_id", "text"]
-    )
-    out = {}
-    for r in chunk_sliding(docs, chunk_words=8, overlap=3).collect():
-        out.setdefault(r.doc_id, {})[r.chunk_idx] = (r.chunk_text, r.n_words)
-    # doc 1: n=23, stride=5, n_chunks = ceil(20/5) = 4
-    assert sorted(out[1]) == [0, 1, 2, 3]
-    assert out[1][0] == (" ".join(words[0:8]), 8)
-    assert out[1][1] == (" ".join(words[5:13]), 8)
-    assert out[1][3] == (" ".join(words[15:23]), 8)
-    # consecutive chunks share exactly `overlap` words
-    for i in range(3):
-        a = out[1][i][0].split()
-        b = out[1][i + 1][0].split()
-        assert a[-3:] == b[:3]
-    # short docs: exactly one (possibly short) chunk
-    assert out[2] == {0: ("a b", 2)}
-    assert out[3] == {0: ("solo", 1)}
-
-
-def test_edit_refine_branches_and_ascii_corpus(spark):
-    """T4b: exact copies keep (d=0), heavy edits drop; the oracle's
-    byte==char assumption is pinned by asserting the corpus is ASCII."""
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.operators import dedup as D
-    from tests.conftest import SF_DIR
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    # the oracle equates DuckDB's byte-level levenshtein with Spark's
-    # char-level one — only sound while the corpus stays ASCII
-    non_ascii = docs.filter(
-        F.length(F.col("text")) != F.octet_length(F.col("text"))
-    ).count()
-    assert non_ascii == 0
-    out = D.edit_refine(D.with_self_copies(docs)).collect()
-    assert len(out) > 0
-    kept = [r for r in out if r.keep]
-    dropped = [r for r in out if not r.keep]
-    assert kept and dropped  # both branches load-bearing
-    # every self-copy pair is distance 0 and kept
-    copies = [r for r in out if r.doc_b == r.doc_a + 1_000_000]
-    assert copies and all(r.edit_dist == 0 and r.keep for r in copies)
-    # gate arithmetic: d*den <= num*max_len exactly
-    for r in out[:50]:
-        assert r.keep == (r.edit_dist * 5 <= 1 * r.max_len)
-
-
-def test_wordpiece_known_segmentations(spark):
-    """T10b: greedy longest-match-first against the committed vocab —
-    known words segment to pinned counts; 4-char pieces beat their own
-    2/3-char prefixes; out-of-vocab chars fall back to unk (id 0) but
-    still advance."""
-    from mapnik_vector_tile_spark.operators.textstats import (
-        WP_VOCAB,
-        wordpiece_tokens,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "hash join customer"),  # 1 + 1 + 3 (cus|tom|er)
-            (2, "slow slo table"),      # slow=1 (beats slo), slo=1, tab|le=2
-            (3, "a-b zzzz"),            # '-' is unk: a|-|b = 3 subwords
-        ],
-        "doc_id long, text string",
-    )
-    out = {r.doc_id: r for r in wordpiece_tokens(docs).collect()}
-    assert out[1].n_words == 3 and out[1].n_subwords == 1 + 1 + 3
-    assert out[2].n_words == 3 and out[2].n_subwords == 1 + 1 + 2
-    # doc 3: 'a-b' -> a, unk, b (3); 'zzzz' -> z z z z (4)
-    assert out[3].n_subwords == 3 + 4
-    # tok_id_sum is exact: doc1 = pos(hash) + pos(join) + pos(cus)+pos(tom)+pos(er)
-    pos = {p: i + 1 for i, p in enumerate(WP_VOCAB)}
-    assert out[1].tok_id_sum == (
-        pos["hash"] + pos["join"] + pos["cus"] + pos["tom"] + pos["er"]
-    )
-    assert all(r.n_overlong == 0 for r in out.values())
-
-
-def test_wordpiece_plan_is_jvm_side(spark):
-    """The unrolled scan must stay in codegen: no Python eval nodes,
-    exactly the one aggregation exchange."""
-    from mapnik_vector_tile_spark.operators.textstats import (
-        wordpiece_tokens,
-    )
-    from tests.conftest import SF_DIR
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    plan = wordpiece_tokens(docs)._jdf.queryExecution().executedPlan().toString()
-    assert "Python" not in plan
-    assert "HashAggregate" in plan
-
+def test_hot_bucket_guard_preserves_normal_output(spark):
+    """On a normal corpus no bucket reaches the limit, so guarded and
+    unguarded phash near-dup output are identical (the oracle
+    contract), for both the banded and the multi-index join."""
+    rng = np.random.default_rng(23)
+    base = rng.integers(-(2**63), 2**63, size=80, dtype=np.int64)
+    rows = [(i, int(h)) for i, h in enumerate(base)]
+    # planted near-dups so the compared sets are not empty
+    rows += [(100 + i, int(base[i]) ^ (1 << i)) for i in range(10)]
+    imgs = spark.createDataFrame(rows, schema="image_id long, phash long")
+    for fn in (D.phash_neardup_pairs, D.phash_neardup_pairs_mi):
+        guarded = {tuple(r) for r in fn(imgs).collect()}
+        unguarded = {
+            tuple(r) for r in fn(imgs, hot_bucket_limit=None).collect()
+        }
+        assert guarded == unguarded and len(guarded) >= 10
 
 def test_embedding_gram_exact(spark):
     import numpy as np
@@ -877,25 +356,6 @@ def test_embedding_gram_exact(spark):
     assert len(out) == 6  # 3*(3+1)/2 upper triangle
     for (i, j), g in out.items():
         assert i <= j and g == want[i, j], ((i, j), g, want[i, j])
-
-
-def test_collocations_pmi_ordering(spark):
-    from mapnik_vector_tile_spark.operators.textstats import collocations
-
-    # "strong glue" appears always together; "the" is everywhere so
-    # "the x" pairs rank below despite higher raw counts
-    docs = [
-        (i, "strong glue " + "the filler " * 10) for i in range(6)
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    out = collocations(df, k=5, min_count=5).collect()
-    top = out[0]
-    assert (top["a"], top["b"]) == ("strong", "glue")
-    assert top["c_ab"] == 6 and top["rnk"] == 1
-    # ranks are 1..k and scores non-increasing
-    scores = [r["score"] for r in out]
-    assert scores == sorted(scores, reverse=True)
-    assert [r["rnk"] for r in out] == list(range(1, len(out) + 1))
 
 
 def test_twostage_topk_funnel(spark):
@@ -946,49 +406,6 @@ def test_mmr_diversity_beats_pure_relevance(spark):
     assert [(r["cid"], r["rnk"]) for r in out] == [(1, 1), (3, 2)]
     assert out[0]["mmr"] == 100          # first pick = raw relevance
     assert out[1]["mmr"] == 50 - 5       # rel - maxsim vs picked
-
-
-def test_incremental_minhash_pairs_semantics(spark):
-    """T42: new docs match the index and each other; index x index
-    pairs never appear; a hot (never-deduped) index bucket yields one
-    representative witness per probe instead of m pairs."""
-    from mapnik_vector_tile_spark.operators.dedup import (
-        incremental_minhash_pairs,
-    )
-
-    text = "alpha beta gamma delta epsilon zeta eta theta"
-    other = "one two three four five six seven eight"
-    index = spark.createDataFrame(
-        [(1, text), (2, text), (3, other)], "doc_id long, text string"
-    )
-    new = spark.createDataFrame(
-        [(101, text), (102, text), (103, "nine ten eleven twelve t13 t14")],
-        "doc_id long, text string",
-    )
-    got = {
-        (r.doc_a, r.doc_b, r.from_index)
-        for r in incremental_minhash_pairs(new, index).collect()
-    }
-    # both identical new docs match both index copies and each other
-    assert (101, 1, True) in got and (101, 2, True) in got
-    assert (102, 1, True) in got and (102, 2, True) in got
-    assert (101, 102, False) in got
-    # the unique new doc matches nothing
-    assert not any(a == 103 for a, _, _ in got)
-    # index x index never appears (1,2 are identical in the index)
-    assert not any(a in (1, 2, 3) for a, _, _ in got)
-    # hot index bucket -> one hub witness per probe
-    hot_index = spark.createDataFrame(
-        [(i, text) for i in range(1, 31)], "doc_id long, text string"
-    )
-    star = {
-        (r.doc_a, r.doc_b)
-        for r in incremental_minhash_pairs(
-            new, hot_index, hot_bucket_limit=8
-        ).collect()
-        if r.from_index
-    }
-    assert star == {(101, 1), (102, 1)}
 
 
 def test_pca_power_matches_float_eigenvector(spark):
@@ -1055,48 +472,3 @@ def test_pca_power_matches_float_eigenvector(spark):
     assert out.vhash == int(sum((i + 1) * int(v[i]) for i in range(d)))
 
 
-def test_cluster_modularity_exact(spark):
-    """T44: the exact Q fraction matches a hand computation for two
-    triangles plus a bridge edge under the true-component labels, and
-    perfect clustering of disconnected cliques gives the known
-    closed form Q = 1 - 1/k."""
-    from fractions import Fraction
-
-    from mapnik_vector_tile_spark.operators.dedup import (
-        cluster_modularity,
-    )
-
-    # two triangles {1,2,3}, {4,5,6} joined by bridge (3,4): one
-    # component, so Q for the single-cluster labeling is 0 - ... all
-    # intra: Q = I/m - sum(d_c^2)/4m^2 = 1 - (2m)^2/4m^2 = 0
-    tri = [(1, 2), (1, 3), (2, 3), (4, 5), (4, 6), (5, 6), (3, 4)]
-    pairs = spark.createDataFrame(tri, "doc_a long, doc_b long")
-    labels1 = spark.createDataFrame(
-        [(i, 1) for i in range(1, 7)], "doc_id long, cluster_rep long"
-    )
-    r = cluster_modularity(pairs, labels1).collect()[0]
-    assert (r.m, r.intra) == (7, 7)
-    assert Fraction(r.q_num, r.q_den) == 0
-    # split into the two triangles: I = 6; d_c = 7 each
-    labels2 = spark.createDataFrame(
-        [(i, 1) for i in (1, 2, 3)] + [(i, 4) for i in (4, 5, 6)],
-        "doc_id long, cluster_rep long",
-    )
-    r2 = cluster_modularity(pairs, labels2).collect()[0]
-    want = Fraction(6, 7) - 2 * Fraction(7, 14) ** 2
-    assert Fraction(r2.q_num, r2.q_den) == want
-    # k disconnected cliques, perfect labels: Q = 1 - 1/k
-    k = 4
-    edges = []
-    labs = []
-    for c in range(k):
-        base = 100 * c
-        for a in range(3):
-            for b in range(a + 1, 3):
-                edges.append((base + a, base + b))
-        labs += [(base + i, base) for i in range(3)]
-    r3 = cluster_modularity(
-        spark.createDataFrame(edges, "doc_a long, doc_b long"),
-        spark.createDataFrame(labs, "doc_id long, cluster_rep long"),
-    ).collect()[0]
-    assert Fraction(r3.q_num, r3.q_den) == 1 - Fraction(1, k)

@@ -1,8 +1,5 @@
-"""Geohash (functions/geohash.py) and BM25 (operators/textstats.py):
-spec parity against an INDEPENDENT textbook implementation, public
-test vectors, prefix-containment, and a hand-computed BM25 check."""
-
-import math
+"""Geohash (functions/geohash.py): spec parity against an INDEPENDENT
+textbook implementation, public test vectors, and prefix-containment."""
 
 import duckdb
 import pytest
@@ -112,38 +109,3 @@ def test_prefix_containment_is_truncation(spark):
     )
     for r in rows:
         assert r.g8[:4] == r.g4
-
-
-def test_bm25_hand_computed(spark):
-    from mapnik_vector_tile_spark.operators.textstats import bm25_topk
-
-    docs = spark.createDataFrame(
-        [
-            (1, "spark merge spark window a b"),
-            (2, "merge merge merge c d e f g"),
-            (3, "a b c d e f g h"),
-        ],
-        "doc_id long, text string",
-    )
-    got = {
-        r.doc_id: r
-        for r in bm25_topk(docs, terms=("spark", "merge"), k=3).collect()
-    }
-    n, avgdl = 3, (6 + 8 + 8) / 3.0
-    k1, b = 1.2, 0.75
-
-    def score(tf_s, tf_m, dl):
-        s = 0.0
-        for tf, df in ((tf_s, 1), (tf_m, 2)):
-            idf = math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            norm = k1 * (1.0 - b + b * (dl / avgdl))
-            s += idf * (tf * (k1 + 1.0)) / (tf + norm)
-        return s
-
-    assert got[1].tf_spark == 2 and got[1].tf_merge == 1
-    assert got[2].tf_spark == 0 and got[2].tf_merge == 3
-    assert got[1].score == pytest.approx(score(2, 1, 6), rel=1e-12)
-    assert got[2].score == pytest.approx(score(0, 3, 8), rel=1e-12)
-    assert got[3].score == 0.0
-    # ranking: doc 1 (two query terms incl. the rarer one) outranks 2
-    assert got[1].rnk == 1 and got[2].rnk == 2 and got[3].rnk == 3

@@ -1,6 +1,6 @@
 """Dangling-import guard: every ``mapnik_vector_tile_spark.*`` import in
-the package, ``jobs/``, ``perfbench/`` and ``__spark_entry__.py`` must
-resolve.
+the package, ``jobs/``, ``perfbench/``, ``tests/`` and
+``__spark_entry__.py`` must resolve.
 
 Most package imports sit inside functions (they run only when that
 path runs), so removing a module can leave one behind that imports
@@ -20,7 +20,7 @@ PKG = "mapnik_vector_tile_spark"
 
 def _sources() -> list[Path]:
     files = [ROOT / "__spark_entry__.py"]
-    for d in (PKG, "jobs", "perfbench"):
+    for d in (PKG, "jobs", "perfbench", "tests"):
         files += sorted((ROOT / d).rglob("*.py"))
     return files
 

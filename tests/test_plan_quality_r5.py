@@ -2,93 +2,15 @@
 
 Same philosophy as test_plan_quality.py / _r4: inspect the PHYSICAL
 PLAN (or its structural consequences), not results — a regression that
-re-introduces a scale hazard (a corpus self-join in substring dedup, a
-shuffle join where the DSIR score table must broadcast, the canonical-
-singles decode silently falling back to per-feature Python) should
-fail here even while small-scale results stay correct."""
+re-introduces a scale hazard (the canonical-singles decode silently
+falling back to per-feature Python, a full sort where a per-partition
+group limit must bound the prune) should fail here even while
+small-scale results stay correct."""
 
 import numpy as np
 import pytest
 
 from pyspark.sql import functions as F
-
-
-def _docs_df(spark, texts):
-    return spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-
-
-def test_substring_dedup_has_no_join(spark):
-    """substring_dup_spans' scale contract: the corpus-frequency gate
-    is a WINDOW over partition(gram), never a gram->positions join and
-    never a corpus self-join — at 10^12 documents any join would
-    double-shuffle the gram fan-out. The physical plan must contain
-    zero join operators of any strategy."""
-    from mapnik_vector_tile_spark.operators import dedup as D
-
-    docs = _docs_df(
-        spark,
-        ["a b c d e f g h i j k l m n o p"] * 3,
-    )
-    plan = D.substring_dup_spans(
-        docs, min_len=12, min_occ=2
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan, plan
-
-
-def test_substring_dedup_variable_length_merge(spark):
-    """The variable-length semantics the fixed-n dup_ngram_spans lacks:
-    two docs sharing a 20-token run (longer than min_len=12) must
-    yield ONE maximal span of exactly 20 tokens, not a pile of 12-gram
-    rows; a doc with two separated shared runs must yield two spans."""
-    from mapnik_vector_tile_spark.operators import dedup as D
-
-    shared = " ".join(f"s{i}" for i in range(20))
-    shared2 = " ".join(f"t{i}" for i in range(14))
-    docs = _docs_df(
-        spark,
-        [
-            shared + " u0 u1 u2 u3 u4 u5 u6 u7 u8 u9 u10 u11 " + shared2,
-            "v0 v1 " + shared,
-            shared2 + " w0",
-        ],
-    )
-    spans = {
-        (r.doc_id, r.span_start, r.span_end)
-        for r in D.substring_dup_spans(docs, min_len=12).collect()
-    }
-    assert spans == {
-        (0, 0, 20),     # maximal 20-token run, single span
-        (0, 32, 46),    # second shared run, separated -> own span
-        (1, 2, 22),
-        (2, 0, 14),
-    }
-
-
-def test_dsir_score_table_broadcasts(spark):
-    """dsir_topk's scale contract: the <=n_buckets-row score table
-    re-enters the corpus-sized gram stream as a BROADCAST hash join
-    (the raw corpus is never shuffled for scoring), and the selection
-    is a TakeOrderedAndProject, not a global Sort+collect."""
-    from mapnik_vector_tile_spark.operators import sampling as SMP
-
-    docs = spark.createDataFrame(
-        [
-            (i, f"w{i % 7} w{(i + 1) % 5} common tail", "en",
-             f"src{i % 4}")
-            for i in range(40)
-        ],
-        "doc_id long, text string, lang string, source string",
-    )
-    df = SMP.dsir_topk(docs, target_sources=("src0",), k=5)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan, plan
-    assert "TakeOrderedAndProject" in plan, plan
-    got = df.collect()
-    assert 0 < len(got) <= 5
-    # raw corpus only (target sources excluded from the output)
-    assert all(r.source != "src0" for r in got)
 
 
 def _point_feats(spark, n=300):
@@ -256,66 +178,6 @@ def test_prototype_prune_uses_window_group_limit(spark):
         sorted((x.rnk for x in v)) == list(range(1, len(v) + 1))
         for v in per.values()
     )
-
-
-def test_ccnet_buckets_sample_and_split(spark):
-    """ccnet_buckets' scale contracts: the per-language quantile
-    sample is a constant-K rank (map-side WindowGroupLimit — the
-    corpus never funnels through |langs| partitions), and the
-    three-way split covers every scorable doc with per-language
-    thresholds actually separating the buckets."""
-    from mapnik_vector_tile_spark.operators import textstats as T
-
-    # score spread: doc i mixes (i%10) common filler bigrams with
-    # doc-unique rare words, so mean_prob varies smoothly per doc
-    docs = spark.createDataFrame(
-        [
-            (
-                i,
-                " ".join(
-                    ["the of"] * (1 + i % 10)
-                    + [f"rare{i}x{j}" for j in range(1 + (i // 10) % 5)]
-                ),
-                "en" if i % 2 else "de",
-            )
-            for i in range(80)
-        ],
-        "doc_id long, text string, lang string",
-    )
-    scored = T.bigram_lm_score(docs)
-    samp_plan = scored.join(
-        docs.select("doc_id", "lang"), "doc_id"
-    )
-    df = T.ccnet_buckets(docs, k_sample=15)
-    got = df.collect()
-    assert len(got) == 80  # every scorable doc bucketed exactly once
-    per = {}
-    for r in got:
-        per.setdefault((r.lang, r.bucket), 0)
-        per[(r.lang, r.bucket)] += 1
-    langs = {lang for lang, _ in per}
-    assert langs == {"en", "de"}
-    for lang in langs:
-        # all three buckets are populated for each language
-        assert {(lang, b) in per for b in ("head", "middle", "tail")} == {
-            True
-        }, per
-    # WindowGroupLimit on the constant-K sample rank
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.operators.sampling import (
-        with_sample_hash,
-    )
-
-    w = Window.partitionBy("lang").orderBy("hord", "doc_id")
-    samp = (
-        with_sample_hash(samp_plan)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 15)
-    )
-    plan = samp._jdf.queryExecution().executedPlan().toString()
-    assert "WindowGroupLimit" in plan, plan
 
 
 def test_decode_singles_scan_rejects_non_canonical():

@@ -1,139 +1,8 @@
-"""Edge-case semantics of the round-5 operators (T45-T48) — the
-corners the oracle corpora don't isolate: empty/degenerate inputs,
-boundary quotas, threshold ties."""
+"""Edge-case semantics of the round-5 operators — the corners the
+oracle corpora don't isolate: empty/degenerate inputs, boundary
+quotas, threshold ties."""
 
 import numpy as np
-import pytest
-
-from pyspark.sql import functions as F
-
-
-def _docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-# --- T45 substring_dup_spans -------------------------------------------------
-
-
-def test_substring_min_occ_counts_total_occurrences(spark):
-    """min_occ counts corpus OCCURRENCES (Lee et al. semantics), not
-    distinct docs: a doc repeating its own 12-gram back-to-back is a
-    duplicated span even if no other doc shares it."""
-    from mapnik_vector_tile_spark.operators import dedup as D
-
-    run = " ".join(f"a{i}" for i in range(12))
-    docs = _docs(
-        spark,
-        [(0, run + " " + run), (1, "x0 x1 x2 x3")],
-    )
-    spans = {
-        (r.doc_id, r.span_start, r.span_end)
-        for r in D.substring_dup_spans(docs, min_len=12).collect()
-    }
-    # the two copies overlap-merge into one maximal 24-token span
-    assert spans == {(0, 0, 24)}
-
-
-def test_substring_min_occ_three_drops_pairs(spark):
-    from mapnik_vector_tile_spark.operators import dedup as D
-
-    run = " ".join(f"b{i}" for i in range(12))
-    docs = _docs(spark, [(0, run), (1, run), (2, "z0 z1")])
-    assert (
-        D.substring_dup_spans(docs, min_len=12, min_occ=3).count() == 0
-    )
-    assert (
-        D.substring_dup_spans(docs, min_len=12, min_occ=2).count() == 2
-    )
-
-
-def test_substring_short_docs_produce_no_spans(spark):
-    from mapnik_vector_tile_spark.operators import dedup as D
-
-    docs = _docs(spark, [(0, "a b c"), (1, "a b c")])
-    assert D.substring_dup_spans(docs, min_len=12).count() == 0
-
-
-def test_strip_matches_span_coverage(spark):
-    """find/cut consistency: per doc, strip_dup_spans' n_removed must
-    equal the total token coverage of substring_dup_spans' maximal
-    spans (same seeds, same merge — two independent formulations of
-    the covered set), and clean_text must be exactly the uncovered
-    tokens in order."""
-    from mapnik_vector_tile_spark.operators import dedup as D
-
-    shared = " ".join(f"s{i}" for i in range(20))
-    docs = _docs(
-        spark,
-        [
-            (0, shared + " u0 u1 u2 u3 u4"),
-            (1, "v0 v1 " + shared + " v2"),
-            (2, "w0 w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12"),
-        ],
-    )
-    spans = D.substring_dup_spans(docs, min_len=12).collect()
-    cov = {}
-    for r in spans:
-        cov[r.doc_id] = cov.get(r.doc_id, 0) + r.span_len
-    got = {r.doc_id: r for r in D.strip_dup_spans(docs, min_len=12).collect()}
-    for d in (0, 1, 2):
-        assert got[d].n_removed == cov.get(d, 0)
-    assert got[0].clean_text == "u0 u1 u2 u3 u4"
-    assert got[1].clean_text == "v0 v1 v2"
-    assert got[2].n_removed == 0
-
-
-def test_strip_fully_duplicated_doc_empties(spark):
-    from mapnik_vector_tile_spark.operators import dedup as D
-
-    run = " ".join(f"d{i}" for i in range(15))
-    docs = _docs(spark, [(0, run), (1, run)])
-    got = {r.doc_id: r for r in D.strip_dup_spans(docs, min_len=12).collect()}
-    assert got[0].clean_text == "" and got[0].n_removed == 15
-    assert got[1].clean_text == ""
-
-
-# --- T46 dsir_topk -----------------------------------------------------------
-
-
-def _dsir_docs(spark):
-    rows = []
-    for i in range(30):
-        src = "src0" if i % 3 == 0 else f"src{1 + i % 2}"
-        # docs sharing vocab with src0 score higher under the target LM
-        text = (
-            "common words here " + ("shared tokens " * (i % 5))
-            + f"uniq{i}"
-        )
-        rows.append((i, text, "en", src))
-    return spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string"
-    )
-
-
-def test_dsir_k_larger_than_corpus_returns_all_raw(spark):
-    from mapnik_vector_tile_spark.operators import sampling as SMP
-
-    docs = _dsir_docs(spark)
-    got = SMP.dsir_topk(docs, target_sources=("src0",), k=1000).collect()
-    n_raw = docs.filter(F.col("source") != "src0").count()
-    assert len(got) == n_raw
-    assert all(r.source != "src0" for r in got)
-
-
-def test_dsir_scores_are_integers_and_deterministic(spark):
-    from mapnik_vector_tile_spark.operators import sampling as SMP
-
-    docs = _dsir_docs(spark)
-    a = SMP.dsir_topk(docs, target_sources=("src0",), k=7).collect()
-    b = SMP.dsir_topk(docs, target_sources=("src0",), k=7).collect()
-    assert [(r.doc_id, r.score) for r in a] == [
-        (r.doc_id, r.score) for r in b
-    ]
-    assert all(isinstance(r.score, int) for r in a)
-    # top-k is ordered (score desc, doc_id asc)
-    ks = [(-r.score, r.doc_id) for r in a]
-    assert ks == sorted(ks)
 
 
 # --- T47 prototype_prune -----------------------------------------------------
@@ -159,53 +28,3 @@ def test_proto_prune_cap_exceeding_cluster_keeps_all(spark):
         v.sort()
         d2s = [d for _, d in v]
         assert d2s == sorted(d2s, reverse=True)
-
-
-# --- T48 ccnet_buckets -------------------------------------------------------
-
-
-def test_ccnet_single_doc_language_is_tail(spark):
-    """A 1-doc language: both thresholds equal its own score, so the
-    <=-tail rule puts it in 'tail' deterministically (no crash, no
-    divide-by-zero)."""
-    from mapnik_vector_tile_spark.operators import textstats as T
-
-    docs = spark.createDataFrame(
-        [
-            (0, "a b a b a b", "xx"),
-            *[
-                (i, "w x " * (2 + i % 7) + f"r{i}", "en")
-                for i in range(1, 30)
-            ],
-        ],
-        "doc_id long, text string, lang string",
-    )
-    got = {r.doc_id: r.bucket for r in T.ccnet_buckets(docs).collect()}
-    assert got[0] == "tail"
-
-
-def test_ccnet_unscorable_docs_absent(spark):
-    from mapnik_vector_tile_spark.operators import textstats as T
-
-    docs = spark.createDataFrame(
-        [
-            (0, "single", "en"),  # < 2 tokens -> no bigrams
-            *[
-                (i, "p q " * (1 + i % 5) + f"u{i}", "en")
-                for i in range(1, 20)
-            ],
-        ],
-        "doc_id long, text string, lang string",
-    )
-    ids = {r.doc_id for r in T.ccnet_buckets(docs).collect()}
-    assert 0 not in ids and len(ids) == 19
-
-
-def test_ccnet_empty_scorable_corpus_raises(spark):
-    from mapnik_vector_tile_spark.operators import textstats as T
-
-    docs = spark.createDataFrame(
-        [(0, "one", "en")], "doc_id long, text string, lang string"
-    )
-    with pytest.raises(ValueError, match="empty scorable"):
-        T.ccnet_buckets(docs)

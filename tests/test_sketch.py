@@ -61,25 +61,6 @@ def test_kmv_plan_uses_takeordered_not_full_sort(spark):
     assert "TakeOrderedAndProject" in plan
     assert "rangepartitioning" not in plan.lower()
 
-def test_topk_tokens_exact_and_takeordered(spark):
-    """Heavy hitters: exact counts vs a Python counter, deterministic
-    tiebreak, and the TakeOrdered plan shape (no full sort shuffle)."""
-    from collections import Counter
-
-    from mapnik_vector_tile_spark.operators.textstats import topk_tokens
-
-    rows = [(i, f"w{i % 7} w{i % 3} common") for i in range(200)]
-    docs = spark.createDataFrame(rows, schema="doc_id long, text string")
-    got = topk_tokens(docs, k=5).collect()
-    c = Counter()
-    for _, t in rows:
-        c.update(t.split(" "))
-    want = sorted(c.items(), key=lambda kv: (-kv[1], kv[0]))[:5]
-    assert [(r.token, r.n) for r in got] == want
-    assert [r.rnk for r in got] == [1, 2, 3, 4, 5]
-    plan = _plan(topk_tokens(docs, k=5))
-    assert "TakeOrderedAndProject" in plan
-
 
 def test_group_quantiles_match_numpy(spark):
     import numpy as np
