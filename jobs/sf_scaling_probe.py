@@ -30,7 +30,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 # heavyweight, sf-table-reading keys across the operator families:
-# flagship pyramid, encode+decode, spatial joins, ANN, sessionize,
+# flagship pyramid, encode+decode, spatial joins, sessionize,
 # space-time stats, cohorts
 KEYS = [
     "q_tile_pyramid_counts",
@@ -38,7 +38,6 @@ KEYS = [
     "q_engine_decode_roundtrip",
     "q_engine_knn",
     "q_engine_pip_partitioned",
-    "q_ann_lsh_bucketed",
     "q_sessionize",
     "q_knox",
     "q_retention",
@@ -73,8 +72,7 @@ def main() -> None:
             "overwrite"
         ).save()
     for sf_dir, tag in ((args.small, "small"), (args.big, "big")):
-        for t in ("orders", "lineitem", "events", "documents",
-                  "embeddings"):
+        for t in ("orders", "lineitem", "events", "documents"):
             spark.read.parquet(f"{sf_dir}/{t}.parquet").write.format(
                 "noop"
             ).mode("overwrite").save()

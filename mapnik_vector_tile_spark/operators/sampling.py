@@ -30,10 +30,10 @@ Hash-keyed sampling and split operators over the ``documents`` table
   materializes.
 
 No reference counterpart (mapnik-vector-tile renders tiles; it has no
-corpus curation) — mandated by the task brief's training-pipeline
-list, same standing as operators/dedup.py. All three are gated by
-full DuckDB oracles (oracle_pairs re-derives the hash via
-splitmix64_sql HUGEINT arithmetic, bit-exact).
+corpus curation); ``sample_hash`` is also the zoom-thinning coin of
+``tiling``. Every public operator here is gated by a full DuckDB
+oracle (oracle_pairs re-derives the hash via splitmix64_sql HUGEINT
+arithmetic, bit-exact).
 """
 
 from __future__ import annotations

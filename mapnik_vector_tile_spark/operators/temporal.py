@@ -461,8 +461,7 @@ def frechet_pairs(
     one row per pair — no shuffle beyond the two array joins);
     trajectories longer than ``max_len`` raise rather than silently
     absorb quadratic work — simplify upstream first
-    (functions/simplify.py), the same bounded-kernel contract as the
-    brute-force ANN baseline.
+    (functions/simplify.py).
 
     Output: (ta, tb, n_a, n_b, frech2)."""
     import numpy as np
@@ -624,7 +623,7 @@ def trend_stats(series: DataFrame, max_dx: int = TREND_MAX_DX) -> DataFrame:
     sorting rationals needs no floats and no cross-multiplied
     comparator, and the selected median pair reduces by gcd to a
     canonical (num, den).  |dy| is gated against the key overflowing
-    int64 (the semdedup idiom).  A longer series (e.g. 31 daily
+    int64.  A longer series (e.g. 31 daily
     points) must rescale/re-index x into the span bound first; the
     bound cannot simply be raised, because lcm(1..43) already
     overflows int64 — the lcm-key trick is inherently a

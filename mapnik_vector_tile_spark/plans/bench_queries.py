@@ -15,8 +15,6 @@ the engine's hot paths at sf0.1 scale:
   q_pip_join       — J3 broadcast point-in-polygon join w/ cell prefilter
   q_knn            — J5 kNN via cell-ring expansion
   q_phash_dedup    — T21 Hamming-band LSH image near-dup (pure JVM join)
-  q_ann_topk       — LSH-bucketed cosine top-k over embeddings (the
-                     scale path; brute force is oracle-only)
   q_raster         — R1 decode + bilinear warp + painter's composite
                      (the binary-heavy mapInPandas leg)
   q_asof           — J7 as-of join (union + one shuffle + running-last)
@@ -140,20 +138,6 @@ def q_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return q_phash_mi(spark, sf_dir)
 
 
-def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN bench headline = the SCALE path (LSH-bucketed per-bucket
-    top-k: one shuffle on bucket id, per-bucket numpy matmul, no
-    driver-side index collect). brute_force_topk stays oracle-only —
-    its toPandas() of the whole index is the documented ≤10⁶-row
-    rerank baseline and would be the one scale-killer plan in the
-    bench suite. Recall vs the brute float top-k is pinned by
-    tests/test_dedup_text.py's ANN recall gates, not re-measured here."""
-    from mapnik_vector_tile_spark.operators import similarity as SIM
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return SIM.lsh_bucketed_topk(emb, k=5)
-
-
 def q_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R1 raster leg: decode + bilinear warp + painter's composite of
     4000 synthetic images into z5 tiles (binary-heavy mapInPandas)."""
@@ -218,14 +202,6 @@ def q_downzoom(spark: SparkSession, sf_dir: str) -> DataFrame:
     return T.fold_tiles(C.downzoom_band(layers, 4))
 
 
-def q_kmeans_b(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T22 two-round Lloyd k-means over the embeddings table."""
-    from mapnik_vector_tile_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return S.kmeans_clusters(emb, k=8, iters=2)
-
-
 def q_scd2_b(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W18 SCD2 CDC merge (r3 family): one window + pure Catalyst fold
     of a CDC batch into an effective-dated dimension — regression
@@ -257,8 +233,6 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_pip_join": q_pip_join,
         "q_knn": q_knn,
         "q_phash_dedup": q_phash_dedup,
-        "q_ann_topk": q_ann_topk,
-        "q_kmeans": q_kmeans_b,
         "q_raster": q_raster,
         "q_asof": q_asof,
         "q_sessionize": q_sessionize_b,

@@ -1,173 +1,19 @@
-"""Oracle pairs for detection-style image-ML post-processing.
+"""Oracle pair for the raster blob labeling (`raster.blob_stats`).
 
 Same contract as `plans.text_oracles.pairs()`: each entry maps a
-query key to (spark_fn, duckdb_sql). The corpora are derived
-deterministically from the driver's parquet tables through the
-committed splitmix64 mix, so both engines synthesize IDENTICAL
-inputs and the value hash is a real end-to-end witness."""
+query key to (spark_fn, duckdb_sql). Both engines regenerate the
+canonical synthetic images from the same pixel CTE chain, so the value
+hash over every image's component summary is a real end-to-end
+witness."""
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
-
-# ---------------------------------------------------------------------------
-# q_nms — greedy per-image non-maximum suppression (detector post-filter)
-# ---------------------------------------------------------------------------
-
-NMS_IMGS = 256
-NMS_PCT = 50
-
-
-def q_nms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Greedy NMS (operators/detect.nms_boxes) with a FULL oracle.
-
-    Corpus: one synthetic detection per orders row — image_id =
-    o_orderkey % 256 (~58 boxes/image at sf0.01, heavy overlap
-    pressure on a 1000 px canvas), box geometry and score hash-derived
-    through splitmix64. The DuckDB twin replays the exact sequential
-    greedy through a recursive CTE carrying the KEPT box lists —
-    score-descending order means one wrong early keep cascades into
-    different later suppressions, so the per-image (kh, ka) pair is
-    sequence-sensitive."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from mapnik_vector_tile_spark.operators.detect import nms_boxes
-
-    det_t = StructType(
-        [
-            StructField("x0", LongType()),
-            StructField("y0", LongType()),
-            StructField("x1", LongType()),
-            StructField("y1", LongType()),
-            StructField("score", LongType()),
-        ]
-    )
-
-    def _det_kernel(k):
-        import numpy as np
-
-        from mapnik_vector_tile_spark.sources.synth import splitmix64
-
-        h = splitmix64(k.to_numpy(np.uint64))
-        x0 = (h % np.uint64(800)).astype(np.int64)
-        y0 = ((h >> np.uint64(12)) % np.uint64(800)).astype(np.int64)
-        w = (
-            np.uint64(16) + (h >> np.uint64(24)) % np.uint64(200)
-        ).astype(np.int64)
-        ht = (
-            np.uint64(16) + (h >> np.uint64(36)) % np.uint64(200)
-        ).astype(np.int64)
-        score = ((h >> np.uint64(46)) % np.uint64(1000000)).astype(np.int64)
-        return pd.DataFrame(
-            {
-                "x0": x0,
-                "y0": y0,
-                "x1": x0 + w,
-                "y1": y0 + ht,
-                "score": score,
-            }
-        )
-
-    det = F.pandas_udf(_det_kernel, det_t)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        F.col("o_orderkey").alias("id")
-    )
-    dets = orders.select(
-        (F.col("id") % F.lit(NMS_IMGS)).alias("image_id"),
-        F.col("id").alias("det_id"),
-        det(F.col("id")).alias("d"),
-    ).select(
-        "image_id", "det_id", "d.x0", "d.y0", "d.x1", "d.y1", "d.score"
-    )
-    return nms_boxes(dets, NMS_PCT)
-
-
-def _nms_det_ctes(n_imgs: int = NMS_IMGS) -> str:
-    """The shared detection-corpus CTE fragment (hh → det0 → det) —
-    used by the NMS twin and the reading-order twin."""
-    from mapnik_vector_tile_spark.plans.oracle_pairs import splitmix64_sql
-
-    sm = splitmix64_sql("id")
-    return f"""hh AS (
-  SELECT o_orderkey AS id, {sm} AS h FROM orders),
-det0 AS (
-  SELECT id % {n_imgs} AS image_id, id AS det_id,
-         CAST(h % 800 AS BIGINT) AS x0,
-         CAST((h // 4096) % 800 AS BIGINT) AS y0,
-         CAST(16 + (h // 16777216) % 200 AS BIGINT) AS bw,
-         CAST(16 + (h // 68719476736) % 200 AS BIGINT) AS bh,
-         CAST((h // 70368744177664) % 1000000 AS BIGINT) AS score
-  FROM hh),
-det AS (
-  SELECT image_id, det_id, x0, y0, x0 + bw AS x1, y0 + bh AS y1, score
-  FROM det0)"""
-
-
-def _sql_nms(n_imgs: int = NMS_IMGS, pct: int = NMS_PCT) -> str:
-    # candidate box pulled from the pack arrays at walk position i+1
-    cx0, cy0 = "p.ax0[w.i + 1]", "p.ay0[w.i + 1]"
-    cx1, cy1 = "p.ax1[w.i + 1]", "p.ay1[w.i + 1]"
-    # suppress iff inter·(100+pct) > pct·(areaKept + areaCand):
-    # division-free integer IoU-above-threshold, strict (boundary kept)
-    hit = f"""len([j FOR j IN generate_series(1, len(w.kx0))
-        IF greatest(0, least(w.kx1[j], {cx1}) - greatest(w.kx0[j], {cx0}))
-           * greatest(0, least(w.ky1[j], {cy1}) - greatest(w.ky0[j], {cy0}))
-           * {100 + pct}
-           > {pct} * ((w.kx1[j] - w.kx0[j]) * (w.ky1[j] - w.ky0[j])
-                      + ({cx1} - {cx0}) * ({cy1} - {cy0}))]) > 0"""
-    return f"""
-WITH RECURSIVE {_nms_det_ctes(n_imgs)},
-packs AS MATERIALIZED (
-  SELECT image_id, COUNT(*) AS n,
-         list(x0 ORDER BY score DESC, det_id) AS ax0,
-         list(y0 ORDER BY score DESC, det_id) AS ay0,
-         list(x1 ORDER BY score DESC, det_id) AS ax1,
-         list(y1 ORDER BY score DESC, det_id) AS ay1,
-         list(det_id ORDER BY score DESC, det_id) AS aid
-  FROM det GROUP BY image_id),
-walk(image_id, i, kx0, ky0, kx1, ky1, kh, ka, n_kept) AS (
-  SELECT image_id, 0,
-         CAST([] AS BIGINT[]), CAST([] AS BIGINT[]),
-         CAST([] AS BIGINT[]), CAST([] AS BIGINT[]),
-         CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(0 AS BIGINT)
-  FROM packs
-  UNION ALL
-  SELECT w.image_id, w.i + 1,
-         CASE WHEN hit THEN kx0 ELSE list_append(kx0, ccx0) END,
-         CASE WHEN hit THEN ky0 ELSE list_append(ky0, ccy0) END,
-         CASE WHEN hit THEN kx1 ELSE list_append(kx1, ccx1) END,
-         CASE WHEN hit THEN ky1 ELSE list_append(ky1, ccy1) END,
-         CASE WHEN hit THEN kh
-              ELSE kh + (cid * 2654435761) % 2147483648 END,
-         CASE WHEN hit THEN ka
-              ELSE ka + (ccx1 - ccx0) * (ccy1 - ccy0) END,
-         CASE WHEN hit THEN n_kept ELSE n_kept + 1 END
-  FROM (
-    SELECT w.*, p.n,
-           {cx0} AS ccx0, {cy0} AS ccy0,
-           {cx1} AS ccx1, {cy1} AS ccy1,
-           p.aid[w.i + 1] AS cid,
-           {hit} AS hit
-    FROM walk w JOIN packs p ON p.image_id = w.image_id
-    WHERE w.i < p.n) w
-)
-SELECT w.image_id, CAST(p.n AS BIGINT) AS n_dets, w.n_kept, w.kh, w.ka
-FROM walk w JOIN packs p ON p.image_id = w.image_id
-WHERE w.i = p.n
-"""
-
 
 def pairs() -> dict[str, tuple[Callable, str | None]]:
     return {
-        "q_nms": (q_nms, _sql_nms()),
         "q_image_blobs": (q_image_blobs, _sql_image_blobs()),
-        "q_reading_order": (q_reading_order, _sql_reading_order()),
-        "q_det_eval": (q_det_eval, _sql_det_eval()),
-        "q_pr_curve": (q_pr_curve, _sql_pr_curve()),
     }
 
 
@@ -204,7 +50,7 @@ def _sql_image_blobs(n: int = BLOB_N) -> str:
     engine's exact answer with no unroll margin to maintain.  Row
     bound: a label reaches only members of its own component, so the
     working set is <= sum(component size^2) — max_comp on this corpus
-    is 27 px (pinned <= 20 relax distance in tests/test_detect.py), a
+    is 27 px (pinned <= 20 relax distance in tests/test_raster.py), a
     few-million-row recursion.  Measured 43 s -> 6 s at sf0.01,
     bit-identical output."""
     from mapnik_vector_tile_spark.plans.oracle_pairs import _img_pixel_ctes
@@ -245,406 +91,4 @@ SELECT 'img_' || lpad(CAST(d.i AS VARCHAR), 12, '0') AS image_id,
 FROM dims d
 LEFT JOIN ag a ON d.i = a.i
 JOIN caps ON d.i = caps.i
-"""
-
-
-# ---------------------------------------------------------------------------
-# q_reading_order — OCR/document layout line grouping + reading order
-# ---------------------------------------------------------------------------
-
-
-def q_reading_order(spark, sf_dir: str) -> DataFrame:
-    """Reading order (operators/detect.reading_order) over the SAME
-    detection corpus as q_nms, with a FULL per-box oracle: the DuckDB
-    twin recomputes the same-line transitive closure with a
-    reachability CTE (smaller-label propagation) and derives
-    line_no/pos with independent window ranks — per-box witness
-    granularity, any wrong closure edge reorders a whole line."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from mapnik_vector_tile_spark.operators.detect import reading_order
-
-    det_t = StructType(
-        [
-            StructField("x0", LongType()),
-            StructField("y0", LongType()),
-            StructField("x1", LongType()),
-            StructField("y1", LongType()),
-            StructField("score", LongType()),
-        ]
-    )
-
-    def _det_kernel(k):
-        from mapnik_vector_tile_spark.sources.synth import splitmix64
-
-        h = splitmix64(k.to_numpy(np.uint64))
-        x0 = (h % np.uint64(800)).astype(np.int64)
-        y0 = ((h >> np.uint64(12)) % np.uint64(800)).astype(np.int64)
-        w = (np.uint64(16) + (h >> np.uint64(24)) % np.uint64(200)).astype(
-            np.int64
-        )
-        ht = (np.uint64(16) + (h >> np.uint64(36)) % np.uint64(200)).astype(
-            np.int64
-        )
-        score = ((h >> np.uint64(46)) % np.uint64(1000000)).astype(np.int64)
-        return pd.DataFrame(
-            {"x0": x0, "y0": y0, "x1": x0 + w, "y1": y0 + ht, "score": score}
-        )
-
-    det = F.pandas_udf(_det_kernel, det_t)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        F.col("o_orderkey").alias("id")
-    )
-    dets = orders.select(
-        (F.col("id") % F.lit(NMS_IMGS)).alias("image_id"),
-        F.col("id").alias("det_id"),
-        det(F.col("id")).alias("d"),
-    ).select("image_id", "det_id", "d.x0", "d.y0", "d.x1", "d.y1")
-    return reading_order(dets)
-
-
-def _sql_reading_order(n_imgs: int = NMS_IMGS) -> str:
-    return f"""
-WITH RECURSIVE {_nms_det_ctes(n_imgs)},
-pairs AS MATERIALIZED (
-  SELECT a.image_id, a.det_id AS s, b.det_id AS d
-  FROM det a JOIN det b
-    ON a.image_id = b.image_id AND a.det_id <> b.det_id
-   AND 2 * (least(a.y1, b.y1) - greatest(a.y0, b.y0))
-       >= least(a.y1 - a.y0, b.y1 - b.y0)),
-reach(image_id, node, r) AS (
-  SELECT image_id, det_id, det_id FROM det
-  UNION
-  SELECT p.image_id, p.s, reach.r
-  FROM pairs p JOIN reach
-    ON reach.image_id = p.image_id AND reach.node = p.d
-  WHERE reach.r < p.s),
-labels AS (
-  SELECT image_id, node AS det_id, MIN(r) AS root
-  FROM reach GROUP BY 1, 2),
-lk AS (
-  SELECT l.image_id, l.root, MIN(d.y0) AS miny
-  FROM labels l JOIN det d
-    ON d.image_id = l.image_id AND d.det_id = l.det_id
-  GROUP BY 1, 2),
-ln AS (
-  SELECT image_id, root,
-         row_number() OVER (PARTITION BY image_id ORDER BY miny, root) - 1
-           AS line_no
-  FROM lk)
-SELECT l.image_id, l.det_id, ln.line_no,
-       row_number() OVER (PARTITION BY l.image_id, ln.line_no
-                          ORDER BY d.x0, l.det_id) - 1 AS pos
-FROM labels l
-JOIN det d ON d.image_id = l.image_id AND d.det_id = l.det_id
-JOIN ln ON ln.image_id = l.image_id AND ln.root = l.root
-"""
-
-
-# ---------------------------------------------------------------------------
-# q_det_eval — greedy IoU matching of predictions to ground truth
-# ---------------------------------------------------------------------------
-
-EVAL_PCT = 50
-
-
-def q_det_eval(spark, sf_dir: str) -> DataFrame:
-    """Detection evaluation (operators/detect.match_detections) with a
-    FULL oracle: predictions are the q_nms corpus; ground truth is an
-    independent hash stream (splitmix64(id+777) over o_orderkey%3==0,
-    ~20 GT boxes/image). The DuckDB twin replays the greedy claim
-    sequence in a recursive CTE carrying the taken-GT list — the
-    pair-sensitive match hash mh catches swapped assignments even at
-    equal TP."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from mapnik_vector_tile_spark.operators.detect import match_detections
-
-    det_t = StructType(
-        [
-            StructField("x0", LongType()),
-            StructField("y0", LongType()),
-            StructField("x1", LongType()),
-            StructField("y1", LongType()),
-            StructField("score", LongType()),
-        ]
-    )
-
-    def _mk_kernel(offset):
-        def _kernel(k):
-            from mapnik_vector_tile_spark.sources.synth import splitmix64
-
-            h = splitmix64(
-                (k + np.int64(offset)).to_numpy(np.uint64)
-            )
-            x0 = (h % np.uint64(800)).astype(np.int64)
-            y0 = ((h >> np.uint64(12)) % np.uint64(800)).astype(np.int64)
-            w = (
-                np.uint64(16) + (h >> np.uint64(24)) % np.uint64(200)
-            ).astype(np.int64)
-            ht = (
-                np.uint64(16) + (h >> np.uint64(36)) % np.uint64(200)
-            ).astype(np.int64)
-            sc = ((h >> np.uint64(46)) % np.uint64(1000000)).astype(np.int64)
-            return pd.DataFrame(
-                {"x0": x0, "y0": y0, "x1": x0 + w, "y1": y0 + ht,
-                 "score": sc}
-            )
-
-        return _kernel
-
-    pk = F.pandas_udf(_mk_kernel(0), det_t)
-    gk = F.pandas_udf(_mk_kernel(777), det_t)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        F.col("o_orderkey").alias("id")
-    )
-    preds = orders.select(
-        (F.col("id") % F.lit(NMS_IMGS)).alias("image_id"),
-        F.col("id").alias("det_id"),
-        pk(F.col("id")).alias("d"),
-    ).select("image_id", "det_id", "d.x0", "d.y0", "d.x1", "d.y1", "d.score")
-    gts = (
-        orders.filter(F.col("id") % 3 == 0)
-        .select(
-            (F.col("id") % F.lit(NMS_IMGS)).alias("image_id"),
-            F.col("id").alias("gt_id"),
-            gk(F.col("id")).alias("d"),
-        )
-        .select("image_id", "gt_id", "d.x0", "d.y0", "d.x1", "d.y1")
-    )
-    return match_detections(preds, gts, EVAL_PCT)
-
-
-def _sql_det_eval(n_imgs: int = NMS_IMGS, pct: int = EVAL_PCT) -> str:
-    from mapnik_vector_tile_spark.plans.oracle_pairs import splitmix64_sql
-
-    smg = splitmix64_sql("(id + 777)")
-    # current pred box at walk position i+1
-    px0, py0 = "p.ax0[w.i + 1]", "p.ay0[w.i + 1]"
-    px1, py1 = "p.ax1[w.i + 1]", "p.ay1[w.i + 1]"
-    parea = f"(({px1}) - ({px0})) * (({py1}) - ({py0}))"
-    # per-GT j pieces
-    inter = (
-        f"greatest(0, least(g.gx1[j], {px1}) - greatest(g.gx0[j], {px0}))"
-        f" * greatest(0, least(g.gy1[j], {py1}) - greatest(g.gy0[j], {py0}))"
-    )
-    garea = "(g.gx1[j] - g.gx0[j]) * (g.gy1[j] - g.gy0[j])"
-    union = f"({garea} + {parea} - ({inter}))"
-    cands = f"""list_sort([struct_pack(
-        k := -((({inter}) << 34) // greatest({union}, 1)),
-        g := g.gid[j])
-      FOR j IN generate_series(1, len(g.gid))
-      IF NOT list_contains(w.tk, g.gid[j])
-         AND ({inter}) * {100 + pct} > {pct} * ({garea} + {parea})])"""
-    return f"""
-WITH RECURSIVE {_nms_det_ctes(n_imgs)},
-gt AS (
-  SELECT id % {n_imgs} AS image_id, id AS gt_id,
-         CAST(({smg}) % 800 AS BIGINT) AS x0,
-         CAST((({smg}) // 4096) % 800 AS BIGINT) AS y0,
-         CAST(({smg}) % 800 + 16 + (({smg}) // 16777216) % 200 AS BIGINT)
-           AS x1,
-         CAST((({smg}) // 4096) % 800 + 16
-              + (({smg}) // 68719476736) % 200 AS BIGINT) AS y1
-  FROM hh WHERE id % 3 = 0),
-ppacks AS MATERIALIZED (
-  SELECT image_id, COUNT(*) AS n,
-         list(x0 ORDER BY score DESC, det_id) AS ax0,
-         list(y0 ORDER BY score DESC, det_id) AS ay0,
-         list(x1 ORDER BY score DESC, det_id) AS ax1,
-         list(y1 ORDER BY score DESC, det_id) AS ay1,
-         list(det_id ORDER BY score DESC, det_id) AS aid
-  FROM det GROUP BY image_id),
-gpacks AS MATERIALIZED (
-  SELECT image_id, COUNT(*) AS ng,
-         list(x0 ORDER BY gt_id) AS gx0, list(y0 ORDER BY gt_id) AS gy0,
-         list(x1 ORDER BY gt_id) AS gx1, list(y1 ORDER BY gt_id) AS gy1,
-         list(gt_id ORDER BY gt_id) AS gid
-  FROM gt GROUP BY image_id),
-walk(image_id, i, tk, tp, mh) AS (
-  SELECT image_id, 0, CAST([] AS BIGINT[]), CAST(0 AS BIGINT),
-         CAST(0 AS BIGINT)
-  FROM ppacks
-  UNION ALL
-  SELECT w.image_id, w.i + 1,
-         CASE WHEN hit THEN list_append(tk, bg) ELSE tk END,
-         CASE WHEN hit THEN tp + 1 ELSE tp END,
-         CASE WHEN hit
-              THEN (mh + ((cid * 31 + bg) * 2654435761) % 2147483648)
-                   % 2147483648
-              ELSE mh END
-  FROM (
-    SELECT w.*,
-           COALESCE(len(cl) > 0, FALSE) AS hit,
-           CASE WHEN COALESCE(len(cl) > 0, FALSE) THEN cl[1].g
-                ELSE CAST(0 AS BIGINT) END AS bg
-    FROM (
-      SELECT w.*, p.n, p.aid[w.i + 1] AS cid, {cands} AS cl
-      FROM walk w
-      JOIN ppacks p ON p.image_id = w.image_id
-      LEFT JOIN gpacks g ON g.image_id = w.image_id
-      WHERE w.i < p.n) w) w
-)
-SELECT w.image_id, CAST(p.n AS BIGINT) AS n_pred,
-       CAST(COALESCE(g.ng, 0) AS BIGINT) AS n_gt, w.tp, w.mh
-FROM walk w
-JOIN ppacks p ON p.image_id = w.image_id
-LEFT JOIN gpacks g ON g.image_id = w.image_id
-WHERE w.i = p.n
-"""
-
-
-def q_pr_curve(spark, sf_dir: str):
-    """T12s PR-curve points over the det-eval corpus, FULL oracle:
-    per-detection TP flags from the greedy claim chain (the walk CTE
-    emits its per-step hit instead of aggregating) ranked globally by
-    (score DESC, image_id, det_id) with cumulative TP/FP."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from mapnik_vector_tile_spark.operators.detect import (
-        match_detection_flags,
-        pr_curve,
-    )
-
-    det_t = StructType(
-        [
-            StructField("x0", LongType()),
-            StructField("y0", LongType()),
-            StructField("x1", LongType()),
-            StructField("y1", LongType()),
-            StructField("score", LongType()),
-        ]
-    )
-
-    def _mk_kernel(offset):
-        def _kernel(k):
-            from mapnik_vector_tile_spark.sources.synth import splitmix64
-
-            h = splitmix64(
-                (k + np.int64(offset)).to_numpy(np.uint64)
-            )
-            x0 = (h % np.uint64(800)).astype(np.int64)
-            y0 = ((h >> np.uint64(12)) % np.uint64(800)).astype(np.int64)
-            w = (
-                np.uint64(16) + (h >> np.uint64(24)) % np.uint64(200)
-            ).astype(np.int64)
-            ht = (
-                np.uint64(16) + (h >> np.uint64(36)) % np.uint64(200)
-            ).astype(np.int64)
-            sc = ((h >> np.uint64(46)) % np.uint64(1000000)).astype(np.int64)
-            return pd.DataFrame(
-                {"x0": x0, "y0": y0, "x1": x0 + w, "y1": y0 + ht,
-                 "score": sc}
-            )
-
-        return _kernel
-
-    pk = F.pandas_udf(_mk_kernel(0), det_t)
-    gk = F.pandas_udf(_mk_kernel(777), det_t)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        F.col("o_orderkey").alias("id")
-    )
-    preds = orders.select(
-        (F.col("id") % F.lit(NMS_IMGS)).alias("image_id"),
-        F.col("id").alias("det_id"),
-        pk(F.col("id")).alias("d"),
-    ).select("image_id", "det_id", "d.x0", "d.y0", "d.x1", "d.y1", "d.score")
-    gts = (
-        orders.filter(F.col("id") % 3 == 0)
-        .select(
-            (F.col("id") % F.lit(NMS_IMGS)).alias("image_id"),
-            F.col("id").alias("gt_id"),
-            gk(F.col("id")).alias("d"),
-        )
-        .select("image_id", "gt_id", "d.x0", "d.y0", "d.x1", "d.y1")
-    )
-    return pr_curve(match_detection_flags(preds, gts, EVAL_PCT))
-
-
-def _sql_pr_curve(n_imgs: int = NMS_IMGS, pct: int = EVAL_PCT) -> str:
-    from mapnik_vector_tile_spark.plans.oracle_pairs import splitmix64_sql
-
-    smg = splitmix64_sql("(id + 777)")
-    px0, py0 = "p.ax0[w.i + 1]", "p.ay0[w.i + 1]"
-    px1, py1 = "p.ax1[w.i + 1]", "p.ay1[w.i + 1]"
-    parea = f"(({px1}) - ({px0})) * (({py1}) - ({py0}))"
-    inter = (
-        f"greatest(0, least(g.gx1[j], {px1}) - greatest(g.gx0[j], {px0}))"
-        f" * greatest(0, least(g.gy1[j], {py1}) - greatest(g.gy0[j], {py0}))"
-    )
-    garea = "(g.gx1[j] - g.gx0[j]) * (g.gy1[j] - g.gy0[j])"
-    union = f"({garea} + {parea} - ({inter}))"
-    cands = f"""list_sort([struct_pack(
-        k := -((({inter}) << 34) // greatest({union}, 1)),
-        g := g.gid[j])
-      FOR j IN generate_series(1, len(g.gid))
-      IF NOT list_contains(w.tk, g.gid[j])
-         AND ({inter}) * {100 + pct} > {pct} * ({garea} + {parea})])"""
-    return f"""
-WITH RECURSIVE {_nms_det_ctes(n_imgs)},
-gt AS (
-  SELECT id % {n_imgs} AS image_id, id AS gt_id,
-         CAST(({smg}) % 800 AS BIGINT) AS x0,
-         CAST((({smg}) // 4096) % 800 AS BIGINT) AS y0,
-         CAST(({smg}) % 800 + 16 + (({smg}) // 16777216) % 200 AS BIGINT)
-           AS x1,
-         CAST((({smg}) // 4096) % 800 + 16
-              + (({smg}) // 68719476736) % 200 AS BIGINT) AS y1
-  FROM hh WHERE id % 3 = 0),
-ppacks AS MATERIALIZED (
-  SELECT image_id, COUNT(*) AS n,
-         list(x0 ORDER BY score DESC, det_id) AS ax0,
-         list(y0 ORDER BY score DESC, det_id) AS ay0,
-         list(x1 ORDER BY score DESC, det_id) AS ax1,
-         list(y1 ORDER BY score DESC, det_id) AS ay1,
-         list(det_id ORDER BY score DESC, det_id) AS aid,
-         list(score ORDER BY score DESC, det_id) AS asc_
-  FROM det GROUP BY image_id),
-gpacks AS MATERIALIZED (
-  SELECT image_id, COUNT(*) AS ng,
-         list(x0 ORDER BY gt_id) AS gx0, list(y0 ORDER BY gt_id) AS gy0,
-         list(x1 ORDER BY gt_id) AS gx1, list(y1 ORDER BY gt_id) AS gy1,
-         list(gt_id ORDER BY gt_id) AS gid
-  FROM gt GROUP BY image_id),
-walk(image_id, i, tk, lcid, lscore, lhit) AS (
-  SELECT image_id, 0, CAST([] AS BIGINT[]), CAST(NULL AS BIGINT),
-         CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)
-  FROM ppacks
-  UNION ALL
-  SELECT w.image_id, w.i + 1,
-         CASE WHEN hit THEN list_append(tk, bg) ELSE tk END,
-         cid, cscore, CASE WHEN hit THEN 1 ELSE 0 END
-  FROM (
-    SELECT w.*,
-           COALESCE(len(cl) > 0, FALSE) AS hit,
-           CASE WHEN COALESCE(len(cl) > 0, FALSE) THEN cl[1].g
-                ELSE CAST(0 AS BIGINT) END AS bg
-    FROM (
-      SELECT w.*, p.n, p.aid[w.i + 1] AS cid,
-             p.asc_[w.i + 1] AS cscore, {cands} AS cl
-      FROM walk w
-      JOIN ppacks p ON p.image_id = w.image_id
-      LEFT JOIN gpacks g ON g.image_id = w.image_id
-      WHERE w.i < p.n) w) w
-),
-flags AS (
-  SELECT image_id, lcid AS det_id, lscore AS score, lhit AS hit
-  FROM walk WHERE i >= 1)
-SELECT CAST(row_number() OVER w AS BIGINT) AS rnk,
-       image_id, det_id, score, CAST(hit AS BIGINT) AS hit,
-       CAST(SUM(hit) OVER (w ROWS UNBOUNDED PRECEDING) AS BIGINT)
-         AS n_tp,
-       CAST(SUM(1 - hit) OVER (w ROWS UNBOUNDED PRECEDING) AS BIGINT)
-         AS n_fp
-FROM flags
-WINDOW w AS (ORDER BY score DESC, image_id, det_id)
 """

@@ -68,7 +68,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01", *only: str) -> int:
     con.sql("SET preserve_insertion_order=false")
     for t in (
         "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
+        "documents"
     ).split():
         con.sql(
             f"CREATE OR REPLACE VIEW {t} AS "

@@ -23,7 +23,7 @@ from mapnik_vector_tile_spark.plans import shared_sql as S
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
+    "documents"
 ).split()
 
 def load_views(spark: SparkSession, sf_dir: str) -> None:

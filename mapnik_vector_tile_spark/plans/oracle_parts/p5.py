@@ -507,135 +507,6 @@ SELECT CAST((SELECT COUNT(*) FROM e) AS BIGINT) AS n_edges,
 
 _ENGINE_PAIRS["q_triangles"] = (q_triangles, _sql_triangles())
 
-MMR_Q = 50
-
-MMR_M = 12
-
-MMR_K = 5
-
-def q_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MMR diversity rerank (similarity.mmr_select) with a FULL
-    oracle: 50 queries x 12 candidates with splitmix integer
-    relevances and pairwise similarities; DuckDB unrolls the 5 greedy
-    picks as chained argmax levels (k-1 similarity lookups per level)
-    — one wrong max-sim-to-picked anywhere reorders the chain."""
-    import numpy as np
-    import pandas as pd
-
-    from mapnik_vector_tile_spark.operators.similarity import mmr_select
-    from mapnik_vector_tile_spark.sources.synth import splitmix64
-
-    def gen_c(it):
-        for pdf in it:
-            rows = {"qid": [], "cid": [], "rel": []}
-            for q in pdf["id"]:
-                q = int(q)
-                j = np.arange(MMR_M, dtype=np.uint64)
-                h = splitmix64(np.uint64(q * 131) + j) >> np.uint64(11)
-                for jj in range(MMR_M):
-                    rows["qid"].append(q)
-                    rows["cid"].append(jj)
-                    rows["rel"].append(int(h[jj] % 100000))
-            yield pd.DataFrame(rows)
-
-    def gen_s(it):
-        for pdf in it:
-            rows = {"qid": [], "ca": [], "cb": [], "sim": []}
-            for q in pdf["id"]:
-                q = int(q)
-                for a in range(MMR_M):
-                    for b in range(a + 1, MMR_M):
-                        h = int(
-                            splitmix64(
-                                np.array(
-                                    [q * 10007 + a * 13 + b],
-                                    dtype=np.uint64,
-                                )
-                            )[0]
-                        ) >> 11
-                        rows["qid"].append(q)
-                        rows["ca"].append(a)
-                        rows["cb"].append(b)
-                        rows["sim"].append(h % 80000)
-            yield pd.DataFrame(rows)
-
-    cands = spark.range(MMR_Q).mapInPandas(
-        gen_c, "qid long, cid long, rel long"
-    )
-    sims = spark.range(MMR_Q).mapInPandas(
-        gen_s, "qid long, ca long, cb long, sim long"
-    )
-    return mmr_select(cands, sims, k=MMR_K)
-
-def _sql_mmr(k: int = MMR_K) -> str:
-    hr = splitmix64_sql("(q * 131 + j)")
-    hs = splitmix64_sql("(q * 10007 + a * 13 + b)")
-    # chained greedy levels: level i picks argmax(rel - maxsim vs
-    # p1..p_{i-1}), ties cid ASC
-    levels = []
-    for i in range(1, k + 1):
-        joins = []
-        gle = []
-        for j in range(1, i):
-            joins.append(
-                f"  LEFT JOIN sims s{j} ON s{j}.qid = c.qid"
-                f" AND s{j}.ca = c.cid AND s{j}.cb = p.p{j}"
-            )
-            gle.append(f"COALESCE(s{j}.sim, 0)")
-        maxsim = (
-            "GREATEST(" + ", ".join(gle) + ")" if gle else "0"
-        )
-        notin = " AND ".join(
-            f"c.cid <> p.p{j}" for j in range(1, i)
-        ) or "TRUE"
-        prevcols = ", ".join(f"p.p{j}" for j in range(1, i))
-        carry = (prevcols + ", ") if prevcols else ""
-        levels.append(
-            f""",
-l{i} AS MATERIALIZED (
-  SELECT qid, {carry.replace('p.', '')}cid AS p{i}, rel AS r{i},
-         mmr AS m{i}
-  FROM (
-    SELECT c.qid, {carry}c.cid, c.rel,
-           c.rel - {maxsim} AS mmr,
-           row_number() OVER (
-             PARTITION BY c.qid
-             ORDER BY c.rel - {maxsim} DESC, c.cid) AS rn
-    FROM cand c
-    JOIN p{i - 1} p ON p.qid = c.qid
-{chr(10).join(joins) if joins else ''}
-    WHERE {notin}
-  ) WHERE rn = 1),
-p{i} AS (SELECT * FROM l{i})"""
-        )
-    emits = "\nUNION ALL\n".join(
-        f"SELECT qid, p{i} AS cid, r{i} AS rel, m{i} AS mmr,"
-        f" CAST({i} AS BIGINT) AS rnk FROM l{i}"
-        for i in range(1, k + 1)
-    )
-    return f"""
-WITH qs AS (SELECT unnest(generate_series(0, {MMR_Q - 1})) AS q),
-js AS (SELECT unnest(generate_series(0, {MMR_M - 1})) AS j),
-cand AS MATERIALIZED (
-  SELECT CAST(q AS BIGINT) AS qid, CAST(j AS BIGINT) AS cid,
-         CAST((({hr}) // 2048) % 100000 AS BIGINT) AS rel
-  FROM qs, js),
-pr AS (SELECT a.j AS a, b.j AS b FROM js a JOIN js b ON b.j > a.j),
-s0 AS (
-  SELECT CAST(q AS BIGINT) AS qid, CAST(a AS BIGINT) AS ca,
-         CAST(b AS BIGINT) AS cb,
-         CAST((({hs}) // 2048) % 80000 AS BIGINT) AS sim
-  FROM qs, pr),
-sims AS MATERIALIZED (
-  SELECT qid, ca, cb, sim FROM s0
-  UNION ALL
-  SELECT qid, cb AS ca, ca AS cb, sim FROM s0),
-p0 AS (SELECT DISTINCT qid FROM cand){''.join(levels)}
-{emits}
-"""
-
-_ENGINE_PAIRS["q_mmr"] = (q_mmr, _sql_mmr())
-
 def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """view→click→purchase funnel (temporal.funnel_stages) over the
     events table with a FULL oracle: DuckDB replays each step's
@@ -2958,86 +2829,6 @@ FROM ex
 """
 
 _ENGINE_PAIRS["q_isotonic"] = (q_isotonic, _sql_isotonic())
-
-def q_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact per-cell ROC-AUC (detect.auc_exact) of the event value
-    as a purchase predictor — the q_isotonic corpus viewed through
-    the ranking-eval lens.  FULL oracle: DuckDB folds the identical
-    per-score counts, exclusive negative prefix and 2U numerator."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from mapnik_vector_tile_spark.operators.detect import auc_exact
-
-    c_t = StructType(
-        [StructField("cx", LongType()), StructField("cy", LongType())]
-    )
-
-    def _cell_kernel(k):
-        from mapnik_vector_tile_spark.sources.synth import splitmix64
-
-        h = splitmix64(k.to_numpy(np.uint64))
-        return pd.DataFrame(
-            {
-                "cx": (h % np.uint64(CT_GRID)).astype(np.int64),
-                "cy": ((h >> np.uint64(8)) % np.uint64(CT_GRID)).astype(
-                    np.int64
-                ),
-            }
-        )
-
-    ck = F.pandas_udf(_cell_kernel, c_t)
-    flags = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .select(
-            F.floor(F.col("value")).cast("long").alias("score"),
-            (F.col("event_type") == "purchase").cast("long").alias("hit"),
-            ck(F.col("event_id")).alias("c"),
-        )
-        .select(
-            (F.col("c.cx") * 256 + F.col("c.cy")).alias("g"),
-            "score", "hit",
-        )
-    )
-    return auc_exact(flags)
-
-def _sql_auc(grid: int = CT_GRID) -> str:
-    h = splitmix64_sql("event_id")
-    return f"""
-WITH src AS (
-  SELECT CAST(({h}) % {grid} AS BIGINT) * 256
-         + CAST((({h}) // 256) % {grid} AS BIGINT) AS g,
-         CAST(floor("value") AS BIGINT) AS score,
-         CAST(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END
-              AS BIGINT) AS hit
-  FROM events),
-ps AS (
-  SELECT g, score, CAST(SUM(hit) AS BIGINT) AS pos_s,
-         CAST(SUM(1 - hit) AS BIGINT) AS neg_s
-  FROM src GROUP BY g, score),
-rk AS (
-  SELECT g, pos_s, neg_s,
-         COALESCE(SUM(neg_s) OVER (PARTITION BY g ORDER BY score
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                  0) AS neg_below
-  FROM ps),
-ag AS (
-  SELECT g, CAST(SUM(pos_s) AS BIGINT) AS n_pos,
-         CAST(SUM(neg_s) AS BIGINT) AS n_neg,
-         CAST(SUM(pos_s * (2 * neg_below + neg_s)) AS BIGINT)
-           AS auc_num
-  FROM rk GROUP BY g)
-SELECT g, n_pos, n_neg, auc_num,
-       CAST(2 * n_pos * n_neg AS BIGINT) AS auc_den,
-       CASE WHEN n_pos = 0 OR n_neg = 0 THEN NULL
-            ELSE CAST(auc_num AS DOUBLE)
-                   / CAST(2 * n_pos * n_neg AS DOUBLE) END AS auc_dbl
-FROM ag
-"""
-
-_ENGINE_PAIRS["q_auc"] = (q_auc, _sql_auc())
 
 
 def q_attr_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

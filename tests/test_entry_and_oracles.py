@@ -21,7 +21,7 @@ def duck():
     con = duckdb.connect()
     for t in (
         "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
+        "documents"
     ).split():
         con.sql(
             f"CREATE OR REPLACE VIEW {t} AS "
@@ -59,3 +59,14 @@ def test_rows_only_set_is_pinned():
     o = set(entrymod.oracle_sql())
     assert o <= q
     assert q - o == set()
+
+
+def test_record_first_names_registered_keys():
+    """Every key the registry orders first is a registered key, so a
+    removed query's stale entry fails here by name instead of being
+    skipped by sql_pairs() without a word."""
+    from mapnik_vector_tile_spark.plans.oracle_parts.p3 import _RECORD_FIRST
+
+    keys = list(entrymod.queries())
+    assert [k for k in _RECORD_FIRST if k not in keys] == []
+    assert keys[: len(_RECORD_FIRST)] == list(_RECORD_FIRST)

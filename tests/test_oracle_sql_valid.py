@@ -13,7 +13,7 @@ import pytest
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
+    "documents"
 ).split()
 
 SF_DIR = "/root/testdata/sf0.001"

@@ -161,19 +161,6 @@ def test_overzoom_narrow_no_exchange(spark, tiles_parquet):
     assert len(re.findall(r"\(\d+\) Exchange", plan_r)) == 1
 
 
-def test_quantize_embeddings_codegen_no_python(spark):
-    """T20 stays JVM-side: no Python UDF eval and no Exchange in the
-    quantization projection."""
-    from mapnik_vector_tile_spark.operators.similarity import (
-        quantize_embeddings,
-    )
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    plan = _plan(quantize_embeddings(emb))
-    assert "Python" not in plan
-    assert "Exchange" not in plan
-
-
 def test_hot_bucket_guard_broadcasts_tiny_stats(spark):
     """The banded-join hot-bucket guard must tag rows via a BROADCAST
     of the over-limit bucket table (≤ N/limit rows by construction) —
@@ -190,28 +177,6 @@ def test_hot_bucket_guard_broadcasts_tiny_stats(spark):
     # consumers re-scan the checkpoint, not the upstream pipeline
     assert "Scan ExistingRDD" in plan
     assert "Window" not in plan
-
-
-def test_bench_ann_path_has_no_driver_collect(spark):
-    """q_ann_topk (bench) must be the LSH-bucketed plan: one shuffle
-    on the bucket id and zero driver-side index materialization. The
-    brute path collects the whole embedding table at plan-BUILD time —
-    so building this plan must schedule no Spark job at all."""
-    from mapnik_vector_tile_spark.operators.similarity import (
-        lsh_bucketed_topk,
-    )
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    emb.schema  # pay the parquet listing/schema job OUTSIDE the count
-    tracker = spark.sparkContext.statusTracker()
-    before = len(tracker.getJobIdsForGroup(None) or [])
-    df = lsh_bucketed_topk(emb, k=5)
-    after = len(tracker.getJobIdsForGroup(None) or [])
-    assert after == before, "building the ANN bench plan ran a driver job"
-    plan = _plan(df)
-    ex = [ln for ln in plan.splitlines()
-          if ln.strip().startswith("(") and "Exchange" in ln]
-    assert len(ex) == 1, ex  # ONE bucket-id shuffle, nothing else
 
 
 def test_group_quantiles_single_shuffle(spark):
@@ -334,17 +299,6 @@ def test_downzoom_single_bounded_shuffle(spark, tiles_parquet):
     # count the tree edge form
     assert plan.count("+- Exchange") == 1, plan
     assert "CartesianProduct" not in plan, plan
-
-
-def test_kmeans_assignment_no_python_one_shuffle_per_round(spark):
-    """T22: the final assignment plan is Column-only (broadcast
-    literal centroids, no Python nodes) and carries no join."""
-    from mapnik_vector_tile_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    plan = _plan(S.kmeans_clusters(emb, k=4, iters=1))
-    assert "Python" not in plan and "BatchEvalPython" not in plan, plan
-    assert "Join" not in plan, plan
 
 
 def test_tilejson_two_level_partial_aggregation(spark, tiles_parquet):
@@ -528,26 +482,6 @@ def test_pyramid_build_is_one_encode_exchange(spark, tmp_path):
     assert jobs == 3
 
 
-def test_alignment_filter_single_projection_no_shuffle(spark):
-    """T36: the cross-modal gate on same-row tower columns must be ONE
-    projection — zero Exchange, zero Python — so it stays a codegen
-    map stage over the pair table at 100 TB."""
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.operators.similarity import (
-        alignment_filter,
-    )
-
-    df = spark.range(100).select(
-        F.col("id").alias("pair_id"),
-        F.array(*[F.rand(1) for _ in range(8)]).alias("img_vec"),
-        F.array(*[F.rand(2) for _ in range(8)]).alias("txt_vec"),
-    )
-    plan = _plan(alignment_filter(df).select("pair_id", "align_keep"))
-    assert "Exchange" not in plan, plan
-    assert "Python" not in plan and "BatchEvalPython" not in plan
-
-
 def test_spatial_block_split_no_exchange(spark):
     """T17d: block assignment + split coin is a narrow projection (one
     Arrow-batched hash, no shuffle) — a split that shuffled the fact
@@ -614,31 +548,6 @@ def test_zoom_thin_filter_is_scan_level(spark):
     assert "Join" not in plan
 
 
-def test_pq_final_encode_zero_shuffle(spark):
-    """T37: after training, the PQ code-assignment + ADC projection
-    must be one narrow Column-math pass — no Exchange, no Python UDF
-    (zip_with/aggregate lambdas stay JVM-side)."""
-    import numpy as np
-    import pandas as pd
-
-    from mapnik_vector_tile_spark.operators import similarity as S
-
-    rng = np.random.RandomState(2)
-    pdf = pd.DataFrame(
-        {
-            "vec_id": list(range(16)),
-            "embedding": [
-                np.asarray(v, dtype=np.float32) for v in rng.randn(16, 8)
-            ],
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    out = S.pq_encode(df, m=2, ksub=4, iters=1)
-    plan = _plan(out)
-    assert "Exchange" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
 def test_utfgrid_jvm_side_bounded_exchanges(spark):
     """S9: the UTFGrid encode is pure Column math — no Python eval
     anywhere in the plan, and only the cell aggregate / tile window /
@@ -698,31 +607,6 @@ def test_voronoi_broadcasts_seeds_and_partial_aggs(spark):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
     assert "partial_min" in plan or "partial" in plan
     assert "PythonUDF" not in plan
-
-
-def test_embedding_gram_shuffles_only_triangle_rows(spark):
-    """T38: the only Exchange in the Gram plan carries the per-
-    partition triangle partials (i, j, g) — 3 tiny columns — never
-    the embedding vectors themselves."""
-    from mapnik_vector_tile_spark.operators.similarity import (
-        embedding_gram,
-    )
-
-    emb = spark.createDataFrame(
-        [(1, [1.0, 2.0]), (2, [0.5, -1.0])],
-        "vec_id long, embedding array<float>",
-    )
-    import re
-
-    plan = _plan(embedding_gram(emb))
-    nodes = re.findall(r"^\(\d+\) Exchange", plan, re.M)
-    assert len(nodes) == 1
-    args = [
-        ln for ln in plan.splitlines()
-        if "hashpartitioning" in ln
-    ]
-    assert args and all("embedding" not in ln for ln in args)
-    assert plan.count("HashAggregate") >= 2  # partial + final
 
 
 def test_hilbert_zero_shuffle_projection(spark):
@@ -821,24 +705,6 @@ def test_erosion_round_is_join_plus_count_aware_min(spark):
     assert "CartesianProduct" not in plan
     assert "PythonUDF" not in plan
     assert "partial" in plan
-
-
-def test_pr_curve_no_data_proportional_global_window(spark):
-    """T12s two-pass PR rank: the detection-proportional window is
-    hash-partitioned by score; the ONLY SinglePartition exchange
-    feeds the domain-bounded per-score offsets relation, which is
-    then broadcast back."""
-    from mapnik_vector_tile_spark.operators.detect import pr_curve
-
-    flags = spark.range(100).selectExpr(
-        "id % 7 AS image_id", "id AS det_id", "id % 5 AS score",
-        "id % 2 AS hit",
-    )
-    plan = _plan(pr_curve(flags))
-    assert "hashpartitioning(score" in plan
-    assert plan.count("SinglePartition") == 1
-    assert "BroadcastExchange" in plan
-    assert "PythonUDF" not in plan
 
 
 def test_interval_concurrency_segmented_partitioned_sweep(spark):

@@ -3,12 +3,10 @@
 Same philosophy as test_plan_quality.py / _r4: inspect the PHYSICAL
 PLAN (or its structural consequences), not results — a regression that
 re-introduces a scale hazard (the canonical-singles decode silently
-falling back to per-feature Python, a full sort where a per-partition
-group limit must bound the prune) should fail here even while
+falling back to per-feature Python) should fail here even while
 small-scale results stay correct."""
 
 import numpy as np
-import pytest
 
 from pyspark.sql import functions as F
 
@@ -144,40 +142,6 @@ def test_decode_mixed_corpus_tile_granular_fallback(spark):
                     )
                 )
     assert got == sorted(exp)
-
-
-def test_prototype_prune_uses_window_group_limit(spark):
-    """prototype_prune's scale contract: the constant per-cluster cap
-    must compile to a map-side WindowGroupLimit (each upstream
-    partition forwards <= cap rows per cluster), not a full
-    per-cluster sort of the corpus — with k tiny, a global
-    rank-then-filter would funnel 100 TB through k partitions."""
-    import numpy as np
-
-    from mapnik_vector_tile_spark.operators.similarity import (
-        prototype_prune,
-    )
-
-    rng = np.random.default_rng(7)
-    rows = [
-        (i, [float(x) for x in rng.normal(size=8)]) for i in range(200)
-    ]
-    emb = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    )
-    df = prototype_prune(emb, cap=5, k=4, iters=1)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "WindowGroupLimit" in plan, plan
-    got = df.collect()
-    per = {}
-    for r in got:
-        per.setdefault(r.cluster, []).append(r)
-    assert all(len(v) <= 5 for v in per.values())
-    # hardest-first: within each cluster the kept d2s are the largest
-    assert all(
-        sorted((x.rnk for x in v)) == list(range(1, len(v) + 1))
-        for v in per.values()
-    )
 
 
 def test_decode_singles_scan_rejects_non_canonical():

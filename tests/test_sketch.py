@@ -2,8 +2,6 @@
 graceful small-cardinality behavior, shard mergeability, and the
 scale-critical plan shape (TakeOrdered, not a full sort shuffle)."""
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from mapnik_vector_tile_spark.operators import sketch
