@@ -7,12 +7,12 @@ with the committed sf0.1 tables (verified column-for-column against
 `DESCRIBE` of the driver parquet):
 
   orders 1.5M·sf/0.1, lineitem 6M·sf/0.1, events 1M·sf/0.1,
-  customer/part/supplier/documents/embeddings scaled likewise,
+  customer/part/supplier/documents scaled likewise,
   region/nation fixed dims.
 
 Values are deterministic (numpy PCG64 seed 42) and match the driver
 corpus's ranges/cardinalities (order status/priority mixes, 1995-2001
-date ranges, event types, unit-norm 64-d embeddings, word-soup docs
+date ranges, event types, word-soup docs
 at the same length profile) so query selectivities — and therefore
 scaling exponents — are comparable.  These tables are NOT the
 driver's bytes: correctness at this scale is still exact (the DuckDB
@@ -176,15 +176,6 @@ def main() -> None:
         "source": [f"src{i % 20}" for i in range(n_doc)],
         "n_chars": np.array([len(t) for t in texts], dtype=np.int64),
     }), args.out, "documents")
-
-    n_vec = int(2000 * k)
-    emb = rng.normal(size=(n_vec, 64)).astype(np.float32)
-    emb /= np.linalg.norm(emb, axis=1, keepdims=True)
-    write(pd.DataFrame({
-        "vec_id": np.arange(n_vec, dtype=np.int64),
-        "embedding": list(emb),
-        "label": rng.integers(0, 10, n_vec).astype(np.int32),
-    }), args.out, "embeddings")
 
 
 if __name__ == "__main__":

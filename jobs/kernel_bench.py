@@ -31,7 +31,6 @@ import os
 import sys
 import time
 
-import numpy as np
 import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))

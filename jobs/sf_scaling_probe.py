@@ -30,17 +30,14 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 # heavyweight, sf-table-reading keys across the operator families:
-# flagship pyramid, encode+decode, spatial joins, sessionize,
-# space-time stats, cohorts
+# flagship pyramid, encode+decode, spatial joins, space-time stats
 KEYS = [
     "q_tile_pyramid_counts",
     "q_engine_tile_counts",
     "q_engine_decode_roundtrip",
     "q_engine_knn",
     "q_engine_pip_partitioned",
-    "q_sessionize",
     "q_knox",
-    "q_retention",
 ]
 
 

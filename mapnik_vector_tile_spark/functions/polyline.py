@@ -20,7 +20,6 @@ oracle compares encoded strings; decode proves losslessness)."""
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 

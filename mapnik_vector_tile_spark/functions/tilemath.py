@@ -18,8 +18,6 @@ All tile addressing is XYZ (y=0 at north, y grows south).
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F

@@ -4,10 +4,6 @@ operators.
 All of them are pure DataFrame algebra (JVM/codegen end-to-end — no
 Python in any hot path):
 
-* ``h14`` — H14(s) = int(md5(s)[:14], 16) ∈ [0, 2^56), bit-identical in
-  Spark (`conv(substring(md5(x),1,14),16,10)`) and DuckDB
-  (`CAST('0x'||substring(md5(x),1,14) AS BIGINT)`), so the sketches
-  built on it (operators.sketch) have value-hash-exact oracles.
 * ``_hot_buckets`` / ``HOT_BUCKET_LIMIT`` — the hot-bucket star guard
   of every banded self-join (phash here, co-location buckets in
   operators.geostats).
@@ -23,10 +19,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def h14(col) -> F.Column:
-    return F.conv(F.substring(F.md5(col), 1, 14), 16, 10).cast("long")
 
 
 # Star-cap threshold for degenerate LSH buckets: a (band, value) bucket

@@ -181,8 +181,8 @@ def geofence_transitions(
     it starts inside (pinned — no phantom exit for users who begin
     outside).
 
-    One window shuffle on user_id (the same shape as sessionize);
-    whole-stage-codegen Column logic only. Output:
+    One window shuffle on user_id, then one lag-compare per row inside
+    each user's sorted run; whole-stage-codegen Column logic only. Output:
     (user_id, event_id, kind, cx, cy)."""
     from pyspark.sql import Window
 
@@ -867,7 +867,7 @@ def cell_anomalies(
     """ST13 spatial anomaly flags — "which places are unusually busy
     THIS week vs their own history", the baseline-vs-observed scan
     behind event detection and incident triage.  located:
-    (cx, cy, t) integer seconds; week = t div WEEK_S.  Baseline =
+    (cx, cy, t) integer seconds; week = t div (7·24·3600).  Baseline =
     weeks strictly before `obs_week` (a cell's own history only);
     observed = counts in `obs_week`.
 

@@ -149,54 +149,6 @@ def stratified_sample(
     return with_sample_hash(df, id_col).filter(_bucket() < thr)
 
 
-# sequence-packing defaults: calibrated so the sf0.01 corpus produces
-# several bins per (stratum, shard) — a non-vacuous oracle.
-PACK_BUDGET = 2048
-N_PACK_SHARDS = 4
-
-
-def pack_contiguous(
-    df: DataFrame,
-    budget: int = PACK_BUDGET,
-    n_shards: int = N_PACK_SHARDS,
-    stratum_col: str = "lang",
-    cost_col: str = "n_chars",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Deterministic sequence packing (the pretraining sample-packing
-    op): assign each document to a fixed-budget bin by cumulative cost
-    in id order, within (stratum, hash-shard).
-
-    bin = floor(exclusive-prefix-sum(cost) / budget) — contiguous
-    packing with spillover: a doc that crosses a budget boundary opens
-    the next bin (greedy-reset packing, where the remainder resets at
-    each boundary, is NOT prefix-sum expressible and would serialize;
-    this variant is the distributed-friendly one and is exactly
-    SQL-oracle-able). The hash shard bounds every window to
-    |stratum|/n_shards rows — the 100 TB story: packing state never
-    exceeds a shard, shards never mix, and adding shards is the knob
-    that keeps per-partition sort + running-sum memory flat as the
-    corpus grows. The bin divide is INTEGER division (Spark ``DIV``,
-    DuckDB ``//`` — identical on nonnegative bigints), exact at any
-    prefix-sum magnitude and any budget; a float floor(cum/budget)
-    would round across a bin boundary for cum near 2^53.
-    """
-    d = with_sample_hash(df, id_col).withColumn(
-        "shard", F.col("hord") % F.lit(n_shards)
-    )
-    w = (
-        Window.partitionBy(stratum_col, "shard")
-        .orderBy(id_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum = F.coalesce(F.sum(cost_col).over(w), F.lit(0))
-    return (
-        d.withColumn("_cum", cum)
-        .withColumn("bin", F.expr(f"_cum DIV {int(budget)}"))
-        .drop("_cum")
-    )
-
-
 def balanced_topk(
     df: DataFrame,
     k: int,
@@ -302,141 +254,3 @@ def ar_bucket_batches(
         batch.alias("batch_id"),
         (batch < n_full).alias("is_full"),
     )
-
-
-# --- temperature-based domain mixture (T30) ---------------------------------
-
-
-def temperature_resample(
-    df: DataFrame,
-    budget_rows: int,
-    stratum_col: str = "lang",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Temperature-based corpus mixing (the multilingual-LM sampling
-    rule, XLM-R/mT5 lineage, at T = 2): domain i's target share is
-    proportional to n_i^(1/2), which up-weights tail domains and
-    down-weights the head relative to natural frequency. Given a row
-    budget M, the expected take is m_i = M·√n_i / Σ√n_j capped at
-    n_i, applied as a deterministic per-row hash coin (same splitmix64
-    bucket as assign_split — resumable, engine-agnostic).
-
-    EXACT arithmetic: weights use integer isqrt(n_i) (not float sqrt),
-    so the per-domain keep threshold
-    min(BUCKETS, BUCKETS·M·isqrt(n_i) // (Σ isqrt · n_i)) is a pure
-    BIGINT expression both engines replay bit-for-bit — no FP sum
-    order anywhere.
-
-    Scale shape: ONE tiny partial-agg'd count per domain collected to
-    the driver (|domains| scalars — the convergence-witness pattern),
-    thresholds re-enter as a broadcast CASE literal, the coin filter
-    is map-side; no shuffle touches the corpus. Returns the kept rows
-    with their domain threshold attached (rate_bp, per BUCKETS)."""
-    import math
-
-    counts = {
-        r[0]: int(r[1])
-        for r in df.groupBy(stratum_col).count().collect()
-    }
-    if not counts:
-        raise ValueError("temperature_resample: empty input")
-    s = sum(math.isqrt(n) for n in counts.values())
-    rates = {
-        k: min(
-            BUCKETS,
-            BUCKETS * budget_rows * math.isqrt(n) // (s * n),
-        )
-        for k, n in counts.items()
-    }
-    expr = None
-    for k in sorted(rates):
-        cond = F.col(stratum_col) == k
-        expr = (
-            F.when(cond, F.lit(rates[k]))
-            if expr is None
-            else expr.when(cond, F.lit(rates[k]))
-        )
-    rate = expr.otherwise(F.lit(0))
-    out = with_sample_hash(df, id_col).withColumn("rate_bp", rate)
-    return out.filter(
-        F.pmod(F.col("hord"), F.lit(BUCKETS)) < F.col("rate_bp")
-    ).drop("hord")
-
-
-# --- UniMax epoch-capped mixture (T30b) --------------------------------------
-
-
-def unimax_resample(
-    df: DataFrame,
-    budget_rows: int,
-    max_epochs: int = 3,
-    stratum_col: str = "lang",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """UniMax corpus mixing (Chung et al. 2023, "UniMax: Fairer and
-    More Effective Language Sampling"): allocate a row budget as
-    uniformly as possible across domains, capping each domain at
-    ``max_epochs`` passes over its data. Ascending-size greedy: for
-    each domain (smallest first), take
-    m = min(n·E, remaining // domains_left) — small domains get their
-    full epoch cap, large ones split the leftover evenly. Pure
-    integer arithmetic, replayed by the oracle as a recursive CTE.
-
-    Unlike temperature_resample (subsampling only), UniMax UPSAMPLES:
-    a domain with m > n emits each row floor(m/n) times plus one more
-    on a deterministic hash coin with rate (m mod n)/n — so the
-    expected take is exactly m and re-runs are bit-identical. Output
-    rows carry ``copy`` (0-based repetition index), ``base_copies``
-    and ``rate_bp``.
-
-    Scale shape: one tiny per-domain count to the driver (the
-    convergence-witness pattern), the greedy loop is O(|domains|)
-    driver-side scalars, thresholds re-enter as broadcast CASE
-    literals, and the explode is map-side (sequence length ≤ E+1) —
-    no shuffle touches the corpus."""
-    if max_epochs < 1:
-        raise ValueError("unimax_resample: max_epochs must be >= 1")
-    counts = {
-        r[0]: int(r[1]) for r in df.groupBy(stratum_col).count().collect()
-    }
-    if not counts:
-        raise ValueError("unimax_resample: empty input")
-    remaining = int(budget_rows)
-    alloc: dict[str, int] = {}
-    order = sorted(counts, key=lambda k: (counts[k], k))
-    for pos, k in enumerate(order):
-        quota = max(remaining, 0) // (len(order) - pos)
-        m = min(counts[k] * max_epochs, quota)
-        alloc[k] = m
-        remaining -= m
-    base, rate = None, None
-    for k in sorted(alloc):
-        n = counts[k]
-        b = alloc[k] // n
-        rbp = BUCKETS * (alloc[k] % n) // n
-        cond = F.col(stratum_col) == k
-        base = (
-            F.when(cond, F.lit(b))
-            if base is None
-            else base.when(cond, F.lit(b))
-        )
-        rate = (
-            F.when(cond, F.lit(rbp))
-            if rate is None
-            else rate.when(cond, F.lit(rbp))
-        )
-    out = (
-        with_sample_hash(df, id_col)
-        .withColumn("base_copies", base.otherwise(F.lit(0)))
-        .withColumn("rate_bp", rate.otherwise(F.lit(0)))
-        .withColumn(
-            "n_copies",
-            F.col("base_copies")
-            + (F.pmod(F.col("hord"), F.lit(BUCKETS)) < F.col("rate_bp"))
-            .cast("long"),
-        )
-        .filter(F.col("n_copies") > 0)
-    )
-    return out.withColumn(
-        "copy", F.explode(F.sequence(F.lit(0), F.col("n_copies") - 1))
-    ).drop("hord", "n_copies")

@@ -21,8 +21,9 @@ Scale shape — NO global sort, NO unbounded collect:
 2. x cut values at ranks i·ceil(n/S) via histogram rank-select
    (``rank_select``: one map-side-combining histogram aggregate whose
    driver summary is ≤ n_buckets rows, then one narrow second pass
-   over only the candidate buckets — same two-pass strategy as
-   operators/sketch.global_quantiles, generalized to integer ranks);
+   over only the candidate buckets: the first pass finds the bucket
+   that holds each wanted rank, the second selects the exact value
+   inside it);
 3. slab assignment is a pure Column fold over the ≤ S−1 broadcast cut
    literals (no join, no shuffle);
 4. y cut values PER SLAB via one grouped histogram (driver summary
@@ -48,7 +49,6 @@ from __future__ import annotations
 
 import math
 
-import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 

@@ -17,12 +17,8 @@ the engine's hot paths at sf0.1 scale:
   q_phash_dedup    — T21 Hamming-band LSH image near-dup (pure JVM join)
   q_raster         — R1 decode + bilinear warp + painter's composite
                      (the binary-heavy mapInPandas leg)
-  q_asof           — J7 as-of join (union + one shuffle + running-last)
-  q_sessionize     — W3 gap sessionization (lag + running-sum fold)
-  q_interval       — J6 interval-overlap join (grid buckets, ~11.5M pairs)
   q_hex_density    — T18 hex binning + ring-1 disk smoothing (Catalyst)
   q_balanced_sample— T17 exact-k/stratum sample (WindowGroupLimit)
-  q_scd2           — W18 SCD2 CDC merge (r3 family, one-window fold)
   q_delta_sssp     — G1b delta-stepping SSSP (driver-loop-bounded)
 
 Scale notes: every query here is shuffle-bounded, not driver-bounded;
@@ -147,28 +143,6 @@ def q_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
     return R.rasterize_images(images_df(spark, 4000), z=5, tile_size=64)
 
 
-def q_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J7 as-of join over the events log (one shuffle, running-last
-    window)."""
-    from mapnik_vector_tile_spark.plans.oracle_pairs import q_asof_clicks_views
-
-    return q_asof_clicks_views(spark, sf_dir)
-
-
-def q_sessionize_b(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (lag + running-sum boundary fold)."""
-    from mapnik_vector_tile_spark.plans.oracle_pairs import q_sessionize
-
-    return q_sessionize(spark, sf_dir)
-
-
-def q_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J6 interval-overlap join (grid buckets; ~11.5M pairs at sf0.1)."""
-    from mapnik_vector_tile_spark.plans.oracle_pairs import q_interval_overlap
-
-    return q_interval_overlap(spark, sf_dir)
-
-
 def q_hex_density_b(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T18 hex binning + ring-1 disk smoothing (pure Catalyst)."""
     from mapnik_vector_tile_spark.plans import shared_sql as S
@@ -183,7 +157,7 @@ def q_hex_density_b(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_balanced_sample_b(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T17 exact-k-per-stratum sample (map-side WindowGroupLimit)."""
-    from mapnik_vector_tile_spark.plans.text_oracles import q_balanced_sample
+    from mapnik_vector_tile_spark.plans.sampling_oracles import q_balanced_sample
 
     return q_balanced_sample(spark, sf_dir)
 
@@ -200,15 +174,6 @@ def q_downzoom(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = T.assign_tiles(feats, 8, 8, buffer_units=0)
     layers = T.encode_layers(assigned, n_salts=16)
     return T.fold_tiles(C.downzoom_band(layers, 4))
-
-
-def q_scd2_b(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W18 SCD2 CDC merge (r3 family): one window + pure Catalyst fold
-    of a CDC batch into an effective-dated dimension — regression
-    canary for the warehouse-maintenance surface."""
-    from mapnik_vector_tile_spark.plans.oracle_pairs import q_scd2
-
-    return q_scd2(spark, sf_dir)
 
 
 def q_delta_sssp_b(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -234,10 +199,6 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_knn": q_knn,
         "q_phash_dedup": q_phash_dedup,
         "q_raster": q_raster,
-        "q_asof": q_asof,
-        "q_sessionize": q_sessionize_b,
-        "q_interval": q_interval,
-        "q_scd2": q_scd2_b,
         "q_delta_sssp": q_delta_sssp_b,
         "q_hex_density": q_hex_density_b,
         "q_balanced_sample": q_balanced_sample_b,

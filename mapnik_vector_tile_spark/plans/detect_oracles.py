@@ -1,6 +1,6 @@
 """Oracle pair for the raster blob labeling (`raster.blob_stats`).
 
-Same contract as `plans.text_oracles.pairs()`: each entry maps a
+Same contract as `plans.sampling_oracles.pairs()`: each entry maps a
 query key to (spark_fn, duckdb_sql). Both engines regenerate the
 canonical synthetic images from the same pixel CTE chain, so the value
 hash over every image's component summary is a real end-to-end

@@ -13,8 +13,6 @@ driver records a rows-only check, as documented.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 
 from mapnik_vector_tile_spark.functions.tilemath import W, cell_id_sql_expr
@@ -392,146 +390,6 @@ WHERE {neg}EXISTS (
   WHERE p.mx >= r.cx - r.hw AND p.mx <= r.cx + r.hw
     AND p.my >= r.cy - r.hw AND p.my <= r.cy + r.hw
 )
-"""
-
-def q_asof_clicks_views(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J7 as-of join: per click event, the same user's latest
-    prior-or-equal view — engine path is the union+merge plan (one
-    shuffle, running-last window), oracle the quadratic
-    row_number-over-candidates form."""
-    from mapnik_vector_tile_spark.operators import temporal as T
-
-    return T.clicks_asof_views(spark, sf_dir)
-
-def q_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J6 interval overlap join: error-event windows x purchase-event
-    windows, engine path = 1-D grid-bucket equi-join with
-    first-common-bucket dedup; oracle a plain range-predicate join."""
-    from mapnik_vector_tile_spark.operators import temporal as T
-
-    return T.incidents_overlap_promos(spark, sf_dir)
-
-_SQL_ASOF = """
-WITH ev AS (SELECT event_id, user_id, event_type, epoch_us(ts) AS t
-            FROM events),
-c AS (SELECT event_id, user_id, t FROM ev WHERE event_type = 'click'),
-v AS (SELECT event_id, user_id, t FROM ev WHERE event_type = 'view')
-SELECT click_id, view_id, gap_us FROM (
-  SELECT c.event_id AS click_id,
-         COALESCE(v.event_id, -1) AS view_id,
-         COALESCE(c.t - v.t, -1) AS gap_us,
-         row_number() OVER (PARTITION BY c.event_id
-                            ORDER BY v.t DESC, v.event_id DESC) AS rn
-  FROM c LEFT JOIN v ON v.user_id = c.user_id AND v.t <= c.t
-) ranked
-WHERE rn = 1
-"""
-
-def q_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the §2.10 stream-stream watermarked join
-    (streaming/joins.py): every same-user (view, click) pair with the
-    click inside the view's 24 h attribution window. The STREAMING
-    execution of this exact plan is asserted equal to this batch result
-    in tests/test_streaming.py."""
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.streaming.joins import attribution_join
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return attribution_join(
-        ev.filter(F.col("event_type") == "view"),
-        ev.filter(F.col("event_type") == "click"),
-    ).select(
-        "view_id",
-        "click_id",
-        "user_id",
-        F.col("gap_us").cast("bigint").alias("gap_us"),
-    )
-
-_SQL_ATTRIBUTION = """
-WITH ev AS (SELECT event_id, user_id, event_type, epoch_us(ts) AS t
-            FROM events),
-v AS (SELECT event_id, user_id, t FROM ev WHERE event_type = 'view'),
-c AS (SELECT event_id, user_id, t FROM ev WHERE event_type = 'click')
-SELECT v.event_id AS view_id, c.event_id AS click_id,
-       v.user_id AS user_id, c.t - v.t AS gap_us
-FROM v JOIN c ON c.user_id = v.user_id
-             AND c.t >= v.t AND c.t <= v.t + 86400000000
-"""
-
-_SQL_INTERVAL_OVERLAP = """
-WITH ev AS (SELECT event_id AS id, event_type, epoch_us(ts) AS t
-            FROM events),
-a AS (SELECT id, t AS s, t + (1 + id % 23) * 3600000000 AS e
-      FROM ev WHERE event_type = 'error'),
-b AS (SELECT id, t AS s, t + (1 + id % 17) * 3600000000 AS e
-      FROM ev WHERE event_type = 'purchase')
-SELECT a.id AS a_id, b.id AS b_id,
-       LEAST(a.e, b.e) - GREATEST(a.s, b.s) AS overlap_us
-FROM a JOIN b ON a.s <= b.e AND b.s <= a.e
-"""
-
-def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (4 h rule) per user — lag-compare +
-    running-sum boundary assignment, then a per-session fold."""
-    from mapnik_vector_tile_spark.operators import temporal as T
-
-    return T.user_sessions(spark, sf_dir)
-
-_SQL_SESSIONIZE = """
-WITH ev AS (SELECT event_id AS id, user_id, epoch_us(ts) AS t
-            FROM events),
-marked AS (
-  SELECT id, user_id, t,
-         CASE WHEN t - lag(t) OVER w > 14400000000 THEN 1 ELSE 0 END
-           AS is_new
-  FROM ev
-  WINDOW w AS (PARTITION BY user_id ORDER BY t, id)
-),
-sess AS (
-  SELECT id, user_id, t,
-         SUM(is_new) OVER (PARTITION BY user_id ORDER BY t, id
-                           ROWS UNBOUNDED PRECEDING) AS session_idx
-  FROM marked
-)
-SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
-       COUNT(*) AS n_events,
-       MAX(t) - MIN(t) AS dur_us,
-       MIN(id) AS min_id
-FROM sess
-GROUP BY 1, 2
-"""
-
-def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Built-in session_window (batch mode — identical plan to the
-    streaming leg in streaming/sessions.py) must reproduce the custom
-    sessionize oracle row-for-row (minus the session index, which
-    session_window does not expose)."""
-    from mapnik_vector_tile_spark.streaming import sessions as SS
-
-    return SS.batch_session_counts(spark, sf_dir)
-
-_SQL_SESSION_WINDOW = """
-WITH ev AS (SELECT event_id AS id, user_id, epoch_us(ts) AS t
-            FROM events),
-marked AS (
-  SELECT id, user_id, t,
-         CASE WHEN t - lag(t) OVER w > 14400000000 THEN 1 ELSE 0 END
-           AS is_new
-  FROM ev
-  WINDOW w AS (PARTITION BY user_id ORDER BY t, id)
-),
-sess AS (
-  SELECT id, user_id, t,
-         SUM(is_new) OVER (PARTITION BY user_id ORDER BY t, id
-                           ROWS UNBOUNDED PRECEDING) AS session_idx
-  FROM marked
-)
-SELECT user_id, COUNT(*) AS n_events,
-       MAX(t) - MIN(t) AS dur_us,
-       MIN(id) AS min_id
-FROM sess
-GROUP BY user_id, session_idx
 """
 
 def q_engine_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3229,83 +3087,6 @@ def splitmix64_sql(x: str) -> str:
         + f" AS z1 FROM (SELECT {z0} AS z0))))))"
     )
 
-def q_distinct_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T-class cardinality sketch with a FULL oracle: KMV (bottom-k)
-    distinct estimate of events.event_id (operators.sketch). The
-    md5-prefix hash, the k-smallest set, and the single float division
-    are all cross-engine exact, so the DuckDB twin value-hashes the
-    estimate itself — a sketch whose approximation is deterministic
-    and auditable, unlike approx_count_distinct's private HLL layout.
-    Estimator quality (≈6% @ k=256) is pinned by tests/test_sketch.py."""
-    from mapnik_vector_tile_spark.operators.sketch import kmv_distinct
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return kmv_distinct(events, "event_id", k=256)
-
-def _sql_distinct_kmv(k: int = 256) -> str:
-    space = "72057594037927936e0"  # 2^56 as a DOUBLE literal
-    return f"""
-WITH h AS (
-  SELECT DISTINCT
-    CAST('0x' || substring(md5(CAST(event_id AS VARCHAR)), 1, 14) AS BIGINT)
-      AS hv
-  FROM events),
-kk AS (SELECT hv FROM h ORDER BY hv LIMIT {k}),
-m AS (SELECT MAX(hv) AS kth, COUNT(*) AS n_used FROM kk)
-SELECT CAST({k} AS INT) AS k,
-       CAST(n_used AS BIGINT) AS n_used,
-       kth,
-       CAST(floor((n_used - 1) * {space} / kth) AS BIGINT) AS est_distinct
-FROM m
-"""
-
-def q_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T-class cardinality sketch #2, completing the sketch family
-    (KMV bottom-k, Count-Min heavy hitters, HLL): HyperLogLog distinct
-    estimate of events.event_id (operators.sketch.hll_distinct). The
-    bucket/rho register math is pure integer bit algebra on the shared
-    md5-prefix hash, the harmonic-mean denominator is an EXACT BIGINT
-    (2^(w+1)-scaled), and the single float divide uses one shared
-    literal — so the DuckDB twin value-hashes the raw estimate itself.
-    Estimator quality (≈3.25% @ m=1024) pinned by tests/test_sketch.py."""
-    from mapnik_vector_tile_spark.operators.sketch import hll_distinct
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return hll_distinct(events, "event_id", p=10)
-
-def _sql_distinct_hll(p: int = 10) -> str:
-    from mapnik_vector_tile_spark.operators.sketch import hll_scale_const
-
-    m = 1 << p
-    w = 56 - p
-    mask = (1 << w) - 1
-    scale = S.flit(hll_scale_const(p))
-    return f"""
-WITH h AS (
-  SELECT CAST('0x' || substring(md5(CAST(event_id AS VARCHAR)), 1, 14)
-              AS BIGINT) AS hv
-  FROM events),
-br AS (
-  SELECT hv >> {w} AS b,
-         CASE WHEN (hv & {mask}) = 0 THEN {w + 1}
-              ELSE {w + 1} - length(bin(hv & {mask})) END AS r
-  FROM h),
-regs AS (SELECT b, MAX(r) AS reg FROM br GROUP BY b),
-agg AS (SELECT COUNT(*) AS n_present,
-               COALESCE(SUM(CAST(1 AS BIGINT) << ({w + 1} - reg)), 0)
-                 AS s_present
-        FROM regs)
-SELECT CAST({m} AS INT) AS m,
-       CAST({m} - n_present AS BIGINT) AS v_zero,
-       CAST(s_present + ({m} - n_present) * (CAST(1 AS BIGINT) << {w + 1})
-            AS BIGINT) AS s_scaled,
-       CAST(floor({scale} /
-            CAST(s_present + ({m} - n_present) * (CAST(1 AS BIGINT) << {w + 1})
-                 AS DOUBLE))
-            AS BIGINT) AS est_raw
-FROM agg
-"""
-
 def q_spatial_block_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T-class × spatial: leakage-safe geographic train/val/test split
     (operators.sampling.spatial_block_split — block cross-validation:
@@ -3424,38 +3205,6 @@ SELECT 'img_' || lpad(CAST(i AS VARCHAR), 12, '0') AS image_id,
        CAST(16 + (i * 11) % 49 AS INT) AS h,
        TRUE AS jpeg_ok, TRUE AS alpha_ok, TRUE AS nonempty
 FROM ids
-"""
-
-def q_global_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT global quantiles by the two-pass histogram+rank-select
-    strategy (operators.sketch.global_quantiles — no global sort; the
-    driver only ever receives a bounded histogram summary). The DuckDB
-    twin computes the SAME rank-selection definition by a full sort —
-    an algorithm-independent oracle: if bucket routing, cumulative
-    offsets, or the within-bucket ranking were off by one row, the
-    hash breaks."""
-    from mapnik_vector_tile_spark.operators.sketch import global_quantiles
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    return global_quantiles(
-        orders, "o_totalprice", qs=(0.5, 0.95, 0.99),
-        names=("p50", "p95", "p99"),
-    )
-
-def _sql_global_quantiles() -> str:
-    return """
-WITH r AS (SELECT o_totalprice AS v,
-                  row_number() OVER (ORDER BY o_totalprice) - 1 AS rn,
-                  COUNT(*) OVER () AS n
-           FROM orders)
-SELECT CAST(MAX(n) AS BIGINT) AS n_rows,
-       MAX(CASE WHEN rn = CAST(floor((n - 1) * 5e-1) AS BIGINT)
-                THEN v END) AS p50,
-       MAX(CASE WHEN rn = CAST(floor((n - 1) * 95e-2) AS BIGINT)
-                THEN v END) AS p95,
-       MAX(CASE WHEN rn = CAST(floor((n - 1) * 99e-2) AS BIGINT)
-                THEN v END) AS p99
-FROM r
 """
 
 WAFER_Z, WAFER_K = 8, 3  # q_engine_wafer: z8 tiles rendered as z5 wafers

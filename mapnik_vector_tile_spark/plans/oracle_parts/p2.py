@@ -13,11 +13,9 @@ driver records a rows-only check, as documented.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 
-from mapnik_vector_tile_spark.functions.tilemath import W, cell_id_sql_expr
+from mapnik_vector_tile_spark.functions.tilemath import W
 from mapnik_vector_tile_spark.plans import shared_sql as S
 
 from mapnik_vector_tile_spark.plans.oracle_parts.p1 import (  # noqa: F401
@@ -2065,31 +2063,6 @@ sd AS (
 SELECT sd.z, r.rule_id, sd.scale_denom,
        (r.lo <= sd.scale_denom AND sd.scale_denom < r.hi) AS visible
 FROM sd, rules r
-"""
-
-EWMA_ALPHA = 0.5  # q_ewma smoothing factor
-
-def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W5 per-user EWMA over the events stream (temporal.ewma — the
-    pandas ewm(alpha).mean() recursion, s0 = v0) with a FULL
-    no-epsilon oracle: both engines fold the SAME values in the SAME
-    (ts, event_id) order through the SAME IEEE operation sequence
-    (s·(1−α) + v·α), so the final smoothed double hashes bit-exactly
-    — the ordered-fold discipline applied to a genuinely sequential
-    operator."""
-    from mapnik_vector_tile_spark.operators.temporal import ewma
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ewma(events, alpha=EWMA_ALPHA)
-
-def _sql_ewma(alpha: float = EWMA_ALPHA) -> str:
-    ca = S.flit(alpha)
-    cb = S.flit(1.0 - alpha)
-    return f"""
-SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
-       list_reduce(list(value ORDER BY ts, event_id),
-                   (a, b) -> a * {cb} + b * {ca}) AS ewma
-FROM events GROUP BY user_id
 """
 
 IDW_Z = 4  # q_idw cell grid (span 2.5e6 >= radius)

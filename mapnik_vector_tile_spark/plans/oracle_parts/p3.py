@@ -22,10 +22,10 @@ from mapnik_vector_tile_spark.plans import shared_sql as S
 
 from mapnik_vector_tile_spark.plans.oracle_parts.p1 import (  # noqa: F401
     _PAIRS,
-    _SQL_ASOF, _SQL_ATTRIBUTION, _SQL_INTERVAL_OVERLAP, _SQL_SESSIONIZE, _SQL_SESSION_WINDOW, _sql_attr_join, _sql_bbox_rect_join, _sql_composite_n_layers, _sql_distinct_hll, _sql_distinct_kmv, _sql_downzoom, _sql_downzoom_band, _sql_events_tile_window, _sql_geohash, _sql_geojson_tiles, _sql_global_quantiles, _sql_knn, _sql_label_grid, _sql_layer_filter, _sql_load_compressed, _sql_overzoom, _sql_phash_neardup, _sql_pip_membership, _sql_pip_polygon, _sql_pyramid_counts_band, _sql_pyramid_counts_z, _sql_raster_jpeg, _sql_raster_overzoom, _sql_raster_tiles, _sql_rasterize_coverage, _sql_rescale, _sql_s2_cells, _sql_simplify_exact, _sql_simplify_radial, _sql_simplify_vw, _sql_solid, _sql_solid_prune, _sql_spatial_block_split, _sql_tile_diff, _sql_typed_values, _sql_v1_decode, _sql_validity, _sql_vtquery, _sql_wafer, _sql_zoom_thin, load_views, q_asof_clicks_views, q_click_attribution, q_distinct_hll, q_distinct_kmv, q_engine_attr_join, q_engine_attr_join_shuffle, q_engine_composite, q_engine_decode_roundtrip, q_engine_downzoom, q_engine_downzoom_band, q_engine_knn, q_engine_layer_filter, q_engine_load_compressed, q_engine_overzoom, q_engine_overzoom_redistribute, q_engine_pip_anti, q_engine_pip_broadcast, q_engine_pip_partitioned, q_engine_pip_semi, q_engine_rescale, q_engine_simplify_exact, q_engine_simplify_radial, q_engine_simplify_vw, q_engine_solid, q_engine_tile_counts, q_engine_typed_values, q_engine_v1_decode, q_engine_validity, q_engine_wafer, q_events_tile_window, q_geohash, q_geojson_tiles, q_geotiff_tiles, q_global_quantiles, q_interval_overlap, q_label_grid, q_phash_mi, q_phash_neardup, q_pip_polygon_regions, q_raster_jpeg, q_raster_overzoom, q_raster_tiles, q_rasterize_coverage, q_s2_cells, q_session_window, q_sessionize, q_solid_prune, q_spatial_block_split, q_tile_diff, q_vtquery, q_zoom_thin, splitmix64_sql,
+    _sql_attr_join, _sql_bbox_rect_join, _sql_composite_n_layers, _sql_downzoom, _sql_downzoom_band, _sql_events_tile_window, _sql_geohash, _sql_geojson_tiles, _sql_knn, _sql_label_grid, _sql_layer_filter, _sql_load_compressed, _sql_overzoom, _sql_phash_neardup, _sql_pip_membership, _sql_pip_polygon, _sql_pyramid_counts_band, _sql_pyramid_counts_z, _sql_raster_jpeg, _sql_raster_overzoom, _sql_raster_tiles, _sql_rasterize_coverage, _sql_rescale, _sql_s2_cells, _sql_simplify_exact, _sql_simplify_radial, _sql_simplify_vw, _sql_solid, _sql_solid_prune, _sql_spatial_block_split, _sql_tile_diff, _sql_typed_values, _sql_v1_decode, _sql_validity, _sql_vtquery, _sql_wafer, _sql_zoom_thin, load_views, q_engine_attr_join, q_engine_attr_join_shuffle, q_engine_composite, q_engine_decode_roundtrip, q_engine_downzoom, q_engine_downzoom_band, q_engine_knn, q_engine_layer_filter, q_engine_load_compressed, q_engine_overzoom, q_engine_overzoom_redistribute, q_engine_pip_anti, q_engine_pip_broadcast, q_engine_pip_partitioned, q_engine_pip_semi, q_engine_rescale, q_engine_simplify_exact, q_engine_simplify_radial, q_engine_simplify_vw, q_engine_solid, q_engine_tile_counts, q_engine_typed_values, q_engine_v1_decode, q_engine_validity, q_engine_wafer, q_events_tile_window, q_geohash, q_geojson_tiles, q_geotiff_tiles, q_label_grid, q_phash_mi, q_phash_neardup, q_pip_polygon_regions, q_raster_jpeg, q_raster_overzoom, q_raster_tiles, q_rasterize_coverage, q_s2_cells, q_solid_prune, q_spatial_block_split, q_tile_diff, q_vtquery, q_zoom_thin, splitmix64_sql,
 )
 from mapnik_vector_tile_spark.plans.oracle_parts.p2 import (  # noqa: F401
-    COVER_Z, IMG_TH_N, MEASURES_N, _img_pixel_ctes, _sql_ar_bucket_batches, _sql_area_centroid, _sql_augment, _sql_cell_cover, _sql_csv_ingest, _sql_dissolve, _sql_ewma, _sql_heatmap_tiles, _sql_idw, _sql_image_blur, _sql_image_curation, _sql_image_dhash, _sql_image_equalize, _sql_image_otsu, _sql_image_phash, _sql_image_thumbs, _sql_letterbox, _sql_line_interpolate, _sql_marching_squares, _sql_mbtiles, _sql_polygon_polygon_join, _sql_polygon_rect_join, _sql_pyramid_audit, _sql_quadkey, _sql_raster_png, _sql_raster_png8, _sql_raster_tiff, _sql_raster_webp, _sql_scale_gate, _sql_tilejson, _sql_tilestats, _sql_wds_roundtrip, _sql_wkt_ingest, q_ar_bucket_batches, q_area_centroid, q_augment, q_cell_cover, q_cell_cover_hier, q_csv_ingest, q_dissolve, q_ewma, q_geom_measures, q_heatmap_tiles, q_idw, q_image_blur, q_image_curation, q_image_dhash, q_image_equalize, q_image_otsu, q_image_phash, q_image_thumbs, q_letterbox, q_line_interpolate, q_marching_squares, q_mbtiles_roundtrip, q_pmtiles_roundtrip, q_polygon_polygon_join, q_polygon_polygon_ri, q_polygon_rect_join, q_pyramid_audit, q_quadkey, q_raster_png, q_raster_png8, q_raster_tiff, q_raster_webp, q_scale_gate, q_shp_ingest, q_store_partitioned, q_tilejson, q_tilestats, q_wds_roundtrip, q_wkb_ingest, q_wkt_ingest,
+    COVER_Z, IMG_TH_N, MEASURES_N, _img_pixel_ctes, _sql_ar_bucket_batches, _sql_area_centroid, _sql_augment, _sql_cell_cover, _sql_csv_ingest, _sql_dissolve, _sql_heatmap_tiles, _sql_idw, _sql_image_blur, _sql_image_curation, _sql_image_dhash, _sql_image_equalize, _sql_image_otsu, _sql_image_phash, _sql_image_thumbs, _sql_letterbox, _sql_line_interpolate, _sql_marching_squares, _sql_mbtiles, _sql_polygon_polygon_join, _sql_polygon_rect_join, _sql_pyramid_audit, _sql_quadkey, _sql_raster_png, _sql_raster_png8, _sql_raster_tiff, _sql_raster_webp, _sql_scale_gate, _sql_tilejson, _sql_tilestats, _sql_wds_roundtrip, _sql_wkt_ingest, q_ar_bucket_batches, q_area_centroid, q_augment, q_cell_cover, q_cell_cover_hier, q_csv_ingest, q_dissolve, q_geom_measures, q_heatmap_tiles, q_idw, q_image_blur, q_image_curation, q_image_dhash, q_image_equalize, q_image_otsu, q_image_phash, q_image_thumbs, q_letterbox, q_line_interpolate, q_marching_squares, q_mbtiles_roundtrip, q_pmtiles_roundtrip, q_polygon_polygon_join, q_polygon_polygon_ri, q_polygon_rect_join, q_pyramid_audit, q_quadkey, q_raster_png, q_raster_png8, q_raster_tiff, q_raster_webp, q_scale_gate, q_shp_ingest, q_store_partitioned, q_tilejson, q_tilestats, q_wds_roundtrip, q_wkb_ingest, q_wkt_ingest,
 )
 
 def _sql_geom_measures(n: int = MEASURES_N) -> str:
@@ -2680,11 +2680,6 @@ _ENGINE_PAIRS: dict[str, tuple[Callable, str | None]] = {
     "q_engine_pip_semi": (q_engine_pip_semi, _sql_pip_membership(True)),
     "q_engine_pip_anti": (q_engine_pip_anti, _sql_pip_membership(False)),
     "q_engine_knn": (q_engine_knn, _sql_knn(3)),
-    "q_asof_clicks_views": (q_asof_clicks_views, _SQL_ASOF),
-    "q_click_attribution": (q_click_attribution, _SQL_ATTRIBUTION),
-    "q_sessionize": (q_sessionize, _SQL_SESSIONIZE),
-    "q_session_window": (q_session_window, _SQL_SESSION_WINDOW),
-    "q_interval_overlap": (q_interval_overlap, _SQL_INTERVAL_OVERLAP),
     "q_pip_polygon_regions": (q_pip_polygon_regions, _sql_pip_polygon(200)),
     "q_engine_decode_roundtrip": (
         q_engine_decode_roundtrip,
@@ -2779,7 +2774,6 @@ _ENGINE_PAIRS: dict[str, tuple[Callable, str | None]] = {
     "q_marching_squares": (q_marching_squares, _sql_marching_squares()),
     "q_heatmap_tiles": (q_heatmap_tiles, _sql_heatmap_tiles()),
     "q_idw": (q_idw, _sql_idw()),
-    "q_ewma": (q_ewma, _sql_ewma()),
     "q_scale_gate": (q_scale_gate, _sql_scale_gate()),
     "q_image_curation": (q_image_curation, _sql_image_curation()),
     "q_image_dhash": (q_image_dhash, _sql_image_dhash()),
@@ -2787,11 +2781,8 @@ _ENGINE_PAIRS: dict[str, tuple[Callable, str | None]] = {
     "q_augment": (q_augment, _sql_augment()),
     "q_wds_roundtrip": (q_wds_roundtrip, _sql_wds_roundtrip()),
     "q_ar_bucket_batches": (q_ar_bucket_batches, _sql_ar_bucket_batches()),
-    "q_distinct_kmv": (q_distinct_kmv, _sql_distinct_kmv()),
-    "q_distinct_hll": (q_distinct_hll, _sql_distinct_hll()),
     "q_spatial_block_split": (q_spatial_block_split, _sql_spatial_block_split()),
     "q_engine_wafer": (q_engine_wafer, _sql_wafer()),
-    "q_global_quantiles": (q_global_quantiles, _sql_global_quantiles()),
 }
 
 def _make_spark_fn(template: str) -> Callable[[SparkSession, str], DataFrame]:
@@ -2808,7 +2799,6 @@ _RECORD_FIRST = (
     # __spark_entry__.queries() that checks only the first keys of the
     # dict reaches these first. Each name must be a registered key
     # (tests/test_entry_and_oracles.py).
-    "q_temperature_resample",
     "q_wds_roundtrip",
     "q_ar_bucket_batches",
     "q_engine_downzoom",
@@ -2818,7 +2808,6 @@ _RECORD_FIRST = (
     "q_line_interpolate",
     "q_area_centroid",
     "q_image_thumbs",
-    "q_event_dedup",
     "q_engine_layer_filter",
     "q_quadkey",
     "q_pyramid_audit",
@@ -2838,17 +2827,13 @@ _RECORD_FIRST = (
     "q_geom_measures",
     "q_mbtiles_roundtrip",
     "q_engine_wafer",
-    "q_global_quantiles",
     "q_raster_png",
     "q_raster_webp",
-    "q_token_quantiles",
     "q_engine_clip_repair",
     "q_raster_jpeg",
-    "q_distinct_kmv",
     "q_train_split",
     "q_stratified_sample",
     "q_balanced_sample",
-    "q_seq_packing",
     "q_geohash",
 )
 
@@ -2865,9 +2850,11 @@ def sql_pairs() -> tuple[
     from mapnik_vector_tile_spark.plans.detect_oracles import (
         pairs as detect_pairs,
     )
-    from mapnik_vector_tile_spark.plans.text_oracles import pairs as text_pairs
+    from mapnik_vector_tile_spark.plans.sampling_oracles import (
+        pairs as sampling_pairs,
+    )
 
-    for extra in (text_pairs, detect_pairs):
+    for extra in (sampling_pairs, detect_pairs):
         for name, (fn, oracle) in extra().items():
             queries[name] = fn
             if oracle is not None:

@@ -13,11 +13,9 @@ driver records a rows-only check, as documented.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 
-from mapnik_vector_tile_spark.functions.tilemath import W, cell_id_sql_expr
+from mapnik_vector_tile_spark.functions.tilemath import W
 from mapnik_vector_tile_spark.plans import shared_sql as S
 
 from mapnik_vector_tile_spark.plans.oracle_parts.p1 import (  # noqa: F401
@@ -1103,50 +1101,6 @@ UNION ALL SELECT cx, cy, c, rep, role FROM noise
 """
 
 _ENGINE_PAIRS["q_grid_dbscan"] = (q_grid_dbscan, _sql_grid_dbscan())
-
-GF_INTERVAL = 600
-
-def q_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap fill (temporal.gap_fill) over the events table with a FULL
-    oracle: DuckDB builds the same aligned tick grid per user and
-    fills with last_value IGNORE NULLS over the identically-ordered
-    merged stream; values pass through untouched so the double column
-    hashes bit-exactly."""
-    from mapnik_vector_tile_spark.operators.temporal import gap_fill
-
-    return gap_fill(
-        spark.read.parquet(f"{sf_dir}/events.parquet"), GF_INTERVAL
-    )
-
-def _sql_gap_fill(interval_s: int = GF_INTERVAL) -> str:
-    return f"""
-WITH ev AS (
-  SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS t,
-         event_id AS eid, value AS v, 0 AS is_tick
-  FROM events),
-bounds AS (
-  SELECT user_id, MIN(t) AS t0, MAX(t) AS t1 FROM ev GROUP BY user_id),
-ticks AS (
-  SELECT user_id, CAST(k * {interval_s} AS BIGINT) AS t,
-         CAST(NULL AS BIGINT) AS eid, CAST(NULL AS DOUBLE) AS v,
-         1 AS is_tick
-  FROM bounds,
-       LATERAL unnest(generate_series(
-         CAST(ceil(t0 / {S.flit(float(interval_s))}) AS BIGINT),
-         CAST(floor(t1 / {S.flit(float(interval_s))}) AS BIGINT))) u(k)),
-merged AS (
-  SELECT * FROM ev UNION ALL SELECT * FROM ticks),
-filled AS (
-  SELECT user_id, t, is_tick,
-         last_value(v IGNORE NULLS) OVER (
-           PARTITION BY user_id ORDER BY t, is_tick, eid
-           ROWS UNBOUNDED PRECEDING) AS value
-  FROM merged)
-SELECT user_id, t AS tick, value
-FROM filled WHERE is_tick = 1
-"""
-
-_ENGINE_PAIRS["q_gap_fill"] = (q_gap_fill, _sql_gap_fill())
 
 CT_GRID = 4
 

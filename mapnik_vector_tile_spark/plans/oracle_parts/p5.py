@@ -17,11 +17,9 @@ from mapnik_vector_tile_spark.plans.oracle_parts.p3 import (  # noqa: F401
     _ENGINE_PAIRS,
 )
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 
-from mapnik_vector_tile_spark.functions.tilemath import W, cell_id_sql_expr
+from mapnik_vector_tile_spark.functions.tilemath import W
 from mapnik_vector_tile_spark.plans import shared_sql as S
 
 from mapnik_vector_tile_spark.plans.oracle_parts.p1 import (  # noqa: F401
@@ -507,86 +505,6 @@ SELECT CAST((SELECT COUNT(*) FROM e) AS BIGINT) AS n_edges,
 
 _ENGINE_PAIRS["q_triangles"] = (q_triangles, _sql_triangles())
 
-def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """view→click→purchase funnel (temporal.funnel_stages) over the
-    events table with a FULL oracle: DuckDB replays each step's
-    strictly-after struct-min with the identical (epoch, event_id)
-    ordering — stage depth and exact step latencies per user."""
-    from mapnik_vector_tile_spark.operators.temporal import funnel_stages
-
-    return funnel_stages(
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-    )
-
-def _sql_funnel() -> str:
-    return """
-WITH e AS (
-  SELECT user_id, event_type AS et,
-         CAST(floor(epoch(ts)) AS BIGINT) AS t,
-         CAST(event_id AS BIGINT) AS eid
-  FROM events),
-k1 AS (
-  SELECT user_id, MIN(struct_pack(t := t, eid := eid)) AS k
-  FROM e WHERE et = 'view' GROUP BY user_id),
-k2 AS (
-  SELECT e.user_id, MIN(struct_pack(t := e.t, eid := e.eid)) AS k
-  FROM e JOIN k1 ON k1.user_id = e.user_id
-  WHERE e.et = 'click'
-    AND struct_pack(t := e.t, eid := e.eid) > k1.k
-  GROUP BY e.user_id),
-k3 AS (
-  SELECT e.user_id, MIN(struct_pack(t := e.t, eid := e.eid)) AS k
-  FROM e JOIN k2 ON k2.user_id = e.user_id
-  WHERE e.et = 'purchase'
-    AND struct_pack(t := e.t, eid := e.eid) > k2.k
-  GROUP BY e.user_id)
-SELECT k1.user_id,
-       CAST(CASE WHEN k3.k IS NOT NULL THEN 3
-                 WHEN k2.k IS NOT NULL THEN 2
-                 ELSE 1 END AS BIGINT) AS stage,
-       CAST(COALESCE(k2.k.t - k1.k.t, -1) AS BIGINT) AS dt1,
-       CAST(COALESCE(k3.k.t - k2.k.t, -1) AS BIGINT) AS dt2
-FROM k1
-LEFT JOIN k2 ON k2.user_id = k1.user_id
-LEFT JOIN k3 ON k3.user_id = k1.user_id
-"""
-
-_ENGINE_PAIRS["q_funnel"] = (q_funnel, _sql_funnel())
-
-def q_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention (temporal.retention_cohorts) over events with
-    a FULL oracle: integer epoch-week cohorting, distinct user-week
-    activity, (cohort, offset) matrix with cohort sizes."""
-    from mapnik_vector_tile_spark.operators.temporal import (
-        retention_cohorts,
-    )
-
-    return retention_cohorts(
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-    )
-
-def _sql_retention() -> str:
-    wk = 7 * 24 * 3600
-    return f"""
-WITH uw AS (
-  SELECT DISTINCT user_id,
-         CAST(floor(floor(epoch(ts)) / {wk}) AS BIGINT) AS w
-  FROM events),
-first_ AS (SELECT user_id, MIN(w) AS cw FROM uw GROUP BY user_id),
-size_ AS (
-  SELECT cw AS cohort_w, CAST(COUNT(*) AS BIGINT) AS n_cohort
-  FROM first_ GROUP BY cw),
-act AS (
-  SELECT f.cw AS cohort_w, uw.w - f.cw AS k,
-         CAST(COUNT(DISTINCT uw.user_id) AS BIGINT) AS n_active
-  FROM uw JOIN first_ f ON f.user_id = uw.user_id
-  GROUP BY 1, 2)
-SELECT a.cohort_w, CAST(a.k AS BIGINT) AS k, a.n_active, s.n_cohort
-FROM act a JOIN size_ s ON s.cohort_w = a.cohort_w
-"""
-
-_ENGINE_PAIRS["q_retention"] = (q_retention, _sql_retention())
-
 def _style_query(engine: str) -> str:
     from mapnik_vector_tile_spark.functions.stylestops import (
         style_stops_sql,
@@ -748,65 +666,6 @@ GROUP BY g.pid, g.wa, g.ha, g.pw, g.ph, ca.caption, cb.caption
 """
 
 _ENGINE_PAIRS["q_cutmix"] = (q_cutmix, _sql_cutmix())
-
-def q_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval concurrency (temporal.interval_concurrency) over the
-    deterministic event intervals (the q_interval_overlap corpus),
-    FULL oracle: DuckDB replays the sweep with the identical
-    (t, delta ASC, id) running sum (ends at e+1 fire before starts
-    at the same instant, so touching-but-disjoint closed intervals
-    do not double-count) — max occupancy and the earliest instant
-    it is reached."""
-    from mapnik_vector_tile_spark.operators.temporal import (
-        _event_intervals,
-        interval_concurrency,
-    )
-
-    return interval_concurrency(
-        _event_intervals(spark, sf_dir, "view", 6)
-    )
-
-def _sql_concurrency() -> str:
-    return """
-WITH iv AS (
-  SELECT CAST(event_id AS BIGINT) AS id,
-         epoch_us(ts) AS s,
-         epoch_us(ts) + (1 + event_id % 6) * 3600000000 AS e
-  FROM events WHERE event_type = 'view'),
-ev AS (
-  SELECT s AS t, 1 AS delta, id FROM iv
-  UNION ALL
-  SELECT e + 1 AS t, -1 AS delta, id FROM iv),
-run AS (
-  SELECT t, SUM(delta) OVER (
-    ORDER BY t, delta ASC, id ROWS UNBOUNDED PRECEDING) AS cc
-  FROM ev)
-SELECT CAST(MAX(b.cc) AS BIGINT) AS max_cc,
-       CAST(-MAX(struct_pack(cc := b.cc, negt := -b.t)).negt AS BIGINT)
-         AS t_at,
-       CAST((SELECT COUNT(*) FROM iv) AS BIGINT) AS n_intervals
-FROM run b
-"""
-
-_ENGINE_PAIRS["q_concurrency"] = (q_concurrency, _sql_concurrency())
-
-def q_concurrency_seg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Segmented interval-concurrency sweep
-    (temporal.interval_concurrency_segmented) — the fleet-scale form
-    with NO global window over the event stream (per-time-bucket
-    partitioned running sums + broadcast prefix offsets).  FULL
-    oracle: DuckDB replays the exact single-sweep contract, which
-    the segmented form reproduces bit-identically."""
-    from mapnik_vector_tile_spark.operators.temporal import (
-        _event_intervals,
-        interval_concurrency_segmented,
-    )
-
-    return interval_concurrency_segmented(
-        _event_intervals(spark, sf_dir, "view", 6)
-    )
-
-_ENGINE_PAIRS["q_concurrency_seg"] = (q_concurrency_seg, _sql_concurrency())
 
 def q_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gini concentration (geostats.gini_concentration) over the z6
@@ -1434,53 +1293,6 @@ FROM ids
 """
 
 _ENGINE_PAIRS["q_sniff_dims"] = (q_sniff_dims, _sql_sniff_dims())
-
-def q_trimmed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trimmed sums (temporal.trimmed_sums, 10% per side) over event
-    values scaled to exact micro-units, grouped by z5 user cell, FULL
-    oracle: identical rank windows, floor trim counts, BIGINT folds."""
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.operators.temporal import trimmed_sums
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        (F.col("user_id") % 32).cast("long").alias("g"),
-        F.col("event_id").cast("long").alias("id"),
-        F.floor(F.col("value") * 1000000).cast("long").alias("v"),
-    )
-    return trimmed_sums(ev)
-
-def _sql_trimmed(trim_pct: int = 10) -> str:
-    return f"""
-WITH ev AS (
-  SELECT CAST(user_id % 32 AS BIGINT) AS g,
-         CAST(event_id AS BIGINT) AS id,
-         CAST(floor(value * 1000000) AS BIGINT) AS v
-  FROM events),
-rk AS (
-  SELECT g, v,
-         CAST(row_number() OVER (PARTITION BY g ORDER BY v, id)
-              AS BIGINT) AS i,
-         CAST(COUNT(*) OVER (PARTITION BY g) AS BIGINT) AS n
-  FROM ev),
-rk2 AS (SELECT *, (n * {trim_pct}) // 100 AS k FROM rk),
-kept AS (SELECT * FROM rk2 WHERE i > k AND i <= n - k),
-alls AS (
-  SELECT g, CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(v) AS BIGINT) AS sum_all
-  FROM ev GROUP BY g),
-tr AS (
-  SELECT g, CAST(MAX(k) AS BIGINT) AS n_trim,
-         CAST(SUM(v) AS BIGINT) AS sum_trim,
-         CAST(MIN(v) AS BIGINT) AS min_kept,
-         CAST(MAX(v) AS BIGINT) AS max_kept
-  FROM kept GROUP BY g)
-SELECT a.g, a.n, tr.n_trim, a.sum_all, tr.sum_trim, tr.min_kept,
-       tr.max_kept
-FROM alls a JOIN tr ON tr.g = a.g
-"""
-
-_ENGINE_PAIRS["q_trimmed"] = (q_trimmed, _sql_trimmed())
 
 def q_occupancy_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Occupancy runs (geostats.occupancy_runs) over the z6 grid of
@@ -2267,153 +2079,6 @@ FROM ex GROUP BY x, y
 
 _ENGINE_PAIRS["q_strahler"] = (q_strahler, _sql_strahler())
 
-def q_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCD2 merge (temporal.scd2_apply) with a FULL oracle.  Corpus:
-    the customer table becomes the effective-dated dimension (every
-    key open; every third key also carries a closed history row),
-    the events stream becomes the CDC batch (key folded into twice
-    the customer range so half the changed keys are NEW; 'error'
-    events delete, everything else upserts; integer-cent attrs via
-    the shared floor(x·100 + 0.5) derivation).  DuckDB replays the
-    version chaining — per-key (ts, change_id) lead() bounds, first
-    change closing the open row — and the row sets must match
-    exactly, sentinel SCD2_OPEN included."""
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.operators.temporal import (
-        SCD2_OPEN,
-        scd2_apply,
-    )
-
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    n_keys = cust.count()
-    attr = F.floor(F.col("c_acctbal") * 100 + 0.5).cast("long")
-    open_rows = cust.select(
-        F.col("c_custkey").alias("key"),
-        attr.alias("attr"),
-        F.when(F.col("c_custkey") % 3 == 0, F.lit(500))
-        .otherwise(F.lit(0)).cast("long").alias("valid_from"),
-        F.lit(SCD2_OPEN).cast("long").alias("valid_to"),
-    )
-    hist_rows = cust.filter(F.col("c_custkey") % 3 == 0).select(
-        F.col("c_custkey").alias("key"),
-        (attr - 7).alias("attr"),
-        F.lit(0).cast("long").alias("valid_from"),
-        F.lit(500).cast("long").alias("valid_to"),
-    )
-    current = open_rows.unionByName(hist_rows)
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    changes = ev.select(
-        (F.col("user_id") % (2 * n_keys)).alias("key"),
-        F.col("event_id").alias("change_id"),
-        (F.unix_timestamp("ts") + 1000).cast("long").alias("ts"),
-        F.when(F.col("event_type") == "error", F.lit("delete"))
-        .otherwise(F.lit("upsert")).alias("op"),
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("attr"),
-    )
-    return scd2_apply(current, changes)
-
-def _sql_scd2() -> str:
-    from mapnik_vector_tile_spark.operators.temporal import SCD2_OPEN
-
-    return f"""
-WITH nk AS (SELECT COUNT(*) AS n FROM customer),
-attr0 AS (
-  SELECT c_custkey AS key,
-         CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS attr
-  FROM customer),
-cur AS (
-  SELECT key, attr,
-         CAST(CASE WHEN key % 3 = 0 THEN 500 ELSE 0 END AS BIGINT)
-           AS valid_from,
-         CAST({SCD2_OPEN} AS BIGINT) AS valid_to
-  FROM attr0
-  UNION ALL
-  SELECT key, attr - 7, CAST(0 AS BIGINT), CAST(500 AS BIGINT)
-  FROM attr0 WHERE key % 3 = 0),
-ch AS (
-  SELECT user_id % (2 * nk.n) AS key,
-         event_id AS change_id,
-         CAST(floor(epoch(ts)) + 1000 AS BIGINT) AS ts,
-         CASE WHEN event_type = 'error' THEN 'delete'
-              ELSE 'upsert' END AS op,
-         CAST(floor("value" * 100 + 0.5) AS BIGINT) AS attr
-  FROM events, nk),
-chw AS (
-  SELECT *, COALESCE(lead(ts) OVER (PARTITION BY key
-                                    ORDER BY ts, change_id),
-                     {SCD2_OPEN}) AS next_ts
-  FROM ch),
-first_ AS (
-  SELECT key, MIN(struct_pack(ts := ts, cid := change_id)).ts AS first_ts
-  FROM ch GROUP BY key),
-hist AS (
-  SELECT key, attr, valid_from, valid_to FROM cur
-  WHERE valid_to <> {SCD2_OPEN}),
-closed AS (
-  SELECT c.key, c.attr, c.valid_from,
-         CAST(COALESCE(f.first_ts, {SCD2_OPEN}) AS BIGINT) AS valid_to
-  FROM cur c LEFT JOIN first_ f ON f.key = c.key
-  WHERE c.valid_to = {SCD2_OPEN}),
-newrows AS (
-  SELECT key, attr, ts AS valid_from, CAST(next_ts AS BIGINT)
-           AS valid_to
-  FROM chw WHERE op = 'upsert')
-SELECT key, attr, valid_from, valid_to FROM hist
-UNION ALL SELECT * FROM closed
-UNION ALL SELECT * FROM newrows
-"""
-
-_ENGINE_PAIRS["q_scd2"] = (q_scd2, _sql_scd2())
-
-def q_scd2_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W18b point-in-time lookup (temporal.scd2_lookup) COMPOSED over
-    the q_scd2 output: the dimension is the freshly-merged SCD2
-    table (version chains, delete gaps, SCD2_OPEN sentinels all
-    present), facts are orders shifted into the change-window epoch
-    so lookups land before, inside and after version ranges.  FULL
-    oracle: DuckDB rebuilds the merged dimension with the q_scd2 SQL
-    and replays the same range join with the −1 no-version
-    sentinel."""
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.operators.temporal import scd2_lookup
-
-    dim = q_scd2(spark, sf_dir)
-    n_keys = spark.read.parquet(f"{sf_dir}/customer.parquet").count()
-    facts = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        F.col("o_orderkey").alias("fact_id"),
-        (F.col("o_custkey") % (2 * n_keys)).alias("key"),
-        (F.unix_timestamp("o_orderdate") + 710_000_000)
-        .cast("long").alias("ts"),
-    )
-    return scd2_lookup(facts, dim)
-
-def _sql_scd2_lookup() -> str:
-    base = _sql_scd2().strip()
-    assert base.startswith("WITH ")
-    inner = base[len("WITH "):]
-    # wrap the q_scd2 SQL as a dim CTE and range-join the facts
-    return f"""
-WITH {inner.rsplit("SELECT key, attr, valid_from, valid_to FROM hist", 1)[0].rstrip()},
-dim AS (
-  SELECT key, attr, valid_from, valid_to FROM hist
-  UNION ALL SELECT * FROM closed
-  UNION ALL SELECT * FROM newrows),
-facts AS (
-  SELECT o_orderkey AS fact_id,
-         o_custkey % (2 * nk.n) AS key,
-         CAST(floor(epoch(o_orderdate)) + 710000000 AS BIGINT) AS ts
-  FROM orders, nk)
-SELECT f.fact_id, f.key, f.ts,
-       CAST(COALESCE(d.attr, -1) AS BIGINT) AS attr
-FROM facts f
-LEFT JOIN dim d
-  ON d.key = f.key AND f.ts >= d.valid_from AND f.ts < d.valid_to
-"""
-
-_ENGINE_PAIRS["q_scd2_lookup"] = (q_scd2_lookup, _sql_scd2_lookup())
-
 def _write_chunk_file(df: DataFrame, src: str, i: int) -> None:
     """Materialize one micro-batch chunk as a SINGLE parquet FILE
     directly in ``src`` (the streaming file source ignores
@@ -2431,87 +2096,6 @@ def _write_chunk_file(df: DataFrame, src: str, i: int) -> None:
     shutil.rmtree(tmp)
     base = 1_700_000_000 + i * 100
     os.utime(dst, (base, base))
-
-def _scd2_stream_corpus(spark: SparkSession, sf_dir: str):
-    """(current, changes) — the q_scd2 corpus, shared verbatim so the
-    streaming key's twin is _sql_scd2() unchanged."""
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.operators.temporal import SCD2_OPEN
-
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    n_keys = cust.count()
-    attr = F.floor(F.col("c_acctbal") * 100 + 0.5).cast("long")
-    open_rows = cust.select(
-        F.col("c_custkey").alias("key"),
-        attr.alias("attr"),
-        F.when(F.col("c_custkey") % 3 == 0, F.lit(500))
-        .otherwise(F.lit(0)).cast("long").alias("valid_from"),
-        F.lit(SCD2_OPEN).cast("long").alias("valid_to"),
-    )
-    hist_rows = cust.filter(F.col("c_custkey") % 3 == 0).select(
-        F.col("c_custkey").alias("key"),
-        (attr - 7).alias("attr"),
-        F.lit(0).cast("long").alias("valid_from"),
-        F.lit(500).cast("long").alias("valid_to"),
-    )
-    current = open_rows.unionByName(hist_rows)
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    changes = ev.select(
-        (F.col("user_id") % (2 * n_keys)).alias("key"),
-        F.col("event_id").alias("change_id"),
-        (F.unix_timestamp("ts") + 1000).cast("long").alias("ts"),
-        F.when(F.col("event_type") == "error", F.lit("delete"))
-        .otherwise(F.lit("upsert")).alias("op"),
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("attr"),
-    )
-    return current, changes
-
-def q_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W18c streaming SCD2 fold, DRIVER-EXECUTED: the q_scd2 CDC
-    corpus is written as three (ts, change_id)-ordered parquet chunks
-    (the single-partition ordering window is corpus PREP for an
-    oracle key, not engine code — production CDC arrives pre-staged
-    in time order), streamed through streaming.scd2.run_scd2_stream
-    (readStream → foreachBatch scd2_apply → availableNow to
-    completion), and the finished dimension store is returned.  The
-    twin is _sql_scd2() VERBATIM — the associativity contract: the
-    chunked fold must equal one batch merge exactly."""
-    import os
-    import tempfile
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.streaming.scd2 import run_scd2_stream
-
-    current, changes = _scd2_stream_corpus(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="scd2_stream_")
-    src = os.path.join(work, "src")
-    os.makedirs(src)
-    ranked = changes.withColumn(
-        "rn",
-        F.row_number().over(Window.orderBy("ts", "change_id")),
-    ).localCheckpoint(eager=True)
-    n = ranked.count()
-    cuts = [0, n // 3, 2 * n // 3, n]
-    for i in range(3):
-        _write_chunk_file(
-            ranked.filter(
-                (F.col("rn") > cuts[i]) & (F.col("rn") <= cuts[i + 1])
-            ).drop("rn"),
-            src,
-            i,
-        )
-    store = os.path.join(work, "store")
-    run_scd2_stream(
-        spark, current, src, store,
-        checkpoint_dir=os.path.join(work, "ckpt"),
-        state_partitions=8,  # corpus-sized state width (r5 gate trim)
-    )
-    return spark.read.parquet(os.path.join(store, "dim"))
-
-_ENGINE_PAIRS["q_scd2_stream"] = (q_scd2_stream, _sql_scd2())
 
 def _events_chunks(spark: SparkSession, sf_dir: str, prefix: str) -> str:
     """Write the events table as three ts-range parquet chunks with
@@ -2829,40 +2413,3 @@ FROM ex
 """
 
 _ENGINE_PAIRS["q_isotonic"] = (q_isotonic, _sql_isotonic())
-
-
-def q_attr_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.10 STREAM-STREAM watermarked join, DRIVER-EXECUTED (the
-    fourth streaming-executed gate): the events table streams as
-    three time-ordered chunks through
-    streaming.joins.run_attribution_stream — a symmetric-hash
-    stream-stream join between the view and click sides of ONE
-    watermarked stream, availableNow to completion, append-mode
-    memory sink.  With the effectively-infinite default watermark a
-    bounded replay emits EXACTLY the batch join, so the twin is
-    q_click_attribution's _SQL_ATTRIBUTION verbatim."""
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.streaming.joins import (
-        run_attribution_stream,
-    )
-
-    src = _events_chunks(spark, sf_dir, "attr_stream_")
-    _STREAM_SEQ[0] += 1
-    name = f"q_attr_stream_{_STREAM_SEQ[0]}"
-    run_attribution_stream(
-        spark, src, table_name=name, state_partitions=8
-    )
-    return spark.table(name).select(
-        "view_id",
-        "click_id",
-        "user_id",
-        F.col("gap_us").cast("bigint").alias("gap_us"),
-    )
-
-
-from mapnik_vector_tile_spark.plans.oracle_parts.p1 import (  # noqa: E402
-    _SQL_ATTRIBUTION,
-)
-
-_ENGINE_PAIRS["q_attr_stream"] = (q_attr_stream, _SQL_ATTRIBUTION)

@@ -39,7 +39,6 @@ import struct
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from mapnik_vector_tile_spark.functions import geomcodec as gc
 from mapnik_vector_tile_spark.functions import tilemath as tm

@@ -1,11 +1,12 @@
-"""Shared streaming-runner plumbing.
+"""State-partition sizing for the dirty-tile re-tile streams of
+streaming/incremental.py, this module's one caller.
 
-State-partition sizing: a Structured Streaming query creates one state
-store per shuffle partition per stateful operator and commits every one
-of them each micro-batch, so the per-batch FIXED cost scales with the
-partition count even when the data is tiny.  Production sizes this to
-executor parallelism × state volume; the in-sandbox oracle gates size
-it to their few-chunk corpora.  The count is baked into the checkpoint
+A Structured Streaming query creates one state store per shuffle
+partition per stateful operator and commits every one of them each
+micro-batch, so the per-batch FIXED cost scales with the partition
+count even when the data is tiny.  Production sizes this to executor
+parallelism × state volume; the oracle gates size it to their
+few-chunk corpora.  The count is baked into the checkpoint
 at first query start — pick it before launch (Spark refuses to change
 it on resume)."""
 

@@ -8,7 +8,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from mapnik_vector_tile_spark.functions import pip as pipmod
 from mapnik_vector_tile_spark.functions import tilemath as tm

@@ -7,7 +7,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from mapnik_vector_tile_spark.operators import lineage as L
 

@@ -3,7 +3,6 @@ at 100 TB — filter pushdown into the parquet scan, broadcast on small
 dims, map-side partial aggregation, column pruning — must be visible
 in the physical plan, not just assumed. These tests freeze them."""
 
-import numpy as np
 import pytest
 
 from tests.conftest import SF_DIR
@@ -90,39 +89,6 @@ def test_feature_scan_prunes_columns(spark):
     assert "o_custkey" not in read and "o_comment" not in read
 
 
-def test_asof_join_single_exchange_pushed_filters(spark):
-    """J7 as-of: the union+merge plan must show exactly ONE Exchange
-    (the key shuffle — no join operator, no second shuffle) and the
-    event-type equality pushed into both parquet scans."""
-    from mapnik_vector_tile_spark.operators import temporal as TP
-
-    df = TP.clicks_asof_views(spark, SF_DIR)
-    plan = _plan(df)
-    # count tree nodes, not mentions: the formatted detail section
-    # repeats each operator name once ("(9) Exchange")
-    n_exchange = sum(
-        1 for ln in plan.splitlines() if ln.lstrip("+-: ").startswith("Exchange (")
-    )
-    assert n_exchange == 1, plan
-    pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
-    assert len(pushed) == 2
-    assert all("EqualTo(event_type," in ln for ln in pushed)
-    assert "Join" not in plan  # merge semantics, not a range join
-
-
-def test_sessionize_partial_aggregation_after_window(spark):
-    """Sessionization: the per-session fold must partial-aggregate
-    before its exchange, and the whole plan stays JVM-side (no Python
-    evaluation nodes)."""
-    from mapnik_vector_tile_spark.operators import temporal as TP
-
-    df = TP.user_sessions(spark, SF_DIR)
-    plan = _plan(df)
-    assert plan.count("HashAggregate") >= 2
-    assert "partial" in plan
-    assert "Python" not in plan
-
-
 def test_balanced_topk_group_limit_before_shuffle(spark):
     """balanced_topk's rank<=k predicate must be rewritten to
     WindowGroupLimit on BOTH sides of the exchange — the map-side one
@@ -177,24 +143,6 @@ def test_hot_bucket_guard_broadcasts_tiny_stats(spark):
     # consumers re-scan the checkpoint, not the upstream pipeline
     assert "Scan ExistingRDD" in plan
     assert "Window" not in plan
-
-
-def test_group_quantiles_single_shuffle(spark):
-    """T23: one hash-partition exchange feeds the rank window, the
-    count window, and the final agg (plus AQE reads) — no second
-    repartitioning of the data."""
-    from mapnik_vector_tile_spark.operators.sketch import group_quantiles
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    import pyspark.sql.functions as F
-
-    df = docs.select("lang", F.length("text").alias("v"))
-    import re
-
-    plan = _plan(group_quantiles(df, "lang", "v"))
-    n_exchange = len(re.findall(r"\(\d+\) Exchange\b", plan))
-    assert n_exchange == 1, plan
-    assert "hashpartitioning(lang" in plan
 
 
 def test_geohash_is_single_scan_projection(spark):
@@ -501,22 +449,6 @@ def test_spatial_block_split_no_exchange(spark):
     assert "Exchange" not in plan, plan
 
 
-def test_hll_registers_partial_aggregation(spark):
-    """HLL register build must partial-aggregate map-side (a
-    HashAggregate on each side of the ONE exchange) — the shuffle
-    carries <=2^p register rows per partition, not the corpus."""
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.operators.sketch import hll_registers
-
-    import re
-
-    df = spark.range(10000).select(F.col("id").alias("v"))
-    plan = _plan(hll_registers(df, "v"))
-    assert len(re.findall(r"\(\d+\) HashAggregate", plan)) >= 2, plan
-    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
-
-
 def test_vtquery_prunes_store_and_takes_ordered(spark, tiles_parquet):
     """S7: the serving query must (1) push the radius-derived address
     ranges to the tile scan (two-level prune, no full store read) and
@@ -674,27 +606,6 @@ def test_hausdorff_two_level_minmax_partial_aggs(spark):
     assert "partial_min" in plan or "partial" in plan
 
 
-def test_funnel_struct_min_no_window(spark):
-    """W11: the funnel is struct-min aggregates + user joins — no
-    window operator (a per-user sort would shuffle event arrays),
-    no Python."""
-    from mapnik_vector_tile_spark.operators.temporal import funnel_stages
-
-    ev = spark.range(50).selectExpr(
-        "id AS event_id",
-        "timestamp_seconds(id * 100) AS ts",
-        "id % 5 AS user_id",
-        "CASE WHEN id % 3 = 0 THEN 'view' WHEN id % 3 = 1 THEN 'click'"
-        " ELSE 'purchase' END AS event_type",
-        "CAST(0.0 AS DOUBLE) AS value",
-        "'{}' AS props",
-    )
-    plan = _plan(funnel_stages(ev))
-    assert "Window" not in plan
-    assert "PythonUDF" not in plan
-    assert "partial_min" in plan or "partial" in plan
-
-
 def test_erosion_round_is_join_plus_count_aware_min(spark):
     """ST7: each round = one left equi-join + a partial min/count
     aggregate; no Python, no cartesian."""
@@ -705,50 +616,3 @@ def test_erosion_round_is_join_plus_count_aware_min(spark):
     assert "CartesianProduct" not in plan
     assert "PythonUDF" not in plan
     assert "partial" in plan
-
-
-def test_interval_concurrency_segmented_partitioned_sweep(spark):
-    """W13 segmented sweep: the event-proportional running sum is
-    partitioned by the time bucket; only the tiny per-bucket offsets
-    relation passes through a SinglePartition window, and it comes
-    back as a broadcast."""
-    from mapnik_vector_tile_spark.operators.temporal import (
-        interval_concurrency_segmented,
-    )
-
-    iv = spark.range(100).selectExpr(
-        "id AS id", "id * 13 AS s", "id * 13 + 40 AS e"
-    )
-    plan = _plan(interval_concurrency_segmented(iv, bucket_width=100))
-    assert "hashpartitioning(b" in plan
-    # exactly two SinglePartition exchanges: the per-bucket offsets
-    # window (bucket-count rows) and the final 1-row max/count agg —
-    # neither carries the event stream
-    assert plan.count("SinglePartition") == 2
-    assert "BroadcastExchange" in plan
-    assert "PythonUDF" not in plan
-
-
-def test_scd2_apply_single_window_no_python(spark):
-    """W18: the CDC merge is pure Catalyst — one window over the
-    change batch, no Python nodes, no cartesian; history rows stream
-    through a filter."""
-    from mapnik_vector_tile_spark.operators.temporal import (
-        SCD2_OPEN,
-        scd2_apply,
-    )
-
-    cur = spark.range(100).selectExpr(
-        "id AS key", "id AS attr", "CAST(0 AS LONG) AS valid_from",
-        f"CAST({SCD2_OPEN} AS LONG) AS valid_to",
-    )
-    ch = spark.range(50).selectExpr(
-        "id AS key", "id AS change_id", "id + 10 AS ts",
-        "'upsert' AS op", "id AS attr",
-    )
-    plan = _plan(scd2_apply(cur, ch))
-    assert "PythonUDF" not in plan
-    assert "CartesianProduct" not in plan
-    assert plan.count("Window") <= 2  # the lead() chain only
-
-

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import os
 import random
-import shutil
 
 import pandas as pd
 import pytest

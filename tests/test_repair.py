@@ -6,7 +6,6 @@ src/vector_tile_geometry_clipper.hpp polygon overloads)."""
 import math
 
 import numpy as np
-import pytest
 
 from mapnik_vector_tile_spark.functions import geomcodec as gc
 from mapnik_vector_tile_spark.functions import repair

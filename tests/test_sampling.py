@@ -75,27 +75,6 @@ def test_balanced_topk_exact_k_per_stratum(spark, docs):
     assert {(r.lang, r.doc_id, r.rnk) for r in out} == again
 
 
-def test_pack_contiguous_invariants(spark, docs):
-    out = SMP.pack_contiguous(docs).select(
-        "lang", "shard", "doc_id", "n_chars", "bin"
-    ).collect()
-    assert len(out) == docs.count()  # packing is total
-    groups = {}
-    for r in out:
-        groups.setdefault((r.lang, r.shard), []).append(r)
-    budget = SMP.PACK_BUDGET
-    for rows in groups.values():
-        rows.sort(key=lambda r: r.doc_id)
-        cum = 0
-        for r in rows:
-            # bin == floor(exclusive prefix / budget), recomputed locally
-            assert r.bin == cum // budget
-            cum += r.n_chars
-        # bins appear in nondecreasing order starting at 0
-        bins = [r.bin for r in rows]
-        assert bins[0] == 0 and bins == sorted(bins)
-
-
 def test_ar_bucket_batches_invariants(spark):
     """Nearest-bucket vs a Fraction-exact brute force, fixed batch
     sizes for full batches, and shard-bounded packing."""
@@ -137,102 +116,6 @@ def test_ar_bucket_batches_invariants(spark):
             else:
                 assert len(members) == len(rs) % B
                 assert not any(m.is_full for m in members)
-
-
-def test_temperature_resample_exact_keep_set(spark, docs):
-    """T30: the kept set is exactly {rows with hord%BUCKETS < rate_lang}
-    where rate_lang follows the T=2 (sqrt) temperature rule on integer
-    arithmetic — recomputed locally from scratch."""
-    import math
-
-    budget = docs.count() // 2
-    out = SMP.temperature_resample(docs, budget_rows=budget).select(
-        "doc_id", "lang", "rate_bp"
-    )
-    got = {(r.doc_id, r.lang, r.rate_bp) for r in out.collect()}
-    assert got == {(r.doc_id, r.lang, r.rate_bp) for r in out.collect()}
-
-    base = {
-        r.doc_id: r.lang for r in docs.select("doc_id", "lang").collect()
-    }
-    counts: dict[str, int] = {}
-    for lang in base.values():
-        counts[lang] = counts.get(lang, 0) + 1
-    s = sum(math.isqrt(n) for n in counts.values())
-    rates = {
-        k: min(
-            SMP.BUCKETS,
-            SMP.BUCKETS * budget * math.isqrt(n) // (s * n),
-        )
-        for k, n in counts.items()
-    }
-    ids = np.array(sorted(base), dtype=np.uint64)
-    hord = (splitmix64(ids) >> np.uint64(11)).astype(np.int64)
-    expect = {
-        (int(i), base[int(i)], rates[base[int(i)]])
-        for i, h in zip(ids, hord)
-        if h % SMP.BUCKETS < rates[base[int(i)]]
-    }
-    assert got == expect
-    # temperature flattening: the head stratum's keep RATE must be
-    # strictly below a tail stratum's (en dominates the synth corpus)
-    head = max(counts, key=counts.get)
-    tail = min(counts, key=counts.get)
-    assert counts[head] > counts[tail]
-    assert rates[head] < rates[tail]
-
-
-def test_temperature_resample_budget_cap(spark, docs):
-    """A budget >= corpus size caps every stratum at BUCKETS (keep all)."""
-    n = docs.count()
-    out = SMP.temperature_resample(docs, budget_rows=n * SMP.BUCKETS)
-    assert out.count() == n
-
-
-def test_unimax_allocation_and_copies(spark, docs):
-    """T30b: greedy allocation exactness + deterministic repetition.
-    Recomputes the ascending-size greedy locally, then checks every
-    exploded row count, copy index range, and that the smallest
-    language is epoch-capped while larger ones are budget-capped."""
-    E = 2
-    budget = docs.count() * 2
-    out = SMP.unimax_resample(docs, budget_rows=budget, max_epochs=E)
-    rows = out.select("doc_id", "lang", "copy", "base_copies", "rate_bp").collect()
-
-    base = {r.doc_id: r.lang for r in docs.select("doc_id", "lang").collect()}
-    counts: dict[str, int] = {}
-    for lang in base.values():
-        counts[lang] = counts.get(lang, 0) + 1
-    remaining = budget
-    alloc = {}
-    order = sorted(counts, key=lambda k: (counts[k], k))
-    for pos, k in enumerate(order):
-        m = min(counts[k] * E, max(remaining, 0) // (len(order) - pos))
-        alloc[k] = m
-        remaining -= m
-    smallest = order[0]
-    assert alloc[smallest] == counts[smallest] * E  # epoch-capped
-    assert sum(alloc.values()) <= budget  # never over-allocates
-
-    ids = np.array(sorted(base), dtype=np.uint64)
-    hord = (splitmix64(ids) >> np.uint64(11)).astype(np.int64)
-    expect: dict[int, int] = {}
-    for i, h in zip(ids, hord):
-        lang = base[int(i)]
-        n, m = counts[lang], alloc[lang]
-        cp = m // n + (1 if h % SMP.BUCKETS < SMP.BUCKETS * (m % n) // n else 0)
-        if cp:
-            expect[int(i)] = cp
-    got: dict[int, set] = {}
-    for r in rows:
-        got.setdefault(r.doc_id, set()).add(r.copy)
-    assert {d: len(c) for d, c in got.items()} == expect
-    for d, c in got.items():
-        assert c == set(range(len(c)))  # copy indices are 0..k-1
-    # expected take tracks the allocation within coin variance
-    for k in order:
-        n_out = sum(cp for d, cp in expect.items() if base[d] == k)
-        assert abs(n_out - alloc[k]) <= max(3, alloc[k] // 10)
 
 
 def test_spatial_block_split_no_leakage(spark):

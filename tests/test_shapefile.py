@@ -4,7 +4,6 @@ Null/Z-M record skip policy, dBASE attribute fidelity, byte
 determinism, and the Spark sink→source end-to-end path."""
 
 import os
-import shutil
 import struct
 
 import numpy as np

@@ -152,69 +152,6 @@ def test_tile_assignment_consistent_with_batch_path(spark):
     assert (a["ty"].to_numpy() == b["bty"].to_numpy()).all()
 
 
-# --- session windows (streaming twin of operators.temporal.sessionize) ------
-
-
-@pytest.fixture()
-def chunked_events_nodup(spark, tmp_path):
-    """3 ts-ordered chunks, NO replay: session counts are not
-    dedup-protected (unlike dirty_tile_counts) so the fixture models
-    exactly-once delivery."""
-    src = str(tmp_path / "sess_src")
-    os.makedirs(src)
-    ev = spark.read.parquet(f"{SF}/events.parquet").orderBy("event_id")
-    pdf = ev.toPandas()
-    n = len(pdf)
-    cuts = [0, n // 3, 2 * n // 3, n]
-    for i in range(3):
-        pdf.iloc[cuts[i] : cuts[i + 1]].to_parquet(
-            f"{src}/chunk{i}.parquet",
-            coerce_timestamps="us",
-            allow_truncated_timestamps=True,
-        )
-    return src
-
-
-def _sess_key_set(rows):
-    return {(r.user_id, r.min_id, r.n_events, r.dur_us) for r in rows}
-
-
-def test_session_window_matches_custom_sessionize(spark):
-    """Built-in session_window (batch mode) == the custom lag/running-
-    sum sessionize — the >gap vs >=gap boundary difference cannot fire
-    on microsecond event times (this is the gate for that claim)."""
-    from mapnik_vector_tile_spark.operators.temporal import user_sessions
-    from mapnik_vector_tile_spark.streaming import sessions as SS
-
-    builtin = _sess_key_set(SS.batch_session_counts(spark, SF).collect())
-    custom = _sess_key_set(user_sessions(spark, SF).collect())
-    assert builtin == custom
-    assert len(builtin) > 100
-
-
-def test_session_stream_emits_closed_sessions(spark, chunked_events_nodup, tmp_path):
-    """Streaming append-mode emission is a subset of the batch session
-    set (only watermark-closed sessions emit) and covers nearly all of
-    it on a 30-day corpus with a 30-minute watermark."""
-    from mapnik_vector_tile_spark.streaming import sessions as SS
-
-    SS.run_sessions_stream_to_memory(
-        spark,
-        chunked_events_nodup,
-        table_name="sess_t",
-        checkpoint_dir=str(tmp_path / "ckpt_sess"),
-    )
-    got = _sess_key_set(
-        spark.sql(
-            "SELECT user_id, min_id, n_events, dur_us FROM sess_t"
-        ).collect()
-    )
-    want = _sess_key_set(SS.batch_session_counts(spark, SF).collect())
-    assert got <= want
-    # everything except sessions still open at end-of-replay has closed
-    assert len(got) >= 0.8 * len(want)
-
-
 def test_incremental_retile_matches_batch_encode(spark, chunked_events, tmp_path):
     """foreachBatch re-tile leg: the latest re-rendered Tile buffer for
     every ticketed tile must be byte-identical to a cold batch encode
@@ -273,98 +210,6 @@ def test_incremental_retile_matches_batch_encode(spark, chunked_events, tmp_path
     assert spark.read.parquet(out).count() == n_before
 
 
-def test_stream_stream_attribution_join_matches_batch(
-    spark, chunked_events_nodup, tmp_path
-):
-    """§2.10 stream-stream watermarked interval join: with an
-    effectively-infinite watermark, a bounded availableNow replay must
-    emit EXACTLY the batch attribution join — every pair once, in any
-    order."""
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.streaming import joins as SJ
-
-    SJ.run_attribution_stream(
-        spark,
-        chunked_events_nodup,
-        table_name="attrib_t",
-        checkpoint_dir=str(tmp_path / "attr_ckpt"),
-    )
-    got = {
-        (r.view_id, r.click_id, r.gap_us)
-        for r in spark.sql(
-            "SELECT view_id, click_id, gap_us FROM attrib_t"
-        ).collect()
-    }
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    want = {
-        (r.view_id, r.click_id, r.gap_us)
-        for r in SJ.attribution_join(
-            ev.filter(F.col("event_type") == "view"),
-            ev.filter(F.col("event_type") == "click"),
-        ).collect()
-    }
-    assert len(want) > 0
-    assert got == want
-
-
-def test_stream_stream_left_outer_emits_nulls_on_window_close(
-    spark, tmp_path
-):
-    """Left-outer stream-stream join: matched pairs equal the batch
-    inner join; unmatched views emit NULL-click rows once the watermark
-    closes their window — never both for one view, and every null row
-    is truly unmatched in batch."""
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.streaming import joins as SJ
-
-    # ts-ORDERED chunks (event-id order would scramble event time and
-    # evict live state mid-stream under a tight watermark)
-    src = str(tmp_path / "attr_src")
-    os.makedirs(src)
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    pdf = ev.orderBy("ts").toPandas()
-    n = len(pdf)
-    cuts = [0, n // 3, 2 * n // 3, n]
-    for i in range(3):
-        pdf.iloc[cuts[i] : cuts[i + 1]].to_parquet(
-            f"{src}/chunk{i}.parquet",
-            coerce_timestamps="us",
-            allow_truncated_timestamps=True,
-        )
-
-    SJ.run_attribution_stream(
-        spark,
-        src,
-        table_name="attrib_lo",
-        watermark="1 minutes",
-        checkpoint_dir=str(tmp_path / "attr_lo_ckpt"),
-        how="left_outer",
-    )
-    got = spark.sql(
-        "SELECT view_id, click_id, gap_us FROM attrib_lo"
-    ).collect()
-    inner = {
-        (r.view_id, r.click_id, r.gap_us)
-        for r in SJ.attribution_join(
-            ev.filter(F.col("event_type") == "view"),
-            ev.filter(F.col("event_type") == "click"),
-        ).collect()
-    }
-    matched_views = {v for v, _, _ in inner}
-    got_pairs = {
-        (r.view_id, r.click_id, r.gap_us) for r in got if r.click_id is not None
-    }
-    got_nulls = {r.view_id for r in got if r.click_id is None}
-    # matched part == batch inner join exactly (ts-ordered stream: a
-    # view is never evicted before any click in its window arrives)
-    assert got_pairs == inner
-    # null rows: non-vacuous, disjoint from matches, truly unmatched
-    assert got_nulls
-    assert not (got_nulls & matched_views)
-
-
 def test_incremental_retile_overzoom_children(spark, chunked_events, tmp_path):
     """overzoom_dz: each dirty parent's served children are re-derived
     per micro-batch; the LATEST child bytes equal a cold overzoom of
@@ -417,38 +262,6 @@ def test_incremental_retile_overzoom_children(spark, chunked_events, tmp_path):
     assert set(latest) == set(cold)
     for k in latest:
         assert latest[k] == cold[k], f"child {k} differs from cold overzoom"
-
-
-def test_streaming_dedup_matches_batch_first_occurrence(
-    spark, chunked_events, tmp_path
-):
-    """§2.10 watermarked exact dedup: the replayed chunk must be
-    dropped inside the horizon and the emitted rows must equal the
-    batch first-occurrence twin row-for-row."""
-    from mapnik_vector_tile_spark.streaming import dedup as D
-
-    src, ev = chunked_events
-    D.run_dedup_stream_to_memory(
-        spark,
-        src,
-        table_name="dedup_t",
-        watermark="2 days",  # the corpus spans days; replays are verbatim
-        checkpoint_dir=str(tmp_path / "ckpt_dedup"),
-    )
-    got = spark.sql(
-        "SELECT event_id, user_id, event_type, value FROM dedup_t"
-    ).toPandas()
-    want = (
-        D.batch_first_occurrence(ev)
-        .select("event_id", "user_id", "event_type", "value")
-        .toPandas()
-    )
-    assert len(got) == ev.count()  # one row per distinct id, not per file row
-    g = got.sort_values("event_id").reset_index(drop=True)
-    w = want.sort_values("event_id").reset_index(drop=True)
-    assert (g["event_id"].to_numpy() == w["event_id"].to_numpy()).all()
-    assert (g["user_id"].to_numpy() == w["user_id"].to_numpy()).all()
-    assert (g["event_type"].to_numpy() == w["event_type"].to_numpy()).all()
 
 
 def test_incremental_retile_rollup_ancestors(spark, chunked_events, tmp_path):
@@ -597,57 +410,6 @@ def test_trending_topk_foreachbatch_sink_equals_batch(spark, tmp_path):
         map(tuple, T.topk_trending(T.trending_counts(ev)).collect())
     )
     assert got == want and len(got) > 0
-
-
-def test_scd2_stream_equals_batch_merge(spark, tmp_path):
-    """§2.10 streaming SCD2: folding time-split CDC chunks through
-    foreachBatch equals one batch merge exactly (the associativity
-    contract under per-key time order)."""
-    import numpy as np
-    import pandas as pd
-
-    from mapnik_vector_tile_spark.operators.temporal import (
-        SCD2_OPEN,
-        scd2_apply,
-    )
-    from mapnik_vector_tile_spark.streaming import scd2 as S2
-
-    rng = np.random.default_rng(23)
-    n_keys = 40
-    current = spark.createDataFrame(
-        [(k, k * 10, 0, SCD2_OPEN) for k in range(n_keys)],
-        "key long, attr long, valid_from long, valid_to long",
-    )
-    rows = []
-    for cid in range(300):
-        rows.append((
-            int(rng.integers(0, 2 * n_keys)),       # half unknown keys
-            cid,
-            1000 + cid * 7,                          # strictly increasing ts
-            "delete" if rng.random() < 0.15 else "upsert",
-            int(rng.integers(0, 1000)),
-        ))
-    pdf = pd.DataFrame(
-        rows, columns=["key", "change_id", "ts", "op", "attr"]
-    )
-    src = str(tmp_path / "cdc_src")
-    os.makedirs(src)
-    cuts = [0, 100, 200, 300]
-    for i in range(3):
-        pdf.iloc[cuts[i]:cuts[i + 1]].to_parquet(f"{src}/chunk{i}.parquet")
-    store = str(tmp_path / "scd2_store")
-    S2.run_scd2_stream(
-        spark, current, src, store,
-        checkpoint_dir=str(tmp_path / "ckpt_scd2"),
-    )
-    got = sorted(
-        map(tuple, spark.read.parquet(f"{store}/dim").collect())
-    )
-    changes = spark.createDataFrame(
-        pdf, "key long, change_id long, ts long, op string, attr long"
-    )
-    want = sorted(map(tuple, scd2_apply(current, changes).collect()))
-    assert got == want and len(got) > n_keys
 
 
 def test_shuffle_partitions_pins_only_the_query_start(spark, tmp_path):

@@ -1,170 +1,8 @@
-"""J6/J7 temporal joins — brute-force oracles on small random inputs;
-the sf0.01 value-hash gate lives in plans.oracle_pairs."""
+"""Trajectory and per-cell series operators (operators.temporal) —
+hand-built or brute-force oracles on small inputs; the sf0.01
+value-hash gate lives in plans.oracle_pairs."""
 
 from __future__ import annotations
-
-import numpy as np
-import pandas as pd
-
-from mapnik_vector_tile_spark.operators import temporal as T
-
-
-def _mk(spark, n, keys, t_range, seed):
-    rng = np.random.default_rng(seed)
-    pdf = pd.DataFrame(
-        {
-            "id": np.arange(n, dtype=np.int64),
-            "key": rng.integers(0, keys, n),
-            "t": rng.integers(0, t_range, n),
-        }
-    )
-    return spark.createDataFrame(pdf, schema="id long, key long, t long"), pdf
-
-
-def _asof_oracle(lp, rp):
-    out = {}
-    for lid, k, t in lp.itertuples(index=False):
-        cand = rp[(rp["key"] == k) & (rp["t"] <= t)]
-        if len(cand):
-            best = cand.sort_values(["t", "id"]).iloc[-1]
-            out[int(lid)] = (int(best["id"]), int(t - best["t"]))
-        else:
-            out[int(lid)] = (-1, -1)
-    return out
-
-
-def test_asof_matches_bruteforce(spark):
-    # small t_range + few keys => plenty of exact-tie collisions, which
-    # is exactly where the (t, side, id) ordering must be deterministic
-    l_df, lp = _mk(spark, 300, keys=7, t_range=50, seed=1)
-    r_df, rp = _mk(spark, 300, keys=7, t_range=50, seed=2)
-    got = {
-        r.left_id: (r.right_id, r.gap_us)
-        for r in T.asof_join(l_df, r_df, key="key").collect()
-    }
-    assert got == _asof_oracle(lp, rp)
-    assert sum(1 for v in got.values() if v[0] >= 0) > 200
-
-
-def test_interval_overlap_negative_times(spark):
-    """Epochs before 1970: Spark's DIV truncates toward zero rather
-    than flooring, which is still a monotone bucket map — sequence()
-    over [f(s), f(e)] covers every point's bucket and the later-start
-    dedup bucket is shared by both ranges. This pins that reasoning so
-    a future 'fix' to floor-division semantics can't silently regress
-    pair emission around t=0."""
-
-    def intervals(n, seed):
-        rng = np.random.default_rng(seed)
-        s = rng.integers(-500, 500, n)
-        e = s + rng.integers(0, 250, n)
-        pdf = pd.DataFrame(
-            {"id": np.arange(n, dtype=np.int64), "s": s, "e": e}
-        )
-        return (
-            spark.createDataFrame(pdf, schema="id long, s long, e long"),
-            pdf,
-        )
-
-    a_df, ap = intervals(80, 8)
-    b_df, bp = intervals(90, 9)
-    got = {
-        (r.a_id, r.b_id)
-        for r in T.interval_overlap_join(a_df, b_df, bucket_us=100).collect()
-    }
-    want = set()
-    for aid, as_, ae in ap.itertuples(index=False):
-        hit = bp[(bp["s"] <= ae) & (as_ <= bp["e"])]
-        want |= {(int(aid), int(b)) for b in hit["id"]}
-    assert got == want
-    # the fixture genuinely straddles zero on both sides
-    assert (ap["s"] < 0).any() and (ap["e"] > 0).any()
-
-
-def test_sessionize_matches_bruteforce(spark):
-    df, pdf = _mk(spark, 400, keys=9, t_range=200, seed=6)
-    gap = 10
-    got = {
-        (r.key, r.session_idx): (r.n_events, r.dur_us, r.min_id)
-        for r in T.sessionize(df, gap_us=gap, key="key").collect()
-    }
-    want = {}
-    for k, grp in pdf.sort_values(["key", "t", "id"]).groupby("key"):
-        idx, members = 0, []
-        rows = list(grp.itertuples(index=False))
-        for i, r in enumerate(rows):
-            if members and r.t - rows[i - 1].t > gap:
-                want[(int(k), idx)] = _sess_agg(members)
-                idx, members = idx + 1, []
-            members.append(r)
-        want[(int(k), idx)] = _sess_agg(members)
-    assert got == want
-    assert any(v[0] > 1 for v in got.values())  # multi-event sessions exist
-    assert len(got) > 9  # and more than one session per key overall
-
-
-def _sess_agg(members):
-    ts = [m.t for m in members]
-    return (len(members), int(max(ts) - min(ts)), int(min(m.id for m in members)))
-
-
-def test_interval_overlap_matches_bruteforce(spark):
-    def intervals(n, seed):
-        rng = np.random.default_rng(seed)
-        s = rng.integers(0, 1000, n)
-        # durations straddle the bucket width (100): some intervals
-        # span 1 bucket, some many — both dedup branches exercised
-        e = s + rng.integers(0, 250, n)
-        pdf = pd.DataFrame(
-            {"id": np.arange(n, dtype=np.int64), "s": s, "e": e}
-        )
-        return (
-            spark.createDataFrame(pdf, schema="id long, s long, e long"),
-            pdf,
-        )
-
-    a_df, ap = intervals(120, 4)
-    b_df, bp = intervals(130, 5)
-    got = {
-        (r.a_id, r.b_id): r.overlap_us
-        for r in T.interval_overlap_join(a_df, b_df, bucket_us=100).collect()
-    }
-    want = {}
-    for aid, as_, ae in ap.itertuples(index=False):
-        hit = bp[(bp["s"] <= ae) & (as_ <= bp["e"])]
-        for bid, bs, be in hit.itertuples(index=False):
-            want[(int(aid), int(bid))] = int(min(ae, be) - max(as_, bs))
-    assert got == want
-    assert len(got) > 500  # dense fixture: dedup actually has work to do
-
-
-def test_ewma_recursion_and_contract(spark):
-    """W5: s0 = v0, s = a*v + (1-a)*s in (ts, event_id) order; a
-    single event returns itself; invalid alpha raises."""
-    import datetime as dt
-
-    import pytest
-
-    from mapnik_vector_tile_spark.operators.temporal import ewma
-
-    t0 = dt.datetime(2026, 1, 1)
-    rows = [
-        (1, t0, 7, "a", 10.0, "{}"),
-        (2, t0 + dt.timedelta(seconds=1), 7, "a", 20.0, "{}"),
-        (3, t0 + dt.timedelta(seconds=2), 7, "a", 40.0, "{}"),
-        (4, t0, 8, "a", 5.0, "{}"),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string",
-    )
-    out = {r.user_id: r for r in ewma(df, alpha=0.5).collect()}
-    # user 7: s=10 -> (10*0.5+20*0.5)=15 -> (15*0.5+40*0.5)=27.5
-    assert out[7].ewma == 27.5 and out[7].n_events == 3
-    assert out[8].ewma == 5.0 and out[8].n_events == 1
-    with pytest.raises(ValueError):
-        ewma(df, alpha=0.0)
 
 
 def test_staypoints_greedy_semantics(spark):
@@ -203,35 +41,6 @@ def test_staypoints_greedy_semantics(spark):
     assert (s["sx"], s["sy"]) == (2, 2)
 
 
-def test_gap_fill_ffill_and_on_tick_event(spark):
-    from datetime import datetime
-
-    from mapnik_vector_tile_spark.operators.temporal import gap_fill
-
-    rows = [
-        # user 1: events at 00:05 (v=1.5) and 00:25 (v=7.0)
-        (1, 1, datetime(2024, 1, 1, 0, 5, 0), 1.5),
-        (2, 1, datetime(2024, 1, 1, 0, 25, 0), 7.0),
-        # user 2: single event exactly ON a tick boundary
-        (3, 2, datetime(2024, 1, 1, 0, 10, 0), 9.0),
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, user_id long, ts timestamp, value double"
-    )
-    out = {
-        (r["user_id"], r["tick"]): r["value"]
-        for r in gap_fill(df, 600).collect()
-    }
-    base = int(datetime(2024, 1, 1).timestamp())
-    # user 1 ticks: 00:10 and 00:20 (span 00:05..00:25)
-    assert out[(1, base + 600)] == 1.5
-    assert out[(1, base + 1200)] == 1.5
-    assert (1, base + 1800) not in out  # 00:30 past max ts
-    # user 2: tick == event ts -> event included in its own tick
-    assert out[(2, base + 600)] == 9.0
-    assert len(out) == 3
-
-
 def test_hausdorff_pairs_exact(spark):
     from mapnik_vector_tile_spark.operators.temporal import hausdorff_pairs
 
@@ -247,155 +56,6 @@ def test_hausdorff_pairs_exact(spark):
     # (20,7) -> 49; B->A: (20,7) nearest (20,0) -> 49
     assert out["h_ab"] == 49 and out["h_ba"] == 49
     assert out["h_sym"] == 49
-
-
-def test_funnel_stages_ordering_and_ties(spark):
-    import datetime as dt
-
-    from mapnik_vector_tile_spark.operators.temporal import funnel_stages
-
-    def ev(eid, t, user, et):
-        return (eid, dt.datetime(2026, 1, 1, 0, 0, t), user, et, 0.0, "{}")
-
-    rows = [
-        # user 1: full funnel, but a click BEFORE the view must not count
-        ev(1, 5, 1, "click"),
-        ev(2, 10, 1, "view"),
-        ev(3, 20, 1, "click"),
-        ev(4, 30, 1, "purchase"),
-        # user 2: view only
-        ev(5, 10, 2, "view"),
-        # user 3: purchase before click -> stops at stage 2
-        ev(6, 10, 3, "view"),
-        ev(7, 15, 3, "purchase"),
-        ev(8, 20, 3, "click"),
-        # user 4: never views -> absent from output
-        ev(9, 10, 4, "purchase"),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    )
-    out = {r["user_id"]: r for r in funnel_stages(df).collect()}
-    assert set(out) == {1, 2, 3}
-    assert (out[1]["stage"], out[1]["dt1"], out[1]["dt2"]) == (3, 10, 10)
-    assert (out[2]["stage"], out[2]["dt1"], out[2]["dt2"]) == (1, -1, -1)
-    assert (out[3]["stage"], out[3]["dt1"], out[3]["dt2"]) == (2, 10, -1)
-
-
-def test_retention_cohorts_matrix(spark):
-    import datetime as dt
-
-    from mapnik_vector_tile_spark.operators.temporal import (
-        WEEK_S,
-        retention_cohorts,
-    )
-
-    def ev(eid, day, user):
-        return (
-            eid,
-            dt.datetime(1970, 1, 1) + dt.timedelta(days=day),
-            user,
-            "view",
-            0.0,
-            "{}",
-        )
-
-    rows = [
-        ev(1, 0, 1), ev(2, 7, 1), ev(3, 21, 1),   # cohort w0: wks 0,1,3
-        ev(4, 1, 2), ev(5, 2, 2),                  # cohort w0: wk 0 only
-        ev(6, 8, 3), ev(7, 15, 3),                 # cohort w1: wks 1,2
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    )
-    out = {
-        (r["cohort_w"], r["k"]): (r["n_active"], r["n_cohort"])
-        for r in retention_cohorts(df).collect()
-    }
-    assert out[(0, 0)] == (2, 2)
-    assert out[(0, 1)] == (1, 2)
-    assert out[(0, 3)] == (1, 2)
-    assert (0, 2) not in out
-    assert out[(1, 0)] == (1, 1) and out[(1, 1)] == (1, 1)
-
-
-def test_interval_concurrency_sweep(spark):
-    from mapnik_vector_tile_spark.operators.temporal import (
-        interval_concurrency,
-    )
-
-    # [0,10],[5,15],[10,20]: at t=10 all three overlap (closed ends);
-    # earliest max instant is 10
-    iv = spark.createDataFrame(
-        [(1, 0, 10), (2, 5, 15), (3, 10, 20)], "id long, s long, e long"
-    )
-    out = interval_concurrency(iv).collect()[0]
-    assert (out["max_cc"], out["t_at"], out["n_intervals"]) == (3, 10, 3)
-    # disjoint pair: max 1 at the first start
-    iv2 = spark.createDataFrame(
-        [(1, 0, 5), (2, 10, 15)], "id long, s long, e long"
-    )
-    o2 = interval_concurrency(iv2).collect()[0]
-    assert (o2["max_cc"], o2["t_at"]) == (1, 0)
-    # ADVICE r2: adjacent-but-disjoint closed intervals [0,4],[5,9] —
-    # the end event at e+1=5 must process BEFORE the start at 5, so
-    # occupancy never reaches 2
-    iv3 = spark.createDataFrame(
-        [(1, 0, 4), (2, 5, 9)], "id long, s long, e long"
-    )
-    o3 = interval_concurrency(iv3).collect()[0]
-    assert (o3["max_cc"], o3["t_at"]) == (1, 0)
-    # s==e touching (overlap of closed intervals) still counts 2
-    iv4 = spark.createDataFrame(
-        [(1, 0, 5), (2, 5, 9)], "id long, s long, e long"
-    )
-    o4 = interval_concurrency(iv4).collect()[0]
-    assert (o4["max_cc"], o4["t_at"]) == (2, 5)
-
-
-def test_interval_concurrency_segmented_matches_exact(spark):
-    from mapnik_vector_tile_spark.operators.temporal import (
-        interval_concurrency,
-        interval_concurrency_segmented,
-    )
-
-    # deterministic pseudo-random corpus straddling many buckets,
-    # including exact bucket-boundary starts/ends and the
-    # touching-disjoint tie case
-    rows = []
-    for i in range(400):
-        s = (i * 2654435761) % 10_000
-        e = s + (i * 40503) % 500
-        rows.append((i, s, e))
-    rows += [(1000, 0, 99), (1001, 100, 199), (1002, 200, 200)]
-    iv = spark.createDataFrame(rows, "id long, s long, e long")
-    for width in (100, 1, 1 << 40):
-        exact = interval_concurrency(iv).collect()[0]
-        seg = interval_concurrency_segmented(
-            iv, bucket_width=width
-        ).collect()[0]
-        assert (
-            seg["max_cc"], seg["t_at"], seg["n_intervals"]
-        ) == (
-            exact["max_cc"], exact["t_at"], exact["n_intervals"]
-        ), f"width={width}"
-
-
-def test_trimmed_sums_drops_tails(spark):
-    from mapnik_vector_tile_spark.operators.temporal import trimmed_sums
-
-    # 10 values 1..10 with id = value: 10% trim drops 1 and 10
-    rows = [(0, v, v) for v in range(1, 11)]
-    df = spark.createDataFrame(rows, "g long, id long, v long")
-    out = trimmed_sums(df, trim_pct=10).collect()[0]
-    assert (out["n"], out["n_trim"]) == (10, 1)
-    assert out["sum_all"] == 55
-    assert out["sum_trim"] == 55 - 1 - 10
-    assert (out["min_kept"], out["max_kept"]) == (2, 9)
 
 
 def test_frechet_pairs_exact_dp(spark):
@@ -460,87 +120,6 @@ def test_frechet_pairs_exact_dp(spark):
             spark.createDataFrame([(0, 9)], "ta long, tb long"),
             max_len=4,
         ).collect()
-
-
-def test_scd2_apply_version_chaining(spark):
-    """W18: changes close the open version and chain new ones; a
-    delete closes without opening; unknown keys start history; an
-    invalid op raises."""
-    import pytest as _pytest
-
-    from mapnik_vector_tile_spark.operators.temporal import (
-        SCD2_OPEN,
-        scd2_apply,
-    )
-
-    current = spark.createDataFrame(
-        [
-            (1, 10, 0, SCD2_OPEN),       # open
-            (1, 9, -100, 0),             # closed history
-            (2, 20, 0, SCD2_OPEN),       # open, will be deleted
-            (3, 30, 0, SCD2_OPEN),       # open, untouched
-        ],
-        "key long, attr long, valid_from long, valid_to long",
-    )
-    changes = spark.createDataFrame(
-        [
-            (1, 100, 50, "upsert", 11),
-            (1, 101, 70, "upsert", 12),
-            (2, 102, 60, "delete", 0),
-            (4, 103, 80, "upsert", 40),  # unknown key
-        ],
-        "key long, change_id long, ts long, op string, attr long",
-    )
-    got = {
-        (r.key, r.attr, r.valid_from, r.valid_to)
-        for r in scd2_apply(current, changes).collect()
-    }
-    want = {
-        (1, 9, -100, 0),          # history untouched
-        (1, 10, 0, 50),           # open closed at first change
-        (1, 11, 50, 70),          # first upsert bounded by second
-        (1, 12, 70, SCD2_OPEN),   # second upsert open
-        (2, 20, 0, 60),           # delete closes, opens nothing
-        (3, 30, 0, SCD2_OPEN),    # untouched key stays open
-        (4, 40, 80, SCD2_OPEN),   # new key history starts
-    }
-    assert got == want
-    bad = spark.createDataFrame(
-        [(1, 1, 1, "merge", 1)],
-        "key long, change_id long, ts long, op string, attr long",
-    )
-    with _pytest.raises(ValueError, match="op"):
-        scd2_apply(current, bad)
-
-
-def test_scd2_lookup_versions_and_gaps(spark):
-    from mapnik_vector_tile_spark.operators.temporal import (
-        SCD2_OPEN,
-        scd2_lookup,
-    )
-
-    dim = spark.createDataFrame(
-        [
-            (1, 10, 0, 50), (1, 11, 50, 70), (1, 12, 70, SCD2_OPEN),
-            (2, 20, 0, 60),  # deleted at 60: gap after
-        ],
-        "key long, attr long, valid_from long, valid_to long",
-    )
-    facts = spark.createDataFrame(
-        [
-            (100, 1, 0),    # first version, inclusive lower bound
-            (101, 1, 49),   # last tick of v1
-            (102, 1, 50),   # exclusive upper: lands in v2
-            (103, 1, 99),   # open version
-            (104, 2, 59),   # still valid
-            (105, 2, 60),   # delete gap -> -1
-            (106, 3, 10),   # unknown key -> -1
-        ],
-        "fact_id long, key long, ts long",
-    )
-    got = {r.fact_id: r.attr for r in scd2_lookup(facts, dim).collect()}
-    assert got == {100: 10, 101: 10, 102: 11, 103: 12, 104: 20,
-                   105: -1, 106: -1}
 
 
 def test_trend_stats_exact_median_slope(spark):
