@@ -26,14 +26,14 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from mapnik_vector_tile_spark.plans.oracle_pairs import sql_pairs
+    from mapnik_vector_tile_spark.plans.oracles import sql_pairs
 
     q, _ = sql_pairs()
     return q
 
 
 def oracle_sql() -> dict[str, str]:
-    from mapnik_vector_tile_spark.plans.oracle_pairs import sql_pairs
+    from mapnik_vector_tile_spark.plans.oracles import sql_pairs
 
     _, o = sql_pairs()
     return o

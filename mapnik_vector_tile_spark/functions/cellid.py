@@ -16,7 +16,7 @@ Deliberate simplifications vs real S2, documented for the judge:
   64-bit encoding — parents are still `cell >> 2`.
 
 Everything is vectorized numpy over Arrow batches; the DuckDB oracle
-twin (plans.oracle_pairs.q_s2_cells) renders the SAME formula chain in
+twin (plans.oracles.tiles.q_s2_cells) renders the SAME formula chain in
 SQL. Drift note: numpy's SIMD atan/exp differ from DuckDB's libm by
 ~1 ulp on a quarter of inputs (measured), so the match is
 drift-TOLERANT, not bit-exact — a 1-ulp st perturbation flips the

@@ -19,6 +19,14 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+)
 
 from mapnik_vector_tile_spark.functions import clip as clipmod
 from mapnik_vector_tile_spark.functions import geomcodec as gc
@@ -30,7 +38,9 @@ from mapnik_vector_tile_spark.operators.grouped import apply_grouped
 from mapnik_vector_tile_spark.operators.tiling import (
     LAYER_COLS,
     LAYER_SCHEMA,
+    _ZXY,
     _dedup_pairs,
+    _schema,
     fold_tiles,
 )
 
@@ -199,10 +209,14 @@ def tile_is_valid(tile: bytes) -> tuple[bool, list[str]]:
     return (not reasons), reasons
 
 
+_VALID_SCHEMA = _schema(
+    *_ZXY, ("valid", BooleanType()), ("reasons", ArrayType(StringType()))
+)
+
+
 def validate_tiles(tiles: DataFrame) -> DataFrame:
     """P5 as a DataFrame operator: (z,x,y, valid, reasons). Narrow
     vectorized scan — used as a filter and a test assertion."""
-    import pandas as pd
 
     def gen(batches):
         for pdf in batches:
@@ -216,9 +230,7 @@ def validate_tiles(tiles: DataFrame) -> DataFrame:
             out["reasons"] = reasons
             yield out
 
-    return tiles.mapInPandas(
-        gen, schema="z int, x long, y long, valid boolean, reasons array<string>"
-    )
+    return tiles.mapInPandas(gen, schema=_VALID_SCHEMA)
 
 
 # --- EP3 slow path across zoom levels: overzoom ----------------------------------
@@ -1245,6 +1257,17 @@ def pyramid_orphans(tiles: DataFrame, z_min: int | None = None) -> DataFrame:
     ).select("z", "x", "y", "parent_x", "parent_y")
 
 
+_ATTR_VALUES_SCHEMA = _schema(
+    ("layer", StringType()),
+    ("attr", StringType()),
+    ("vtype", StringType()),
+    ("value_key", StringType()),
+    ("value_repr", StringType()),
+    ("value_num", DoubleType()),
+    ("cnt", LongType()),
+)
+
+
 def layer_attribute_stats(layers: DataFrame) -> DataFrame:
     """Mapbox-tilestats-shape attribute statistics over a LAYER table
     (the ``tilestats`` block tippecanoe/tileserver publish beside
@@ -1297,14 +1320,7 @@ def layer_attribute_stats(layers: DataFrame) -> DataFrame:
                     out["cnt"].append(c)
             yield pd.DataFrame(out)
 
-    vals = layers.mapInPandas(
-        gen,
-        schema=(
-            "layer string, attr string, vtype string, "
-            "value_key string, value_repr string, value_num double, "
-            "cnt long"
-        ),
-    )
+    vals = layers.mapInPandas(gen, schema=_ATTR_VALUES_SCHEMA)
     # identity for distinct-counting is the RAW Value encoding (bit-
     # exact, engine-internal) — doubles never need a cross-engine repr
     per_value = vals.groupBy(
@@ -1419,13 +1435,21 @@ def is_solid_extent(buf: bytes) -> tuple[bool, bool, str, int]:
     return solid, covers, "-".join(names), n_features
 
 
+_SOLID_SCHEMA = _schema(
+    *_ZXY,
+    ("solid", BooleanType()),
+    ("covers", BooleanType()),
+    ("key", StringType()),
+    ("n_features", LongType()),
+)
+
+
 def solid_tiles(tiles: DataFrame) -> DataFrame:
     """U9 as a DataFrame operator over a (z,x,y,tile) store:
     (z, x, y, solid, covers, key, n_features). Narrow blob scan — no
     shuffle, no geometry leaves the kernel; at 100 TB this is a
     map-only pass whose output is 4 scalars/tile, the shape a
     store-dedup or mask-level job wants to groupBy afterwards."""
-    import pandas as pd
 
     def gen(batches):
         for pdf in batches:
@@ -1443,11 +1467,7 @@ def solid_tiles(tiles: DataFrame) -> DataFrame:
             out["n_features"] = np.asarray(nf, dtype=np.int64)
             yield out
 
-    return tiles.mapInPandas(
-        gen,
-        schema="z int, x long, y long, solid boolean, covers boolean, "
-        "key string, n_features long",
-    )
+    return tiles.mapInPandas(gen, schema=_SOLID_SCHEMA)
 
 
 # --- U10: attribute enrichment join (tile-join CSV semantics) ---------------
@@ -1767,7 +1787,12 @@ def join_attributes_relational(
 
     kdf = layers.mapInPandas(
         extract,
-        schema=f"z int, x long, y long, layer string, fidx int, _jk {jk_type}",
+        schema=_schema(
+            *_ZXY,
+            ("layer", StringType()),
+            ("fidx", IntegerType()),
+            ("_jk", _JK_TYPES[jk_type]),
+        ),
     )
     adf = attrs.select(
         F.col(cols[0]).cast(jk_type).alias("_jk"),
@@ -1830,6 +1855,9 @@ def join_attributes_relational(
             yield pd.DataFrame(rows)
 
     return enriched.mapInPandas(apply, schema=LAYER_SCHEMA)
+
+
+_JK_TYPES = {"long": LongType(), "double": DoubleType(), "string": StringType()}
 
 
 def _attrs_jk_type(attrs: DataFrame) -> str:

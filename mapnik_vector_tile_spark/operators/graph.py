@@ -209,7 +209,6 @@ def viterbi_match(cands: DataFrame, switch_cost: int) -> DataFrame:
     radius, NOT by corpus size).
 
     Output: (tid, n_steps, total_cost, kh, n_off)."""
-    import numpy as np
     import pandas as pd
 
     INF = 1 << 62

@@ -112,7 +112,7 @@ def union_polygon_stats(
     """Per-group integer union summary for rectilinear-integer rings:
     (area2, manhattan perimeter, n_vertices, n_ext − n_hole, vertex
     multiset hash) — every column exactly replayable by the DuckDB
-    grid twin (see plans/oracle_pairs.q_polygon_union)."""
+    grid twin (see plans/oracles/geometry.q_polygon_union)."""
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         g = int(pdf[group_col].iloc[0])

@@ -1607,7 +1607,7 @@ def raster_downzoom(tiles: DataFrame, tile_size: int) -> DataFrame:
     T = tile_size
     H = T // 2
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, pdf):
         z, px, py = int(key[0]), int(key[1]), int(key[2])
         parent = np.zeros((T, T), dtype=np.int64)
         occ = 0
@@ -1677,7 +1677,7 @@ def raster_composite_over(tiles: DataFrame, tile_size: int) -> DataFrame:
 
     T = tile_size
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, pdf):
         z, x, y = int(key[0]), int(key[1]), int(key[2])
         pdf = pdf.sort_values("layer_order", kind="mergesort")
         out_l = np.zeros((T, T), dtype=np.int64)

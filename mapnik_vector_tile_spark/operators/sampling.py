@@ -32,8 +32,8 @@ Hash-keyed sampling and split operators over the ``documents`` table
 No reference counterpart (mapnik-vector-tile renders tiles; it has no
 corpus curation); ``sample_hash`` is also the zoom-thinning coin of
 ``tiling``. Every public operator here is gated by a full DuckDB
-oracle (oracle_pairs re-derives the hash via splitmix64_sql HUGEINT
-arithmetic, bit-exact).
+oracle (plans/oracles/sampling re-derives the hash via
+shared_sql.splitmix64_sql HUGEINT arithmetic, bit-exact).
 """
 
 from __future__ import annotations

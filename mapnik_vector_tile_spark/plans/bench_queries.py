@@ -129,7 +129,7 @@ def q_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 8-bit-band join going super-linear (exponent ≈1.8, 91 s at
     sf1.0); the multi-index form keeps the identical exact
     Hamming ≤ 6 output with ~15× fewer candidates."""
-    from mapnik_vector_tile_spark.plans.oracle_pairs import q_phash_mi
+    from mapnik_vector_tile_spark.plans.oracles.raster import q_phash_mi
 
     return q_phash_mi(spark, sf_dir)
 
@@ -146,10 +146,8 @@ def q_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_hex_density_b(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T18 hex binning + ring-1 disk smoothing (pure Catalyst)."""
     from mapnik_vector_tile_spark.plans import shared_sql as S
-    from mapnik_vector_tile_spark.plans.oracle_pairs import (
-        _sql_hex_density,
-        load_views,
-    )
+    from mapnik_vector_tile_spark.plans.oracles.tiles import _sql_hex_density
+    from mapnik_vector_tile_spark.plans.shared_sql import load_views
 
     load_views(spark, sf_dir)
     return spark.sql(S.render(_sql_hex_density(), "spark"))
@@ -157,7 +155,7 @@ def q_hex_density_b(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_balanced_sample_b(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T17 exact-k-per-stratum sample (map-side WindowGroupLimit)."""
-    from mapnik_vector_tile_spark.plans.sampling_oracles import q_balanced_sample
+    from mapnik_vector_tile_spark.plans.oracles.sampling import q_balanced_sample
 
     return q_balanced_sample(spark, sf_dir)
 
@@ -181,7 +179,7 @@ def q_delta_sssp_b(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative operator — its cost is synchronization rounds, not rows,
     so bench visibility catches round-count regressions that per-key
     oracle timing would attribute to noise."""
-    from mapnik_vector_tile_spark.plans.oracle_pairs import q_delta_sssp
+    from mapnik_vector_tile_spark.plans.oracles.graph import q_delta_sssp
 
     return q_delta_sssp(spark, sf_dir)
 

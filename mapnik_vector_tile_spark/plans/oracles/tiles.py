@@ -1,32 +1,25 @@
-"""Part 1 of the oracle-pair registry (mechanical order-preserving split of the former monolithic oracle_pairs.py; the facade module re-exports everything).  Cross-part names are imported explicitly below — generated, do not hand-edit the import block.
+"""Oracle pairs for tiling, compositing, cell indexes and tile
+metadata (operators.tiling, operators.composite, operators.cellcover,
+the cell-id functions), plus the pure-SQL template keys whose one SQL
+text runs on both engines (`_make_spark_fn`).
 
-Original module docstring:
-Registry of (Spark query, DuckDB oracle SQL) pairs — the driver
-correctness contract (__spark_entry__.queries / oracle_sql).
-
-Every pair shares one SQL template (plans.shared_sql) rendered per
-engine, so arithmetic is bit-identical and the driver's
-order-insensitive value hash matches. Engine-only operators (binary
-encodes, concave PIP, raster) register a query with NO oracle entry →
-driver records a rows-only check, as documented.
-"""
+`pairs()` maps each query key to (spark_fn, oracle SQL template);
+`plans.oracles.sql_pairs()` merges the families."""
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from mapnik_vector_tile_spark.functions.tilemath import W, cell_id_sql_expr
 from mapnik_vector_tile_spark.plans import shared_sql as S
+from mapnik_vector_tile_spark.plans.shared_sql import (
+    bbox_rect_join_sql,
+    load_views,
+    splitmix64_sql,
+)
 
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents"
-).split()
-
-def load_views(spark: SparkSession, sf_dir: str) -> None:
-    for t in TABLES:
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
 
 def _sql_tile_assign() -> str:
     tx, ty = S.tile_xy_exprs(14)
@@ -35,6 +28,7 @@ WITH {S.point_cte('orders', 'o_orderkey')}
 SELECT id, {tx} AS tx, {ty} AS ty
 FROM pts
 """
+
 
 def _sql_pyramid_counts_band(z_lo: int, z_hi: int) -> str:
     """THE pyramid-counts oracle template (single source: the other
@@ -51,8 +45,10 @@ WHERE z >= {z_lo} AND z <= {z_hi}
 GROUP BY 1, 2, 3
 """
 
+
 def _sql_pyramid_counts() -> str:
     return _sql_pyramid_counts_band(0, 14)
+
 
 def _sql_quantize() -> str:
     tx, ty = S.tile_xy_exprs(14)
@@ -64,6 +60,7 @@ SELECT id, tx, ty, {px} AS px, {py} AS py
 FROM t14
 """
 
+
 def _sql_zigzag() -> str:
     zz1 = S.zigzag_expr("l_orderkey - 3 * l_partkey")
     zz2 = S.zigzag_expr("l_suppkey - l_partkey")
@@ -73,6 +70,7 @@ SELECT l_orderkey AS id, l_linenumber AS ln,
        CAST(1 + 8 * l_linenumber AS BIGINT) AS cmd_move
 FROM lineitem
 """
+
 
 def _sql_cell_morton() -> str:
     z = 10
@@ -85,27 +83,6 @@ SELECT id, CAST({cell} AS BIGINT) AS cell
 FROM t
 """
 
-def _sql_bbox_rect_join() -> str:
-    """Range join: order points vs broadcast-size rectangle regions —
-    the SQL-expressible shape of J3 (PIP vs rects).
-
-    Boundary semantics: this oracle is closed (<=/>=) while the engine
-    refine's even-odd ray cast is half-open. They can only disagree
-    for a point EXACTLY on a rect edge, which requires
-    (dh/2^32)*2W == hw in exact double arithmetic — the hash-lattice
-    coordinates and the integer-meter hw values share no such point
-    (checked over the fixtures), so the pair is stable; revisit if
-    either generator changes."""
-    return f"""
-WITH {S.point_cte('orders', 'o_orderkey')},
-{S.rect_regions_cte('nation')}
-SELECT r.region_id, COUNT(*) AS n_pts, MIN(p.id) AS min_id
-FROM pts p
-JOIN rects r
-  ON p.mx >= r.cx - r.hw AND p.mx <= r.cx + r.hw
- AND p.my >= r.cy - r.hw AND p.my <= r.cy + r.hw
-GROUP BY 1
-"""
 
 def _sql_tile_cube(z: int = 5) -> str:
     """A6 grouping sets via built-ins: per-tile counts with CUBE over
@@ -123,6 +100,7 @@ SELECT COALESCE(x, -1) AS x, COALESCE(y, -1) AS y,
 FROM t
 GROUP BY CUBE(x, y)
 """
+
 
 def _sql_tile_rollup(z: int = 6) -> str:
     """A6's hierarchical twin of the CUBE query: ROLLUP over
@@ -143,6 +121,7 @@ FROM t
 GROUP BY ROLLUP(x, y)
 """
 
+
 def _sql_hex_assign(size: float = W / 64.0) -> str:
     """T18/H3-analog: axial hex cell assignment of customer points —
     shared cube-round template (shared_sql.hex_cell_cte), numpy twin
@@ -152,6 +131,7 @@ WITH {S.point_cte('customer', 'c_custkey')},
 {S.hex_cell_cte(size, src='pts')}
 SELECT id, hq, hr FROM hex
 """
+
 
 def _sql_hex_density(size: float = W / 64.0) -> str:
     """Hex-binned density + ring-1 disk smoothing: per-cell count,
@@ -171,6 +151,7 @@ JOIN d AS d2 ON d2.hq = d.hq + nb.dq AND d2.hr = d.hr + nb.dr
 GROUP BY 1, 2, 3, 4
 """
 
+
 def _sql_json_props() -> str:
     """F15 JSON scalar path: extract $.k from the events props JSON
     string (engine-specific function via the {{JSONK}} token), then an
@@ -186,6 +167,7 @@ SELECT k % 10 AS kb,
 FROM ex
 GROUP BY 1
 """
+
 
 def _sql_tile_setop(op: str, z: int = 8) -> str:
     """U3 set ops via pure built-ins: the z8 tiles containing an order
@@ -203,24 +185,10 @@ SELECT x, y FROM ot
 SELECT x, y FROM ct
 """
 
-_PAIRS: dict[str, str] = {
-    "q_tile_assign_z14": _sql_tile_assign(),
-    "q_tile_pyramid_counts": _sql_pyramid_counts(),
-    "q_quantize_z14": _sql_quantize(),
-    "q_zigzag_cmd": _sql_zigzag(),
-    "q_cell_morton_z10": _sql_cell_morton(),
-    "q_pip_rect_join": _sql_bbox_rect_join(),
-    "q_tile_except": _sql_tile_setop("EXCEPT"),
-    "q_tile_intersect": _sql_tile_setop("INTERSECT"),
-    "q_tile_cube": _sql_tile_cube(),
-    "q_tile_rollup": _sql_tile_rollup(),
-    "q_hex_assign": _sql_hex_assign(),
-    "q_hex_density": _sql_hex_density(),
-    "q_json_props": _sql_json_props(),
-}
 
 def _sql_pyramid_counts_z(z_hi: int) -> str:
     return _sql_pyramid_counts_band(0, z_hi)
+
 
 def q_engine_tile_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The REAL EP1 pipeline (assign_tiles -> salted applyInPandas
@@ -239,6 +207,7 @@ def q_engine_tile_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "z", "x", "y", F.col("n_features").cast("bigint").alias("n_features")
     )
 
+
 def q_vtquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S7 mapbox/vtquery parity (tiling.vtquery — nearest features to
     a point, served FROM THE ENCODED TILES): the engine path encodes
@@ -254,6 +223,7 @@ def q_vtquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = T.assign_tiles(feats, 6, 6, buffer_units=0)
     tiles = T.fold_tiles(T.encode_layers(assigned))
     return T.vtquery(tiles, 12.5, 41.9, 8000, 6, k=25)
+
 
 def _sql_vtquery(
     lon: float = 12.5,
@@ -294,197 +264,6 @@ SELECT feature_id, CAST(d2 AS BIGINT) AS d2,
 FROM near
 """
 
-def _sql_knn(k: int = 3) -> str:
-    """kNN oracle as bounded streaming passes, not a materialized
-    window: the naive form (row_number over the full cross join) is
-    O(|pts|·|tg|) MEMORY — at sf0.1 that is 2.25e9 rows, which blew
-    straight through the sweep's 40 GB DuckDB cap and then the disk
-    spill. Instead: three plain min() passes compute d_i = the i-th
-    smallest DISTINCT squared distance per point (each pass is a
-    streaming hash aggregate — state is one double per point), then
-    only pairs with dist <= d3 are window-ranked. Correctness: the
-    top-k by (dist, id) all have dist <= (k-th smallest distinct
-    distance), so the candidate set is a provable superset; duplicate
-    distances only ENLARGE it. Verified row-identical to the window
-    form at sf0.01; sf0.1 runs in ~210 s inside the 40 GB cap."""
-    assert k == 3, "oracle is written for k=3 (three min passes)"
-    dist = (
-        "(t.mx - p.mx) * (t.mx - p.mx) + (t.my - p.my) * (t.my - p.my)"
-    )
-    return f"""
-WITH {S.point_cte('customer', 'c_custkey')},
-{S.point_cte('orders', 'o_orderkey', cte='tg')},
-d1 AS (SELECT p.id AS id, min({dist}) AS d
-       FROM pts p CROSS JOIN tg t GROUP BY p.id),
-d2 AS (SELECT p.id AS id, min({dist}) AS d
-       FROM pts p JOIN d1 ON d1.id = p.id CROSS JOIN tg t
-       WHERE {dist} > d1.d GROUP BY p.id),
-d3 AS (SELECT p.id AS id, min({dist}) AS d
-       FROM pts p JOIN d2 ON d2.id = p.id CROSS JOIN tg t
-       WHERE {dist} > d2.d GROUP BY p.id),
-cand AS (
-  SELECT p.id AS id, t.id AS nbr, {dist} AS dist
-  FROM pts p JOIN d3 ON d3.id = p.id CROSS JOIN tg t
-  WHERE {dist} <= d3.d)
-SELECT id, nbr, rnk FROM (
-  SELECT id, nbr,
-         CAST(row_number() OVER (
-           PARTITION BY id ORDER BY dist, nbr) AS BIGINT) AS rnk
-  FROM cand) r
-WHERE rnk <= {k}
-"""
-
-def q_engine_pip_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3 through the REAL engine path (cell cover -> broadcast equi-join
-    -> vectorized ray-cast refine) on the 25 mercator rects — counts
-    must equal the pure range-predicate oracle."""
-    from mapnik_vector_tile_spark.operators import joins as J
-
-    return J.bench_pip_join(spark, sf_dir)
-
-def q_engine_pip_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J4: same result via the range-partitioned (PBSM) plan."""
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.operators import joins as J
-
-    pts = J._order_points(spark, sf_dir, "orders", "o_orderkey")
-    regions = J.merc_rect_regions(spark, sf_dir)
-    pairs = J.pip_join_partitioned(pts, regions, z=6)
-    return pairs.groupBy("region_id").agg(
-        F.count("*").alias("n_pts"), F.min("point_id").alias("min_id")
-    )
-
-def q_engine_pip_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3 semi variant: order points inside >=1 mercator rect, once
-    each — engine path is the broadcast PIP join folded to a left_semi
-    on the surviving point ids."""
-    from mapnik_vector_tile_spark.operators import joins as J
-
-    pts = J._order_points(spark, sf_dir, "orders", "o_orderkey")
-    regions = J.merc_rect_regions(spark, sf_dir)
-    return J.pip_join_semi(pts, regions, z=6).select("id")
-
-def q_engine_pip_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3 anti variant: order points inside NO mercator rect. The cell
-    prefilter proves most points outside without a geometry test; the
-    left_anti subtracts only the refined hit set."""
-    from mapnik_vector_tile_spark.operators import joins as J
-
-    pts = J._order_points(spark, sf_dir, "orders", "o_orderkey")
-    regions = J.merc_rect_regions(spark, sf_dir)
-    return J.pip_join_anti(pts, regions, z=6).select("id")
-
-def _sql_pip_membership(exists: bool) -> str:
-    """EXISTS / NOT EXISTS twin of the semi/anti PIP joins over the 25
-    rects — same closed-boundary caveat as _sql_bbox_rect_join (no
-    lattice point sits exactly on a rect edge)."""
-    neg = "" if exists else "NOT "
-    return f"""
-WITH {S.point_cte('orders', 'o_orderkey')},
-{S.rect_regions_cte('nation')}
-SELECT p.id AS id
-FROM pts p
-WHERE {neg}EXISTS (
-  SELECT 1 FROM rects r
-  WHERE p.mx >= r.cx - r.hw AND p.mx <= r.cx + r.hw
-    AND p.my >= r.cy - r.hw AND p.my <= r.cy + r.hw
-)
-"""
-
-def q_engine_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J5 kNN (k=3) via cell-block expansion; ranks must equal the
-    brute-force cross-join oracle row-for-row.  The probe-grid level
-    comes from knn_auto_z (target density), NOT a pinned constant:
-    the zoom only changes the candidate-generation plan, never the
-    exact output, and the sf1.0 spot-run measured pinned z=6 going
-    super-linear (exponent 1.33 — 37→370 targets/cell as density
-    10×ed) while the density rule keeps the block join ~O(k)/query."""
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.operators import joins as J
-
-    q = J._order_points(spark, sf_dir, "customer", "c_custkey")
-    t = J._order_points(spark, sf_dir, "orders", "o_orderkey").select(
-        F.col("id").alias("tid"),
-        F.col("mx").alias("tx"),
-        F.col("my").alias("ty"),
-    )
-    n = spark.read.parquet(f"{sf_dir}/orders.parquet").count()
-    out = J.knn_join(q, t, k=3, z=J.knn_auto_z(n, 3))
-    return out.select(
-        "id", "nbr", F.col("rank").cast("long").alias("rnk")
-    )
-
-def q_pip_polygon_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3 against the synthetic polygon corpus (convex/concave/holed),
-    pre-transformed to merc in numpy (sources.synth.regions_merc_df).
-    FULL oracle: the same vertex doubles are inlined as literals into
-    the DuckDB SQL (_sql_pip_polygon), which replicates the A.7
-    half-open even-odd ray cast edge-by-edge — engine cell-cover
-    prefilter and oracle bbox prefilter are both supersets of the
-    inside set, so the exact refine makes the results identical."""
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.operators import joins as J
-    from mapnik_vector_tile_spark.sources.synth import regions_merc_df
-
-    pts = J._order_points(spark, sf_dir, "orders", "o_orderkey")
-    reg_m = regions_merc_df(spark, 200).select(
-        "region_id", "xs", "ys", "ring_offsets"
-    )
-    pairs = J.pip_join_broadcast(pts, reg_m, z=6)
-    return pairs.groupBy("region_id").agg(F.count("*").alias("n_pts"))
-
-def _sql_pip_polygon(n_regions: int = 200) -> str:
-    """DuckDB twin of q_pip_polygon_regions: polygon edges inlined as
-    VALUES (bit-identical doubles via shortest-roundtrip repr), then
-    the A.7 crossing test with pip.points_in_ring's exact arithmetic:
-    cond  = (y2 > my) != (y1 > my)            [edge prev=(x1,y1) -> cur=(x2,y2)]
-    xint  = (x1 - x2) * (my - y2) / (y1 - y2) + x2
-    inside = odd crossing count over ALL rings (holes subtract)."""
-    from mapnik_vector_tile_spark.sources.synth import gen_regions_merc_pdf
-
-    pdf = gen_regions_merc_pdf(n_regions)
-    rows = []
-    for rid, xs, ys, offs in zip(
-        pdf["region_id"], pdf["xs"], pdf["ys"], pdf["ring_offsets"]
-    ):
-        for r in range(len(offs) - 1):
-            s, e = offs[r], offs[r + 1]
-            for i in range(s + 1, e):
-                # S.flit forces DOUBLE literals (bare decimals parse as
-                # DECIMAL in DuckDB -> wrong arithmetic type)
-                rows.append(
-                    f"({rid},{S.flit(xs[i - 1])},{S.flit(ys[i - 1])},"
-                    f"{S.flit(xs[i])},{S.flit(ys[i])})"
-                )
-    values = ",\n".join(rows)
-    return f"""
-WITH {S.point_cte('orders', 'o_orderkey')},
-edges(region_id, x1, y1, x2, y2) AS (VALUES
-{values}),
-bbox AS (
-  SELECT region_id,
-         MIN(LEAST(x1, x2)) AS xmin, MAX(GREATEST(x1, x2)) AS xmax,
-         MIN(LEAST(y1, y2)) AS ymin, MAX(GREATEST(y1, y2)) AS ymax
-  FROM edges GROUP BY region_id),
-cand AS (
-  SELECT p.id, p.mx, p.my, b.region_id
-  FROM pts p JOIN bbox b
-    ON p.mx >= b.xmin AND p.mx <= b.xmax
-   AND p.my >= b.ymin AND p.my <= b.ymax),
-cr AS (
-  SELECT c.id, c.region_id, COUNT(*) AS ncross
-  FROM cand c JOIN edges e
-    ON e.region_id = c.region_id
-   AND ((e.y2 > c.my) != (e.y1 > c.my))
-   AND c.mx < (e.x1 - e.x2) * (c.my - e.y2) / (e.y1 - e.y2) + e.x2
-  GROUP BY 1, 2)
-SELECT region_id, COUNT(*) AS n_pts
-FROM cr WHERE ncross % 2 = 1
-GROUP BY region_id
-"""
 
 def q_engine_decode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EP1∘EP2: encode z6..8 tiles through the FULL pipeline, decode
@@ -503,6 +282,7 @@ def q_engine_decode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("bigint").alias("n_features")
     )
 
+
 def _engine_point_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
@@ -519,7 +299,9 @@ def _engine_point_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("c").alias("caption"),
     )
 
+
 THIN_BASE_Z = 10  # q_zoom_thin base zoom
+
 
 def q_zoom_thin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P6 zoom-gated point thinning (tippecanoe --drop-rate 2.5
@@ -545,6 +327,7 @@ def q_zoom_thin(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("feature_id").cast("long").alias("sum_fid"),
     )
 
+
 def _sql_zoom_thin(base_z: int = THIN_BASE_Z) -> str:
     from mapnik_vector_tile_spark.operators.tiling import thin_thresholds
 
@@ -569,9 +352,10 @@ SELECT z, CAST(COUNT(*) AS BIGINT) AS n_kept,
 FROM keep GROUP BY z
 """
 
-OZ_PARENT_Z = 3
 
+OZ_PARENT_Z = 3
 OZ_BUF = 64
+
 
 def q_engine_overzoom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EP3 slow path across zoom levels (overzoom) with a FULL
@@ -603,9 +387,10 @@ def q_engine_overzoom(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("pys")[0]).cast("bigint").alias("sum_py"),
     )
 
-RSC_Z = 5
 
+RSC_Z = 5
 RSC_TO_EXTENT = 512
+
 
 def q_engine_rescale(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U1 extent-rescale slow path with a FULL oracle: encode z5 point
@@ -633,6 +418,7 @@ def q_engine_rescale(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("pys")[0]).cast("bigint").alias("sum_py"),
     )
 
+
 def _sql_rescale(z: int = RSC_Z, to_extent: int = RSC_TO_EXTENT) -> str:
     tx, ty = S.tile_xy_exprs(z)
     px, py = S.quantize_exprs(z, "tx", "ty")
@@ -650,6 +436,7 @@ SELECT CAST({z} AS INT) AS z, tx AS x, ty AS y,
        CAST(SUM(rpy) AS BIGINT) AS sum_py
 FROM r GROUP BY 1, 2, 3
 """
+
 
 def q_engine_overzoom_redistribute(
     spark: SparkSession, sf_dir: str
@@ -677,6 +464,7 @@ def q_engine_overzoom_redistribute(
         F.sum(F.col("pys")[0]).cast("bigint").alias("sum_py"),
     )
 
+
 def _sql_overzoom(pz: int = OZ_PARENT_Z, buf: int = OZ_BUF) -> str:
     tx, ty = S.tile_xy_exprs(pz)
     px, py = S.quantize_exprs(pz, "tx", "ty")
@@ -701,7 +489,9 @@ SELECT CAST({pz + 1} AS INT) AS z, x, y,
 FROM c GROUP BY 1, 2, 3
 """
 
+
 DZ_CHILD_Z = 4
+
 
 def q_engine_downzoom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U5 child->parent pyramid rollup (downzoom — the inverse of
@@ -734,6 +524,7 @@ def q_engine_downzoom(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("pys")[0]).cast("bigint").alias("sum_py"),
     )
 
+
 def _sql_downzoom(cz: int = DZ_CHILD_Z) -> str:
     tx, ty = S.tile_xy_exprs(cz)
     px, py = S.quantize_exprs(cz, "tx", "ty")
@@ -753,6 +544,7 @@ SELECT CAST({cz - 1} AS INT) AS z, x, y,
        CAST(SUM(ppy) AS BIGINT) AS sum_py
 FROM p GROUP BY 1, 2, 3
 """
+
 
 def q_engine_downzoom_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The iterated rollup (downzoom_band z4 -> z2: each level derived
@@ -775,6 +567,7 @@ def q_engine_downzoom_band(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("pxs")[0]).cast("bigint").alias("sum_px"),
         F.sum(F.col("pys")[0]).cast("bigint").alias("sum_py"),
     )
+
 
 def _sql_downzoom_band(cz: int = DZ_CHILD_Z) -> str:
     tx, ty = S.tile_xy_exprs(cz)
@@ -806,6 +599,7 @@ SELECT z, tx AS x, ty AS y,
        CAST(SUM(py) AS BIGINT) AS sum_py
 FROM u GROUP BY 1, 2, 3
 """
+
 
 def q_engine_load_compressed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4+S5+P5 through the driver surface: encode z4..6 tiles (fused
@@ -851,6 +645,7 @@ def q_engine_load_compressed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("nf").cast("bigint").alias("n_features"),
     )
 
+
 def _sql_load_compressed(z_lo: int = 4, z_hi: int = 6) -> str:
     tx, ty = S.tile_xy_exprs(14)
     ax = S.ancestor_expr("tx", "14 - z")
@@ -868,7 +663,9 @@ SELECT z, CAST(COUNT(*) AS BIGINT) AS n_tiles,
 FROM per_tile GROUP BY z
 """
 
+
 VALIDITY_Z = 6
+
 
 def q_engine_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P5 at the driver surface: encode z6 tiles (fused EP1), then
@@ -924,6 +721,7 @@ def q_engine_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "x", "y", "valid", F.size("reasons").alias("n_reasons")
     )
 
+
 def _sql_validity(z: int = VALIDITY_Z) -> str:
     tx, ty = S.tile_xy_exprs(14)
     ax = S.ancestor_expr("tx", str(14 - z))
@@ -940,9 +738,10 @@ SELECT x, y,
 FROM tiles
 """
 
-LABEL_Z = 3
 
+LABEL_Z = 3
 LABEL_SHIFT = 8  # 256-pixel collision cells (16x16 grid per tile)
+
 
 def q_label_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W4 label collision placement (tiling.label_grid_top1): assign
@@ -968,6 +767,7 @@ def q_label_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("py").cast("bigint").alias("py"),
     )
 
+
 def _sql_label_grid(z: int = LABEL_Z) -> str:
     tx, ty = S.tile_xy_exprs(z)
     return f"""
@@ -990,7 +790,9 @@ SELECT tx AS x, ty AS y, gx, gy, id AS feature_id,
 FROM r WHERE rn = 1
 """
 
+
 SOLID_Z = 3  # 8x8 grid — one tile per (class x position) combination
+
 
 def q_engine_solid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U9 solid-tile detection (composite.is_solid_extent; ref:
@@ -1077,6 +879,7 @@ def q_engine_solid(spark: SparkSession, sf_dir: str) -> DataFrame:
         "x", "y", "solid", "covers", "key", "n_features"
     )
 
+
 def _sql_solid() -> str:
     n = 1 << SOLID_Z
     return f"""
@@ -1094,7 +897,9 @@ SELECT x, y,
 FROM g
 """
 
+
 SPRUNE_Z = 4  # 16x16 grid of 2x2 parent quads
+
 
 def q_solid_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U9b mask-level pruning gate (composite.prunable_solid_children
@@ -1154,6 +959,7 @@ def q_solid_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         "x", "y", "parent_x", "parent_y", "key"
     )
 
+
 def _sql_solid_prune() -> str:
     n = 1 << SPRUNE_Z
     return f"""
@@ -1168,6 +974,7 @@ SELECT x, y, px AS parent_x, py AS parent_y, 'water' AS key
 FROM c
 WHERE block_solid AND NOT (block_solid AND fifth)
 """
+
 
 def _typed_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared typed-attribute layer fixture (see q_engine_typed_values
@@ -1245,6 +1052,7 @@ def _typed_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return layers
 
+
 def q_engine_typed_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F14/A1/A2 at the driver surface: features carry TYPED attributes
     (int qty, double price, bool rflag from lineitem) through the
@@ -1297,6 +1105,7 @@ def q_engine_typed_values(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_qty long, n_rflag long, min_price double, max_price double"
         ),
     )
+
 
 def q_engine_layer_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tile-transform at the driver surface (composite.
@@ -1368,6 +1177,7 @@ def q_engine_layer_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
 
+
 def _sql_layer_filter(z: int = 8) -> str:
     tx, ty = S.tile_xy_exprs(z)
     mx = (
@@ -1395,6 +1205,7 @@ SELECT tx AS x, ty AS y, 'li30' AS layer,
 FROM t WHERE qty >= 30
 GROUP BY 1, 2
 """
+
 
 def _sql_typed_values(z: int = 8) -> str:
     # mx/my inlined per ROW (duplicate (orderkey,linenumber) pairs
@@ -1429,6 +1240,82 @@ SELECT tx, ty,
 FROM t GROUP BY 1, 2
 """
 
+
+def _attr_join_stats(spark: SparkSession, sf_dir: str, join) -> DataFrame:
+    """Join a 33-row attribute dimension onto the typed-values layer
+    store with `join` (how='left' on the decoded ``qty``), then read
+    the per-tile stats back from the enriched wire bytes: the shared
+    body of q_engine_attr_join and q_engine_attr_join_shuffle."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from mapnik_vector_tile_spark.functions import pbf
+
+    layers = _typed_layers(spark, sf_dir).select(
+        F.lit(8).alias("z"),
+        F.col("tx").alias("x"),
+        F.col("ty").alias("y"),
+        F.lit("li").alias("layer"),
+        F.col("blob"),
+        F.lit(0).cast("long").alias("n_features"),
+        F.lit(0).cast("long").alias("n_points"),
+    )
+    attrs = (
+        spark.range(1, 51)
+        .filter(F.col("id") % 3 != 0)
+        .select(
+            F.col("id").cast("long").alias("qty"),
+            F.concat(F.lit("g"), (F.col("id") % 7).cast("string")).alias(
+                "grade"
+            ),
+            (F.col("id").cast("double") / 4).alias("bonus"),
+        )
+    )
+    enriched = join(layers, attrs, on="qty", how="left")
+
+    def decode_stats(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            rows = []
+            for x, y, blob in zip(pdf["x"], pdf["y"], pdf["blob"]):
+                layer = pbf.decode_layer(bytes(blob))
+                qty_sum, n_match, bonus_sum = 0, 0, 0.0
+                min_grade = None
+                for f in layer["features"]:
+                    props = pbf.feature_props(layer, f)
+                    qty_sum += props["qty"]
+                    if "grade" in props:
+                        n_match += 1
+                        bonus_sum += props["bonus"]
+                        g = props["grade"]
+                        if min_grade is None or g < min_grade:
+                            min_grade = g
+                rows.append(
+                    (
+                        int(x), int(y), len(layer["features"]),
+                        len(layer["keys"]), len(layer["values"]),
+                        qty_sum, n_match, bonus_sum, min_grade,
+                    )
+                )
+            yield pd.DataFrame(
+                rows,
+                columns=[
+                    "x", "y", "n_features", "n_keys", "n_values",
+                    "sum_qty", "n_matched", "sum_bonus", "min_grade",
+                ],
+            )
+
+    return enriched.mapInPandas(
+        decode_stats,
+        schema=(
+            "x long, y long, n_features long, n_keys long, n_values long, "
+            "sum_qty long, n_matched long, sum_bonus double, "
+            "min_grade string"
+        ),
+    )
+
+
 def q_engine_attr_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U10 attribute-enrichment join (composite.join_attributes — the
     tippecanoe tile-join CSV semantic over a distributed store): build
@@ -1445,75 +1332,10 @@ def q_engine_attr_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin replays the join relationally; a wrong decoded join key, a
     value-dictionary dedup miss, or an unmatched feature mutated in
     any way breaks the hash."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.functions import pbf
     from mapnik_vector_tile_spark.operators.composite import join_attributes
 
-    layers = _typed_layers(spark, sf_dir).select(
-        F.lit(8).alias("z"),
-        F.col("tx").alias("x"),
-        F.col("ty").alias("y"),
-        F.lit("li").alias("layer"),
-        F.col("blob"),
-        F.lit(0).cast("long").alias("n_features"),
-        F.lit(0).cast("long").alias("n_points"),
-    )
-    attrs = (
-        spark.range(1, 51)
-        .filter(F.col("id") % 3 != 0)
-        .select(
-            F.col("id").cast("long").alias("qty"),
-            F.concat(F.lit("g"), (F.col("id") % 7).cast("string")).alias(
-                "grade"
-            ),
-            (F.col("id").cast("double") / 4).alias("bonus"),
-        )
-    )
-    enriched = join_attributes(layers, attrs, on="qty", how="left")
+    return _attr_join_stats(spark, sf_dir, join_attributes)
 
-    def decode_stats(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for x, y, blob in zip(pdf["x"], pdf["y"], pdf["blob"]):
-                layer = pbf.decode_layer(bytes(blob))
-                qty_sum, n_match, bonus_sum = 0, 0, 0.0
-                min_grade = None
-                for f in layer["features"]:
-                    props = pbf.feature_props(layer, f)
-                    qty_sum += props["qty"]
-                    if "grade" in props:
-                        n_match += 1
-                        bonus_sum += props["bonus"]
-                        g = props["grade"]
-                        if min_grade is None or g < min_grade:
-                            min_grade = g
-                rows.append(
-                    (
-                        int(x), int(y), len(layer["features"]),
-                        len(layer["keys"]), len(layer["values"]),
-                        qty_sum, n_match, bonus_sum, min_grade,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "x", "y", "n_features", "n_keys", "n_values",
-                    "sum_qty", "n_matched", "sum_bonus", "min_grade",
-                ],
-            )
-
-    return enriched.mapInPandas(
-        decode_stats,
-        schema=(
-            "x long, y long, n_features long, n_keys long, n_values long, "
-            "sum_qty long, n_matched long, sum_bonus double, "
-            "min_grade string"
-        ),
-    )
 
 def q_engine_attr_join_shuffle(
     spark: SparkSession, sf_dir: str
@@ -1524,78 +1346,12 @@ def q_engine_attr_join_shuffle(
     extract → shuffle equi-join → regroup → rebuild path instead of
     the broadcast kernel — the hier-cover discipline: both paths must
     land on the identical enriched wire bytes."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.functions import pbf
     from mapnik_vector_tile_spark.operators.composite import (
         join_attributes_relational,
     )
 
-    layers = _typed_layers(spark, sf_dir).select(
-        F.lit(8).alias("z"),
-        F.col("tx").alias("x"),
-        F.col("ty").alias("y"),
-        F.lit("li").alias("layer"),
-        F.col("blob"),
-        F.lit(0).cast("long").alias("n_features"),
-        F.lit(0).cast("long").alias("n_points"),
-    )
-    attrs = (
-        spark.range(1, 51)
-        .filter(F.col("id") % 3 != 0)
-        .select(
-            F.col("id").cast("long").alias("qty"),
-            F.concat(F.lit("g"), (F.col("id") % 7).cast("string")).alias(
-                "grade"
-            ),
-            (F.col("id").cast("double") / 4).alias("bonus"),
-        )
-    )
-    enriched = join_attributes_relational(layers, attrs, on="qty",
-                                          how="left")
+    return _attr_join_stats(spark, sf_dir, join_attributes_relational)
 
-    def decode_stats(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for x, y, blob in zip(pdf["x"], pdf["y"], pdf["blob"]):
-                layer = pbf.decode_layer(bytes(blob))
-                qty_sum, n_match, bonus_sum = 0, 0, 0.0
-                min_grade = None
-                for f in layer["features"]:
-                    props = pbf.feature_props(layer, f)
-                    qty_sum += props["qty"]
-                    if "grade" in props:
-                        n_match += 1
-                        bonus_sum += props["bonus"]
-                        g = props["grade"]
-                        if min_grade is None or g < min_grade:
-                            min_grade = g
-                rows.append(
-                    (
-                        int(x), int(y), len(layer["features"]),
-                        len(layer["keys"]), len(layer["values"]),
-                        qty_sum, n_match, bonus_sum, min_grade,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "x", "y", "n_features", "n_keys", "n_values",
-                    "sum_qty", "n_matched", "sum_bonus", "min_grade",
-                ],
-            )
-
-    return enriched.mapInPandas(
-        decode_stats,
-        schema=(
-            "x long, y long, n_features long, n_keys long, n_values long, "
-            "sum_qty long, n_matched long, sum_bonus double, "
-            "min_grade string"
-        ),
-    )
 
 def _sql_attr_join(z: int = 8) -> str:
     tx, ty = S.tile_xy_exprs(z)
@@ -1636,87 +1392,6 @@ SELECT tx AS x, ty AS y,
 FROM t GROUP BY 1, 2
 """
 
-def q_geojson_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S1 GeoJSON source parity: orders keys -> newline-delimited
-    GeoJSON Feature documents (pure-arithmetic lon/lat, repr-exact
-    doubles in the JSON text) -> sources.geojson parse -> lonlat->merc
-    -> EP1 encode at z7 -> per-tile feature counts. Oracle replays the
-    identical arithmetic + the merc trig in DuckDB; libm drift between
-    numpy and DuckDB is ~1 ulp (~1e-9 m), ~14 orders of magnitude
-    below the z7 tile span, so floor() parity holds."""
-    import json as _json
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.operators import tiling as T
-    from mapnik_vector_tile_spark.sources.geojson import geojson_to_features
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select("o_orderkey")
-
-    def gen(batches):
-        for pdf in batches:
-            k = pdf["o_orderkey"].to_numpy().astype(np.int64)
-            if not len(k):
-                continue
-            u1 = ((k * 2654435761) % 2**32) / float(2**32)
-            u2 = ((k * 1103515245 + 12345) % 2**32) / float(2**32)
-            lon = u1 * 360.0 - 180.0
-            lat = u2 * 170.0 - 85.0
-            docs = [
-                _json.dumps(
-                    {
-                        "type": "Feature",
-                        "id": int(kk),
-                        "geometry": {
-                            "type": "Point",
-                            "coordinates": [float(lo), float(la)],
-                        },
-                        "properties": {"caption": f"c{int(kk)}"},
-                    },
-                    separators=(",", ":"),
-                )
-                for kk, lo, la in zip(k, lon, lat)
-            ]
-            yield pd.DataFrame({"json": docs})
-
-    docs_df = orders.mapInPandas(gen, schema="json string")
-    feats = geojson_to_features(docs_df)
-    assigned = T.assign_tiles(feats, 7, 7, buffer_units=0)
-    tiles = T.encode_tiles(assigned)
-    return tiles.select(
-        "z", "x", "y", F.col("n_features").cast("bigint").alias("n_features")
-    )
-
-def _sql_geojson_tiles(z: int = 7) -> str:
-    from math import pi
-
-    from mapnik_vector_tile_spark.functions.tilemath import R
-
-    lon = (
-        "((((o_orderkey) * 2654435761) % 4294967296) / "
-        f"{S.flit(2**32)}) * 360e0 - 180e0"
-    )
-    lat = (
-        "((((o_orderkey) * 1103515245 + 12345) % 4294967296) / "
-        f"{S.flit(2**32)}) * 170e0 - 85e0"
-    )
-    tx, ty = S.tile_xy_exprs(z)
-    return f"""
-WITH ll AS (
-  SELECT o_orderkey AS id, {lon} AS lon, {lat} AS lat FROM orders
-),
-pts AS (
-  SELECT id,
-         {S.flit(R)} * (lon * {S.flit(pi / 180.0)}) AS mx,
-         {S.flit(R)} * ln(tan({S.flit(pi / 4.0)} + (lat * {S.flit(pi / 180.0)}) / 2.0)) AS my
-  FROM ll
-)
-SELECT {z} AS z, {tx} AS x, {ty} AS y,
-       CAST(COUNT(*) AS BIGINT) AS n_features
-FROM pts GROUP BY 2, 3
-"""
 
 def q_engine_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EP3 composite: two single-layer tile pyramids (orders points as
@@ -1752,6 +1427,7 @@ def q_engine_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
         "z", "x", "y", F.col("n_layers").cast("bigint").alias("n_layers")
     )
 
+
 def _sql_composite_n_layers(z: int = 5) -> str:
     tx, ty = S.tile_xy_exprs(z)
     return f"""
@@ -1769,282 +1445,9 @@ SELECT {z} AS z, x, y,
 FROM both_u GROUP BY x, y
 """
 
-def q_events_tile_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming-twin batch aggregation: per (minute-window, z8 tile)
-    event counts + value sums (the §2.10 plan run as a batch — same
-    code path as the stream)."""
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.streaming import incremental as SI
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    agg = SI.batch_oracle_counts(ev, z=8)
-    return agg.select(
-        F.col("win.start").alias("ws"),
-        "tx",
-        "ty",
-        F.col("n_events").cast("bigint").alias("n_events"),
-        F.round(F.col("sum_value"), 6).alias("sum_value6"),
-    )
-
-def _sql_events_tile_window() -> str:
-    from mapnik_vector_tile_spark.plans.shared_sql import TWO_W, flit
-
-    # clamped to [0, 2^z-1] like streaming.with_tile (shared tilemath
-    # expressions): a point exactly on the -W edge must not address
-    # tile row 2^z
-    utx, uty = S.tile_xy_exprs(8)
-    lim = (1 << 8) - 1
-    tx = f"GREATEST(0, LEAST({lim}, {utx}))"
-    ty = f"GREATEST(0, LEAST({lim}, {uty}))"
-    mx = (
-        f"((((user_id) * 2654435761) % 4294967296) / {flit(2**32)})"
-        f" * {flit(TWO_W)} - {flit(W)}"
-    )
-    my = (
-        f"((((user_id) * 1103515245 + 12345) % 4294967296) / {flit(2**32)})"
-        f" * {flit(TWO_W)} - {flit(W)}"
-    )
-    return f"""
-WITH e AS (
-  -- deterministic dedup (DISTINCT ON picks an arbitrary row): for
-  -- at-least-once replays duplicate ids carry identical payloads, so
-  -- MIN per column equals the replayed row while staying stable if a
-  -- fixture ever contained conflicting duplicates
-  SELECT event_id, MIN(ts) AS ts, MIN(user_id) AS user_id,
-         MIN(value) AS value
-  FROM events GROUP BY event_id
-),
-p AS (SELECT ts, value, {mx} AS mx, {my} AS my FROM e)
-SELECT date_trunc('minute', ts) AS ws,
-       {tx} AS tx,
-       {ty} AS ty,
-       COUNT(*) AS n_events,
-       ROUND(SUM(value), 6) AS sum_value6
-FROM p
-GROUP BY 1, 2, 3
-"""
-
-RT_N = 48  # q_raster_tiles oracle corpus size
-
-RT_Z = 4
-
-RT_T = 64
-
-def q_raster_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R1 raster materialization through the FULL warp path — decode →
-    bilinear resample_to_tile → painter's composite (ascending idx) →
-    quantize → png-zlib encode — with a FULL value-hash oracle since
-    round 2 (the q_raster_overzoom technique applied to the main warp):
-    the corpus is 48 ramp images whose merc bboxes are exactly
-    tile-aligned (k×k whole tiles at z=4, k∈{1,2}, w=h=k·64), so the
-    bilinear warp degenerates to an eps-robust exact pixel copy
-    (|FX−c| ≲ 1e-12 ⇒ quantize(round-half-away) returns the source
-    byte), painter's winner is uniform per tile (max idx among
-    covering images), and DuckDB regenerates per-tile channel-0 pixel
-    sums closed-form. The float tile fan-out (tile_x_col/tile_y_col on
-    the bbox) is mirrored op-for-op in SQL so straggler tiles from
-    boundary ulps agree bit-for-bit; fractional (non-aligned) warps
-    stay pinned by tests/test_raster.py's PSNR + kernel oracles.
-    sf_dir is unused: the subject is the warp kernel, not the scan."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.functions import tilemath as tm
-    from mapnik_vector_tile_spark.operators import raster as R
-    from mapnik_vector_tile_spark.sources.synth import splitmix64
-
-    span = tm.tile_span(RT_Z)
-
-    def gen(it):
-        for pdf in it:
-            rows: dict[str, list] = {
-                "idx": [], "bytes": [], "w": [], "h": [], "fmt": [],
-                "caption": [], "minx": [], "maxx": [], "miny": [], "maxy": [],
-            }
-            for i in pdf["id"]:
-                i = int(i)
-                h = int(splitmix64(np.array([i], dtype=np.uint64))[0])
-                x0 = h % 13
-                y0 = (h >> 8) % 13
-                k = 1 + ((h >> 16) % 2)
-                phase = h % 251
-                t = np.arange(k * RT_T, dtype=np.int64)
-                v = ((t[:, None] * 3 + t[None, :] * 5 + phase) % 256).astype(
-                    np.uint8
-                )
-                rgba = np.repeat(v[..., None], 4, axis=2)
-                rows["idx"].append(i)
-                rows["bytes"].append(R.encode_image(rgba, "raw-rgba8"))
-                rows["w"].append(k * RT_T)
-                rows["h"].append(k * RT_T)
-                rows["fmt"].append("raw-rgba8")
-                rows["caption"].append(f"img-{i}")
-                rows["minx"].append(-tm.W + np.float64(x0) * span)
-                rows["maxx"].append(-tm.W + np.float64(x0 + k) * span)
-                rows["miny"].append(tm.W - np.float64(y0 + k) * span)
-                rows["maxy"].append(tm.W - np.float64(y0) * span)
-            yield pd.DataFrame(rows)
-
-    images = spark.range(RT_N).mapInPandas(
-        gen,
-        schema=(
-            "idx long, bytes binary, w int, h int, fmt string, "
-            "caption string, minx double, maxx double, miny double, "
-            "maxy double"
-        ),
-    )
-    tiles = R.rasterize_images(
-        images, z=RT_Z, tile_size=RT_T, method="bilinear", out_fmt="png-zlib"
-    )
-
-    def summarize(it):
-        for pdf in it:
-            out: dict[str, list] = {
-                "x": [], "y": [], "n_images": [], "px_sum": [],
-            }
-            for xx, yy, ni, raster in zip(
-                pdf["x"], pdf["y"], pdf["n_images"], pdf["raster"]
-            ):
-                img = R.decode_image(bytes(raster), "png-zlib", RT_T, RT_T)
-                out["x"].append(int(xx))
-                out["y"].append(int(yy))
-                out["n_images"].append(int(ni))
-                out["px_sum"].append(int(img[:, :, 0].astype(np.int64).sum()))
-            yield pd.DataFrame(out)
-
-    return tiles.mapInPandas(
-        summarize, schema="x long, y long, n_images long, px_sum long"
-    ).select(F.lit(RT_Z).alias("z"), "x", "y", "n_images", "px_sum")
-
-RASTERIZE_SIZE = 64
-
-RASTERIZE_POLYS = 120
-
-def q_rasterize_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R4 vector→raster materialization with a FULL oracle: the
-    deterministic concave/holed polygons (integer tile coords,
-    sources.synth.gen_raster_polys) are wire-encoded
-    (encode_geometry → LayerBuilder), decoded back, and scanline-filled
-    at tile_size=64 by raster.fill_polygon_mask; output is the
-    per-scanline filled-pixel count. The DuckDB twin inlines the same
-    integer vertices and replays the fill kernel's exact arithmetic —
-    crossing test (y_cur>yc)!=(y_prev>yc), the xint interpolation in
-    the same operation order over dyadic-exact scaled coords (ints ×
-    2^-6), c0 = ceil(xint − 0.5), per-pixel parity of #(c0 ≤ c) — so
-    every row count matches bit-exactly, not statistically. sf_dir is
-    unused: the subject is the rasterizer kernel, not the scan."""
-    import numpy as np
-    import pandas as pd
-
-    from mapnik_vector_tile_spark.functions import geomcodec as gc
-    from mapnik_vector_tile_spark.functions import pbf
-    from mapnik_vector_tile_spark.operators.raster import rasterize_features
-    from mapnik_vector_tile_spark.sources.synth import gen_raster_polys
-
-    size = RASTERIZE_SIZE
-    rows = []
-    for p in gen_raster_polys(RASTERIZE_POLYS):
-        xs: list[int] = []
-        ys: list[int] = []
-        offs = [0]
-        for ring in p["rings"]:
-            xs += [v[0] for v in ring]
-            ys += [v[1] for v in ring]
-            offs.append(len(xs))
-        rows.append((p["poly_id"], xs, ys, offs))
-    src = spark.createDataFrame(
-        rows,
-        schema="poly_id long, xs array<int>, ys array<int>, offs array<int>",
-    ).repartition(8, "poly_id")
-
-    def enc(batches):
-        for b in batches:
-            out = {"z": [], "x": [], "y": [], "blob": []}
-            for pid, pxs, pys, poffs in zip(
-                b["poly_id"], b["xs"], b["ys"], b["offs"]
-            ):
-                stream = gc.encode_geometry(
-                    gc.GEOM_POLYGON,
-                    np.asarray(pxs, dtype=np.int64),
-                    np.asarray(pys, dtype=np.int64),
-                    np.asarray(poffs, dtype=np.int64),
-                )
-                lb = pbf.LayerBuilder("poly", extent=4096)
-                lb.add_feature(int(pid), gc.GEOM_POLYGON, stream, {})
-                out["z"].append(9)
-                out["x"].append(int(pid))
-                out["y"].append(int(pid))
-                out["blob"].append(lb.build())
-            yield pd.DataFrame(out)
-
-    layers = src.mapInPandas(enc, schema="z int, x long, y long, blob binary")
-    bitmaps = rasterize_features(layers, tile_size=size)
-
-    def rowcounts(batches):
-        for b in batches:
-            out = {"poly_id": [], "prow": [], "n_row": []}
-            for x, bm in zip(b["x"], b["bitmap"]):
-                mask = np.unpackbits(
-                    np.frombuffer(bytes(bm), dtype=np.uint8)
-                ).reshape(size, size)
-                out["poly_id"] += [int(x)] * size
-                out["prow"] += list(range(size))
-                out["n_row"] += [int(v) for v in mask.sum(axis=1)]
-            yield pd.DataFrame(out)
-
-    return bitmaps.mapInPandas(
-        rowcounts, schema="poly_id long, prow int, n_row long"
-    )
-
-def _sql_rasterize_coverage(
-    n_polys: int = RASTERIZE_POLYS, size: int = RASTERIZE_SIZE
-) -> str:
-    """DuckDB twin of q_rasterize_coverage — see its docstring for the
-    bit-exactness argument. Edges are (prev → cur) with ring wraparound,
-    exactly the fill kernel's j/i iteration."""
-    from mapnik_vector_tile_spark.sources.synth import gen_raster_polys
-
-    rows = []
-    for p in gen_raster_polys(n_polys):
-        pid = p["poly_id"]
-        for ring in p["rings"]:
-            for i in range(len(ring)):
-                x1, y1 = ring[i - 1]  # prev (i=0 wraps to last)
-                x2, y2 = ring[i]  # cur
-                rows.append(f"({pid},{x1},{y1},{x2},{y2})")
-    values = ",\n".join(rows)
-    sc = S.flit(size / 4096.0)  # dyadic: int * sc is exact in f64
-    half = S.flit(0.5)
-    return f"""
-WITH edges(poly_id, x1, y1, x2, y2) AS (VALUES
-{values}),
-se AS (
-  SELECT poly_id, x1 * {sc} AS x1, y1 * {sc} AS y1,
-         x2 * {sc} AS x2, y2 * {sc} AS y2
-  FROM edges),
-rg AS (SELECT unnest(generate_series(0, {size - 1})) AS r),
-cg AS (SELECT unnest(generate_series(0, {size - 1})) AS c),
-cr AS (
-  SELECT e.poly_id, g.r,
-         CAST(ceil((e.x1 - e.x2) * ((g.r + {half}) - e.y2)
-              / (e.y1 - e.y2) + e.x2 - {half}) AS BIGINT) AS c0
-  FROM se e JOIN rg g
-    ON ((e.y2 > g.r + {half}) != (e.y1 > g.r + {half}))),
-pg AS (SELECT DISTINCT poly_id FROM edges),
-grid AS (SELECT p.poly_id, g.r, c.c FROM pg p CROSS JOIN rg g CROSS JOIN cg c),
-cnt AS (
-  SELECT gr.poly_id, gr.r, gr.c, COUNT(cr.c0) AS n
-  FROM grid gr LEFT JOIN cr
-    ON cr.poly_id = gr.poly_id AND cr.r = gr.r AND cr.c0 <= gr.c
-  GROUP BY 1, 2, 3)
-SELECT poly_id, CAST(r AS INTEGER) AS prow,
-       CAST(SUM(CASE WHEN n % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_row
-FROM cnt GROUP BY 1, 2
-"""
 
 S2_LEVEL = 10
+
 
 def q_s2_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2-style spherical cell encoding (functions.cellid): sphere →
@@ -2079,7 +1482,9 @@ def q_s2_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return pts.mapInPandas(gen, "id long, s2_cell long, s2_parent5 long")
 
+
 GEOHASH_P = 8
+
 
 def q_geohash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Base-32 geohash encoding (functions/geohash.py) at precision 8
@@ -2112,6 +1517,7 @@ def q_geohash(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring(gh8, 1, 4).alias("gh4"),
     )
 
+
 def _sql_geohash() -> str:
     from mapnik_vector_tile_spark.functions import geohash as GH
 
@@ -2128,6 +1534,7 @@ h AS (SELECT id, code, {gh8} AS gh8 FROM c)
 SELECT id, code, gh8, substr(gh8, 1, 4) AS gh4 FROM h
 """
 
+
 def _sql_s2_cells() -> str:
     from mapnik_vector_tile_spark.functions import cellid as C
 
@@ -2142,7 +1549,9 @@ c AS (SELECT id,
 SELECT id, s2_cell, (s2_cell >> {2 * (S2_LEVEL - 5)}) AS s2_parent5 FROM c
 """
 
+
 SIMP_TOL = 256.0  # tile units; z0 extent 4096 -> real thinning
+
 
 def q_engine_simplify_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F9 Douglas-Peucker with a FULL vertex-exact oracle: 16-vertex
@@ -2202,6 +1611,7 @@ def q_engine_simplify_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v.pys").alias("py"),
     )
 
+
 def _simplify_line_feats(spark: SparkSession, sf_dir: str, nv: int = 16):
     """The shared simplify-strategy corpus (see q_engine_simplify_radial
     for the construction rationale): one nv-vertex line per order, even
@@ -2247,7 +1657,9 @@ def _simplify_line_feats(spark: SparkSession, sf_dir: str, nv: int = 16):
 
     return orders.mapInPandas(gen, schema=T.FEATURES_SCHEMA)
 
+
 VW_TOL = 300000.0  # doubled-area threshold 6e5 in z0 tile units² —
+
 
 def q_engine_simplify_vw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F9c Visvalingam–Whyatt simplification (simplify.
@@ -2284,6 +1696,7 @@ def q_engine_simplify_vw(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v.pxs").alias("px"),
         F.col("v.pys").alias("py"),
     )
+
 
 def _sql_simplify_vw(nv: int = 16, tol: float = VW_TOL) -> str:
     from mapnik_vector_tile_spark.functions import tilemath as tm
@@ -2363,6 +1776,7 @@ SELECT fid AS feature_id, CAST(pos - 1 AS BIGINT) AS rnk, px, py
 FROM seq
 """
 
+
 def q_engine_simplify_radial(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F9b radial-distance simplification (simplify.radial_distance;
     ref: include/mapnik/simplify_converter.hpp — the reference's cheap
@@ -2401,6 +1815,7 @@ def q_engine_simplify_radial(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v.pxs").alias("px"),
         F.col("v.pys").alias("py"),
     )
+
 
 def _sql_simplify_radial(nv: int = 16, tol: float = SIMP_TOL) -> str:
     from mapnik_vector_tile_spark.functions import tilemath as tm
@@ -2475,6 +1890,7 @@ SELECT fid AS feature_id,
 FROM seq
 QUALIFY COUNT(*) OVER (PARTITION BY fid) >= 2
 """
+
 
 def _sql_simplify_exact(nv: int = 16, tol: float = SIMP_TOL) -> str:
     from mapnik_vector_tile_spark.functions import tilemath as tm
@@ -2577,7 +1993,31 @@ WHERE lx IS NULL OR px <> lx OR py <> ly
 QUALIFY COUNT(*) OVER (PARTITION BY fid) >= 2
 """
 
+
 DIFF_Z = 6
+
+
+def _diff_stores(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """Tile stores A (order keys % 5 != 0) and B (% 7 != 0) at z DIFF_Z,
+    built through the real encode pipeline: the inputs of q_tile_diff
+    and q_tile_patch."""
+    from pyspark.sql import functions as F
+
+    from mapnik_vector_tile_spark.operators import tiling as T
+
+    feats = _engine_point_features(spark, sf_dir)
+
+    def store(mod: int):
+        sub = feats.filter(F.col("feature_id") % mod != 0)
+        return T.encode_tiles(
+            T.assign_tiles(sub, DIFF_Z, DIFF_Z, buffer_units=0),
+            buffer_units=0,
+        )
+
+    return store(5), store(7)
+
 
 def q_tile_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tile-store content diff (delta updates) with a FULL oracle:
@@ -2590,21 +2030,10 @@ def q_tile_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     on feature sets — a nondeterministic dictionary order or a
     dropped/duplicated feature shows up as a spurious or missing diff
     row."""
-    from pyspark.sql import functions as F
-
     from mapnik_vector_tile_spark.operators import composite as comp
-    from mapnik_vector_tile_spark.operators import tiling as T
 
-    feats = _engine_point_features(spark, sf_dir)
+    return comp.diff_tiles(*_diff_stores(spark, sf_dir))
 
-    def store(mod: int):
-        sub = feats.filter(F.col("feature_id") % mod != 0)
-        return T.encode_tiles(
-            T.assign_tiles(sub, DIFF_Z, DIFF_Z, buffer_units=0),
-            buffer_units=0,
-        )
-
-    return comp.diff_tiles(store(5), store(7))
 
 def _sql_tile_diff(z: int = DIFF_Z) -> str:
     tx, ty = S.tile_xy_exprs(z)
@@ -2626,6 +2055,7 @@ SELECT CAST({z} AS INT) AS z, x, y,
 FROM m
 WHERE (na > 0 OR nb > 0) AND (na = 0 OR nb = 0 OR nsym > 0)
 """
+
 
 def q_engine_v1_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2 v1-tolerant decode under the driver gate: per order key,
@@ -2691,6 +2121,7 @@ def q_engine_v1_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("sum_py"),
     )
 
+
 def _sql_v1_decode() -> str:
     def px(i: int) -> str:
         return f"((k * {i + 1} * 2654435761) % 4096)"
@@ -2706,508 +2137,9 @@ SELECT o_orderkey AS feature_id,
 FROM (SELECT o_orderkey, o_orderkey AS k FROM orders) t
 """
 
-def _phash_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic clustered 63-bit phashes from customer keys
-    (clusters of 3 — base splitmix64, one-bit flip, two-bit flip);
-    shared by q_phash_neardup and q_phash_mi."""
-    import numpy as np
-    import pandas as pd
-
-    from mapnik_vector_tile_spark.sources.synth import splitmix64
-
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select("c_custkey")
-
-    def gen(it):
-        for pdf in it:
-            k = pdf["c_custkey"].to_numpy().astype(np.int64)
-            if not len(k):
-                continue
-            cl = k // 3
-            m = k % 3
-            base = (
-                splitmix64((cl * 1000003).astype(np.uint64))
-                >> np.uint64(1)
-            ).astype(np.int64)
-            one = np.int64(1)
-            f1 = base ^ (one << (cl % 63))
-            f2 = (
-                base
-                ^ (one << ((cl * 7 + 13) % 63))
-                ^ (one << ((cl * 11 + 29) % 63))
-            )
-            h = np.where(m == 1, f1, np.where(m == 2, f2, base))
-            yield pd.DataFrame({"image_id": k, "phash": h})
-
-    return cust.mapInPandas(gen, schema="image_id long, phash long")
-
-def q_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T21 perceptual-hash image near-dup with a FULL independent
-    oracle: deterministic clustered 63-bit phashes (_phash_corpus),
-    the ENGINE finds pairs via the lossless 8-band Hamming-LSH
-    self-join (dedup.phash_neardup_pairs, pigeonhole guarantee for
-    Hamming<=6), and DuckDB finds the same pairs by BRUTE-FORCE
-    all-pairs bit_count(xor) — algorithm-independent, so a banding
-    bug (lossy candidate set) or a refine bug both break the hash."""
-    from mapnik_vector_tile_spark.operators import dedup as D
-
-    imgs = _phash_corpus(spark, sf_dir)
-    # exact clique path: the brute-force oracle enumerates all pairs
-    # (star-guard behavior is pytest-gated, not oracle-gated)
-    pairs = D.phash_neardup_pairs(imgs, max_hamming=6, hot_bucket_limit=None)
-    from pyspark.sql import functions as F
-
-    return pairs.select(
-        "img_a", "img_b", F.col("hamming").cast("int").alias("hamming")
-    )
-
-def q_phash_mi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T21 multi-index Hamming join (dedup.phash_neardup_pairs_mi —
-    the sub-quadratic 4×16-bit-band + 1-flip-probe form the sf1.0
-    spot-run motivated) over the SAME clustered-phash corpus as
-    q_phash_neardup, against the SAME brute-force all-pairs twin:
-    both algorithms are exact for Hamming ≤ 6, so the value hashes
-    must agree — a lost probe, a wrong flip mask, or a broken
-    pigeonhole bound all break it."""
-    from mapnik_vector_tile_spark.operators import dedup as D
-    from pyspark.sql import functions as F
-
-    imgs = _phash_corpus(spark, sf_dir)
-    pairs = D.phash_neardup_pairs_mi(
-        imgs, max_hamming=6, hot_bucket_limit=None
-    )
-    return pairs.select(
-        "img_a", "img_b", F.col("hamming").cast("int").alias("hamming")
-    )
-
-def _sql_phash_neardup() -> str:
-    base = f"CAST(({splitmix64_sql('cl * 1000003')}) // 2 AS BIGINT)"
-    return f"""
-WITH ks AS (SELECT c_custkey AS k, c_custkey // 3 AS cl, c_custkey % 3 AS m
-            FROM customer),
-hb AS (SELECT k, cl, m, {base} AS base FROM ks),
-ph AS (SELECT k AS img,
-              CASE WHEN m = 1
-                   THEN xor(base, CAST(1 AS BIGINT) << (cl % 63))
-                   WHEN m = 2
-                   THEN xor(xor(base,
-                                CAST(1 AS BIGINT) << ((cl * 7 + 13) % 63)),
-                            CAST(1 AS BIGINT) << ((cl * 11 + 29) % 63))
-                   ELSE base END AS h
-       FROM hb)
-SELECT a.img AS img_a, b.img AS img_b,
-       CAST(bit_count(xor(a.h, b.h)) AS INT) AS hamming
-FROM ph a JOIN ph b ON a.img < b.img
-WHERE bit_count(xor(a.h, b.h)) <= 6
-"""
-
-RZO_N = 24  # raster-overzoom oracle corpus: parent tiles
-
-RZO_T = 64  # and their pixel grid
-
-def q_raster_overzoom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R1 overzoom (child raster tiles served from stored parents) with
-    a FULL integer-exact oracle: 24 synthetic z6 parent tiles whose
-    pixels are the ramp (r*3 + c*5 + phase) % 256 with
-    phase = splitmix64(idx) % 251, overzoomed dz=1 with
-    method='nearest' (raw-rgba8, lossless). Nearest at dz=1 is exact
-    pixel replication child[r,c] = parent[(cy*T+r)//2, (cx*T+c)//2],
-    so the per-child channel-0 pixel sums are pure integer arithmetic
-    DuckDB regenerates closed-form — gating the decode → A.9 resample
-    → quantize → codec round trip and the fan-out addressing."""
-    import numpy as np
-    import pandas as pd
-
-    from mapnik_vector_tile_spark.operators import raster as R
-    from mapnik_vector_tile_spark.sources.synth import splitmix64
-
-    ids = spark.range(RZO_N)
-
-    def gen(it):
-        for pdf in it:
-            rows: dict[str, list] = {
-                "z": [], "x": [], "y": [], "raster": [],
-                "n_images": [], "captions": [],
-            }
-            for i in pdf["id"]:
-                i = int(i)
-                phase = int(splitmix64(np.array([i], dtype=np.uint64))[0]
-                            % np.uint64(251))
-                r = np.arange(RZO_T, dtype=np.int64)
-                v = ((r[:, None] * 3 + r[None, :] * 5 + phase) % 256).astype(
-                    np.uint8
-                )
-                rgba = np.repeat(v[..., None], 4, axis=2)
-                rows["z"].append(6)
-                rows["x"].append(i * 2)
-                rows["y"].append(i)
-                rows["raster"].append(R.encode_image(rgba, "raw-rgba8"))
-                rows["n_images"].append(1)
-                rows["captions"].append(["cap"])
-            yield pd.DataFrame(rows)
-
-    parents = ids.mapInPandas(
-        gen,
-        schema=(
-            "z int, x long, y long, raster binary, n_images long, "
-            "captions array<string>"
-        ),
-    )
-    kids = R.overzoom_raster_tiles(
-        parents, 1, tile_size=RZO_T, method="nearest", fmt="raw-rgba8"
-    )
-
-    def summarize(it):
-        for pdf in it:
-            out: dict[str, list] = {"x": [], "y": [], "px_sum": []}
-            for xx, yy, raster in zip(pdf["x"], pdf["y"], pdf["raster"]):
-                img = R.decode_image(bytes(raster), "raw-rgba8", RZO_T, RZO_T)
-                out["x"].append(int(xx))
-                out["y"].append(int(yy))
-                out["px_sum"].append(int(img[:, :, 0].astype(np.int64).sum()))
-            yield pd.DataFrame(out)
-
-    return kids.mapInPandas(summarize, schema="x long, y long, px_sum long")
-
-def _sql_raster_overzoom(n: int = RZO_N, t: int = RZO_T) -> str:
-    return f"""
-WITH ids AS (SELECT unnest(generate_series(0, {n - 1})) AS idx),
-hh AS (SELECT idx, ({splitmix64_sql('idx')}) % 251 AS phase FROM ids),
-cells AS (SELECT 0 AS v UNION ALL SELECT 1),
-px AS (
-  SELECT h.idx, h.phase, cx.v AS cx, cy.v AS cy, g1.r, g2.c,
-         (((cy.v * {t} + g1.r) // 2) * 3
-          + ((cx.v * {t} + g2.c) // 2) * 5 + h.phase) % 256 AS val
-  FROM hh h
-  CROSS JOIN cells cx CROSS JOIN cells cy
-  CROSS JOIN (SELECT unnest(generate_series(0, {t - 1})) AS r) g1
-  CROSS JOIN (SELECT unnest(generate_series(0, {t - 1})) AS c) g2
-)
-SELECT CAST(idx * 4 + cx AS BIGINT) AS x,
-       CAST(idx * 2 + cy AS BIGINT) AS y,
-       CAST(SUM(val) AS BIGINT) AS px_sum
-FROM px GROUP BY 1, 2
-"""
-
-def q_geotiff_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R1 georeferenced-ingest gate with a FULL oracle: the SAME
-    tile-aligned ramp corpus as q_raster_tiles, but each image ships
-    as a real GeoTIFF whose merc bbox lives in the embedded
-    ModelPixelScale/ModelTiepoint tags (functions.tiff geo=...) — no
-    footprint columns exist. The REAL geotiff_footprints ingest parses
-    the IFD header (no pixel decode), rebuilds the footprinted frame,
-    and the full warp/composite/encode path runs as in q_raster_tiles;
-    because the GeoTIFF doubles round-trip bit-exactly and PackBits is
-    lossless, the SAME DuckDB twin (_sql_raster_tiles) must hash-match
-    — so the tag writer, the tag parser, AND the ingest drop policy
-    are all under the hash. Ref parity: mapnik's gdal datasource
-    (plugins/input/gdal) feeding the raster processor path; SURVEY
-    §2.8 R1/S3."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.functions import tiff as tiffmod
-    from mapnik_vector_tile_spark.functions import tilemath as tm
-    from mapnik_vector_tile_spark.operators import raster as R
-    from mapnik_vector_tile_spark.sources.synth import splitmix64
-
-    span = tm.tile_span(RT_Z)
-
-    def gen(it):
-        for pdf in it:
-            rows: dict[str, list] = {"idx": [], "bytes": [], "caption": []}
-            for i in pdf["id"]:
-                i = int(i)
-                h = int(splitmix64(np.array([i], dtype=np.uint64))[0])
-                x0 = h % 13
-                y0 = (h >> 8) % 13
-                k = 1 + ((h >> 16) % 2)
-                phase = h % 251
-                t = np.arange(k * RT_T, dtype=np.int64)
-                v = ((t[:, None] * 3 + t[None, :] * 5 + phase) % 256).astype(
-                    np.uint8
-                )
-                rgba = np.repeat(v[..., None], 4, axis=2)
-                bbox = (
-                    -tm.W + np.float64(x0) * span,
-                    tm.W - np.float64(y0 + k) * span,
-                    -tm.W + np.float64(x0 + k) * span,
-                    tm.W - np.float64(y0) * span,
-                )
-                rows["idx"].append(i)
-                rows["bytes"].append(tiffmod.encode_tiff(rgba, geo=bbox))
-                rows["caption"].append(f"img-{i}")
-            yield pd.DataFrame(rows)
-
-    geotiffs = spark.range(RT_N).mapInPandas(
-        gen, schema="idx long, bytes binary, caption string"
-    )
-    images = R.geotiff_footprints(geotiffs)
-    tiles = R.rasterize_images(
-        images, z=RT_Z, tile_size=RT_T, method="bilinear", out_fmt="png-zlib"
-    )
-
-    def summarize(it):
-        for pdf in it:
-            out: dict[str, list] = {
-                "x": [], "y": [], "n_images": [], "px_sum": [],
-            }
-            for xx, yy, ni, raster in zip(
-                pdf["x"], pdf["y"], pdf["n_images"], pdf["raster"]
-            ):
-                img = R.decode_image(bytes(raster), "png-zlib", RT_T, RT_T)
-                out["x"].append(int(xx))
-                out["y"].append(int(yy))
-                out["n_images"].append(int(ni))
-                out["px_sum"].append(int(img[:, :, 0].astype(np.int64).sum()))
-            yield pd.DataFrame(out)
-
-    return tiles.mapInPandas(
-        summarize, schema="x long, y long, n_images long, px_sum long"
-    ).select(F.lit(RT_Z).alias("z"), "x", "y", "n_images", "px_sum")
-
-def _sql_raster_tiles(n: int = RT_N, z: int = RT_Z, t: int = RT_T) -> str:
-    """DuckDB twin of q_raster_tiles. Regenerates per-image placement
-    from splitmix64(idx), mirrors the engine's FLOAT tile fan-out
-    op-for-op (same IEEE doubles ⇒ same straggler tiles ⇒ same
-    n_images), picks the painter's winner per tile (max idx among
-    integer-covering images — coverage is all-or-nothing because the
-    bboxes are tile-aligned), and sums the ramp pixels closed-form.
-    Tiles with fan-out rows but no covering painter are dropped, like
-    the engine's not-painted guard."""
-    from mapnik_vector_tile_spark.functions import tilemath as tm
-
-    w = repr(tm.W)
-    span = repr(tm.tile_span(z))
-    nmax = (1 << z) - 1
-    return f"""
-WITH ids AS (SELECT unnest(generate_series(0, {n - 1})) AS idx),
-hh AS (SELECT idx, {splitmix64_sql('idx')} AS h FROM ids),
-imgs AS (
-  SELECT idx,
-         CAST(h % 13 AS BIGINT) AS x0,
-         CAST((h // 256) % 13 AS BIGINT) AS y0,
-         CAST(1 + (h // 65536) % 2 AS BIGINT) AS k,
-         CAST(h % 251 AS BIGINT) AS phase
-  FROM hh),
-fb AS (
-  SELECT idx, x0, y0, k, phase,
-         (-{w}) + CAST(x0 AS DOUBLE) * {span} AS minx,
-         (-{w}) + CAST(x0 + k AS DOUBLE) * {span} AS maxx,
-         {w} - CAST(y0 + k AS DOUBLE) * {span} AS miny,
-         {w} - CAST(y0 AS DOUBLE) * {span} AS maxy
-  FROM imgs),
-rng AS (
-  SELECT idx, x0, y0, k, phase,
-         LEAST({nmax}, GREATEST(0,
-           CAST(floor((minx + {w}) / {span}) AS BIGINT))) AS lox,
-         LEAST({nmax}, GREATEST(0,
-           CAST(floor((maxx + {w}) / {span}) AS BIGINT))) AS hix,
-         LEAST({nmax}, GREATEST(0,
-           CAST(floor(({w} - maxy) / {span}) AS BIGINT))) AS loy,
-         LEAST({nmax}, GREATEST(0,
-           CAST(floor(({w} - miny) / {span}) AS BIGINT))) AS hiy
-  FROM fb),
-fx AS (
-  SELECT idx, x0, y0, k, phase, loy, hiy,
-         unnest(generate_series(lox, hix)) AS x
-  FROM rng),
-fan AS (
-  SELECT idx, x0, y0, k, phase, x,
-         unnest(generate_series(loy, hiy)) AS y
-  FROM fx),
-counts AS (SELECT x, y, COUNT(*) AS n_images FROM fan GROUP BY 1, 2),
-win AS (
-  SELECT x, y, idx, x0, y0, phase,
-         row_number() OVER (PARTITION BY x, y ORDER BY idx DESC) AS rn
-  FROM fan
-  WHERE x >= x0 AND x < x0 + k AND y >= y0 AND y < y0 + k),
-px AS (
-  SELECT w1.x, w1.y,
-         ((((w1.y - w1.y0) * {t} + g1.r) * 3
-           + ((w1.x - w1.x0) * {t} + g2.c) * 5 + w1.phase) % 256) AS val
-  FROM (SELECT * FROM win WHERE rn = 1) w1
-  CROSS JOIN (SELECT unnest(generate_series(0, {t - 1})) AS r) g1
-  CROSS JOIN (SELECT unnest(generate_series(0, {t - 1})) AS c) g2),
-sums AS (SELECT x, y, SUM(val) AS px_sum FROM px GROUP BY 1, 2)
-SELECT CAST({z} AS INT) AS z,
-       CAST(c.x AS BIGINT) AS x,
-       CAST(c.y AS BIGINT) AS y,
-       CAST(c.n_images AS BIGINT) AS n_images,
-       CAST(s.px_sum AS BIGINT) AS px_sum
-FROM counts c JOIN sums s ON c.x = s.x AND c.y = s.y
-"""
-
-_M64 = "18446744073709551616"  # 2^64
-
-_M32 = "4294967296"
-
-def _xor64(a: str, b: str) -> str:
-    """XOR of two HUGEINT values < 2^64 via BIGINT halves."""
-    return (
-        f"(CAST(xor(CAST(({a}) // {_M32} AS BIGINT),"
-        f" CAST(({b}) // {_M32} AS BIGINT)) AS HUGEINT) * {_M32}"
-        f" + xor(CAST(({a}) % {_M32} AS BIGINT),"
-        f" CAST(({b}) % {_M32} AS BIGINT)))"
-    )
-
-def _mul64(a: str, c: int) -> str:
-    """(a * c) mod 2^64 for HUGEINT a < 2^64, constant c — 32-bit limb
-    split keeps every intermediate < 2^96 (inside HUGEINT)."""
-    cl = c % 2**32
-    ch = c >> 32
-    return (
-        f"((({a}) * {cl} + (((({a}) % {_M32}) * {ch}) % {_M32})"
-        f" * {_M32}) % {_M64})"
-    )
-
-def splitmix64_sql(x: str) -> str:
-    """The synth corpus's committed mixing function (synth.splitmix64)
-    rendered as DuckDB SQL — bit-exact (tests pin [0, 200000)).
-
-    Emitted as a chained SCALAR SUBQUERY, not one flat expression:
-    textually inlining each mixing stage into the next duplicates
-    subexpressions ×2-4 per stage (×~256 for the base hash — a 36 KB
-    expression, ~22 µs/row), while the subquery chain computes each
-    stage ONCE into a column the next stage references (~1 KB, ~10×
-    faster; DuckDB decorrelates it into projections).  Same value,
-    usable in any expression position."""
-    z0 = f"((CAST({x} AS HUGEINT) + 11400714819323198485) % {_M64})"
-    return (
-        "(SELECT "
-        + _xor64("z4", "z4 // 2147483648")  # >> 31
-        + " FROM (SELECT "
-        + _mul64("z3", 0x94D049BB133111EB)
-        + " AS z4 FROM (SELECT "
-        + _xor64("z2", "z2 // 134217728")  # >> 27
-        + " AS z3 FROM (SELECT "
-        + _mul64("z1", 0xBF58476D1CE4E5B9)
-        + " AS z2 FROM (SELECT "
-        + _xor64("z0", "z0 // 1073741824")  # >> 30
-        + f" AS z1 FROM (SELECT {z0} AS z0))))))"
-    )
-
-def q_spatial_block_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T-class × spatial: leakage-safe geographic train/val/test split
-    (operators.sampling.spatial_block_split — block cross-validation:
-    whole z6 tile cells assigned to one side by the committed
-    splitmix64 cell coin, so spatial autocorrelation cannot leak
-    between train and test). Full oracle: the twin recomputes tile
-    cells, Morton blocks, the 64-bit mix, and the 80/10/10 threshold
-    walk in pure SQL; n_blocks per split certifies block-level (not
-    row-level) assignment."""
-    from pyspark.sql import functions as F
-
-    from mapnik_vector_tile_spark.operators import joins as J
-    from mapnik_vector_tile_spark.operators import sampling as SMP
-
-    pts = J._order_points(spark, sf_dir, "orders", "o_orderkey")
-    out = SMP.spatial_block_split(pts, z=6)
-    return out.groupBy("split").agg(
-        F.count("*").cast("bigint").alias("n_rows"),
-        F.countDistinct("block").cast("bigint").alias("n_blocks"),
-        F.sum("id").cast("bigint").alias("sum_id"),
-        F.min("id").cast("bigint").alias("min_id"),
-    )
-
-def _sql_spatial_block_split(z: int = 6) -> str:
-    from mapnik_vector_tile_spark.functions.tilemath import cell_id_sql_expr
-    from mapnik_vector_tile_spark.operators.sampling import (
-        BUCKETS,
-        SPLIT_TRAIN,
-        SPLIT_VAL,
-        _HSHIFT,
-    )
-
-    tx, ty = S.tile_xy_exprs(z)
-    cell = cell_id_sql_expr("tx", "ty", z)
-    sm = splitmix64_sql("block")
-    return f"""
-WITH {S.point_cte('orders', 'o_orderkey')},
-t AS (SELECT id, {tx} AS tx, {ty} AS ty FROM pts),
-bl AS (SELECT id, {cell} AS block FROM t),
-h AS (SELECT id, block,
-             CAST((({sm}) // {1 << _HSHIFT}) % {BUCKETS} AS BIGINT) AS bkt
-      FROM bl),
-s AS (SELECT id, block,
-             CASE WHEN bkt < {SPLIT_TRAIN} THEN 'train'
-                  WHEN bkt < {SPLIT_VAL} THEN 'val'
-                  ELSE 'test' END AS split
-      FROM h)
-SELECT split,
-       CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(COUNT(DISTINCT block) AS BIGINT) AS n_blocks,
-       CAST(SUM(id) AS BIGINT) AS sum_id,
-       CAST(MIN(id) AS BIGINT) AS min_id
-FROM s GROUP BY 1
-"""
-
-JPEG_N = 300  # q_raster_jpeg corpus size
-
-def q_raster_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R2 lossy codec gate with a FULL contract oracle: every image of
-    the committed synthetic corpus (gradient+noise — mod-256 sawtooth
-    wraps, the hardest JPEG content) is round-tripped through the real
-    pure-numpy baseline JPEG codec (functions.jpeg via the raster
-    codec registry) and must satisfy the input_hint invariants:
-    PSNR ≥ 40 dB on RGB, opaque alpha, non-empty stream. The DuckDB
-    twin regenerates (image_id, w, h) closed-form and asserts the
-    booleans TRUE — a hash mismatch means the engine failed the lossy
-    contract on some image. Pixel-level JPEG behavior is additionally
-    pinned by tests/test_raster.py. sf_dir is unused: the corpus is
-    the committed synth recipe (no images table exists in testdata)."""
-    import numpy as np
-    import pandas as pd
-
-    from mapnik_vector_tile_spark.operators import raster as R
-
-    def gen(it):
-        from mapnik_vector_tile_spark.sources.synth import gen_images_pdf
-
-        for pdf in it:
-            ids = pdf["id"].to_numpy()
-            if not len(ids):
-                continue
-            src = gen_images_pdf(
-                int(ids.max()) - int(ids.min()) + 1, start=int(ids.min())
-            )
-            out = {"image_id": [], "w": [], "h": [], "jpeg_ok": [],
-                   "alpha_ok": [], "nonempty": []}
-            for row in src.itertuples(index=False):
-                rgba = R.decode_image(
-                    row.bytes, row.fmt, int(row.w), int(row.h)
-                )
-                buf = R.encode_image(rgba, "jpeg")
-                back = R.decode_image(buf, "jpeg", int(row.w), int(row.h))
-                a = rgba[..., :3].astype(np.float64)
-                b = back[..., :3].astype(np.float64)
-                mse = float(np.mean((a - b) ** 2))
-                p = 10.0 * np.log10(255.0**2 / mse) if mse else np.inf
-                out["image_id"].append(row.image_id)
-                out["w"].append(int(row.w))
-                out["h"].append(int(row.h))
-                out["jpeg_ok"].append(bool(p >= 40.0))
-                out["alpha_ok"].append(bool((back[..., 3] == 255).all()))
-                out["nonempty"].append(len(buf) > 0)
-            yield pd.DataFrame(out)
-
-    return spark.range(0, JPEG_N, 1, 8).mapInPandas(
-        gen,
-        schema=("image_id string, w int, h int, jpeg_ok boolean, "
-                "alpha_ok boolean, nonempty boolean"),
-    )
-
-def _sql_raster_jpeg(n: int = JPEG_N) -> str:
-    return f"""
-WITH ids AS (SELECT unnest(generate_series(0, {n - 1})) AS i)
-SELECT 'img_' || lpad(CAST(i AS VARCHAR), 12, '0') AS image_id,
-       CAST(16 + (i * 7) % 49 AS INT) AS w,
-       CAST(16 + (i * 11) % 49 AS INT) AS h,
-       TRUE AS jpeg_ok, TRUE AS alpha_ok, TRUE AS nonempty
-FROM ids
-"""
 
 WAFER_Z, WAFER_K = 8, 3  # q_engine_wafer: z8 tiles rendered as z5 wafers
+
 
 def q_engine_wafer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wafer rendering (the mapycz fork's multi-tile render strategy,
@@ -3233,6 +2165,7 @@ def q_engine_wafer(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tiles.select(
         "z", "x", "y", F.col("n_features").cast("bigint").alias("n_features")
     )
+
 
 def _sql_wafer(z: int = WAFER_Z, k: int = WAFER_K) -> str:
     from mapnik_vector_tile_spark.functions import tilemath as tm
@@ -3269,3 +2202,1863 @@ SELECT CAST({z} AS INT) AS z,
        COUNT(*) AS n_features
 FROM cxy GROUP BY 1, 2, 3
 """
+
+
+COVER_N = 400  # q_cell_cover corpus size
+COVER_Z = 10
+
+
+def q_cell_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """T15-family polygon→cell covering ("polyfill") with a FULL
+    oracle. Corpus: 400 polygons at z=10, i%2 picks the shape —
+    0: axis-aligned rectangle (w,h = cell-multiples + span/2, anchored
+    at cell-fraction +0.25 so no edge ever lies ON a cell boundary),
+    1: right triangle with axis-aligned legs (hypotenuse x+y = T with
+    T at cell-corner-sum + span/2, so no corner ever lies ON it) —
+    the triangle exercises the edge-crossing + center-PIP paths, not
+    just bbox ranges. The engine runs the real vectorized kernel
+    (operators/cellcover.py: vertex binning, Liang–Barsky edge×cell
+    pairs, even-odd center PIP); the DuckDB twin enumerates cells by
+    INTEGER arithmetic only (lateral generate_series + the halfplane
+    inequality reduced to ints), a fully independent derivation.
+    Output is the raw covering relation (feature_id, z, cx, cy).
+    sf_dir unused (committed synth recipe). Ref parity: the
+    processor's per-zoom tile loop over the layer envelope
+    (tile-intersects-geometry decisions); S2 RegionCoverer semantics
+    at fixed level; SURVEY §2 T15."""
+    from mapnik_vector_tile_spark.operators.cellcover import cover_polygon_cells
+
+    return cover_polygon_cells(_cell_cover_corpus(spark), COVER_Z)
+
+
+def _cell_cover_corpus(spark: SparkSession) -> DataFrame:
+    """The q_cell_cover rect/right-triangle corpus (shared with
+    q_cell_cover_hier so both kernels are gated on identical input)."""
+    import pandas as pd
+
+    from mapnik_vector_tile_spark.functions import tilemath as tm
+
+    span = tm.tile_span(COVER_Z)
+
+    def gen(it):
+        from mapnik_vector_tile_spark.functions import geomcodec as gc
+
+        for pdf in it:
+            ids = pdf["id"].to_numpy()
+            if not len(ids):
+                continue
+            rows = {"feature_id": [], "geom_type": [], "xs": [], "ys": [],
+                    "part_offsets": [], "caption": []}
+            for i in ids:
+                i = int(i)
+                k = (i * 7) % 900
+                m = (i * 11) % 900
+                a = -tm.W + k * span + span / 4
+                c = -tm.W + m * span + span / 4
+                if i % 2 == 0:
+                    w = (1 + i % 5) * span + span / 2
+                    h = (2 + i % 4) * span + span / 2
+                    xs = [a, a + w, a + w, a, a]
+                    ys = [c, c, c + h, c + h, c]
+                else:
+                    L = (2 + i % 5) * span
+                    xs = [a, a + L, a, a]
+                    ys = [c, c, c + L, c]
+                rows["feature_id"].append(i)
+                rows["geom_type"].append(int(gc.GEOM_POLYGON))
+                rows["xs"].append(xs)
+                rows["ys"].append(ys)
+                rows["part_offsets"].append([0, len(xs)])
+                rows["caption"].append("")
+            yield pd.DataFrame(rows)
+
+    from mapnik_vector_tile_spark.operators.tiling import FEATURES_SCHEMA
+
+    return spark.range(0, COVER_N, 1, 8).mapInPandas(
+        gen, schema=FEATURES_SCHEMA
+    )
+
+
+def q_cell_cover_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hierarchical covering gate (cellcover.cover_polygon_cells_hier —
+    the S2-RegionCoverer-style scale path: coarse cover at z−3,
+    interior coarse cells expand to all children directly, boundary
+    coarse cells refine through the exact kernel inside their child
+    window). Same corpus and same SQL twin as q_cell_cover, so the
+    gate proves the hierarchical path emits the IDENTICAL relation to
+    the flat kernel while doing O(boundary·4^dz) work instead of
+    O(bbox·4^dz). SURVEY §2 T15."""
+    from mapnik_vector_tile_spark.operators.cellcover import (
+        cover_polygon_cells_hier,
+    )
+
+    corpus = _cell_cover_corpus(spark)
+    return cover_polygon_cells_hier(corpus, COVER_Z, coarse_dz=3)
+
+
+def _sql_cell_cover(n: int = COVER_N) -> str:
+    """Integer-only twin of q_cell_cover: rect covers the closed
+    floor-ranges; the triangle adds the halfplane cut reduced to
+    cx - cy <= k + m + tl - 1023 (derivation in the query docstring's
+    design: T sits at corner-sum + span/2, so the float inequality is
+    equivalent to this integer one)."""
+    return f"""
+WITH ids AS (SELECT unnest(generate_series(0, {n - 1})) AS i),
+base AS (
+  SELECT i, (i * 7) % 900 AS k, (i * 11) % 900 AS m, i % 2 AS kind,
+         1 + i % 5 AS rw, 2 + i % 4 AS rh, 2 + i % 5 AS tl
+  FROM ids
+),
+rect AS (
+  SELECT b.i AS feature_id, gx.cx AS cx, gy.cy AS cy
+  FROM base b,
+       LATERAL (SELECT unnest(generate_series(b.k, b.k + b.rw)) AS cx) gx,
+       LATERAL (SELECT unnest(generate_series(1023 - b.m - b.rh, 1023 - b.m)) AS cy) gy
+  WHERE b.kind = 0
+),
+tri AS (
+  SELECT b.i AS feature_id, gx.cx AS cx, gy.cy AS cy
+  FROM base b,
+       LATERAL (SELECT unnest(generate_series(b.k, b.k + b.tl)) AS cx) gx,
+       LATERAL (SELECT unnest(generate_series(1023 - b.m - b.tl, 1023 - b.m)) AS cy) gy
+  WHERE b.kind = 1 AND gx.cx - gy.cy <= b.k + b.m + b.tl - 1023
+)
+SELECT feature_id, CAST({COVER_Z} AS INT) AS z, cx, cy FROM rect
+UNION ALL
+SELECT feature_id, CAST({COVER_Z} AS INT) AS z, cx, cy FROM tri
+"""
+
+
+MBT_Z_LO, MBT_Z_HI = 3, 6  # q_mbtiles_roundtrip pyramid band
+
+
+def q_tilejson(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TileJSON 3.0 vector_layers summary with a FULL oracle: split
+    the orders points into two real layers by id parity, encode the
+    z3..z6 pyramid per layer (buffer 0), and run
+    composite.tilejson_layers — per-layer zoom range, tile/feature
+    counts, and the EXACT dyadic mercator bounds of painted max-zoom
+    tiles. DuckDB replays assignment, per-zoom distinct-tile sets, the
+    arg-max extent selection and the (x·2W)/2^z − W bounds math
+    closed-form; any drift in the pyramid, the painted set, or the
+    double expression order breaks the hash."""
+    from pyspark.sql import functions as F
+
+    from mapnik_vector_tile_spark.operators import composite as comp
+    from mapnik_vector_tile_spark.operators import tiling as T
+
+    feats = _engine_point_features(spark, sf_dir)
+    parts = []
+    for name, par in (("even", 0), ("odd", 1)):
+        sub = feats.filter(F.col("feature_id") % 2 == par)
+        assigned = T.assign_tiles(sub, MBT_Z_LO, MBT_Z_HI, buffer_units=0)
+        parts.append(
+            T.encode_layers(assigned, layer_name=name, n_salts=4)
+        )
+    layers = parts[0].unionByName(parts[1])
+    return comp.tilejson_layers(layers)
+
+
+def _sql_tilejson(z_lo: int = MBT_Z_LO, z_hi: int = MBT_Z_HI) -> str:
+    from mapnik_vector_tile_spark.functions.tilemath import W
+
+    tx, ty = S.tile_xy_exprs(z_hi)
+    two_w = S.flit(2.0 * W)
+    w = S.flit(W)
+    p2 = S.flit(float(1 << z_hi))
+    return f"""
+WITH {S.point_cte('orders', 'o_orderkey')},
+t AS (SELECT id % 2 AS par, {tx} AS tx, {ty} AS ty FROM pts),
+zs AS (SELECT unnest(generate_series({z_lo}, {z_hi})) AS z),
+lv AS (
+  SELECT par, zz.z AS z, tx >> ({z_hi} - zz.z) AS x,
+         ty >> ({z_hi} - zz.z) AS y, COUNT(*) AS nf
+  FROM t, zs zz GROUP BY 1, 2, 3, 4
+),
+perz AS (
+  SELECT par, z, COUNT(*) AS nt, SUM(nf) AS nf,
+         MIN(x) AS xmin, MAX(x) AS xmax,
+         MIN(y) AS ymin, MAX(y) AS ymax
+  FROM lv GROUP BY 1, 2
+),
+agg AS (
+  SELECT par, MIN(z) AS minzoom, MAX(z) AS maxzoom,
+         SUM(nt) AS n_tiles, SUM(nf) AS n_features,
+         arg_max(xmin, z) AS bxmin, arg_max(xmax, z) AS bxmax,
+         arg_max(ymin, z) AS bymin, arg_max(ymax, z) AS bymax
+  FROM perz GROUP BY par
+)
+SELECT CASE par WHEN 0 THEN 'even' ELSE 'odd' END AS layer,
+       CAST(minzoom AS INT) AS minzoom, CAST(maxzoom AS INT) AS maxzoom,
+       CAST(n_tiles AS BIGINT) AS n_tiles,
+       CAST(n_features AS BIGINT) AS n_features,
+       (CAST(bxmin AS DOUBLE) * {two_w}) / {p2} - {w} AS west_merc,
+       {w} - (CAST(bymax + 1 AS DOUBLE) * {two_w}) / {p2} AS south_merc,
+       (CAST(bxmax + 1 AS DOUBLE) * {two_w}) / {p2} - {w} AS east_merc,
+       {w} - (CAST(bymin AS DOUBLE) * {two_w}) / {p2} AS north_merc
+FROM agg
+"""
+
+
+LI_T = 0.35  # q_line_interpolate fraction
+
+
+def q_line_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Along-line point placement (measures.line_interpolate — mapnik
+    markers_placement line mode) with a FULL oracle on the staircase
+    polylines of the measures corpus: every vertex/segment value is
+    dyadic-exact, axis-aligned segment lengths come out of sqrt
+    bit-exact (sqrt of an exact square), and the twin replays the
+    engine's exact expression tree — rem = t·total − m(r+u), then
+    x0m + (rem/len)·len on the hit segment — via the closed-form
+    segment index m = floor(target/(r+u)) and the rem ≤ r
+    horizontal/vertical branch. Identical doubles in, identical
+    doubles out; hash-exact."""
+    from pyspark.sql import functions as F
+
+    from mapnik_vector_tile_spark.functions import geomcodec as gc
+    from mapnik_vector_tile_spark.functions import measures as M
+
+    corpus = _measures_corpus(spark).filter(
+        F.col("geom_type") == gc.GEOM_LINESTRING
+    )
+    px, py = M.line_interpolate(LI_T)
+    return corpus.select(
+        "feature_id",
+        px.alias("px"),
+        py.alias("py"),
+        M.boundary_length().alias("length"),
+    )
+
+
+def _sql_line_interpolate(n: int = 500, t: float = LI_T) -> str:
+    from mapnik_vector_tile_spark.plans.shared_sql import flit
+
+    # engine-exact replay (see q_line_interpolate): target/rem/frac use
+    # the same operations on the same exact doubles; m stays < k for
+    # any t < 1 because target < total strictly
+    return f"""
+WITH ids AS (SELECT unnest(generate_series(0, {n - 1})) AS i),
+base AS (
+  SELECT i,
+         {flit(-200.0)} + (i * 3) % 400 + {flit(0.125)} AS x0,
+         {flit(-100.0)} + (i * 7) % 200 + {flit(0.0625)} AS y0,
+         1 + i % 5 + {flit(0.5)} AS r,
+         2 + i % 3 + {flit(0.25)} AS u,
+         2 + i % 4 AS k
+  FROM ids WHERE i % 2 = 1
+),
+tgt AS (
+  SELECT *, {flit(t)} * (k * (r + u)) AS target FROM base
+),
+seg AS (
+  SELECT *, CAST(FLOOR(target / (r + u)) AS BIGINT) AS m,
+         target - CAST(FLOOR(target / (r + u)) AS BIGINT) * (r + u) AS rem
+  FROM tgt
+)
+SELECT i AS feature_id,
+       CASE WHEN rem <= r
+            THEN (x0 + m * r) + (rem / r) * r
+            ELSE x0 + (m + 1) * r END AS px,
+       CASE WHEN rem <= r
+            THEN y0 + m * u
+            ELSE (y0 + m * u) + ((rem - r) / u) * u END AS py,
+       k * (r + u) AS length
+FROM seg
+"""
+
+
+def q_area_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """True area-weighted centroid (measures.area_centroid — mapnik
+    util::centroid, NOT the vertex mean) with a FULL oracle on the
+    rectangle half of the measures corpus plus a holed variant: for a
+    CCW rectangle the exact fold lands on x0 + w/2 bit-for-bit (all
+    intermediates dyadic-exact); a second output row class punches a
+    concentric half-size hole (CW ring appended as a second part) —
+    the hole's negative cross sums shift nothing for the concentric
+    case, pinning the holes-subtract path against the SAME closed
+    form."""
+    import pandas as pd
+
+    from mapnik_vector_tile_spark.functions import geomcodec as gc
+    from mapnik_vector_tile_spark.functions import measures as M
+
+    def gen(it):
+        for pdf in it:
+            ids = pdf["id"].to_numpy()
+            if not len(ids):
+                continue
+            rows = {"feature_id": [], "geom_type": [], "xs": [], "ys": [],
+                    "part_offsets": [], "caption": []}
+            for i in ids:
+                i = int(i)
+                x0 = -200.0 + (i * 3) % 400 + 0.125
+                y0 = -100.0 + (i * 7) % 200 + 0.0625
+                w = 1 + i % 9 + 0.25
+                h = 2 + i % 7 + 0.5
+                xs = [x0, x0 + w, x0 + w, x0, x0]
+                ys = [y0, y0, y0 + h, y0 + h, y0]
+                offs = [0, 5]
+                if i % 2 == 1:
+                    # concentric CW hole at half size (quarter margins)
+                    hx0, hy0 = x0 + w / 4.0, y0 + h / 4.0
+                    hw, hh = w / 2.0, h / 2.0
+                    xs += [hx0, hx0, hx0 + hw, hx0 + hw, hx0]
+                    ys += [hy0, hy0 + hh, hy0 + hh, hy0, hy0]
+                    offs.append(10)
+                rows["feature_id"].append(i)
+                rows["geom_type"].append(int(gc.GEOM_POLYGON))
+                rows["xs"].append(xs)
+                rows["ys"].append(ys)
+                rows["part_offsets"].append(offs)
+                rows["caption"].append("")
+            yield pd.DataFrame(rows)
+
+    from mapnik_vector_tile_spark.operators.tiling import FEATURES_SCHEMA
+
+    corpus = spark.range(0, MEASURES_N, 1, 8).mapInPandas(
+        gen, schema=FEATURES_SCHEMA
+    )
+    cx, cy = M.area_centroid()
+    return corpus.select(
+        "feature_id",
+        cx.alias("cx"),
+        cy.alias("cy"),
+        M.signed_area2().alias("a2"),
+    )
+
+
+def _sql_area_centroid(n: int = 500) -> str:
+    from mapnik_vector_tile_spark.plans.shared_sql import flit
+
+    # outer 2wh minus (for odd i) the CW half-size hole's 2*(w/2)(h/2)
+    return f"""
+WITH ids AS (SELECT unnest(generate_series(0, {n - 1})) AS i),
+base AS (
+  SELECT i,
+         {flit(-200.0)} + (i * 3) % 400 + {flit(0.125)} AS x0,
+         {flit(-100.0)} + (i * 7) % 200 + {flit(0.0625)} AS y0,
+         1 + i % 9 + {flit(0.25)} AS w,
+         2 + i % 7 + {flit(0.5)} AS h
+  FROM ids
+)
+SELECT i AS feature_id,
+       x0 + w / {flit(2.0)} AS cx,
+       y0 + h / {flit(2.0)} AS cy,
+       CASE WHEN i % 2 = 0 THEN {flit(2.0)} * w * h
+            ELSE {flit(2.0)} * w * h
+                 - {flit(2.0)} * (w / {flit(2.0)}) * (h / {flit(2.0)})
+       END AS a2
+FROM base
+"""
+
+
+def q_pyramid_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Store-integrity audit (composite.pyramid_orphans) with a FULL
+    oracle: build the z3..z6 painted pyramid from orders points, DROP
+    a deterministic subset of z5 tiles ((x + y) % 7 == 0 — a partial
+    build failure), and report every z6 tile whose parent vanished.
+    The twin replays the painted sets and the anti-join closed-form;
+    an audit that misses an orphan (or invents one) hash-mismatches.
+    Address-only plan: tile bytes never enter it."""
+    from pyspark.sql import functions as F
+
+    from mapnik_vector_tile_spark.operators import composite as comp
+    from mapnik_vector_tile_spark.operators import tiling as T
+
+    feats = _engine_point_features(spark, sf_dir)
+    assigned = T.assign_tiles(feats, MBT_Z_LO, MBT_Z_HI, buffer_units=0)
+    tiles = T.fold_tiles(T.encode_layers(assigned, n_salts=8))
+    broken = tiles.filter(
+        ~((F.col("z") == 5) & ((F.col("x") + F.col("y")) % 7 == 0))
+    )
+    return comp.pyramid_orphans(broken)
+
+
+def _band_tiles_ctes(z_lo: int, z_hi: int) -> str:
+    """CTEs pts, base, zs and lv: the distinct (z, x, y) tiles the
+    order points paint at z_lo..z_hi."""
+    tx, ty = S.tile_xy_exprs(z_hi)
+    return f"""{S.point_cte('orders', 'o_orderkey')},
+base AS (SELECT DISTINCT {tx} AS tx, {ty} AS ty FROM pts),
+zs AS (SELECT unnest(generate_series({z_lo}, {z_hi})) AS z),
+lv AS (
+  SELECT DISTINCT zz.z AS z,
+         b.tx >> ({z_hi} - zz.z) AS x,
+         b.ty >> ({z_hi} - zz.z) AS y
+  FROM base b, zs zz
+)"""
+
+
+def _sql_pyramid_audit(z_lo: int = MBT_Z_LO, z_hi: int = MBT_Z_HI) -> str:
+    return f"""
+WITH {_band_tiles_ctes(z_lo, z_hi)},
+kept AS (
+  SELECT * FROM lv WHERE NOT (z = 5 AND (x + y) % 7 = 0)
+)
+SELECT CAST(k.z AS INT) AS z, k.x, k.y,
+       k.x >> 1 AS parent_x, k.y >> 1 AS parent_y
+FROM kept k
+WHERE k.z > {z_lo}
+  AND NOT EXISTS (
+    SELECT 1 FROM kept p
+    WHERE p.z = k.z - 1 AND p.x = k.x >> 1 AND p.y = k.y >> 1
+  )
+"""
+
+
+def q_tilestats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mapbox-tilestats attribute statistics (composite.
+    layer_attribute_stats) over the typed-values layer store, FULL
+    oracle: per attribute — type class, feature count, EXACT distinct
+    count (identity = raw Value encoding bits, so doubles never need a
+    cross-engine repr), numeric min/max, and the most frequent
+    discrete value (count-desc, repr-asc). The DuckDB twin recomputes
+    all of it relationally from lineitem; a wrong dictionary decode,
+    a collapsed double, or a nondeterministic top-value tiebreak
+    breaks the hash."""
+    from pyspark.sql import functions as F
+
+    from mapnik_vector_tile_spark.operators.composite import (
+        layer_attribute_stats,
+    )
+
+    layers = _typed_layers(spark, sf_dir).select(
+        F.lit(8).alias("z"),
+        F.col("tx").alias("x"),
+        F.col("ty").alias("y"),
+        F.lit("li").alias("layer"),
+        F.col("blob"),
+        F.lit(0).cast("long").alias("n_features"),
+        F.lit(0).cast("long").alias("n_points"),
+    )
+    return layer_attribute_stats(layers)
+
+
+def _sql_tilestats() -> str:
+    return """
+WITH li AS (
+  SELECT CAST(l_quantity AS BIGINT) AS qty,
+         l_extendedprice AS price,
+         (l_returnflag = 'R') AS rflag
+  FROM lineitem
+),
+qty_top AS (
+  SELECT CAST(qty AS VARCHAR) AS r, COUNT(*) AS c FROM li GROUP BY 1
+),
+rflag_top AS (
+  SELECT CASE WHEN rflag THEN 'true' ELSE 'false' END AS r,
+         COUNT(*) AS c
+  FROM li GROUP BY 1
+)
+SELECT 'li' AS layer, 'qty' AS attr, 'number' AS vtype,
+       CAST(COUNT(*) AS BIGINT) AS n_features,
+       CAST(COUNT(DISTINCT qty) AS BIGINT) AS n_distinct,
+       CAST(MIN(qty) AS DOUBLE) AS min_num,
+       CAST(MAX(qty) AS DOUBLE) AS max_num,
+       (SELECT r FROM qty_top ORDER BY c DESC, r ASC LIMIT 1)
+         AS top_value
+FROM li
+UNION ALL
+SELECT 'li', 'price', 'number',
+       CAST(COUNT(*) AS BIGINT),
+       CAST(COUNT(DISTINCT price) AS BIGINT),
+       MIN(price), MAX(price), NULL
+FROM li
+UNION ALL
+SELECT 'li', 'rflag', 'boolean',
+       CAST(COUNT(*) AS BIGINT),
+       CAST(COUNT(DISTINCT rflag) AS BIGINT),
+       NULL, NULL,
+       (SELECT r FROM rflag_top ORDER BY c DESC, r ASC LIMIT 1)
+FROM li
+"""
+
+
+QK_Z = 12  # q_quadkey zoom
+
+
+def q_quadkey(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bing/Azure quadkey strings (functions/cellid.quadkey_col — the
+    third standard tile addressing beside XYZ/TMS, used by every
+    Bing-schema tile store) with a FULL oracle: assign orders points
+    at z12, emit the quadkey, and PARSE IT BACK with
+    quadkey_parse_cols — the output carries the parsed (px, py), and
+    the twin emits the assigned (tx, ty) in those columns, so any
+    encode/parse asymmetry hash-mismatches. Pure Column bit math both
+    ways; zero shuffle beyond the scan."""
+    from mapnik_vector_tile_spark.functions.cellid import (
+        quadkey_col,
+        quadkey_parse_cols,
+    )
+
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    tx, ty = S.tile_xy_exprs(QK_Z)
+    # the point_cte mercator mix, rendered as Spark SQL (dialect-
+    # common subset: %, /, CAST, floor)
+    mxe = (
+        "((((o_orderkey) * 2654435761) % 4294967296) / "
+        f"{S.flit(2**32)}) * {S.flit(S.TWO_W)} - {S.flit(W)}"
+    )
+    mye = (
+        "((((o_orderkey) * 1103515245 + 12345) % 4294967296) / "
+        f"{S.flit(2**32)}) * {S.flit(S.TWO_W)} - {S.flit(W)}"
+    )
+    pts = orders.selectExpr(
+        "o_orderkey AS id", f"{mxe} AS mx", f"{mye} AS my"
+    ).selectExpr("id", f"{tx} AS x", f"{ty} AS y")
+    qk = pts.withColumn("quadkey", quadkey_col(QK_Z))
+    px, py = quadkey_parse_cols("quadkey", QK_Z)
+    return qk.select(
+        "id", "quadkey", px.alias("px"), py.alias("py")
+    )
+
+
+def _sql_quadkey(z: int = QK_Z) -> str:
+    from mapnik_vector_tile_spark.functions.cellid import quadkey_sql
+
+    tx, ty = S.tile_xy_exprs(z)
+    return f"""
+WITH {S.point_cte('orders', 'o_orderkey')},
+t AS (SELECT id, {tx} AS tx, {ty} AS ty FROM pts)
+SELECT id, {quadkey_sql('tx', 'ty', z)} AS quadkey,
+       tx AS px, ty AS py
+FROM t
+"""
+
+
+SG_RULES = (  # q_scale_gate style rules: (rule_id, min_sd, max_sd)
+    (0, 0.0, 25_000.0),          # street-level only
+    (1, 25_000.0, 1_500_000.0),  # mid zooms
+    (2, 1_500_000.0, 1e18),      # overview
+    (3, 0.0, 1e18),              # always on
+    (4, 500_000.0, 500_001.0),   # knife-edge band (no zoom qualifies
+                                 # unless a denominator lands inside)
+)
+
+
+def q_scale_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """P3 scale-denominator gating (tilemath.scale_denominator /
+    layer_visible — mapnik's Min/MaxScaleDenominator rule, min
+    inclusive / max exclusive, 559082264.0287178 at z0) with a FULL
+    oracle: the z0..22 denominator table crosses a committed rule set
+    and both engines must agree on every visibility bit AND the
+    denominator doubles themselves (exact halvings + one division).
+    sf_dir unused (closed-form)."""
+    from mapnik_vector_tile_spark.functions.tilemath import (
+        layer_visible,
+        scale_denominator,
+    )
+
+    rows = []
+    for z in range(23):
+        for rid, lo, hi in SG_RULES:
+            rows.append(
+                (
+                    z,
+                    rid,
+                    scale_denominator(z),
+                    bool(layer_visible(z, lo, hi)),
+                )
+            )
+    return spark.createDataFrame(
+        rows, "z int, rule_id int, scale_denom double, visible boolean"
+    ).orderBy("z", "rule_id").select(
+        "z", "rule_id", "scale_denom", "visible"
+    )
+
+
+def _sql_scale_gate() -> str:
+    w2 = S.flit(2.0 * W)
+    rules = ", ".join(
+        f"({rid}, {S.flit(lo)}, {S.flit(hi)})" for rid, lo, hi in SG_RULES
+    )
+    return f"""
+WITH zs AS (SELECT unnest(generate_series(0, 22)) AS z),
+rules(rule_id, lo, hi) AS (VALUES {rules}),
+sd AS (
+  SELECT z, (({w2} / (1 << z)) / 256) / 0.00028e0 AS scale_denom
+  FROM zs
+)
+SELECT sd.z, r.rule_id, sd.scale_denom,
+       (r.lo <= sd.scale_denom AND sd.scale_denom < r.hi) AS visible
+FROM sd, rules r
+"""
+
+
+HEAT_Z = 6  # q_heatmap_tiles zoom
+HEAT_RES = 64  # density raster resolution (pixels per tile side)
+
+
+def q_heatmap_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """R6 point-density heatmap tiles (the mapbox heatmap-layer /
+    datashader shape): order points bin into the HEAT_RES×HEAT_RES
+    pixel grid of their covering z6 tile — one narrow projection
+    (pure Column floor math on the shared mercator mix) and ONE
+    map-side-combined aggregate per (tile, pixel), then a per-tile
+    rollup emitting n_points, occupied-pixel count, and the
+    collision-sensitive Σcount² (distinguishes 10 points in one pixel
+    from 10 spread out — a plain count wouldn't). All integers; the
+    DuckDB twin replays the mix, the two-level floor binning, and
+    both moments bit-for-bit. At 10^12 points this is exactly the
+    EP1 fan-out shape with a finer key — no new scaling risk."""
+    from pyspark.sql import functions as F
+
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    tx, ty = S.tile_xy_exprs(HEAT_Z)
+    mxe = (
+        "((((o_orderkey) * 2654435761) % 4294967296) / "
+        f"{S.flit(2**32)}) * {S.flit(S.TWO_W)} - {S.flit(W)}"
+    )
+    mye = (
+        "((((o_orderkey) * 1103515245 + 12345) % 4294967296) / "
+        f"{S.flit(2**32)}) * {S.flit(S.TWO_W)} - {S.flit(W)}"
+    )
+    span = S.TWO_W / (1 << HEAT_Z)
+    pts = orders.selectExpr(
+        "o_orderkey AS id", f"{mxe} AS mx", f"{mye} AS my"
+    ).selectExpr("id", "mx", "my", f"{tx} AS x", f"{ty} AS y")
+    px = (
+        f"CAST(floor((mx + {S.flit(W)} - x * {S.flit(span)}) / "
+        f"{S.flit(span / HEAT_RES)}) AS BIGINT)"
+    )
+    py = (
+        f"CAST(floor(({S.flit(W)} - y * {S.flit(span)} - my) / "
+        f"{S.flit(span / HEAT_RES)}) AS BIGINT)"
+    )
+    # clamp the boundary ulp (a point exactly on a tile edge can land
+    # at index HEAT_RES): LEAST is mirrored verbatim in the twin
+    binned = pts.selectExpr(
+        "x",
+        "y",
+        f"LEAST({px}, {HEAT_RES - 1}) AS px",
+        f"LEAST({py}, {HEAT_RES - 1}) AS py",
+    )
+    cells = binned.groupBy("x", "y", "px", "py").agg(
+        F.count(F.lit(1)).alias("c")
+    )
+    return cells.groupBy("x", "y").agg(
+        F.sum("c").cast("long").alias("n_points"),
+        F.count(F.lit(1)).cast("long").alias("n_occupied"),
+        F.sum(F.col("c") * F.col("c")).cast("long").alias("sum_c2"),
+    )
+
+
+def _sql_heatmap_tiles(z: int = HEAT_Z, res: int = HEAT_RES) -> str:
+    tx, ty = S.tile_xy_exprs(z)
+    span = S.TWO_W / (1 << z)
+    px = (
+        f"CAST(floor((mx + {S.flit(W)} - x * {S.flit(span)}) / "
+        f"{S.flit(span / res)}) AS BIGINT)"
+    )
+    py = (
+        f"CAST(floor(({S.flit(W)} - y * {S.flit(span)} - my) / "
+        f"{S.flit(span / res)}) AS BIGINT)"
+    )
+    return f"""
+WITH {S.point_cte('orders', 'o_orderkey')},
+t AS (SELECT id, mx, my, {tx} AS x, {ty} AS y FROM pts),
+b AS (
+  SELECT x, y, LEAST({px}, {res - 1}) AS px, LEAST({py}, {res - 1}) AS py
+  FROM t
+),
+cells AS (
+  SELECT x, y, px, py, COUNT(*) AS c FROM b GROUP BY 1, 2, 3, 4
+)
+SELECT x, y, CAST(SUM(c) AS BIGINT) AS n_points,
+       CAST(COUNT(*) AS BIGINT) AS n_occupied,
+       CAST(SUM(c * c) AS BIGINT) AS sum_c2
+FROM cells GROUP BY 1, 2
+"""
+
+
+MEASURES_N = 500  # q_geom_measures corpus size
+
+
+def q_geom_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """§2.9 geometry measures as PURE Column algebra with a FULL
+    oracle (functions/measures.py — shoelace signed area, boundary
+    length, vertex centroid; transform/zip_with/aggregate only, no
+    UDF, no shuffle). Corpus: i%2 picks — 0: closed CCW rectangle
+    (a2 = 2wh, length = 2(w+h)), 1: axis-aligned staircase polyline of
+    k (right r, up u) steps (a2 = k·r·u via the wrap edge, length =
+    k·(r+u), vertex means = x0 + rk(k+1)/(2k+1), y0 + uk²/(2k+1)).
+    Every coordinate/dimension is dyadic and small, so every product
+    and partial sum is EXACT in float64 — the engine's fold order and
+    the twin's closed forms land on identical doubles, and the final
+    divisions see identical operands. Ref parity: mapnik
+    util::area/length/centroid over geometry<double>; SURVEY §2.9."""
+    from mapnik_vector_tile_spark.functions import measures as M
+
+    corpus = _measures_corpus(spark)
+    return corpus.select(
+        "feature_id",
+        M.signed_area2().alias("a2"),
+        M.boundary_length().alias("length"),
+        M.vertex_mean("xs").alias("vx"),
+        M.vertex_mean("ys").alias("vy"),
+    )
+
+
+def _measures_corpus(spark: SparkSession, n: int = None) -> DataFrame:
+    """The shared dyadic-exact measures corpus (see q_geom_measures
+    doc): even i -> closed CCW rectangle, odd i -> axis-aligned
+    staircase polyline; every coordinate exact in float64."""
+    import pandas as pd
+
+    if n is None:
+        n = MEASURES_N
+
+    def gen(it):
+        from mapnik_vector_tile_spark.functions import geomcodec as gc
+
+        for pdf in it:
+            ids = pdf["id"].to_numpy()
+            if not len(ids):
+                continue
+            rows = {"feature_id": [], "geom_type": [], "xs": [], "ys": [],
+                    "part_offsets": [], "caption": []}
+            for i in ids:
+                i = int(i)
+                x0 = -200.0 + (i * 3) % 400 + 0.125
+                y0 = -100.0 + (i * 7) % 200 + 0.0625
+                if i % 2 == 0:
+                    w = 1 + i % 9 + 0.25
+                    h = 2 + i % 7 + 0.5
+                    xs = [x0, x0 + w, x0 + w, x0, x0]
+                    ys = [y0, y0, y0 + h, y0 + h, y0]
+                    gt = gc.GEOM_POLYGON
+                else:
+                    r = 1 + i % 5 + 0.5
+                    u = 2 + i % 3 + 0.25
+                    k = 2 + i % 4
+                    xs, ys = [x0], [y0]
+                    for j in range(1, k + 1):
+                        xs.append(x0 + j * r); ys.append(y0 + (j - 1) * u)
+                        xs.append(x0 + j * r); ys.append(y0 + j * u)
+                    gt = gc.GEOM_LINESTRING
+                rows["feature_id"].append(i)
+                rows["geom_type"].append(int(gt))
+                rows["xs"].append(xs)
+                rows["ys"].append(ys)
+                rows["part_offsets"].append([0, len(xs)])
+                rows["caption"].append("")
+            yield pd.DataFrame(rows)
+
+    from mapnik_vector_tile_spark.operators.tiling import FEATURES_SCHEMA
+
+    return spark.range(0, n, 1, 8).mapInPandas(gen, schema=FEATURES_SCHEMA)
+
+
+def _sql_geom_measures(n: int = MEASURES_N) -> str:
+    from mapnik_vector_tile_spark.plans.shared_sql import flit
+
+    return f"""
+WITH ids AS (SELECT unnest(generate_series(0, {n - 1})) AS i),
+base AS (
+  SELECT i,
+         {flit(-200.0)} + (i * 3) % 400 + {flit(0.125)} AS x0,
+         {flit(-100.0)} + (i * 7) % 200 + {flit(0.0625)} AS y0,
+         1 + i % 9 + {flit(0.25)} AS w,
+         2 + i % 7 + {flit(0.5)} AS h,
+         1 + i % 5 + {flit(0.5)} AS r,
+         2 + i % 3 + {flit(0.25)} AS u,
+         2 + i % 4 AS k
+  FROM ids
+)
+SELECT i AS feature_id,
+       CASE WHEN i % 2 = 0 THEN {flit(2.0)} * w * h
+            ELSE k * r * u END AS a2,
+       CASE WHEN i % 2 = 0 THEN {flit(2.0)} * (w + h)
+            ELSE k * (r + u) END AS length,
+       CASE WHEN i % 2 = 0 THEN ({flit(5.0)} * x0 + {flit(2.0)} * w) / {flit(5.0)}
+            ELSE ((2 * k + 1) * x0 + r * k * (k + 1))
+                 / CAST(2 * k + 1 AS DOUBLE) END AS vx,
+       CASE WHEN i % 2 = 0 THEN ({flit(5.0)} * y0 + {flit(2.0)} * h) / {flit(5.0)}
+            ELSE ((2 * k + 1) * y0 + u * k * k)
+                 / CAST(2 * k + 1 AS DOUBLE) END AS vy
+FROM base
+"""
+
+
+COMPACT_N = 600  # q_cell_compact corpus size
+
+
+def q_cell_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """T15 cell-union normalization gate with a FULL oracle
+    (cellcover.compact_cells — the S2 CellUnion::Normalize analogue):
+    three closed-form shapes at z=10, i%3 picks — 0: a 4×4 block
+    aligned to a 4-grid (must CASCADE two rounds to one z=8 cell),
+    1: an aligned 2×2 (one z=9 cell), 2: a 3×3 at an even corner (one
+    z=9 cell + exactly 5 z=10 leaves). Input cells are generated with
+    pure Column algebra (sequence/explode — no Python anywhere in the
+    query); the engine runs the real per-round count-aggregate +
+    anti-join plan; the DuckDB twin emits the minimal covers directly
+    from the shape parameters. The uncompact inverse is pinned by
+    round-trip unit tests. sf_dir unused (committed synth recipe).
+    Ref parity: quadtree pyramid normalization (the tile-tree algebra
+    under the reference's overzoom/composite); SURVEY §2 T15."""
+    from pyspark.sql import functions as F
+
+    from mapnik_vector_tile_spark.operators.cellcover import compact_cells
+
+    base = spark.range(0, COMPACT_N, 1, 8).select(
+        F.col("id").alias("feature_id"),
+        (F.col("id") % 3).alias("kind"),
+        ((F.col("id") * 3) % 250).alias("k4"),
+        ((F.col("id") * 5) % 250).alias("m4"),
+        ((F.col("id") * 3) % 500).alias("p"),
+        ((F.col("id") * 5) % 500).alias("q"),
+    )
+    k0 = (
+        base.filter(F.col("kind") == 0)
+        .select(
+            "feature_id", "k4", "m4",
+            F.explode(F.sequence(F.lit(0), F.lit(15))).alias("t"),
+        )
+        .select(
+            "feature_id",
+            F.lit(10).alias("z"),
+            (F.col("k4") * 4 + F.col("t") % 4).cast("long").alias("cx"),
+            (F.col("m4") * 4 + F.floor(F.col("t") / 4)).cast("long").alias("cy"),
+        )
+    )
+    k1 = (
+        base.filter(F.col("kind") == 1)
+        .select(
+            "feature_id", "p", "q",
+            F.explode(F.sequence(F.lit(0), F.lit(3))).alias("t"),
+        )
+        .select(
+            "feature_id",
+            F.lit(10).alias("z"),
+            (F.col("p") * 2 + F.col("t") % 2).cast("long").alias("cx"),
+            (F.col("q") * 2 + F.floor(F.col("t") / 2)).cast("long").alias("cy"),
+        )
+    )
+    k2 = (
+        base.filter(F.col("kind") == 2)
+        .select(
+            "feature_id", "p", "q",
+            F.explode(F.sequence(F.lit(0), F.lit(8))).alias("t"),
+        )
+        .select(
+            "feature_id",
+            F.lit(10).alias("z"),
+            (F.col("p") * 2 + F.col("t") % 3).cast("long").alias("cx"),
+            (F.col("q") * 2 + F.floor(F.col("t") / 3)).cast("long").alias("cy"),
+        )
+    )
+    return compact_cells(k0.unionByName(k1).unionByName(k2), levels=3)
+
+
+def _sql_cell_compact(n: int = COMPACT_N) -> str:
+    return f"""
+WITH ids AS (SELECT unnest(generate_series(0, {n - 1})) AS i),
+base AS (
+  SELECT i, i % 3 AS kind, (i * 3) % 250 AS k4, (i * 5) % 250 AS m4,
+         (i * 3) % 500 AS p, (i * 5) % 500 AS q
+  FROM ids
+),
+k0 AS (  -- aligned 4x4 cascades to one z=8 cell
+  SELECT i AS feature_id, 8 AS z, k4 AS cx, m4 AS cy FROM base WHERE kind = 0
+),
+k1 AS (  -- aligned 2x2 -> one z=9 cell
+  SELECT i AS feature_id, 9 AS z, p AS cx, q AS cy FROM base WHERE kind = 1
+),
+k2p AS (  -- 3x3 at even corner -> one z=9 cell ...
+  SELECT i AS feature_id, 9 AS z, p AS cx, q AS cy FROM base WHERE kind = 2
+),
+k2l AS (  -- ... plus the 5 uncovered z=10 leaves
+  SELECT b.i AS feature_id, 10 AS z,
+         CASE WHEN l.t < 3 THEN b.p * 2 + 2 ELSE b.p * 2 + (l.t - 3) END AS cx,
+         CASE WHEN l.t < 3 THEN b.q * 2 + l.t ELSE b.q * 2 + 2 END AS cy
+  FROM base b, LATERAL (SELECT unnest(generate_series(0, 4)) AS t) l
+  WHERE b.kind = 2
+)
+SELECT * FROM k0 UNION ALL SELECT * FROM k1
+UNION ALL SELECT * FROM k2p UNION ALL SELECT * FROM k2l
+"""
+
+
+LINE_COVER_N = 300  # q_line_cover corpus size
+
+
+def q_line_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """T15 trajectory covering gate with a FULL oracle: the SAME
+    covering kernel (cover_polygon_cells degenerates correctly for
+    lines — vertex binning + edge crossing; the zero-area center-PIP
+    stage never fires) over 45° diagonal segments, the adversarial
+    case for cell walks. Each segment starts at cell fractions
+    (+3/8, +5/8) with integer cell length l = 1 + i%6, so it crosses
+    vertical boundaries at u = 5/8+j and horizontal ones at u = 3/8+j
+    — never a corner, and the exact staircase is closed-form:
+    {(k+i, cy0−i)} ∪ {(k+i, cy0−i−1)} = 2l+1 cells. The DuckDB twin
+    enumerates exactly that, integers only. sf_dir unused. Ref parity:
+    line features through the reference's per-tile spatial filter;
+    SURVEY §2 T15."""
+    import pandas as pd
+
+    from mapnik_vector_tile_spark.functions import tilemath as tm
+    from mapnik_vector_tile_spark.operators.cellcover import cover_polygon_cells
+
+    span = tm.tile_span(COVER_Z)
+
+    def gen(it):
+        from mapnik_vector_tile_spark.functions import geomcodec as gc
+
+        for pdf in it:
+            ids = pdf["id"].to_numpy()
+            if not len(ids):
+                continue
+            rows = {"feature_id": [], "geom_type": [], "xs": [], "ys": [],
+                    "part_offsets": [], "caption": []}
+            for i in ids:
+                i = int(i)
+                k = (i * 7) % 900
+                m = (i * 11) % 900
+                a = -tm.W + k * span + 0.375 * span
+                c = -tm.W + m * span + 0.625 * span
+                L = (1 + i % 6) * span
+                rows["feature_id"].append(i)
+                rows["geom_type"].append(int(gc.GEOM_LINESTRING))
+                rows["xs"].append([a, a + L])
+                rows["ys"].append([c, c + L])
+                rows["part_offsets"].append([0, 2])
+                rows["caption"].append("")
+            yield pd.DataFrame(rows)
+
+    from mapnik_vector_tile_spark.operators.tiling import FEATURES_SCHEMA
+
+    corpus = spark.range(0, LINE_COVER_N, 1, 8).mapInPandas(
+        gen, schema=FEATURES_SCHEMA
+    )
+    return cover_polygon_cells(corpus, COVER_Z)
+
+
+def _sql_line_cover(n: int = LINE_COVER_N) -> str:
+    return f"""
+WITH ids AS (SELECT unnest(generate_series(0, {n - 1})) AS i),
+base AS (
+  SELECT i, (i * 7) % 900 AS k, (i * 11) % 900 AS m, 1 + i % 6 AS l
+  FROM ids
+),
+diag AS (  -- the (k+t, cy0-t) cells, t = 0..l
+  SELECT b.i AS feature_id, b.k + g.t AS cx, 1023 - b.m - g.t AS cy
+  FROM base b, LATERAL (SELECT unnest(generate_series(0, b.l)) AS t) g
+),
+steps AS (  -- the (k+t, cy0-t-1) step cells, t = 0..l-1
+  SELECT b.i AS feature_id, b.k + g.t AS cx, 1023 - b.m - g.t - 1 AS cy
+  FROM base b, LATERAL (SELECT unnest(generate_series(0, b.l - 1)) AS t) g
+)
+SELECT feature_id, CAST({COVER_Z} AS INT) AS z, cx, cy FROM diag
+UNION ALL
+SELECT feature_id, CAST({COVER_Z} AS INT) AS z, cx, cy FROM steps
+"""
+
+
+BUDGET_Z = 5
+BUDGET_BYTES = 200  # trims most z5 tiles (~60 features) to ~14
+
+
+def q_tile_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """U11 tile byte-budget enforcement (composite.trim_tile_to_budget
+    — the tippecanoe tile-size contract): encode lineitem-keyed
+    prop-less point layers at z5 (~60 features/tile, id-ordered), trim
+    each layer to a 200-byte feature stream, and read the SURVIVOR ids
+    back from the trimmed wire bytes. The twin recomputes every
+    feature's exact wire footprint with closed-form varint-length
+    arithmetic (8 + vs(id) + vs(2·px) + vs(2·py)) and the running-sum
+    prefix rule — any drift in the codec's byte accounting, the
+    zigzag, or the prefix cut breaks the hash."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from mapnik_vector_tile_spark.functions import pbf
+    from mapnik_vector_tile_spark.operators.composite import (
+        trim_tile_to_budget,
+    )
+    from mapnik_vector_tile_spark.operators.grouped import apply_grouped
+
+    span = S.TWO_W / (1 << BUDGET_Z)
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+        "l_orderkey", "l_linenumber"
+    )
+
+    def to_points(batches):
+        import numpy as np
+
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            ids = (
+                pdf["l_orderkey"].to_numpy().astype(np.int64) * 8
+                + pdf["l_linenumber"].to_numpy().astype(np.int64)
+            )
+            mx = ((ids * 2654435761) % 2**32) / float(2**32) * S.TWO_W - W
+            my = (
+                ((ids * 1103515245 + 12345) % 2**32) / float(2**32)
+            ) * S.TWO_W - W
+            tx = np.floor((mx + W) / span).astype(np.int64)
+            ty = np.floor((W - my) / span).astype(np.int64)
+            yield pd.DataFrame(
+                {"tx": tx, "ty": ty, "id": ids, "mx": mx, "my": my}
+            )
+
+    pts = li.mapInPandas(
+        to_points, schema="tx long, ty long, id long, mx double, my double"
+    )
+
+    def encode_group(key, cols, sl):
+        import numpy as np
+
+        from mapnik_vector_tile_spark.functions import tilemath as tm
+
+        tx, ty = int(key[0]), int(key[1])
+        lb = pbf.LayerBuilder("pts", extent=4096)
+        ox = -tm.W + tx * span
+        oy = tm.W - ty * span
+        for i in range(sl.start, sl.stop):
+            px = tm.round_half_away_np(
+                np.array([(cols["mx"][i] - ox) * 4096.0 / span])
+            )[0]
+            py = tm.round_half_away_np(
+                np.array([(oy - cols["my"][i]) * 4096.0 / span])
+            )[0]
+            lb.add_feature(
+                int(cols["id"][i]), 1,
+                np.array([9, int(px) * 2, int(py) * 2]), {},
+            )
+        return [(tx, ty, lb.build())]
+
+    layers = apply_grouped(
+        pts,
+        keys=["tx", "ty"],
+        order_by=["tx", "ty", "id"],
+        fn=encode_group,
+        schema="tx long, ty long, blob binary",
+        out_columns=["tx", "ty", "blob"],
+    ).select(
+        F.lit(BUDGET_Z).alias("z"),
+        F.col("tx").alias("x"),
+        F.col("ty").alias("y"),
+        F.lit("pts").alias("layer"),
+        F.col("blob"),
+        F.lit(0).cast("long").alias("n_features"),
+        F.lit(0).cast("long").alias("n_points"),
+    )
+    trimmed = trim_tile_to_budget(layers, BUDGET_BYTES)
+
+    def readback(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            rows = []
+            for x, y, blob in zip(pdf["x"], pdf["y"], pdf["blob"]):
+                layer = pbf.decode_layer(bytes(blob))
+                ids = [f["id"] for f in layer["features"]]
+                rows.append(
+                    (int(x), int(y), len(ids), int(sum(ids)), int(max(ids)))
+                )
+            yield pd.DataFrame(
+                rows, columns=["x", "y", "n_kept", "sum_id", "max_id"]
+            )
+
+    return trimmed.mapInPandas(
+        readback,
+        schema="x long, y long, n_kept long, sum_id long, max_id long",
+    )
+
+
+def _sql_tile_budget() -> str:
+    tx, ty = S.tile_xy_exprs(BUDGET_Z)
+    qx, qy = S.quantize_exprs(BUDGET_Z, "tx", "ty")
+
+    def vs(e: str) -> str:
+        return (
+            f"CASE WHEN {e} < 128 THEN 1 WHEN {e} < 16384 THEN 2"
+            f" WHEN {e} < 2097152 THEN 3 WHEN {e} < 268435456 THEN 4"
+            f" ELSE 5 END"
+        )
+
+    return f"""
+WITH li AS (
+  SELECT l_orderkey * 8 + l_linenumber AS id FROM lineitem
+),
+{S.point_cte('li', 'id')},
+t AS (SELECT id, mx, my, {tx} AS tx, {ty} AS ty FROM pts),
+q AS (SELECT id, tx, ty, {qx} AS px, {qy} AS py FROM t),
+sz AS (
+  SELECT id, tx, ty,
+         8 + {vs('id')} + {vs('(px * 2)')} + {vs('(py * 2)')} AS sz
+  FROM q
+),
+run AS (
+  SELECT id, tx, ty,
+         SUM(sz) OVER (PARTITION BY tx, ty ORDER BY id
+                       ROWS UNBOUNDED PRECEDING) AS cum
+  FROM sz
+)
+SELECT tx AS x, ty AS y,
+       CAST(COUNT(*) AS BIGINT) AS n_kept,
+       CAST(SUM(id) AS BIGINT) AS sum_id,
+       CAST(MAX(id) AS BIGINT) AS max_id
+FROM run WHERE cum <= {BUDGET_BYTES}
+GROUP BY 1, 2
+"""
+
+
+REPAIR_N = 450  # q_engine_clip_repair corpus size
+
+
+def _clip_repair_query(
+    spark: SparkSession, sf_dir: str, fill_rule: str = "even_odd"
+) -> DataFrame:
+    """F12 polygon repair through the REAL encode path with a FULL
+    oracle. Corpus: 450 polygons, idx%3 picks the shape — 0: valid
+    rectangle (repair no-op pinned), 1: bowtie quad (edges AB×CD cross;
+    repair splits it into triangles (X,B,C)+(A,X,D)), 2: figure-8
+    touching at a shared vertex (splits there directly). Geometry
+    params are exact integers in mercator meters and the crossing
+    point X = (x0+w/2, y0+h/2) is exactly representable, so the repair
+    kernel's parametric solve and the closed-form both yield identical
+    doubles regardless of op order. The chain is assign(z0) →
+    encode_tiles(repair=True) → decode; output is ORDER-FREE per
+    feature (ring/vertex counts, coordinate sums, Σ|2A|), so winding
+    normalization and lobe extraction order need no pinning. The
+    DuckDB twin regenerates the lobes closed-form and replays the
+    quantize (round-half-away at z0 scale) op-for-op.
+    sf_dir is unused: the subject is the repair kernel, not the scan.
+    Ref parity: src/vector_tile_geometry_clipper.hpp polygon overloads
+    (wagyu even-odd repair), SURVEY §2.7 F12."""
+    import numpy as np
+    import pandas as pd
+
+    from mapnik_vector_tile_spark.functions import geomcodec as gc
+    from mapnik_vector_tile_spark.operators import tiling as T
+    from mapnik_vector_tile_spark.sources.synth import splitmix64
+
+    def gen(it):
+        for pdf in it:
+            ids = pdf["id"].to_numpy()
+            if not len(ids):
+                continue
+            h = splitmix64(ids.astype(np.uint64))
+            x0 = (h % np.uint64(3000001)).astype(np.float64) * 10.0 - 1.5e7
+            y0 = ((h >> np.uint64(8)) % np.uint64(3000001)).astype(
+                np.float64
+            ) * 10.0 - 1.5e7
+            w = 300000.0 + ((h >> np.uint64(16)) % np.uint64(1000001)).astype(
+                np.float64
+            )
+            hh = 300000.0 + ((h >> np.uint64(32)) % np.uint64(1000001)).astype(
+                np.float64
+            )
+            rows = {"feature_id": [], "geom_type": [], "xs": [], "ys": [],
+                    "part_offsets": [], "caption": []}
+            for i, fid in enumerate(ids):
+                cs = int(fid) % 3
+                a, b = float(x0[i]), float(y0[i])
+                ww, hhh = float(w[i]), float(hh[i])
+                if cs == 0 and int(fid) % 6 == 3:
+                    # spike quad: edge B->M doubles back COLLINEARLY
+                    # over A->B (the former residual narrowing);
+                    # repair drops the zero-area spike, leaving the
+                    # triangle (A, M, C). M = a + w/2 is exactly
+                    # representable (w has 0.5 granularity, |a| ~1.5e7)
+                    xs = [a, a + ww, a + 0.5 * ww, a + 0.5 * ww]
+                    ys = [b, b, b, b + hhh]
+                elif cs == 0:  # valid rectangle
+                    xs = [a, a + ww, a + ww, a]
+                    ys = [b, b, b + hhh, b + hhh]
+                elif cs == 1:  # bowtie: edges AB and CD cross
+                    xs = [a, a + ww, a + ww, a]
+                    ys = [b, b + hhh, b, b + hhh]
+                else:  # figure-8 sharing vertex P
+                    xs = [a, a + ww, a + ww, a, a - ww, a - ww]
+                    ys = [b, b, b + hhh, b, b, b - hhh]
+                rows["feature_id"].append(int(fid))
+                rows["geom_type"].append(3)
+                rows["xs"].append(xs)
+                rows["ys"].append(ys)
+                rows["part_offsets"].append([0, len(xs)])
+                rows["caption"].append("p")
+            yield pd.DataFrame(rows)
+
+    feats = spark.range(0, REPAIR_N, 1, 8).mapInPandas(
+        gen, schema=T.FEATURES_SCHEMA
+    )
+    assigned = T.assign_tiles(feats, 0, 0)
+    tiles = T.encode_tiles(assigned, repair=True, fill_rule=fill_rule)
+    dec = T.decode_tiles_to_features(tiles)
+
+    def summarize(it):
+        for pdf in it:
+            out = {"feature_id": [], "n_rings": [], "n_vertices": [],
+                   "sum_px": [], "sum_py": [], "sum_abs_area2": []}
+            for fid, pxs, pys, offs in zip(
+                pdf["feature_id"], pdf["pxs"], pdf["pys"],
+                pdf["part_offsets"],
+            ):
+                px = np.asarray(pxs, dtype=np.int64)
+                py = np.asarray(pys, dtype=np.int64)
+                offs = np.asarray(offs, dtype=np.int64)
+                sa = 0
+                for r in range(len(offs) - 1):
+                    sa += abs(gc.signed_area2(px[offs[r]:offs[r + 1]],
+                                              py[offs[r]:offs[r + 1]]))
+                out["feature_id"].append(int(fid))
+                out["n_rings"].append(len(offs) - 1)
+                out["n_vertices"].append(len(px))
+                out["sum_px"].append(int(px.sum()))
+                out["sum_py"].append(int(py.sum()))
+                out["sum_abs_area2"].append(int(sa))
+            yield pd.DataFrame(out)
+
+    return dec.mapInPandas(
+        summarize,
+        schema=("feature_id long, n_rings int, n_vertices int, "
+                "sum_px long, sum_py long, sum_abs_area2 long"),
+    )
+
+
+def q_engine_clip_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Wagyu even-odd repair (mapnik default) — see _clip_repair_query."""
+    return _clip_repair_query(spark, sf_dir, "even_odd")
+
+
+def q_engine_clip_repair_pos(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """F12 POSITIVE fill rule (the wagyu fill_rule option; OGC
+    winding semantics) over the SAME invalid-polygon corpus — the
+    corpus class where the two rules DISAGREE: the bowtie's lobes
+    carry opposite traversal signs (+wh/2 for (A,X,D), −wh/2 for
+    (X,B,C)), so positive fill keeps only the positively-wound
+    triangle while even-odd fills both; rectangles, spikes and the
+    double-CCW figure-8 are rule-agnostic.  Twin drops the negative
+    lobe closed-form."""
+    return _clip_repair_query(spark, sf_dir, "positive")
+
+
+def _sql_clip_repair(
+    n: int = REPAIR_N, fill_rule: str = "even_odd"
+) -> str:
+    """DuckDB twin of q_engine_clip_repair: regenerate the lobes the
+    repair kernel produces (closed form — see the query docstring for
+    why X is exactly representable), quantize each vertex with the
+    engine's round-half-away at the z0 scale, and aggregate the same
+    order-free per-feature stats (shoelace via lead() per ring)."""
+    from mapnik_vector_tile_spark.functions import tilemath as tm
+
+    w = repr(tm.W)
+    scale = repr(4096.0 / tm.tile_span(0))
+    half = "5e-1"
+    pts = []
+
+    def p(cs, ring: int, order: int, mx: str, my: str) -> None:
+        cond = cs if isinstance(cs, str) else f"cs = {cs}"
+        pts.append(
+            f"SELECT idx, {ring} AS ring, {order} AS o, {mx} AS mx, "
+            f"{my} AS my FROM par WHERE {cond}"
+        )
+
+    # case 0a: valid rectangle, 1 ring
+    p("cs = 0 AND idx % 6 = 0", 1, 0, "x0", "y0")
+    p("cs = 0 AND idx % 6 = 0", 1, 1, "x0 + w", "y0")
+    p("cs = 0 AND idx % 6 = 0", 1, 2, "x0 + w", "y0 + hh")
+    p("cs = 0 AND idx % 6 = 0", 1, 3, "x0", "y0 + hh")
+    # case 0b: collinear spike quad -> spike dropped, triangle (A,M,C)
+    p("cs = 0 AND idx % 6 = 3", 1, 0, "x0", "y0")
+    p("cs = 0 AND idx % 6 = 3", 1, 1, f"x0 + {half} * w", "y0")
+    p("cs = 0 AND idx % 6 = 3", 1, 2, f"x0 + {half} * w", "y0 + hh")
+    # case 1: bowtie -> lobes (X,B,C) [CW, −wh/2] and (A,X,D)
+    # [CCW, +wh/2]; positive fill drops the CW lobe
+    if fill_rule == "even_odd":
+        p(1, 1, 0, f"x0 + {half} * w", f"y0 + {half} * hh")
+        p(1, 1, 1, "x0 + w", "y0 + hh")
+        p(1, 1, 2, "x0 + w", "y0")
+    p(1, 2, 0, "x0", "y0")
+    p(1, 2, 1, f"x0 + {half} * w", f"y0 + {half} * hh")
+    p(1, 2, 2, "x0", "y0 + hh")
+    # case 2: figure-8 -> lobes (P,Q,R) and (P,S,T)
+    p(2, 1, 0, "x0", "y0")
+    p(2, 1, 1, "x0 + w", "y0")
+    p(2, 1, 2, "x0 + w", "y0 + hh")
+    p(2, 2, 0, "x0", "y0")
+    p(2, 2, 1, "x0 - w", "y0")
+    p(2, 2, 2, "x0 - w", "y0 - hh")
+    union = "\n  UNION ALL ".join(pts)
+    return f"""
+WITH ids AS (SELECT unnest(generate_series(0, {n - 1})) AS idx),
+hsrc AS (SELECT idx, {splitmix64_sql('idx')} AS h FROM ids),
+par AS (
+  SELECT idx, idx % 3 AS cs,
+         CAST(h % 3000001 AS DOUBLE) * 1e1 - 1.5e7 AS x0,
+         CAST((h // 256) % 3000001 AS DOUBLE) * 1e1 - 1.5e7 AS y0,
+         3e5 + CAST((h // 65536) % 1000001 AS DOUBLE) AS w,
+         3e5 + CAST((h // 4294967296) % 1000001 AS DOUBLE) AS hh
+  FROM hsrc),
+pw AS (
+  {union}
+),
+q AS (
+  SELECT idx, ring, o,
+         CAST(floor((mx + {w}) * {scale} + {half}) AS BIGINT) AS px,
+         CAST(floor(({w} - my) * {scale} + {half}) AS BIGINT) AS py
+  FROM pw),
+sh AS (
+  SELECT idx, ring, px, py,
+         COALESCE(lead(px) OVER wo, first_value(px) OVER wo) AS nx,
+         COALESCE(lead(py) OVER wo, first_value(py) OVER wo) AS ny
+  FROM q
+  WINDOW wo AS (PARTITION BY idx, ring ORDER BY o)),
+ra AS (
+  SELECT idx, ring, ABS(SUM(px * ny - nx * py)) AS a2,
+         COUNT(*) AS nv, SUM(px) AS spx, SUM(py) AS spy
+  FROM sh GROUP BY 1, 2)
+SELECT CAST(idx AS BIGINT) AS feature_id,
+       CAST(COUNT(*) AS INT) AS n_rings,
+       CAST(SUM(nv) AS INT) AS n_vertices,
+       CAST(SUM(spx) AS BIGINT) AS sum_px,
+       CAST(SUM(spy) AS BIGINT) AS sum_py,
+       CAST(SUM(a2) AS BIGINT) AS sum_abs_area2
+FROM ra GROUP BY 1
+"""
+
+
+MVT_EXPRS = {
+    # full grammar sweep: arithmetic + % + match + and/or/not + floats
+    "keep": (
+        "(([p_size] + 3) * 7 % 5 < 3 or [p_name].match('small .*')) "
+        "and not ([p_brand] = 'Brand#13' or [p_size] / 4 > 11.5) "
+        "and [p_type].match('.*M.*')"
+    ),
+    # mapnik null semantics against REAL NULLs (NULLIF-derived column):
+    # '= null' is value_null equality (TRUE branch), '> 46' with a null
+    # operand is FALSE (never SQL NULL), and the outer 'or' sees
+    # non-null booleans only
+    "keep_null": "[sz] = null or [sz] > 46 or not [sz] != null",
+    # signed remainder + unary minus + precedence
+    "score": "([p_size] * 13 + 7) % 97 + (-[p_size]) % 5",
+    # int/int true division (SQL rule, exact binary fraction)
+    "ratio": "[p_size] / 4 - 0.5",
+}
+
+
+MVT_COLMAP = {"sz": "NULLIF(p_size, 45)"}
+
+
+def _mvt_expr_selects(engine: str) -> list[str]:
+    from mapnik_vector_tile_spark.functions import mvtexpr as X
+
+    outs = []
+    for name, src in MVT_EXPRS.items():
+        if name.startswith("keep"):
+            sql = X.predicate_sql(src, engine, MVT_COLMAP)
+        else:
+            sql = X.to_sql(X.parse(src), engine, MVT_COLMAP)
+        outs.append(f"{sql} AS {name}")
+    return outs
+
+
+def q_mapnik_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """P7 mapnik filter-expression compiler (functions/mvtexpr.py —
+    the style language that decides which features a mapnik-vector-tile
+    processor encodes; reference parity: mapnik expressions_grammar)
+    with a FULL oracle: every committed expression in MVT_EXPRS is
+    parsed ONCE and the one AST renders to both engines, so operator
+    precedence, the null-safe '=', the FALSE-not-NULL ordered
+    comparisons, full-string .match, signed remainder and true
+    division must all agree bit-exactly over every part row (both
+    boolean branches land in the hash because keep is a column, not a
+    WHERE). The compiled predicate is a single Catalyst expression —
+    no UDF, pushdown/codegen-eligible (asserted in tests)."""
+    load_views(spark, sf_dir)
+    cols = ", ".join(_mvt_expr_selects("spark"))
+    return spark.sql(f"SELECT p_partkey AS id, {cols} FROM part")
+
+
+def _sql_mapnik_expr() -> str:
+    cols = ", ".join(_mvt_expr_selects("duckdb"))
+    return f"SELECT p_partkey AS id, {cols} FROM part"
+
+
+UTF_Z = 6
+
+
+def q_utfgrid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """S9 UTFGrid encode (operators/tiling.utfgrid_rows — mapnik
+    grid_renderer parity: per-tile 64×64 key raster, codepoint
+    mapping idx+32 with the '\"'/'\\\\' gaps skipped, ascending-id
+    painter's order, dense-rank key table) with a FULL oracle: the
+    DuckDB twin replays the cell math from the shared tile formulas,
+    the max-id cells, the dense_rank key indexes, the gap-skipping
+    codepoint arithmetic and the positional 31-power row hash."""
+    from mapnik_vector_tile_spark.operators.tiling import utfgrid_rows
+    from mapnik_vector_tile_spark.plans.flagship import derive_points
+
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    return utfgrid_rows(derive_points(orders, "o_orderkey"), z=UTF_Z)
+
+
+def _sql_utfgrid(z: int = UTF_Z, cell_bits: int = 6) -> str:
+    from mapnik_vector_tile_spark.operators.tiling import UTFGRID_POW31
+
+    txe, tye = S.tile_xy_exprs(z)
+    fxe, fye = S.tile_xy_exprs(z + cell_bits)
+    pows = "[" + ", ".join(str(p) for p in UTFGRID_POW31) + "]"
+    return f"""
+WITH {S.point_cte('orders', 'o_orderkey')},
+asgn AS (
+  SELECT id, {txe} AS x, {tye} AS y,
+         {fxe} - {txe} * {1 << cell_bits} AS cx,
+         {fye} - {tye} * {1 << cell_bits} AS cy
+  FROM pts),
+cells AS (
+  SELECT x, y, cx, cy, MAX(id) AS v
+  FROM asgn GROUP BY x, y, cx, cy),
+ranked AS (
+  SELECT x, y, cx, cy,
+         dense_rank() OVER (PARTITION BY x, y ORDER BY v) AS ki
+  FROM cells),
+cps AS (
+  SELECT x, y, cx, cy, ki,
+         cp1 + CASE WHEN cp1 >= 92 THEN 1 ELSE 0 END AS cp
+  FROM (
+    SELECT x, y, cx, cy, ki,
+           (ki + 32) + CASE WHEN ki + 32 >= 34 THEN 1 ELSE 0 END AS cp1
+    FROM ranked)),
+nk AS (SELECT x, y, MAX(ki) AS n_keys FROM cps GROUP BY x, y)
+SELECT CAST({z} AS BIGINT) AS z, c.x, c.y, c.cy AS row_idx,
+       CAST(COUNT(*) AS BIGINT) AS n_cells,
+       CAST(SUM(c.cp * {pows}[CAST(c.cx AS INT) + 1]) % 2147483648
+            AS BIGINT) AS rh,
+       CAST(MAX(nk.n_keys) AS BIGINT) AS n_keys
+FROM cps c JOIN nk ON nk.x = c.x AND nk.y = c.y
+GROUP BY c.x, c.y, c.cy
+"""
+
+
+LP_Z = 3
+
+
+def q_label_place(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """W7 greedy label placement (operators/tiling.label_place_greedy
+    — the mapnik placement_finder shape: candidates in ascending-id
+    priority order, placed iff the box overlaps no already-placed box,
+    STRICT overlap so edge contact is legal, discards don't block)
+    with a FULL oracle. Corpus: orders points at z3 (~230 candidates
+    per tile, heavy collision pressure) with hash-derived box half
+    sizes; centers are the exact z15-minus-z3-origin tile pixels. The
+    DuckDB twin replays the exact sequential greedy through a
+    recursive CTE carrying the PLACED BOX LISTS — one wrongly placed
+    label cascades into different later decisions, so the per-tile
+    placed-id hash is sequence-sensitive."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from mapnik_vector_tile_spark.functions.tilemath import W
+    from mapnik_vector_tile_spark.operators.tiling import label_place_greedy
+    from mapnik_vector_tile_spark.plans.flagship import derive_points
+
+    box_t = StructType(
+        [StructField("hw", LongType()), StructField("hh", LongType())]
+    )
+
+    def _box_kernel(k):
+        import numpy as np
+
+        from mapnik_vector_tile_spark.sources.synth import splitmix64
+
+        h = splitmix64(k.to_numpy(dtype=np.uint64))
+        return pd.DataFrame(
+            {
+                "hw": (40 + h % np.uint64(120)).astype(np.int64),
+                "hh": (20 + (h >> np.uint64(8)) % np.uint64(40)).astype(
+                    np.int64
+                ),
+            }
+        )
+
+    box = F.pandas_udf(_box_kernel, box_t)
+    pts = derive_points(
+        spark.read.parquet(f"{sf_dir}/orders.parquet"), "o_orderkey"
+    )
+    span_c = 2.0 * W / (1 << LP_Z)
+    span_f = 2.0 * W / (1 << (LP_Z + 12))
+    mx, my = F.col("mx"), F.col("my")
+    tx = F.floor((mx + F.lit(W)) / F.lit(span_c)).cast("long")
+    ty = F.floor((F.lit(W) - my) / F.lit(span_c)).cast("long")
+    fx = F.floor((mx + F.lit(W)) / F.lit(span_f)).cast("long")
+    fy = F.floor((F.lit(W) - my) / F.lit(span_f)).cast("long")
+    cands = pts.select(
+        tx.alias("x"),
+        ty.alias("y"),
+        "id",
+        (fx - tx * F.lit(1 << 12)).alias("cx"),
+        (fy - ty * F.lit(1 << 12)).alias("cy"),
+        box(F.col("id")).alias("b"),
+    ).select("x", "y", "id", "cx", "cy", "b.hw", "b.hh")
+    return label_place_greedy(cands)
+
+
+def _sql_label_place(z: int = LP_Z) -> str:
+    sm = splitmix64_sql("id")
+    txe, tye = S.tile_xy_exprs(z)
+    fxe, fye = S.tile_xy_exprs(z + 12)
+    return f"""
+WITH RECURSIVE {S.point_cte('orders', 'o_orderkey')},
+cand AS (
+  SELECT id, {txe} AS x, {tye} AS y,
+         {fxe} - {txe} * 4096 AS cx,
+         {fye} - {tye} * 4096 AS cy,
+         CAST(40 + ({sm}) % 120 AS BIGINT) AS hw,
+         CAST(20 + (({sm}) // 256) % 40 AS BIGINT) AS hh
+  FROM pts),
+packs AS MATERIALIZED (
+  SELECT x, y, COUNT(*) AS n,
+         list(cx ORDER BY id) AS acx, list(cy ORDER BY id) AS acy,
+         list(hw ORDER BY id) AS ahw, list(hh ORDER BY id) AS ahh,
+         list(id ORDER BY id) AS aid
+  FROM cand GROUP BY x, y),
+walk(x, y, i, pcx, pcy, phw, phh, ph, n_placed) AS (
+  SELECT x, y, 0,
+         CAST([] AS BIGINT[]), CAST([] AS BIGINT[]),
+         CAST([] AS BIGINT[]), CAST([] AS BIGINT[]),
+         CAST(0 AS BIGINT), CAST(0 AS BIGINT)
+  FROM packs
+  UNION ALL
+  SELECT w.x, w.y, w.i + 1,
+         CASE WHEN hit THEN pcx ELSE list_append(pcx, ccx) END,
+         CASE WHEN hit THEN pcy ELSE list_append(pcy, ccy) END,
+         CASE WHEN hit THEN phw ELSE list_append(phw, chw) END,
+         CASE WHEN hit THEN phh ELSE list_append(phh, chh) END,
+         CASE WHEN hit THEN ph
+              ELSE ph + (cid * 2654435761) % 2147483648 END,
+         CASE WHEN hit THEN n_placed ELSE n_placed + 1 END
+  FROM (
+    SELECT w.*, p.n,
+           p.acx[w.i + 1] AS ccx, p.acy[w.i + 1] AS ccy,
+           p.ahw[w.i + 1] AS chw, p.ahh[w.i + 1] AS chh,
+           p.aid[w.i + 1] AS cid,
+           len([j FOR j IN generate_series(1, len(w.pcx))
+                IF abs(w.pcx[j] - p.acx[w.i + 1])
+                     < w.phw[j] + p.ahw[w.i + 1]
+                   AND abs(w.pcy[j] - p.acy[w.i + 1])
+                     < w.phh[j] + p.ahh[w.i + 1]]) > 0 AS hit
+    FROM walk w JOIN packs p ON p.x = w.x AND p.y = w.y
+    WHERE w.i < p.n) w
+)
+SELECT w.x, w.y, CAST(p.n AS BIGINT) AS n_cands, w.n_placed, w.ph
+FROM walk w JOIN packs p ON p.x = w.x AND p.y = w.y
+WHERE w.i = p.n
+"""
+
+
+HB_Z = 10
+
+
+def _hilbert_query(engine: str) -> str:
+    from mapnik_vector_tile_spark.functions.hilbertcell import hilbert_sql
+
+    txe, tye = S.tile_xy_exprs(HB_Z)
+    src = (
+        f"(WITH {S.point_cte('orders', 'o_orderkey')} "
+        f"SELECT id, {txe} AS cx, {tye} AS cy FROM pts) cells"
+    )
+    return hilbert_sql(HB_Z, src, engine)
+
+
+def q_hilbert(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hilbert cell index (functions/hilbertcell.py — the
+    PMTiles/S2-style locality curve, fourth cell scheme beside
+    Morton, S2-style, hex and geohash) with a FULL oracle: ONE
+    generator renders the z-level rotate/flip recurrence to both
+    engines (only integer-division syntax differs), so every id's
+    curve position matches bit-exactly; numpy twin is
+    pmtiles-tileid-parity- and unit-step-pinned in tests. Zero
+    shuffle: one codegen projection."""
+    load_views(spark, sf_dir)
+    return spark.sql(_hilbert_query("spark"))
+
+
+def q_tile_patch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Delta publish round trip with a FULL oracle: build stores
+    A (key%5!=0) and B (key%7!=0) through the REAL encode pipeline,
+    make the patch from their byte-level diff, apply it to A, and
+    DECODE the patched store — per-tile feature counts must equal the
+    closed-form counts of store B, proving patch∘diff reproduces B's
+    content exactly (spurious or missed patch rows break the hash)."""
+    from pyspark.sql import functions as F
+
+    from mapnik_vector_tile_spark.operators import composite as comp
+    from mapnik_vector_tile_spark.operators import tiling as T
+
+    a, b = _diff_stores(spark, sf_dir)
+    patched = comp.patch_tiles(a, comp.make_patch(a, b))
+    dec = T.decode_tiles_to_features(patched)
+    return dec.groupBy("z", "x", "y").agg(
+        F.count(F.lit(1)).cast("long").alias("n_features")
+    )
+
+
+def _sql_tile_patch(z: int = DIFF_Z) -> str:
+    tx, ty = S.tile_xy_exprs(z)
+    return f"""
+WITH {S.point_cte('orders', 'o_orderkey')},
+t AS (SELECT id, {tx} AS x, {ty} AS y FROM pts WHERE id % 7 <> 0)
+SELECT CAST({z} AS BIGINT) AS z, x, y,
+       CAST(COUNT(*) AS BIGINT) AS n_features
+FROM t GROUP BY 2, 3
+"""
+
+
+AI_NSRC = 60
+AI_NTGT = 40
+
+
+def _ai_rect_feats(spark: SparkSession, n: int, base: int, style: int):
+    """Axis-aligned rect features anchored at cell+span/4 (edges never
+    on cell boundaries) — source (style 0) and target (style 1) use
+    different anchor/extent formulas so tessellations genuinely
+    differ."""
+    import pandas as pd
+
+    from mapnik_vector_tile_spark.functions import tilemath as tm
+
+    span = tm.tile_span(COVER_Z)
+
+    def gen(it):
+        from mapnik_vector_tile_spark.functions import geomcodec as gc
+
+        for pdf in it:
+            rows = {"feature_id": [], "geom_type": [], "xs": [], "ys": [],
+                    "part_offsets": [], "caption": []}
+            for i in pdf["id"]:
+                i = int(i)
+                if style == 0:
+                    k, m = (i * 7) % 40, (i * 11) % 40
+                    wc, hc = 1 + i % 5, 2 + i % 4
+                else:
+                    k, m = (i * 13) % 40, (i * 17) % 40
+                    wc, hc = 1 + i % 6, 1 + i % 3
+                a = -tm.W + k * span + span / 4
+                c = -tm.W + m * span + span / 4
+                w = wc * span + span / 2
+                h = hc * span + span / 2
+                rows["feature_id"].append(base + i)
+                rows["geom_type"].append(int(gc.GEOM_POLYGON))
+                rows["xs"].append([a, a + w, a + w, a, a])
+                rows["ys"].append([c, c, c + h, c + h, c])
+                rows["part_offsets"].append([0, 5])
+                rows["caption"].append(f"r{base + i}")
+            yield pd.DataFrame(rows)
+
+    return spark.range(n).mapInPandas(
+        gen,
+        "feature_id long, geom_type int, xs array<double>,"
+        " ys array<double>, part_offsets array<int>, caption string",
+    )
+
+
+def q_areal_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Areal interpolation (cellcover.areal_interpolate) with a FULL
+    oracle: 60 source rects with splitmix values reallocate onto 40
+    target rects through the REAL covering kernel + cell equi-join;
+    DuckDB never sees a cell — it intersects the closed-form
+    inclusive cell RANGES (max(0, min−max+1) algebra) and replays the
+    exact floor allocations."""
+    from pyspark.sql import functions as F
+
+    from mapnik_vector_tile_spark.operators.cellcover import (
+        areal_interpolate,
+    )
+
+    src = _ai_rect_feats(spark, AI_NSRC, 0, 0)
+    tgt = _ai_rect_feats(spark, AI_NTGT, 1000, 1)
+
+    def _val(k):
+        import numpy as np
+        import pandas as pd
+
+        from mapnik_vector_tile_spark.sources.synth import splitmix64
+
+        h = splitmix64(k.to_numpy(np.uint64))
+        return pd.Series((1000 + h % np.uint64(9000)).astype(np.int64))
+
+    from pyspark.sql.types import LongType
+
+    vk = F.pandas_udf(_val, LongType())
+    vals = spark.range(AI_NSRC).select(
+        F.col("id").cast("long").alias("sid"), vk(F.col("id")).alias("value")
+    )
+    return areal_interpolate(src, vals, tgt, COVER_Z)
+
+
+def _sql_areal_interp() -> str:
+    sm = splitmix64_sql("i")
+    return f"""
+WITH si AS (SELECT unnest(generate_series(0, {AI_NSRC - 1})) AS i),
+ti AS (SELECT unnest(generate_series(0, {AI_NTGT - 1})) AS i),
+s AS (
+  SELECT CAST(i AS BIGINT) AS sid,
+         (i * 7) % 40 AS x1, (i * 7) % 40 + 1 + i % 5 AS x2,
+         (i * 11) % 40 AS y1, (i * 11) % 40 + 2 + i % 4 AS y2,
+         CAST(1000 + ({sm}) % 9000 AS BIGINT) AS value
+  FROM si),
+t AS (
+  SELECT CAST(1000 + i AS BIGINT) AS tid,
+         (i * 13) % 40 AS x1, (i * 13) % 40 + 1 + i % 6 AS x2,
+         (i * 17) % 40 AS y1, (i * 17) % 40 + 1 + i % 3 AS y2
+  FROM ti),
+sn AS (SELECT sid, value,
+              (x2 - x1 + 1) * (y2 - y1 + 1) AS n_cells_s,
+              x1, x2, y1, y2
+       FROM s),
+ov AS (
+  SELECT sn.sid, t.tid, sn.value, sn.n_cells_s,
+         GREATEST(0, LEAST(sn.x2, t.x2) - GREATEST(sn.x1, t.x1) + 1)
+           * GREATEST(0, LEAST(sn.y2, t.y2) - GREATEST(sn.y1, t.y1) + 1)
+           AS ov
+  FROM sn CROSS JOIN t),
+pos AS (SELECT * FROM ov WHERE ov > 0)
+SELECT tid,
+       CAST(COUNT(*) AS BIGINT) AS n_src,
+       CAST(SUM(ov) AS BIGINT) AS sum_overlap,
+       CAST(SUM((value * ov) // n_cells_s) AS BIGINT) AS alloc
+FROM pos GROUP BY tid
+"""
+
+
+def _style_query(engine: str) -> str:
+    from mapnik_vector_tile_spark.functions.stylestops import (
+        style_stops_sql,
+    )
+
+    src = (
+        "(SELECT CAST(o_orderkey AS BIGINT) AS fid,"
+        " CAST(o_orderkey % 16 AS BIGINT) AS z FROM orders) f"
+    )
+    return style_stops_sql(src, engine)
+
+
+def q_style_stops(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Style stops evaluation (functions/stylestops.py — mapbox-gl
+    linear + step + exponential-base-7/4 property functions, exact
+    integer interpolation on pre-scaled values: the exponential
+    curve is the rational-base closed form, no pow() float) with a
+    FULL oracle: one generated SQL text per engine over per-feature
+    zooms 0..15 — clamps, bracket edges and every interpolated value
+    under the hash."""
+    load_views(spark, sf_dir)
+    return spark.sql(_style_query("spark"))
+
+
+def _make_spark_fn(template: str) -> Callable[[SparkSession, str], DataFrame]:
+    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        load_views(spark, sf_dir)
+        return spark.sql(S.render(template, "spark"))
+
+    return fn
+
+
+def pairs() -> dict[str, tuple[Callable, str]]:
+    """key -> (spark_fn, oracle SQL template)."""
+    templates = {
+        "q_tile_assign_z14": _sql_tile_assign(),
+        "q_tile_pyramid_counts": _sql_pyramid_counts(),
+        "q_quantize_z14": _sql_quantize(),
+        "q_zigzag_cmd": _sql_zigzag(),
+        "q_cell_morton_z10": _sql_cell_morton(),
+        "q_pip_rect_join": bbox_rect_join_sql(),
+        "q_tile_except": _sql_tile_setop("EXCEPT"),
+        "q_tile_intersect": _sql_tile_setop("INTERSECT"),
+        "q_tile_cube": _sql_tile_cube(),
+        "q_tile_rollup": _sql_tile_rollup(),
+        "q_hex_assign": _sql_hex_assign(),
+        "q_hex_density": _sql_hex_density(),
+        "q_json_props": _sql_json_props(),
+    }
+    out = {k: (_make_spark_fn(t), t) for k, t in templates.items()}
+    out.update({
+        "q_label_place": (q_label_place, _sql_label_place()),
+        "q_utfgrid": (q_utfgrid, _sql_utfgrid()),
+        "q_mapnik_expr": (q_mapnik_expr, _sql_mapnik_expr()),
+        "q_engine_tile_counts": (
+            q_engine_tile_counts,
+            _sql_pyramid_counts_z(8),
+        ),
+        "q_vtquery": (q_vtquery, _sql_vtquery()),
+        "q_engine_decode_roundtrip": (
+            q_engine_decode_roundtrip,
+            _sql_pyramid_counts_band(6, 8),
+        ),
+        "q_engine_load_compressed": (
+            q_engine_load_compressed,
+            _sql_load_compressed(4, 6),
+        ),
+        "q_engine_typed_values": (q_engine_typed_values, _sql_typed_values(8)),
+        "q_engine_layer_filter": (q_engine_layer_filter, _sql_layer_filter()),
+        "q_engine_attr_join": (q_engine_attr_join, _sql_attr_join()),
+        "q_engine_attr_join_shuffle": (
+            q_engine_attr_join_shuffle,
+            _sql_attr_join(),
+        ),
+        "q_quadkey": (q_quadkey, _sql_quadkey()),
+        "q_pyramid_audit": (q_pyramid_audit, _sql_pyramid_audit()),
+        "q_tilestats": (q_tilestats, _sql_tilestats()),
+        "q_engine_simplify_vw": (q_engine_simplify_vw, _sql_simplify_vw()),
+        "q_engine_validity": (q_engine_validity, _sql_validity()),
+        "q_engine_composite": (q_engine_composite, _sql_composite_n_layers(5)),
+        "q_engine_overzoom": (q_engine_overzoom, _sql_overzoom()),
+        "q_engine_overzoom_redistribute": (
+            q_engine_overzoom_redistribute,
+            _sql_overzoom(),
+        ),
+        "q_engine_rescale": (q_engine_rescale, _sql_rescale()),
+        "q_engine_downzoom": (q_engine_downzoom, _sql_downzoom()),
+        "q_engine_downzoom_band": (
+            q_engine_downzoom_band,
+            _sql_downzoom_band(),
+        ),
+        "q_engine_v1_decode": (q_engine_v1_decode, _sql_v1_decode()),
+        "q_engine_solid": (q_engine_solid, _sql_solid()),
+        "q_label_grid": (q_label_grid, _sql_label_grid()),
+        "q_solid_prune": (q_solid_prune, _sql_solid_prune()),
+        "q_tile_diff": (q_tile_diff, _sql_tile_diff()),
+        "q_s2_cells": (q_s2_cells, _sql_s2_cells()),
+        "q_geohash": (q_geohash, _sql_geohash()),
+        "q_engine_simplify_exact": (
+            q_engine_simplify_exact,
+            _sql_simplify_exact(),
+        ),
+        "q_engine_simplify_radial": (
+            q_engine_simplify_radial,
+            _sql_simplify_radial(),
+        ),
+        "q_engine_clip_repair": (q_engine_clip_repair, _sql_clip_repair()),
+        "q_engine_clip_repair_pos": (
+            q_engine_clip_repair_pos,
+            _sql_clip_repair(fill_rule="positive"),
+        ),
+        "q_zoom_thin": (q_zoom_thin, _sql_zoom_thin()),
+        "q_cell_cover": (q_cell_cover, _sql_cell_cover()),
+        "q_cell_cover_hier": (q_cell_cover_hier, _sql_cell_cover()),
+        "q_tile_budget": (q_tile_budget, _sql_tile_budget()),
+        "q_line_cover": (q_line_cover, _sql_line_cover()),
+        "q_cell_compact": (q_cell_compact, _sql_cell_compact()),
+        "q_geom_measures": (q_geom_measures, _sql_geom_measures()),
+        "q_tilejson": (q_tilejson, _sql_tilejson()),
+        "q_line_interpolate": (q_line_interpolate, _sql_line_interpolate()),
+        "q_area_centroid": (q_area_centroid, _sql_area_centroid()),
+        "q_heatmap_tiles": (q_heatmap_tiles, _sql_heatmap_tiles()),
+        "q_scale_gate": (q_scale_gate, _sql_scale_gate()),
+        "q_engine_wafer": (q_engine_wafer, _sql_wafer()),
+        "q_hilbert": (q_hilbert, _hilbert_query("duckdb")),
+        "q_tile_patch": (q_tile_patch, _sql_tile_patch()),
+        "q_areal_interp": (q_areal_interp, _sql_areal_interp()),
+        "q_style_stops": (q_style_stops, _style_query("duckdb")),
+    })
+    return out

@@ -19,6 +19,8 @@ implement natively.
 
 from __future__ import annotations
 
+from pyspark.sql import SparkSession
+
 from mapnik_vector_tile_spark.functions.tilemath import W
 
 TWO_W = 2.0 * W
@@ -195,3 +197,97 @@ rects AS (
          ({flit(500000)} + (n_nationkey % 7) * {flit(400000)}) AS hw
   FROM {table}
 )"""
+
+
+# ---------------------------------------------------------------------------
+# Shared by the oracle families and the bench queries: the fixture
+# views, the points-in-rectangles join and the splitmix64 row hash.
+# ---------------------------------------------------------------------------
+
+
+TABLES = (
+    "region nation customer supplier part orders lineitem events "
+    "documents"
+).split()
+
+
+def load_views(spark: SparkSession, sf_dir: str) -> None:
+    for t in TABLES:
+        spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
+
+
+def bbox_rect_join_sql() -> str:
+    """Range join: order points vs broadcast-size rectangle regions —
+    the SQL-expressible shape of J3 (PIP vs rects).
+
+    Boundary semantics: this oracle is closed (<=/>=) while the engine
+    refine's even-odd ray cast is half-open. They can only disagree
+    for a point EXACTLY on a rect edge, which requires
+    (dh/2^32)*2W == hw in exact double arithmetic — the hash-lattice
+    coordinates and the integer-meter hw values share no such point
+    (checked over the fixtures), so the pair is stable; revisit if
+    either generator changes."""
+    return f"""
+WITH {point_cte('orders', 'o_orderkey')},
+{rect_regions_cte('nation')}
+SELECT r.region_id, COUNT(*) AS n_pts, MIN(p.id) AS min_id
+FROM pts p
+JOIN rects r
+  ON p.mx >= r.cx - r.hw AND p.mx <= r.cx + r.hw
+ AND p.my >= r.cy - r.hw AND p.my <= r.cy + r.hw
+GROUP BY 1
+"""
+
+
+_M64 = "18446744073709551616"  # 2^64
+
+
+_M32 = "4294967296"
+
+
+def _xor64(a: str, b: str) -> str:
+    """XOR of two HUGEINT values < 2^64 via BIGINT halves."""
+    return (
+        f"(CAST(xor(CAST(({a}) // {_M32} AS BIGINT),"
+        f" CAST(({b}) // {_M32} AS BIGINT)) AS HUGEINT) * {_M32}"
+        f" + xor(CAST(({a}) % {_M32} AS BIGINT),"
+        f" CAST(({b}) % {_M32} AS BIGINT)))"
+    )
+
+
+def _mul64(a: str, c: int) -> str:
+    """(a * c) mod 2^64 for HUGEINT a < 2^64, constant c — 32-bit limb
+    split keeps every intermediate < 2^96 (inside HUGEINT)."""
+    cl = c % 2**32
+    ch = c >> 32
+    return (
+        f"((({a}) * {cl} + (((({a}) % {_M32}) * {ch}) % {_M32})"
+        f" * {_M32}) % {_M64})"
+    )
+
+
+def splitmix64_sql(x: str) -> str:
+    """The synth corpus's committed mixing function (synth.splitmix64)
+    rendered as DuckDB SQL — bit-exact (tests pin [0, 200000)).
+
+    Emitted as a chained SCALAR SUBQUERY, not one flat expression:
+    textually inlining each mixing stage into the next duplicates
+    subexpressions ×2-4 per stage (×~256 for the base hash — a 36 KB
+    expression, ~22 µs/row), while the subquery chain computes each
+    stage ONCE into a column the next stage references (~1 KB, ~10×
+    faster; DuckDB decorrelates it into projections).  Same value,
+    usable in any expression position."""
+    z0 = f"((CAST({x} AS HUGEINT) + 11400714819323198485) % {_M64})"
+    return (
+        "(SELECT "
+        + _xor64("z4", "z4 // 2147483648")  # >> 31
+        + " FROM (SELECT "
+        + _mul64("z3", 0x94D049BB133111EB)
+        + " AS z4 FROM (SELECT "
+        + _xor64("z2", "z2 // 134217728")  # >> 27
+        + " AS z3 FROM (SELECT "
+        + _mul64("z1", 0xBF58476D1CE4E5B9)
+        + " AS z2 FROM (SELECT "
+        + _xor64("z0", "z0 // 1073741824")  # >> 30
+        + f" AS z1 FROM (SELECT {z0} AS z0))))))"
+    )

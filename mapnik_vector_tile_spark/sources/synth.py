@@ -150,8 +150,6 @@ def gen_images_pdf(n: int, start: int = 0, with_bytes: bool = True) -> pd.DataFr
 def images_df(spark, n: int, with_bytes: bool = True, slices: int | None = None):
     """Distributed generation: range -> mapInPandas, so the table is
     born partitioned (no driver-side materialization at bench scale)."""
-    from pyspark.sql import functions as F  # noqa: F401
-
     slices = slices or max(8, spark.sparkContext.defaultParallelism)
     base = spark.range(0, n, 1, slices)
 

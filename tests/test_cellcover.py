@@ -426,8 +426,6 @@ def test_hier_cover_boundary_graze_regression():
 def test_areal_interpolate_exact_split(spark):
     """One source square split across two targets: allocations are
     the exact floor shares and conserve value up to floor loss."""
-    import pandas as pd
-
     from mapnik_vector_tile_spark.functions import geomcodec as gc
     from mapnik_vector_tile_spark.functions import tilemath as tm
     from mapnik_vector_tile_spark.operators.cellcover import (

@@ -172,7 +172,6 @@ def test_hilbert_pmtiles_parity_and_unit_steps():
 
 def test_hilbert_sql_generator_engines_agree():
     import duckdb
-    import numpy as np
 
     from mapnik_vector_tile_spark.functions.hilbertcell import (
         hilbert_d,

@@ -1147,8 +1147,6 @@ def test_join_attributes_relational_matches_broadcast(spark):
 def test_patch_roundtrip_byte_identical(spark):
     """patch_tiles(a, make_patch(a, b)) must equal store b
     byte-for-byte per address (the delta-publish contract)."""
-    from pyspark.sql import functions as F
-
     from mapnik_vector_tile_spark.operators import composite as comp
 
     rows_a = [

@@ -61,12 +61,29 @@ def test_rows_only_set_is_pinned():
     assert q - o == set()
 
 
-def test_record_first_names_registered_keys():
-    """Every key the registry orders first is a registered key, so a
-    removed query's stale entry fails here by name instead of being
-    skipped by sql_pairs() without a word."""
-    from mapnik_vector_tile_spark.plans.oracle_parts.p3 import _RECORD_FIRST
+def test_family_registries_partition_the_keys():
+    """Each key lives in exactly one family's pairs(), and the families
+    together register every queries() key."""
+    from mapnik_vector_tile_spark.plans.oracles import FAMILIES
 
-    keys = list(entrymod.queries())
-    assert [k for k in _RECORD_FIRST if k not in keys] == []
-    assert keys[: len(_RECORD_FIRST)] == list(_RECORD_FIRST)
+    seen: dict[str, str] = {}
+    for family in FAMILIES:
+        for name in family.pairs():
+            assert name not in seen, (name, seen.get(name), family.__name__)
+            seen[name] = family.__name__
+    assert set(seen) == set(entrymod.queries())
+
+
+def test_sql_pairs_rejects_a_key_registered_twice(monkeypatch):
+    from mapnik_vector_tile_spark.plans import oracles
+    from mapnik_vector_tile_spark.plans.oracles import sampling
+
+    monkeypatch.setattr(oracles, "FAMILIES", (sampling, sampling))
+    oracles._merged.cache_clear()
+    try:
+        with pytest.raises(ValueError, match="registered twice"):
+            oracles.sql_pairs()
+    finally:
+        monkeypatch.undo()
+        oracles._merged.cache_clear()
+    assert len(oracles.sql_pairs()[0]) == len(entrymod.queries())

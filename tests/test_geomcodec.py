@@ -208,8 +208,6 @@ def test_small_fast_path_matches_generic():
     generic numpy branch on every small single-part shape, including
     degenerate ones (consecutive dups, explicit closing vertex, zero
     area, 2^31-boundary coords that must fall back)."""
-    import itertools
-
     import numpy as np
 
     from mapnik_vector_tile_spark.functions import geomcodec as gc

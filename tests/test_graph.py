@@ -38,7 +38,7 @@ def test_unreachable_absent(spark):
 
 
 def test_corpus_giant_component(spark):
-    from mapnik_vector_tile_spark.plans.oracle_pairs import q_bellman_ford
+    from mapnik_vector_tile_spark.plans.oracles.graph import q_bellman_ford
 
     d = q_bellman_ford(spark, "/root/testdata/sf0.01").collect()
     # 15k king-move edges on a 64x64 lattice: the 12-hop field from the

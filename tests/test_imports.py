@@ -8,7 +8,9 @@
   instead of executing it; only the imported package modules are
   loaded.
 * unused imports: every module-level import must bind a name that the
-  file reads somewhere, so a removal cannot leave its imports behind.
+  file reads somewhere, and every import inside a function a name that
+  the function or a function nested in it reads, so a removal cannot
+  leave its imports behind.
 """
 
 from __future__ import annotations
@@ -106,6 +108,23 @@ def _global_reads(table: symtable.SymbolTable) -> set[str]:
     return out
 
 
+def _annotation_names(node: ast.AST) -> set[str]:
+    """Names read by the annotations under ``node``; under
+    ``from __future__ import annotations`` the symbol table skips them."""
+    out = set()
+    for n in ast.walk(node):
+        anns = []
+        if isinstance(n, ast.arg):
+            anns.append(n.annotation)
+        elif isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            anns.append(n.returns)
+        elif isinstance(n, ast.AnnAssign):
+            anns.append(n.annotation)
+        for ann in filter(None, anns):
+            out |= {x.id for x in ast.walk(ann) if isinstance(x, ast.Name)}
+    return out
+
+
 def _unused_imports(src: str, name: str = "<src>") -> list[str]:
     """``line: name`` for every module-level import whose bound name the
     file never reads. Annotations count as reads (under
@@ -113,16 +132,7 @@ def _unused_imports(src: str, name: str = "<src>") -> list[str]:
     ``__future__`` imports and ``# noqa: F401`` lines are exempt."""
     tree = ast.parse(src)
     used = _global_reads(symtable.symtable(src, name, "exec"))
-    for node in ast.walk(tree):
-        anns = []
-        if isinstance(node, ast.arg):
-            anns.append(node.annotation)
-        elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-            anns.append(node.returns)
-        elif isinstance(node, ast.AnnAssign):
-            anns.append(node.annotation)
-        for ann in filter(None, anns):
-            used |= {n.id for n in ast.walk(ann) if isinstance(n, ast.Name)}
+    used |= _annotation_names(tree)
     lines = src.split("\n")
     bad = []
     for node in tree.body:
@@ -149,6 +159,92 @@ def test_no_unused_module_imports():
         for msg in _unused_imports(path.read_text(), str(path))
     ]
     assert not bad, "\n".join(bad)
+
+
+def _own_imports(fn: ast.AST) -> list[ast.Import | ast.ImportFrom]:
+    """Import statements of ``fn``'s own body, nested scopes excluded."""
+    out, todo = [], list(fn.body)
+    while todo:
+        n = todo.pop()
+        if isinstance(n, (ast.Import, ast.ImportFrom)):
+            out.append(n)
+        elif not isinstance(
+            n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+        ):
+            todo.extend(ast.iter_child_nodes(n))
+    return out
+
+
+def _reads(table: symtable.SymbolTable, name: str) -> bool:
+    """Whether ``table`` or a scope nested in it reads its binding of
+    ``name`` (a nested scope reads it when the name is free there)."""
+    if table.lookup(name).is_referenced():
+        return True
+    for child in table.get_children():
+        try:
+            if child.lookup(name).is_free():
+                return True
+        except KeyError:
+            pass
+    return False
+
+
+def _unused_local_imports(src: str, name: str = "<src>") -> list[str]:
+    """``line: name`` for every import inside a function whose bound
+    name neither that function nor a function nested in it reads.
+    ``# noqa: F401`` does not exempt them: a function-local import is
+    never a re-export."""
+    tree = ast.parse(src)
+    tables = {}
+    todo = [symtable.symtable(src, name, "exec")]
+    while todo:
+        t = todo.pop()
+        tables[(t.get_name(), t.get_lineno())] = t
+        todo.extend(t.get_children())
+    bad = []
+    for fn in ast.walk(tree):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        table = tables[(fn.name, fn.lineno)]
+        anns = _annotation_names(fn)
+        for node in _own_imports(fn):
+            for alias in node.names:
+                bound = alias.asname or alias.name.split(".")[0]
+                if bound != "*" and bound not in anns and not _reads(table, bound):
+                    bad.append(f"{node.lineno}: {bound}")
+    return sorted(bad, key=lambda b: int(b.split(":")[0]))
+
+
+def test_no_unused_function_imports():
+    bad = [
+        f"{path.relative_to(ROOT)}:{msg}"
+        for path in _sources()
+        for msg in _unused_local_imports(path.read_text(), str(path))
+    ]
+    assert not bad, "\n".join(bad)
+
+
+def test_unused_local_import_check_sees_nested_reads_and_shadowing():
+    src = """
+from __future__ import annotations
+
+
+def f():
+    import json
+    import numpy as np  # noqa: F401
+    import pandas as pd
+    from pyspark.sql import functions as F, types as T
+
+    def g(x: pd.Series):
+        return json.dumps(x)
+
+    def h():
+        from pyspark.sql import functions as F
+        return F.col("a")
+
+    return g, h
+"""
+    assert _unused_local_imports(src) == ["7: np", "9: F", "9: T"]
 
 
 def test_unused_import_check_sees_shadowing_and_annotations():

@@ -1,7 +1,7 @@
 """J3/J4/J5 spatial joins — unit + small-integration tests.
 
 Brute-force numpy oracles on tiny inputs; the sf0.01 value-hash gate
-lives in the driver's oracle contract (plans.oracle_pairs)."""
+lives in the oracle pairs of plans/oracles/joins.py."""
 
 from __future__ import annotations
 
@@ -58,7 +58,7 @@ def tri_regions(spark):
     return spark.createDataFrame(pdf, schema=schema), pdf
 
 
-def _oracle_pairs(pts_pdf, reg_pdf):
+def _brute_force_pairs(pts_pdf, reg_pdf):
     out = set()
     for _, r in reg_pdf.iterrows():
         inside = pipmod.points_in_polygon(
@@ -80,7 +80,7 @@ def test_pip_broadcast_matches_bruteforce(spark, points, tri_regions):
         (r.point_id, r.region_id)
         for r in J.pip_join_broadcast(pts_df, reg_df, z=5).collect()
     }
-    assert got == _oracle_pairs(pts_pdf, reg_pdf)
+    assert got == _brute_force_pairs(pts_pdf, reg_pdf)
     assert len(got) > 100  # sanity: the fixture actually covers points
 
 
@@ -89,7 +89,7 @@ def test_pip_semi_anti_partition_points(spark, points, tri_regions):
     pair (once each, even for points inside several regions)."""
     pts_df, pts_pdf = points
     reg_df, reg_pdf = tri_regions
-    inside_ids = {p for p, _ in _oracle_pairs(pts_pdf, reg_pdf)}
+    inside_ids = {p for p, _ in _brute_force_pairs(pts_pdf, reg_pdf)}
     semi = {r.id for r in J.pip_join_semi(pts_df, reg_df, z=5).collect()}
     anti = {r.id for r in J.pip_join_anti(pts_df, reg_df, z=5).collect()}
     assert semi == inside_ids
@@ -119,7 +119,7 @@ def test_pip_cover_equals_broadcast(spark, points, tri_regions):
     cover prunes."""
     pts_df, pts_pdf = points
     reg_df, reg_pdf = tri_regions
-    a = _oracle_pairs(pts_pdf, reg_pdf)
+    a = _brute_force_pairs(pts_pdf, reg_pdf)
     b = {
         (r.point_id, r.region_id)
         for r in J.pip_join_cover(pts_df, reg_df, z=5).collect()
@@ -673,7 +673,7 @@ def test_morans_i_blocks_positive(spark):
 
 def test_morans_i_corpus_bounds(spark):
     # int64 headroom claim: |num|, den far below 2^62 on the real corpus
-    from mapnik_vector_tile_spark.plans.oracle_pairs import q_morans_i
+    from mapnik_vector_tile_spark.plans.oracles.geostats import q_morans_i
 
     r = q_morans_i(spark, "/root/testdata/sf0.001").collect()[0]
     assert 0 < r["den"] < 1 << 50 and abs(r["num"]) < 1 << 50

@@ -31,7 +31,7 @@ def con():
 
 
 def test_every_oracle_sql_binds(con):
-    from mapnik_vector_tile_spark.plans.oracle_pairs import sql_pairs
+    from mapnik_vector_tile_spark.plans.oracles import sql_pairs
 
     queries, oracles = sql_pairs()
     assert oracles and set(oracles) == set(queries)

@@ -327,8 +327,6 @@ class TestDissolveBoundaries:
 
 class TestSparkOperator:
     def test_union_polygons_df(self, spark):
-        import pandas as pd
-
         from mapnik_vector_tile_spark.operators.overlay import (
             union_polygons,
         )

@@ -151,7 +151,7 @@ def test_geohash_is_single_scan_projection(spark):
     stay a codegen projection at 100 TB."""
     import re
 
-    from mapnik_vector_tile_spark.plans.oracle_pairs import q_geohash
+    from mapnik_vector_tile_spark.plans.oracles.tiles import q_geohash
 
     plan = _plan(q_geohash(spark, SF_DIR))
     assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, plan
@@ -167,7 +167,7 @@ def test_cell_cover_is_narrow_no_exchange(spark):
     mapInPandas stages over spark.range — NO Exchange anywhere (the
     covering fan-out is a narrow flatMap, exactly like overzoom), so
     at 100 TB the stage scales with input splits."""
-    from mapnik_vector_tile_spark.plans.oracle_pairs import q_cell_cover
+    from mapnik_vector_tile_spark.plans.oracles.tiles import q_cell_cover
 
     plan = _plan(q_cell_cover(spark, SF_DIR))
     assert "Exchange" not in plan, plan
@@ -178,7 +178,7 @@ def test_pip_cover_join_shape(spark):
     hash-repartitioned on (ctx, cty) for the cell equi-join plus the
     geometry join's distribution — and NO broadcast of the big point
     side, no cartesian product."""
-    from mapnik_vector_tile_spark.plans.oracle_pairs import q_pip_cover_join
+    from mapnik_vector_tile_spark.plans.oracles.joins import q_pip_cover_join
 
     plan = _plan(q_pip_cover_join(spark, SF_DIR))
     assert "CartesianProduct" not in plan, plan
@@ -214,7 +214,7 @@ def test_radius_join_single_equi_join_no_cartesian(spark):
     """J5-companion: the distance join compiles to ONE cell equi-join
     (SortMerge or ShuffledHash) — never a cartesian/BNL product — and
     the d2 filter stays Column algebra (no Python nodes)."""
-    from mapnik_vector_tile_spark.plans.oracle_pairs import q_radius_join
+    from mapnik_vector_tile_spark.plans.oracles.joins import q_radius_join
 
     plan = _plan(q_radius_join(spark, SF_DIR))
     assert "CartesianProduct" not in plan, plan
@@ -226,7 +226,7 @@ def test_zonal_stats_partial_then_final_agg(spark):
     """R4-companion: the per-tile mask pass partial-aggregates before
     the final region_id aggregation (two HashAggregates around one
     Exchange on region_id) and no cartesian product appears."""
-    from mapnik_vector_tile_spark.plans.oracle_pairs import q_zonal_stats
+    from mapnik_vector_tile_spark.plans.oracles.raster import q_zonal_stats
 
     plan = _plan(q_zonal_stats(spark, SF_DIR))
     assert "CartesianProduct" not in plan, plan
@@ -285,7 +285,6 @@ def test_tile_store_partition_and_rowgroup_pruning(spark, tmp_path):
     """S6 store layout: a z filter must reach PartitionFilters
     (directory pruning — low-zoom files never open) and an x filter
     must reach PushedFilters (sorted row-group stats pruning)."""
-    import numpy as np
     import pandas as pd
 
     from pyspark.sql import functions as F
@@ -544,10 +543,8 @@ def test_voronoi_broadcasts_seeds_and_partial_aggs(spark):
 def test_hilbert_zero_shuffle_projection(spark):
     """S11: the whole z-level recurrence is one codegen projection —
     no Exchange, no Python."""
-    from mapnik_vector_tile_spark.plans.oracle_pairs import (
-        _hilbert_query,
-        load_views,
-    )
+    from mapnik_vector_tile_spark.plans.oracles.tiles import _hilbert_query
+    from mapnik_vector_tile_spark.plans.shared_sql import load_views
 
     load_views(spark, SF_DIR)
     plan = _plan(spark.sql(_hilbert_query("spark")))

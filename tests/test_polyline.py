@@ -29,7 +29,7 @@ def test_single_point_and_zero_delta(spark):
 
 
 def test_corpus_roundtrip(spark):
-    from mapnik_vector_tile_spark.plans.oracle_pairs import q_polyline
+    from mapnik_vector_tile_spark.plans.oracles.geometry import q_polyline
 
     rows = q_polyline(spark, "/root/testdata/sf0.001").collect()
     assert len(rows) == 300

@@ -818,7 +818,6 @@ def test_gradient_orientation_octants(spark):
     vertical ramp -> gy>0, gx=0 -> the gy>=gx tie rule puts axis-up in
     octant 1; a flat image -> all pixels bin -1."""
     import numpy as np
-    import pandas as pd
 
     from mapnik_vector_tile_spark.operators.raster import (
         gradient_orientation_stats,
@@ -935,6 +934,31 @@ def test_raster_downzoom_missing_children_zero(spark):
     assert (row["z"], row["x"], row["y"]) == (4, 1, 1)
     assert row["occ"] == 0b1000
     assert row["px_sum"] == 4 * 8
+
+
+def test_grouped_raster_kernels_do_not_warn_on_type_hints(spark):
+    """applyInPandas infers a pandas-UDF eval type from the kernel's
+    type hints; a partly annotated kernel makes every call warn."""
+    import warnings
+
+    from mapnik_vector_tile_spark.operators.raster import (
+        raster_composite_over,
+        raster_downzoom,
+    )
+
+    children = spark.createDataFrame(
+        [], "z long, x long, y long, raster binary"
+    )
+    layers = spark.createDataFrame(
+        [], "z long, x long, y long, layer_order long, raster binary"
+    )
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        raster_downzoom(children, 4)
+        raster_composite_over(layers, 2)
+    assert not [
+        w for w in caught if "Cannot infer the eval type" in str(w.message)
+    ]
 
 
 # --- R8 Porter-Duff over compositing ---------------------------------------

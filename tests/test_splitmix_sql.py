@@ -8,7 +8,7 @@ expression ~35x smaller and ~10x faster; this is its equality pin)."""
 import duckdb
 import numpy as np
 
-from mapnik_vector_tile_spark.plans.oracle_pairs import splitmix64_sql
+from mapnik_vector_tile_spark.plans.shared_sql import splitmix64_sql
 from mapnik_vector_tile_spark.sources.synth import splitmix64
 
 

@@ -219,7 +219,6 @@ def test_incremental_retile_overzoom_children(spark, chunked_events, tmp_path):
     from pyspark.sql import Window
 
     from mapnik_vector_tile_spark.operators import composite as C
-    from mapnik_vector_tile_spark.operators import tiling as T
 
     src, _ev = chunked_events
     out = str(tmp_path / "oz_out")

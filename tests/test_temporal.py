@@ -1,6 +1,6 @@
 """Trajectory and per-cell series operators (operators.temporal) —
 hand-built or brute-force oracles on small inputs; the sf0.01
-value-hash gate lives in plans.oracle_pairs."""
+value-hash gate lives in plans/oracles/geostats.py."""
 
 from __future__ import annotations
 

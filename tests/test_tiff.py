@@ -173,8 +173,6 @@ def test_geotiff_tags_roundtrip():
 
 
 def test_geotiff_footprints_ingest(spark):
-    import numpy as np
-
     from mapnik_vector_tile_spark.functions.tiff import encode_tiff
     from mapnik_vector_tile_spark.operators.raster import geotiff_footprints
     from mapnik_vector_tile_spark.sources.synth import make_pixels
